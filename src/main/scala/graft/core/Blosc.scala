@@ -15,11 +15,12 @@ import com.github.luben.zstd.Zstd
   *   byte  0      format version (2)
   *   byte  1      codec format version (1)
   *   byte  2      flags: 0x01 byte-shuffle | 0x02 memcpy | 0x04 bit-shuffle
+  *                       | 0x10 blocks not split (one stream per block)
   *                       | compressor-format-id << 5 (zstd = 4)
   *   byte  3      typesize
   *   bytes 4-7    nbytes   (uncompressed length)
   *   bytes 8-11   blocksize
-  *   bytes 12-15  cbytes   (total frame length)
+  *   bytes 12-15  cbytes   (total frame length; must equal the frame's)
   *   then, unless memcpy flag:
   *     int32 * nblocks     block start offsets (from frame start)
   *     per block: int32 csize, then the zstd stream for that block
@@ -27,14 +28,16 @@ import com.github.luben.zstd.Zstd
   *   with memcpy flag: the raw (unshuffled) bytes follow the header.
   * }}}
   *
-  * We always emit a single block (blocksize = nbytes); the decoder accepts
-  * any block count/size. Shuffle is applied per block, matching c-blosc.
+  * We always emit a single block (blocksize = nbytes) holding one zstd
+  * stream, and say so with flag 0x10; the decoder accepts any block
+  * count/size. Shuffle is applied per block, matching c-blosc.
   */
 object Blosc {
   private val Version: Byte = 2
   private val VersionLz: Byte = 1
   private val FlagShuffle = 0x01
   private val FlagMemcpy = 0x02
+  private val FlagNoSplit = 0x10
   private val ZstdFormatId = 4
 
   final case class Header(flags: Int, typesize: Int, nbytes: Int, blocksize: Int, cbytes: Int)
@@ -121,7 +124,7 @@ object Blosc {
       val total = 16 + 4 + 4 + compressedLen
       val out = new Array[Byte](total)
       out(0) = Version; out(1) = VersionLz
-      out(2) = ((ZstdFormatId << 5) | (if (doShuffle) FlagShuffle else 0)).toByte
+      out(2) = ((ZstdFormatId << 5) | FlagNoSplit | (if (doShuffle) FlagShuffle else 0)).toByte
       out(3) = typesize.toByte
       writeLE(out, 4, nbytes); writeLE(out, 8, nbytes); writeLE(out, 12, total)
       writeLE(out, 16, 20)            // bstarts[0]: block starts right after
@@ -154,6 +157,9 @@ object Blosc {
   /** Decompress a Blosc frame (any block count; zstd payloads). */
   def decompress(frame: Array[Byte]): Array[Byte] = {
     val h = header(frame)
+    // a truncated or padded chunk file must fail here, not decode short
+    require(h.cbytes == frame.length,
+      s"blosc frame is ${frame.length} bytes but its header says cbytes=${h.cbytes}")
     if (h.nbytes == 0) return Array.emptyByteArray
     if ((h.flags & FlagMemcpy) != 0) {
       val out = new Array[Byte](h.nbytes)

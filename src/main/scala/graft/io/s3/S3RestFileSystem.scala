@@ -75,7 +75,7 @@ import org.apache.hadoop.util.Progressable
   *     concurrent commit of the same chunk the winner is the LAST writer,
   *     not the first as on HDFS. Both writers wrote identical bytes in
   *     the Zarr sink's retry protocol, so the store stays correct either
-  *     way (`ZarrIO.writeChunks`);
+  *     way (`ZarrDataWriter`, the `format("zarr")` sink);
   *   - directories are virtual: `mkdirs` writes a zero-byte `key/` marker
   *     (s3a convention), list results merge markers + common prefixes;
   *   - `append`/`truncate` are unsupported (as on all S3 stores).

@@ -31,11 +31,16 @@ import graft.core.{Blosc, ChunkGrid}
   * arithmetic, never by listing (at 100 TB the store has billions of
   * chunk files; listing is the scalability bug the plan avoids). Each
   * reader opens only its own chunk files; missing files yield
-  * fill-value (zeros) chunks, matching Zarr semantics.
+  * fill-value (zeros) chunks, matching Zarr semantics. A chunk file that
+  * does not decode to exactly its clamped shape fails the task with
+  * `corrupt zarr chunk at <path>`.
   *
-  * Write: each task Blosc-compresses and atomically renames its own
-  * chunk files (lock-free, reference X8); commit is metadata-free
-  * because chunk placement is deterministic by coordinates.
+  * Write: the store's only chunk sink. Each task encodes its rows with
+  * the codec the driver declared in the level's `.zarray` (Blosc/zstd
+  * at its clevel and dtype stride, or raw for `compressor: null`) and
+  * commits each chunk by tmp + atomic rename (lock-free, reference X8);
+  * commit is metadata-free because chunk placement is deterministic by
+  * coordinates. Metadata (`ZarrIO.writeMetadata`) must exist first.
   */
 class ZarrDataSource extends TableProvider with DataSourceRegister {
 
@@ -79,9 +84,7 @@ class ZarrTable(props: Map[String, String]) extends Table with SupportsRead with
     new ZarrScanBuilder(root, stack, level)
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new ZarrWriteBuilder(root, props.getOrElse("clevel", "3").toInt,
-      props.getOrElse("typesize", "2").toInt,
-      props.get("stack"), props.get("level").map(_.toInt))
+    new ZarrWriteBuilder(root, props.get("stack"), props.get("level").map(_.toInt))
 }
 
 final case class ZarrInputPartition(firstChunk: Long, lastChunk: Long) extends InputPartition
@@ -355,16 +358,27 @@ class ZarrPartitionReader(root: String, stack: String, level: Int,
     // a data-free projection never touches the filesystem
     lazy val raw = {
       val p = new Path(s"$root/$stack/$level/${coords.mkString("/")}")
-      if (!fs.exists(p)) new Array[Byte](cs.product * itemSize) // fill_value=0 chunk
+      val want = cs.product * itemSize
+      if (!fs.exists(p)) new Array[Byte](want) // fill_value=0 chunk
       else {
+        // IO errors propagate as they are; only the bytes' content is judged
         val in = fs.open(p)
         val buf = try {
-          val st = fs.getFileStatus(p)
-          val b = new Array[Byte](st.getLen.toInt)
+          val b = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
           in.readFully(0, b)
           b
         } finally in.close()
-        if (compressed) Blosc.decompress(buf) else buf
+        try {
+          val out = if (compressed) Blosc.decompress(buf) else buf
+          require(out.length == want, s"${out.length} bytes, expected $want")
+          out
+        } catch {
+          // a corrupt chunk in a 100 TB store must surface WITH ITS PATH —
+          // a bare frame/length error from deep inside the codec is
+          // undebuggable when a million tasks each read thousands of files
+          case e: Exception => throw new IllegalStateException(
+            s"corrupt zarr chunk at $p: ${e.getMessage}", e)
+        }
       }
     }
     val values: Array[Any] = cols.map {
@@ -386,8 +400,7 @@ class ZarrPartitionReader(root: String, stack: String, level: Int,
   override def close(): Unit = ()
 }
 
-class ZarrWriteBuilder(root: String, clevel: Int, typesize: Int,
-                       stack: Option[String], level: Option[Int])
+class ZarrWriteBuilder(root: String, stack: Option[String], level: Option[Int])
     extends WriteBuilder with SupportsTruncate {
   private var doTruncate = false
 
@@ -400,7 +413,7 @@ class ZarrWriteBuilder(root: String, clevel: Int, typesize: Int,
 
   override def build(): Write = new Write {
     override def toBatch: BatchWrite =
-      new ZarrBatchWrite(root, clevel, typesize, doTruncate, stack, level)
+      new ZarrBatchWrite(root, doTruncate, stack, level)
     // streaming append: chunk placement is deterministic by coordinates and
     // each file lands via tmp + atomic rename, so epoch REPLAYS are
     // idempotent (a retried epoch rewrites byte-identical files). Durability
@@ -414,27 +427,25 @@ class ZarrWriteBuilder(root: String, clevel: Int, typesize: Int,
         throw new UnsupportedOperationException(
           "zarr streaming sink supports append output mode only " +
           "(per-epoch truncate is not implemented)")
-      ZarrStreamingWrite(root, clevel, typesize)
+      ZarrStreamingWrite(root)
     }
   }
 }
 
-final case class ZarrStreamingWrite(root: String, clevel: Int, typesize: Int)
-    extends streamingw.StreamingWrite {
+final case class ZarrStreamingWrite(root: String) extends streamingw.StreamingWrite {
   override def createStreamingWriterFactory(info: PhysicalWriteInfo): streamingw.StreamingDataWriterFactory =
-    ZarrStreamingWriterFactory(root, clevel, typesize, graft.core.HadoopConf.snapshot())
+    ZarrStreamingWriterFactory(root, graft.core.HadoopConf.snapshot())
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = ()
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = ()
 }
 
-final case class ZarrStreamingWriterFactory(root: String, clevel: Int, typesize: Int,
-    hconf: Array[(String, String)])
+final case class ZarrStreamingWriterFactory(root: String, hconf: Array[(String, String)])
     extends streamingw.StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long, epochId: Long): DataWriter[InternalRow] =
-    new ZarrDataWriter(root, clevel, typesize, hconf)
+    new ZarrDataWriter(root, hconf)
 }
 
-class ZarrBatchWrite(root: String, clevel: Int, typesize: Int, truncate: Boolean,
+class ZarrBatchWrite(root: String, truncate: Boolean,
                      onlyStack: Option[String], onlyLevel: Option[Int]) extends BatchWrite {
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
     if (truncate) {
@@ -471,7 +482,7 @@ class ZarrBatchWrite(root: String, clevel: Int, typesize: Int, truncate: Boolean
           fs.delete(child.getPath, true)
       }
     }
-    ZarrWriterFactory(root, clevel, typesize, graft.core.HadoopConf.snapshot())
+    ZarrWriterFactory(root, graft.core.HadoopConf.snapshot())
   }
   // chunk placement is deterministic by coordinates and writes are atomic
   // renames — no commit coordination needed
@@ -479,31 +490,31 @@ class ZarrBatchWrite(root: String, clevel: Int, typesize: Int, truncate: Boolean
   override def abort(messages: Array[WriterCommitMessage]): Unit = ()
 }
 
-final case class ZarrWriterFactory(root: String, clevel: Int, typesize: Int,
-    hconf: Array[(String, String)]) extends DataWriterFactory {
+final case class ZarrWriterFactory(root: String, hconf: Array[(String, String)])
+    extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new ZarrDataWriter(root, clevel, typesize, hconf)
+    new ZarrDataWriter(root, hconf)
 }
 
-class ZarrDataWriter(root: String, clevel: Int, defaultTypesize: Int,
-    hconf: Array[(String, String)]) extends DataWriter[InternalRow] {
+class ZarrDataWriter(root: String, hconf: Array[(String, String)]) extends DataWriter[InternalRow] {
+  private lazy val conf = graft.core.HadoopConf.restore(hconf)
   private lazy val fs = {
-    val f = new Path(root).getFileSystem(graft.core.HadoopConf.restore(hconf))
+    val f = new Path(root).getFileSystem(conf)
     f.setWriteChecksum(false)
     f
   }
-  // per-(stack,level) codec settings from the store's own .zarray: writing
-  // into a store whose metadata says compressor=null must emit raw chunks,
-  // and the shuffle stride must match the declared dtype — otherwise a
-  // reader honoring the metadata mis-decodes what we wrote
-  private val codecCache = scala.collection.mutable.Map.empty[(String, Int), (Boolean, Int)]
-  private def codecFor(stack: String, level: Int): (Boolean, Int) =
+  // per-(stack,level) codec from the store's own .zarray: compressor=null
+  // means raw chunks, and the shuffle stride and clevel must match what
+  // the metadata declares — otherwise a reader honoring it mis-decodes
+  // what we wrote. No .zarray is an error, not a silent default.
+  private val codecCache = scala.collection.mutable.Map.empty[(String, Int), ZarrIO.ZarrayMeta]
+  private def codecFor(stack: String, level: Int): ZarrIO.ZarrayMeta =
     codecCache.getOrElseUpdate((stack, level), {
-      try {
-        val m = ZarrIO.readZarray(root, stack, level)
-        (m.compressed, m.dtype.itemSize)
-      } catch { case _: java.io.IOException | _: java.io.FileNotFoundException =>
-        (true, defaultTypesize) // no metadata yet: fall back to options
+      try ZarrIO.readZarray(root, stack, level, conf)
+      catch { case e: java.io.FileNotFoundException =>
+        throw new IllegalStateException(
+          s"zarr write: no $root/$stack/$level/.zarray; write the store metadata " +
+          "(ZarrIO.writeMetadata) before its chunks", e)
       }
     })
 
@@ -512,10 +523,11 @@ class ZarrDataWriter(root: String, clevel: Int, defaultTypesize: Int,
     val level = r.getInt(1)
     val (t, c, z, y, x) = (r.getInt(2), r.getInt(3), r.getInt(4), r.getInt(5), r.getInt(6))
     val data = r.getBinary(8)
-    val (compressed, typesize) = codecFor(stack, level)
+    val codec = codecFor(stack, level)
     val dir = new Path(s"$root/$stack/$level/$t/$c/$z/$y")
     val tmp = new Path(dir, s".tmp-$x-${java.util.UUID.randomUUID}")
-    val payload = if (compressed) Blosc.compress(data, typesize, clevel) else data
+    val payload =
+      if (codec.compressed) Blosc.compress(data, codec.dtype.itemSize, codec.clevel) else data
     val out = fs.create(tmp, true)
     try out.write(payload) finally out.close()
     if (!fs.rename(tmp, new Path(dir, x.toString))) fs.delete(tmp, false)

@@ -1,40 +1,33 @@
 package graft.io.zarr
 
-import java.net.URI
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions.col
 
-import graft.core.{Blosc, ChunkGrid, Volume, ZarrChunk}
+import graft.core.{ChunkGrid, Volume}
 
-/** Zarr v2 directory-store sink + source (reference K1/K2 sink,
-  * `czi_to_zarr.py:585-608` + S6 re-scan `czi_to_zarr.py:611,624`).
+/** Zarr v2 directory-store metadata and housekeeping (reference K1
+  * metadata, `czi_to_zarr.py:585-593`).
   *
   * Layout: `root/<stack>/<level>/<t>/<c>/<z>/<y>/<x>` — one compressed
   * file per chunk, nested `dimension_separator="/"` exactly like the
   * reference store (`czi_to_zarr.py:585-593`).
   *
-  * Scale design:
-  *   - the sink is `foreachPartition` over the chunk Dataset: every task
-  *     writes only its own chunk files — lock-free by construction
-  *     (reference X8, `zarr_writer.py:210`), no driver coordination;
-  *   - writes go through the Hadoop FileSystem API, so `file://`, `hdfs://`
-  *     and `s3a://` all work unchanged (replaces the reference's
-  *     `aws s3 sync` subprocess, K6 `utils.py:142-205`);
-  *   - exactly-once under task retry: write to a `.tmp-<attempt>` name
-  *     then atomic rename (SURVEY.md §7.5 #5);
-  *   - the source lists chunk files with Spark's distributed binaryFile
-  *     reader — no driver-side enumeration of the chunk grid.
+  * This object writes and reads the store's JSON (`.zgroup`, `.zattrs`,
+  * `.zarray`) on the driver through the Hadoop FileSystem API, so
+  * `file://`, `hdfs://` and `s3a://` all work unchanged, and sweeps
+  * crashed writers' tmp files. Chunk data moves only through the
+  * DataSource V2 pair [[ZarrDataSource]] (`df.write.format("zarr")`,
+  * `spark.read.format("zarr")`), whose writer takes its codec from the
+  * `.zarray` written here.
   */
 object ZarrIO {
 
-  private def fs(path: String): (FileSystem, Path) = {
+  // session conf by default, not a fresh one: spark.hadoop.* overlays
+  // (object-store credentials, custom fs.<scheme>.impl registrations) must
+  // apply here
+  private def fs(path: String, conf: Configuration = graft.core.HadoopConf.get): (FileSystem, Path) = {
     val p = new Path(path)
-    // session conf, not a fresh one: spark.hadoop.* overlays (object-store
-    // credentials, custom fs.<scheme>.impl registrations) must apply here
-    val f = p.getFileSystem(graft.core.HadoopConf.get)
+    val f = p.getFileSystem(conf)
     f.setWriteChecksum(false) // no .crc shadow files inside the Zarr store
     (f, p)
   }
@@ -87,38 +80,6 @@ object ZarrIO {
     }
   }
 
-  /** Executor-side chunk write: Blosc-compress and atomically place each
-    * chunk file. One row = one file; tasks never contend. */
-  def writeChunks(ds: Dataset[ZarrChunk], root: String, clevel: Int = 3,
-                  compress: Boolean = true, typesize: Int = 2): Unit = {
-    // Configuration is not serializable: snapshot the session's effective
-    // conf at plan time, rebuild per task (credentials/scheme registrations
-    // must reach executors too)
-    val hconf = graft.core.HadoopConf.snapshot(
-      ds.sparkSession.sparkContext.hadoopConfiguration)
-    ds.foreachPartition { (it: Iterator[ZarrChunk]) =>
-      val conf = graft.core.HadoopConf.restore(hconf)
-      var cachedFs: FileSystem = null
-      it.foreach { ck =>
-        val dir = new Path(s"$root/${ck.stack}/${ck.level}/${ck.t}/${ck.c}/${ck.z}/${ck.y}")
-        if (cachedFs == null) {
-          cachedFs = dir.getFileSystem(conf)
-          cachedFs.setWriteChecksum(false)
-        }
-        val f = cachedFs
-        val tmp = new Path(dir, s".tmp-${ck.x}-${java.util.UUID.randomUUID}")
-        val dst = new Path(dir, ck.x.toString)
-        val payload = if (compress) Blosc.compress(ck.data, typesize, clevel) else ck.data
-        val out = f.create(tmp, true)
-        try out.write(payload) finally out.close()
-        if (!f.rename(tmp, dst)) {
-          // a concurrent attempt already committed this chunk — drop ours
-          f.delete(tmp, false)
-        }
-      }
-    }
-  }
-
   /** Crash-recovery sweep: delete orphaned `.tmp-*` files under `root`.
     * The tmp+atomic-rename protocol guarantees a VISIBLE chunk file is
     * always complete (rename is the commit point) and re-runs converge
@@ -166,76 +127,15 @@ object ZarrIO {
     n
   }
 
-  /** Write one level end-to-end (metadata assumed written separately).
-    * The shuffle stride follows the volume's dtype — a u8 or f32 store
-    * byte-shuffled at stride 2 compresses worse and diverges from the
-    * reference's numcodecs config. */
-  def write(ds: Dataset[ZarrChunk], root: String, vol: Volume, clevel: Int = 3,
-            compress: Boolean = true): Unit =
-    writeChunks(ds, root, clevel, compress, vol.dtype.itemSize)
-
-  /** Superblock-batched write (reference K2/X4, `zarr_writer.py:188-213`):
-    * coalesce so each task owns ~targetMb of chunk data before writing.
-    * The reference batched to cap its dask graph; here it is purely an
-    * output-task-granularity knob (fewer, larger write tasks -> fewer
-    * filesystem round-trips on object stores). */
-  def writeChunksBatched(ds: Dataset[ZarrChunk], root: String, vol: Volume,
-                         targetMb: Long = 19200, clevel: Int = 3,
-                         compress: Boolean = true): Unit = {
-    val perTask = ChunkGrid.chunksPerTask(vol.chunk, targetMb * 1024 * 1024, vol.dtype.itemSize)
-    val bySize = ChunkGrid.ceilDiv(vol.numChunks, perTask)
-    // never batch below cluster parallelism: the reference's huge default
-    // (19.2 GB) targets TB-scale stacks; a small stack must still fan out
-    val floor = ds.sparkSession.sparkContext.defaultParallelism.toLong
-    val parts = math.max(1L, math.min(vol.numChunks, math.max(bySize, floor)))
-      .min(Int.MaxValue).toInt
-    val batched = if (parts < ds.rdd.getNumPartitions) ds.coalesce(parts) else ds
-    writeChunks(batched, root, clevel, compress, vol.dtype.itemSize)
-  }
-
-  /** Read a stack level back as a Dataset[ZarrChunk] (reference S6).
-    * Distributed: Spark's binaryFile source lists and reads chunk files
-    * across executors; coords parse from the path. */
-  def readChunks(spark: SparkSession, root: String, stack: String, level: Int): Dataset[ZarrChunk] = {
-    import spark.implicits._
-    val meta = readZarray(root, stack, level)
-    val (shape, chunk, compressed) = (meta.shape, meta.chunk, meta.compressed)
-    val itemSize = meta.dtype.itemSize
-    val lvl = s"$root/$stack/$level"
-    spark.read.format("binaryFile")
-      .option("recursiveFileLookup", "true")
-      .load(lvl)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .map { case (path, content) =>
-        // chunk coords are always the trailing t/c/z/y/x path segments —
-        // substring matching on stack/level would misparse when those
-        // names collide with coordinate values
-        val parts = path.split('/').takeRight(5)
-        try {
-          val Array(t, c, z, y, x) = parts.map(_.toInt)
-          val coords = Array(t.toLong, c.toLong, z.toLong, y.toLong, x.toLong)
-          val cs = ChunkGrid.clampedChunkShape(coords, shape, chunk)
-          val raw = if (compressed) Blosc.decompress(content) else content
-          require(raw.length == cs.product * itemSize,
-            s"${raw.length} bytes, expected ${cs.product * itemSize}")
-          ZarrChunk(stack, level, t, c, z, y, x, cs, raw)
-        } catch {
-          // a corrupt chunk in a 100 TB store must surface WITH ITS PATH —
-          // a bare frame/length error from deep inside the codec is
-          // undebuggable when a million tasks each read thousands of files
-          case e: Exception => throw new IllegalStateException(
-            s"corrupt zarr chunk at $path: ${e.getMessage}", e)
-        }
-      }
-  }
-
   final case class ZarrayMeta(shape: Array[Long], chunk: Array[Int],
-                              compressed: Boolean, dtype: graft.core.PixelDtype)
+                              compressed: Boolean, dtype: graft.core.PixelDtype,
+                              clevel: Int)
 
-  /** Parse .zarray (driver-side). */
-  def readZarray(root: String, stack: String, level: Int): ZarrayMeta = {
-    val (f, _) = fs(root)
+  /** Parse .zarray. `conf` defaults to the session's; an executor passes
+    * the conf it restored from a driver snapshot. */
+  def readZarray(root: String, stack: String, level: Int,
+                 conf: Configuration = graft.core.HadoopConf.get): ZarrayMeta = {
+    val (f, _) = fs(root, conf)
     val p = new Path(s"$root/$stack/$level/.zarray")
     val in = f.open(p)
     val content = try {
@@ -247,10 +147,16 @@ object ZarrIO {
     } finally in.close()
     val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(content)
     import scala.jdk.CollectionConverters._
+    val compressor = node.get("compressor")
+    // the only codec this store reads and writes; a foreign one (numcodecs
+    // Zstd, GZip, ...) fails here with its path, not later per chunk
+    require(compressor.isNull || (compressor.path("id").asText() == "blosc" && compressor.has("clevel")),
+      s"$p: unsupported zarr compressor $compressor (expected blosc with a clevel, or null)")
     ZarrayMeta(
       node.get("shape").elements().asScala.map(_.asLong()).toArray,
       node.get("chunks").elements().asScala.map(_.asInt()).toArray,
-      !node.get("compressor").isNull,
-      graft.core.PixelDtype.fromZarr(node.get("dtype").asText()))
+      !compressor.isNull,
+      graft.core.PixelDtype.fromZarr(node.get("dtype").asText()),
+      if (compressor.isNull) 0 else compressor.get("clevel").asInt())
   }
 }

@@ -14,11 +14,13 @@ import graft.core.{ChunkGrid, PixelCodec, Volume, ZarrChunk}
   *     (128 % 2 == 0), so no 2x2x2 window ever crosses a chunk boundary.
   *     Edge windows at the array boundary are partial; the divisor is the
   *     actual window population (ceil semantics, `czi_to_zarr.py:185-187`).
-  *  2. '''one hash-aggregate shuffle''' — 2x2x2 = 8 downsampled pieces
-  *     (64^3 each) assemble into one output chunk (128^3) keyed by the
-  *     halved chunk coords. The shuffle moves only level-(k+1) data, i.e.
-  *     1/8th of the input bytes; at 100 TB in this is a 12.5 TB exchange
-  *     partitioned by chunk key with no skew (uniform grid).
+  *  2. '''one shuffle for the whole pyramid''' — downsampled pieces
+  *     (2x2x2 = 8 of 64^3 per level-1 chunk of 128^3) assemble into
+  *     output chunks keyed by (level, chunk coords). The shuffle moves
+  *     only downsampled data, ~14.5% of the input bytes for every level
+  *     together, partitioned by chunk key with no skew (uniform grid).
+  *     [[build]] is the entry point; the per-level chain ([[levels]]) is
+  *     its fallback for chunk shapes the fused recursion cannot serve.
   *
   * Dtype preservation (`preserve_dtype=True`, `czi_to_zarr.py:450`):
   * means accumulate in Long and truncate back to uint16 via integer floor
@@ -145,7 +147,7 @@ object Pyramid {
     * are chunk-local and the zero-extra-cost fast path runs; otherwise
     * [[downsampleLevelUnaligned]] handles windows that span chunks.
     */
-  def downsampleLevel(spark: SparkSession, in: Dataset[ZarrChunk], vol: Volume,
+  private[operators] def downsampleLevel(spark: SparkSession, in: Dataset[ZarrChunk], vol: Volume,
                       factorZyx: Array[Int] = Array(2, 2, 2)): (Volume, Dataset[ZarrChunk]) = {
     import spark.implicits._
     if (!(2 to 4).forall(i => vol.chunk(i) % factorZyx(i - 2) == 0))
@@ -217,7 +219,7 @@ object Pyramid {
     * Sums are doubles: exact for uint sums far beyond any window size,
     * and the float path divides in double anyway.
     */
-  def downsampleLevelUnaligned(spark: SparkSession, in: Dataset[ZarrChunk], vol: Volume,
+  private[operators] def downsampleLevelUnaligned(spark: SparkSession, in: Dataset[ZarrChunk], vol: Volume,
                                factorZyx: Array[Int]): (Volume, Dataset[ZarrChunk]) = {
     import spark.implicits._
     val outVol = vol.downsampled(factorZyx)
@@ -327,25 +329,21 @@ object Pyramid {
     (outVol, out)
   }
 
-  /** Full pyramid: levels 1..n-1, each computed from the previous level
-    * (reference X6, `czi_to_zarr.py:623-635`) with persist() between
-    * levels replacing the reference's zarr re-read. Returns levels 1.. */
-  def levels(spark: SparkSession, level0: Dataset[ZarrChunk], vol: Volume,
-             nLevels: Int, factorZyx: Array[Int] = Array(2, 2, 2)): Seq[(Volume, Dataset[ZarrChunk])] = {
-    var cur = (vol, level0)
-    val out = Seq.newBuilder[(Volume, Dataset[ZarrChunk])]
-    for (_ <- 1 until nLevels) {
-      cur = downsampleLevel(spark, cur._2, cur._1, factorZyx)
-      cur._2.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      out += cur
-    }
-    out.result()
-  }
+  /** Per-level pyramid: levels 1..n-1, each computed from the previous
+    * level (reference X6, `czi_to_zarr.py:623-635`). Nothing is
+    * persisted: [[build]]'s unaligned fallback unions these levels into
+    * one plan, where each level's exchange runs once and is reused by
+    * the levels above it. Also the reference [[build]] is checked
+    * against (PyramidFusedSpec). */
+  private[operators] def levels(spark: SparkSession, level0: Dataset[ZarrChunk], vol: Volume,
+             nLevels: Int, factorZyx: Array[Int] = Array(2, 2, 2)): Seq[(Volume, Dataset[ZarrChunk])] =
+    Iterator.iterate((vol, level0)) { case (v, ds) => downsampleLevel(spark, ds, v, factorZyx) }
+      .slice(1, nLevels).toSeq
 
-  /** FUSED all-levels pyramid: ONE map pass emits every level's pieces
+  /** The pyramid: levels 1..n-1 of `level0` as one chunk Dataset, plus
+    * their volumes. ONE map pass emits every level's pieces
     * chunk-locally, ONE shuffle (keyed by (level, out-chunk)) assembles
-    * them — collapsing `levels`'s n-1 shuffles + n-1 persists (12
-    * stages for z1's 4-level pyramid) into map + single exchange.
+    * them — no per-level exchange, no persist barrier.
     *
     * Validity: level-(k+1) windows must never cross level-k piece
     * boundaries. Pieces from one input chunk have size chunk/f^k, and
@@ -354,14 +352,15 @@ object Pyramid {
     * on every spatial axis (true for the reference's 128^3 / x2 config
     * and z1's 32^3 / 4 levels; PyramidFusedSpec pins byte-equality vs
     * [[levels]] including ceil-edge chunks). Unaligned configs fall
-    * back to [[levels]] — correctness never depends on the fast path.
+    * back to the union of [[levels]] — correctness never depends on the
+    * fast path. Neither path caches anything.
     *
     * Scale: the exchange carries sum over k of 1/f^3k of the input
     * (~14.5% for f=2) in one stage — at 100 TB that is one 14.5 TB
     * shuffle instead of three 12.5/1.6/0.2 TB stages with a persist
     * barrier between each; map output is grid-uniform, no skew. */
-  def levelsFusedAll(spark: SparkSession, level0: Dataset[ZarrChunk], vol: Volume,
-                     nLevels: Int, factorZyx: Array[Int] = Array(2, 2, 2)):
+  def build(spark: SparkSession, level0: Dataset[ZarrChunk], vol: Volume,
+            nLevels: Int, factorZyx: Array[Int] = Array(2, 2, 2)):
       (Seq[Volume], Dataset[ZarrChunk]) = {
     import spark.implicits._
     val nHalvings = nLevels - 1

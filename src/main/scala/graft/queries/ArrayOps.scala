@@ -19,8 +19,9 @@ import graft.sources.SyntheticStack
   *  - `z1_pyramid_mean`  — reference A1 (`czi_to_zarr.py:410-454`): two
   *    pyramid halvings, voxel-exact vs the oracle's grouped floor-means;
   *  - `z2_zarr_roundtrip` — reference K1/K4/S6 (`czi_to_zarr.py:585-608`):
-  *    write all chunks through the Blosc sink, read them back with the
-  *    Zarr source, per-chunk sums must match pure arithmetic.
+  *    write all chunks through the `format("zarr")` sink, read them back
+  *    as `ZarrChunk`s with the same source, per-chunk sums must match
+  *    pure arithmetic.
   */
 object ArrayOps {
 
@@ -57,10 +58,8 @@ object ArrayOps {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "z1_pyramid_mean" -> ((s, _) => {
       val l0 = SyntheticStack.generate(s, pyramidVol)
-      // fused all-levels pyramid (r14 verdict ask #2b): one map pass +
-      // one exchange instead of 3 sequential shuffle+persist stages —
-      // values byte-identical to Pyramid.levels (PyramidFusedSpec)
-      val (_, all) = Pyramid.levelsFusedAll(s, l0, pyramidVol, nLevels = 4)
+      // the job's pyramid: one map pass + one exchange for all 3 levels
+      val (_, all) = Pyramid.build(s, l0, pyramidVol, nLevels = 4)
       voxelize(s, all, pyramidVol)
         .orderBy(col("level"), col("z"), col("y"), col("x"))
     }),
@@ -70,8 +69,9 @@ object ArrayOps {
       val dir = graft.Scratch.dir("zarr-q")
       val l0 = SyntheticStack.generate(s, rtVol)
       ZarrIO.writeMetadata(dir, rtVol, nLevels = 1)
-      ZarrIO.writeChunks(l0, dir)
-      ZarrIO.readChunks(s, dir, "rt", 0)
+      l0.toDF().write.format("zarr").option("path", dir).mode("append").save()
+      s.read.format("zarr").option("path", dir).option("stack", "rt").load()
+        .as[ZarrChunk]
         .map { ck =>
           val px = ck.pixels
           var sum = 0L

@@ -478,8 +478,13 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("t21: corpus aggregates once into (doc, bigram) counts; margins broadcast") {
     val p = plan("t21_perplexity")
-    // the single corpus-scale exchange is the (doc_id, w1, w2) rollup
-    assert("hashpartitioning\\(doc_id#\\d+L?, w1#".r.findFirstIn(p).isDefined, p)
+    // the single corpus-scale exchange is one repartition(doc_id); the
+    // (doc, bigram) rollup runs co-partitioned on it, with no exchange
+    // of its own
+    assert("hashpartitioning\\(doc_id#\\d+L?, \\d+\\), REPARTITION_BY_COL".r
+      .findAllIn(p).size == 1, p)
+    assert("hashpartitioning\\(doc_id#".r.findAllIn(p).size == 1, p)
+    assert("hashpartitioning\\(doc_id#\\d+L?, w1#".r.findFirstIn(p).isEmpty, p)
     // c1 margin and the vocab scalar ride broadcasts, not joins-by-shuffle
     assert("BroadcastExchange".r.findAllIn(p).size >= 2, p)
     assert(!p.toLowerCase.contains("cartesianproduct"), p)

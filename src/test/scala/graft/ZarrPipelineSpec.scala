@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{Volume, ZarrChunk}
-import graft.io.zarr.ZarrIO
+import graft.io.zarr.{ZarrIO, ZarrStore}
 import graft.operators.Pyramid
 import graft.sources.SyntheticStack
 
@@ -22,11 +22,10 @@ class ZarrPipelineSpec extends AnyFunSuite {
     val l0 = SyntheticStack.generate(spark, vol)
     assert(l0.count() == 8)
 
-    val lvls = Pyramid.levels(spark, l0, vol, nLevels = 3)
-    assert(lvls.length == 2)
-    val (v1, d1) = lvls.head
-    assert(v1.shape.toSeq == Seq(1L, 1L, 8L, 8L, 8L))
-    val chunks1 = d1.collect()
+    val (vols, all) = Pyramid.build(spark, l0, vol, nLevels = 3)
+    assert(vols.length == 2)
+    assert(vols.head.shape.toSeq == Seq(1L, 1L, 8L, 8L, 8L))
+    val chunks1 = all.collect().filter(_.level == 1)
     assert(chunks1.map(_.numVoxels).sum == 512)
 
     // analytic: window mean of v=31z+17y+13x over 2^3 window at (zb,yb,xb)
@@ -52,7 +51,7 @@ class ZarrPipelineSpec extends AnyFunSuite {
     val vol = Volume("rt", 0, Array(1L, 1L, 20L, 20L, 20L), Array(1, 1, 8, 8, 8))
     val l0 = SyntheticStack.generate(spark, vol)
     ZarrIO.writeMetadata(dir, vol, nLevels = 1)
-    ZarrIO.writeChunks(l0, dir)
+    ZarrStore.write(l0, dir)
 
     // metadata files exist and parse
     val meta = ZarrIO.readZarray(dir, "rt", 0)
@@ -61,7 +60,7 @@ class ZarrPipelineSpec extends AnyFunSuite {
     assert(meta.compressed)
     assert(meta.dtype == graft.core.PixelDtype.U16)
 
-    val back = ZarrIO.readChunks(spark, dir, "rt", 0).collect()
+    val back = ZarrStore.read(spark, dir, "rt", 0)
     assert(back.length == 27, "3x3x3 grid incl. clamped edges")
     val orig = l0.collect().map(c => ((c.z, c.y, c.x), c)).toMap
     back.foreach { ck =>
@@ -75,22 +74,36 @@ class ZarrPipelineSpec extends AnyFunSuite {
     assert(edge.shape.toSeq == Seq(1, 1, 4, 4, 4))
   }
 
+  /** Truncates stack `st`'s chunk (0,0,0) to half its length, reads the
+    * level back and returns every message in the failure's cause chain. */
+  private def readTruncated(dir: String, st: String): String = {
+    val chunkFile = java.nio.file.Paths.get(dir, st, "0", "0", "0", "0", "0", "0")
+    val bytes = Files.readAllBytes(chunkFile)
+    Files.write(chunkFile, bytes.take(bytes.length / 2))
+    val e = intercept[org.apache.spark.SparkException](ZarrStore.read(spark, dir, st, 0))
+    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(c => String.valueOf(c.getMessage)).mkString("\n")
+  }
+
   test("corrupt chunk file fails loudly, naming the chunk path") {
     val dir = Files.createTempDirectory("zarr-corrupt").toString
     val vol = Volume("cr", 0, Array(1L, 1L, 8L, 8L, 8L), Array(1, 1, 8, 8, 8))
     ZarrIO.writeMetadata(dir, vol, nLevels = 1)
-    ZarrIO.writeChunks(SyntheticStack.generate(spark, vol), dir)
-    // truncate the one chunk file mid-frame
-    val chunkFile = java.nio.file.Paths.get(dir, "cr", "0", "0", "0", "0", "0", "0")
-    val bytes = Files.readAllBytes(chunkFile)
-    Files.write(chunkFile, bytes.take(bytes.length / 2))
-    val e = intercept[org.apache.spark.SparkException] {
-      ZarrIO.readChunks(spark, dir, "cr", 0).collect()
-    }
+    ZarrStore.write(SyntheticStack.generate(spark, vol), dir)
     // the task failure must carry the chunk PATH, not just a codec error —
     // in a million-task read a bare "zstd decoded N bytes" is undebuggable
-    val msg = e.getCause match { case c: Throwable => String.valueOf(c.getMessage) }
-    assert(msg.contains("corrupt zarr chunk at") && msg.contains("0/0/0/0/0"), msg)
+    val msg = readTruncated(dir, "cr")
+    assert(msg.contains("corrupt zarr chunk at") && msg.contains("cr/0/0/0/0/0/0"), msg)
+  }
+
+  test("truncated chunk in an uncompressed store fails instead of reading short") {
+    val dir = Files.createTempDirectory("zarr-raw-trunc").toString
+    val vol = Volume("rw", 0, Array(1L, 1L, 8L, 8L, 8L), Array(1, 1, 8, 8, 8))
+    ZarrIO.writeMetadata(dir, vol, nLevels = 1, compressed = false)
+    ZarrStore.write(SyntheticStack.generate(spark, vol), dir)
+    val msg = readTruncated(dir, "rw")
+    assert(msg.contains("corrupt zarr chunk at") && msg.contains("rw/0/0/0/0/0/0") &&
+      msg.contains("512 bytes, expected 1024"), msg)
   }
 
   test("float32 volume: pyramid + zarr roundtrip with <f4 dtype") {
@@ -108,13 +121,12 @@ class ZarrPipelineSpec extends AnyFunSuite {
       ZarrChunk("f32", 0, 0, 0, coords(2).toInt, coords(3).toInt, coords(4).toInt,
         Array(1, 1, 4, 4, 4), PixelCodec.f32ToBytes(px))
     }
-    val lvls = Pyramid.levels(spark, l0, vol, nLevels = 2)
     ZarrIO.writeMetadata(dir, vol, nLevels = 2)
-    ZarrIO.writeChunks(l0, dir, typesize = 4)
-    lvls.foreach { case (_, ds) => ZarrIO.writeChunks(ds, dir, typesize = 4) }
+    ZarrStore.write(l0, dir)
+    ZarrStore.write(Pyramid.build(spark, l0, vol, nLevels = 2)._2, dir)
 
     assert(ZarrIO.readZarray(dir, "f32", 0).dtype == PixelDtype.F32)
-    val l1 = ZarrIO.readChunks(spark, dir, "f32", 1).collect()
+    val l1 = ZarrStore.read(spark, dir, "f32", 1)
     assert(l1.map(c => c.data.length / 4).sum == 64)
     // voxel (0,0,0) at level 1 = mean of the 2x2x2 corner
     val c0 = l1.find(c => c.z == 0 && c.y == 0 && c.x == 0).get
@@ -128,13 +140,11 @@ class ZarrPipelineSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("zarr-pipe").toString
     val vol = Volume("pipe", 0, Array(1L, 1L, 32L, 32L, 32L), Array(1, 1, 16, 16, 16))
     val l0 = SyntheticStack.generate(spark, vol)
-    val lvls = Pyramid.levels(spark, l0, vol, nLevels = 2)
-
     ZarrIO.writeMetadata(dir, vol, nLevels = 2, voxelZyx = Seq(1.0, 0.5, 0.5))
-    ZarrIO.writeChunks(l0, dir)
-    lvls.foreach { case (_, ds) => ZarrIO.writeChunks(ds, dir) }
+    ZarrStore.write(l0, dir)
+    ZarrStore.write(Pyramid.build(spark, l0, vol, nLevels = 2)._2, dir)
 
-    val l1 = ZarrIO.readChunks(spark, dir, "pipe", 1).collect()
+    val l1 = ZarrStore.read(spark, dir, "pipe", 1)
     assert(l1.map(_.numVoxels).sum == 16 * 16 * 16)
 
     // .zattrs carries OME-NGFF multiscales with scale doubling per level

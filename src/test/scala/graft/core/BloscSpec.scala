@@ -29,8 +29,19 @@ class BloscSpec extends AnyFunSuite {
     assert(h.cbytes == frame.length)
     assert(h.typesize == 2)
     assert((h.flags & 0x01) != 0, "shuffle flag")
+    assert((h.flags & 0x10) != 0, "blocks-not-split flag: one zstd stream per block")
     assert((h.flags >> 5) == 4, "zstd compressor format id")
     assert(frame(0) == 2, "blosc format version")
+  }
+
+  test("a frame whose length differs from its header's cbytes is rejected") {
+    val raw = PixelCodec.toBytes(Array.tabulate(4096)(i => i / 16))
+    val frame = Blosc.compress(raw, typesize = 2, clevel = 3)
+    val memcpy = Blosc.compress(Array.tabulate[Byte](64)(i => (i * 37).toByte))
+    for (f <- Seq(frame, memcpy)) {
+      intercept[IllegalArgumentException](Blosc.decompress(f.take(f.length - 1)))
+      intercept[IllegalArgumentException](Blosc.decompress(f :+ 0.toByte))
+    }
   }
 
   test("incompressible data falls back to memcpy frame") {

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Spark
 import graft.core.Volume
-import graft.io.zarr.{ZarrDataSource, ZarrIO}
+import graft.io.zarr.{ZarrDataSource, ZarrIO, ZarrStore}
 import graft.sources.SyntheticStack
 
 /** A `mock://` Hadoop FileSystem backed by the local disk — the standard
@@ -47,9 +47,10 @@ class MockSchemeFsSpec extends AnyFunSuite {
     val dir = "mock://" + Files.createTempDirectory("zarr-mockfs").toString
     val vol = Volume("mk", 0, Array(1L, 1L, 16L, 16L, 16L), Array(1, 1, 8, 8, 8))
 
-    // driver-side metadata write + executor-side chunk write (ZarrIO)
+    // driver-side metadata write + executor-side chunk write, whose codec
+    // the tasks read from the .zarray through the same scheme
     ZarrIO.writeMetadata(dir, vol, nLevels = 1)
-    ZarrIO.write(SyntheticStack.generate(spark, vol), dir, vol)
+    ZarrStore.write(SyntheticStack.generate(spark, vol), dir)
 
     // DSv2 read back through the same scheme, voxel-exact
     val back = spark.read.format(classOf[ZarrDataSource].getName)

@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.Spark
 import graft.core.Volume
-import graft.io.zarr.{ZarrDataSource, ZarrIO}
+import graft.io.zarr.{ZarrDataSource, ZarrIO, ZarrStore}
 import graft.sources.SyntheticStack
 
 /** The REAL object-store round trip (VERDICT r11 stretch ask #7): every
@@ -192,7 +192,7 @@ class S3RestFsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val vol = Volume("s3", 0, Array(1L, 1L, 16L, 16L, 16L), Array(1, 1, 8, 8, 8))
 
     ZarrIO.writeMetadata(dir, vol, nLevels = 1)
-    ZarrIO.write(SyntheticStack.generate(spark, vol), dir, vol)
+    ZarrStore.write(SyntheticStack.generate(spark, vol), dir)
 
     val back = spark.read.format(classOf[ZarrDataSource].getName)
       .option("path", dir).option("stack", "s3").option("level", "0").load()
@@ -228,7 +228,7 @@ class S3RestFsSpec extends AnyFunSuite with BeforeAndAfterAll {
       mem.addData(chunk)
       q.processAllAvailable(); q.stop()
     }
-    val back = ZarrIO.readChunks(spark, dir, "sst", 0).collect()
+    val back = ZarrStore.read(spark, dir, "sst", 0)
     assert(back.map(_.numVoxels).sum == 16 * 8 * 8)
     back.foreach { ck =>
       val px = ck.pixels

@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.Spark
 import graft.core.Volume
-import graft.io.zarr.{ZarrDataSource, ZarrIO}
+import graft.io.zarr.{ZarrDataSource, ZarrIO, ZarrStore}
 import graft.sources.SyntheticStack
 
 /** Fault-injected proof of the retry/backoff contract (VERDICT r12 ask
@@ -304,7 +304,7 @@ class S3RetrySpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = s"s3r://$bucket/zarr-throttled"
     val vol = Volume("thr", 0, Array(1L, 1L, 16L, 16L, 16L), Array(1, 1, 8, 8, 8))
     ZarrIO.writeMetadata(dir, vol, nLevels = 1)
-    ZarrIO.write(SyntheticStack.generate(spark, vol), dir, vol)
+    ZarrStore.write(SyntheticStack.generate(spark, vol), dir)
     assert(injected.get() > 0, "the burst actually fired during the commit")
 
     val back = spark.read.format(classOf[ZarrDataSource].getName)
@@ -375,7 +375,7 @@ class S3RetrySpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(files.count(!_.startsWith(".")) == 2,
         s"$tag: expected exactly 2 chunk files, got $files")
       assert(!files.exists(_.startsWith(".tmp-")), s"$tag: tmp residue in $files")
-      val back = ZarrIO.readChunks(spark, dir, "sst", 0).collect()
+      val back = ZarrStore.read(spark, dir, "sst", 0)
       assert(back.length == 2, s"$tag: ${back.length} chunks read back")
       back.foreach { ck =>
         val px = ck.pixels

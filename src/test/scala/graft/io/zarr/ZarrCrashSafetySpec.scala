@@ -19,7 +19,7 @@ object ZarrCrashInjector {
 
 /** K1's exactly-once claim under FAILURE, not just the happy path
   * (VERDICT r9 ask #6). The tmp+atomic-rename protocol
-  * (`ZarrIO.writeChunks`) asserts: a visible chunk file is always a
+  * (`ZarrDataWriter`, the `format("zarr")` sink) asserts: a visible chunk file is always a
   * complete chunk (rename is the commit point), a killed attempt leaves
   * at most orphaned `.tmp-*` dot-files that readers never see, and a
   * re-run over the partial state converges to exactly one
@@ -34,6 +34,13 @@ class ZarrCrashSafetySpec extends AnyFunSuite {
     appName = "graft-crash-test")
 
   private val vol = Volume("ct", 0, Array(1L, 1L, 16L, 16L, 16L), Array(1, 1, 8, 8, 8))
+
+  /** A fresh store with this spec's metadata written. */
+  private def store(prefix: String): String = {
+    val dir = Files.createTempDirectory(prefix).toString
+    ZarrIO.writeMetadata(dir, vol, nLevels = 1)
+    dir
+  }
 
   /** Recursive (relativePath -> bytes) map of VISIBLE files under dir. */
   private def visible(dir: String): Map[String, Seq[Byte]] = {
@@ -56,17 +63,17 @@ class ZarrCrashSafetySpec extends AnyFunSuite {
 
   test("task killed mid-write + planted partial tmp: re-run converges to exactly-once") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("zarr-crash").toString
-    val clean = Files.createTempDirectory("zarr-clean").toString
+    val dir = store("zarr-crash")
+    val clean = store("zarr-clean")
     val l0 = SyntheticStack.generate(spark, vol)
 
     // the oracle tree: same chunks written once into a clean directory
-    ZarrIO.writeChunks(l0, clean)
+    ZarrStore.write(l0, clean)
     val want = visible(clean)
     assert(want.size == 8, s"expected 8 chunk files, got ${want.keySet}")
 
     // 1. some work already committed before the crash (one whole chunk)
-    ZarrIO.writeChunks(l0.filter(c => c.z == 0 && c.y == 0 && c.x == 0), dir)
+    ZarrStore.write(l0.filter(c => c.z == 0 && c.y == 0 && c.x == 0), dir)
     assert(visible(dir).size == 1)
 
     // 2. a crashed attempt's PARTIAL tmp in a chunk directory: garbage
@@ -86,7 +93,7 @@ class ZarrCrashSafetySpec extends AnyFunSuite {
         throw new RuntimeException("injected mid-write crash")
       ck
     }
-    intercept[SparkException] { ZarrIO.writeChunks(poisoned, dir) }
+    intercept[SparkException] { ZarrStore.write(poisoned, dir) }
 
     // invariant even in the wreckage: every VISIBLE file is a complete,
     // byte-correct chunk — partial state can only ever wear a tmp name
@@ -106,7 +113,7 @@ class ZarrCrashSafetySpec extends AnyFunSuite {
     val swept = ZarrIO.cleanupTmp(dir, spark.sparkContext.hadoopConfiguration)
     assert(swept >= 1, "planted tmp was not swept")
     assert(tmps(dir).isEmpty)
-    ZarrIO.writeChunks(l0, dir)
+    ZarrStore.write(l0, dir)
 
     // exactly-once: file set and bytes identical to the clean write —
     // no partials, no duplicates, no stray names
@@ -115,14 +122,14 @@ class ZarrCrashSafetySpec extends AnyFunSuite {
   }
 
   test("duplicate committers (speculative twin): rename race leaves one file per chunk") {
-    val dir = Files.createTempDirectory("zarr-dup").toString
-    val clean = Files.createTempDirectory("zarr-dup-clean").toString
+    val dir = store("zarr-dup")
+    val clean = store("zarr-dup-clean")
     val l0 = SyntheticStack.generate(spark, vol)
-    ZarrIO.writeChunks(l0, clean)
+    ZarrStore.write(l0, clean)
     // two full committers over the same root — the second loses every
     // rename (dst exists) and must delete its own tmp, not corrupt dst
-    ZarrIO.writeChunks(l0, dir)
-    ZarrIO.writeChunks(l0, dir)
+    ZarrStore.write(l0, dir)
+    ZarrStore.write(l0, dir)
     assert(visible(dir) == visible(clean))
     assert(tmps(dir).isEmpty, "losing committer left its tmp behind")
   }

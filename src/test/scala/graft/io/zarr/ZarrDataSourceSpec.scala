@@ -139,7 +139,7 @@ class ZarrDataSourceSpec extends AnyFunSuite {
   }
 
   test("streaming sink rejects Complete-mode truncate instead of appending silently") {
-    val b = new ZarrWriteBuilder("/tmp/nonexistent-zarr", 3, 2, None, None)
+    val b = new ZarrWriteBuilder("/tmp/nonexistent-zarr", None, None)
     b.truncate()
     intercept[UnsupportedOperationException] { b.build().toStreaming }
   }
@@ -282,7 +282,7 @@ class ZarrDataSourceSpec extends AnyFunSuite {
     q2.processAllAvailable()
     q2.stop()
 
-    val back = ZarrIO.readChunks(spark, dir, "st", 0).collect()
+    val back = ZarrStore.read(spark, dir, "st", 0)
     assert(back.map(_.numVoxels).sum == 16 * 8 * 8)
     back.foreach { ck =>
       val px = ck.pixels
@@ -297,9 +297,8 @@ class ZarrDataSourceSpec extends AnyFunSuite {
     val vol = Volume("lv", 0, Array(1L, 1L, 16L, 16L, 16L), Array(1, 1, 8, 8, 8))
     val l0 = SyntheticStack.generate(spark, vol)
     ZarrIO.writeMetadata(dir, vol, nLevels = 2)
-    ZarrIO.writeChunks(l0, dir)
-    val (v1, l1) = graft.operators.Pyramid.levels(spark, l0, vol, nLevels = 2).head
-    ZarrIO.writeChunks(l1, dir)
+    ZarrStore.write(l0, dir)
+    ZarrStore.write(graft.operators.Pyramid.build(spark, l0, vol, nLevels = 2)._2, dir)
 
     val back = spark.read.format("zarr")
       .option("path", dir).option("stack", "lv").option("level", "1")
@@ -313,6 +312,35 @@ class ZarrDataSourceSpec extends AnyFunSuite {
     assert(px(0) == (sum / 8).toInt)
   }
 
+  test("a write without the level's .zarray fails instead of guessing a codec") {
+    val dir = Files.createTempDirectory("zarr-dsv2-nometa").toString
+    val vol = Volume("nm", 0, Array(1L, 1L, 8L, 8L, 8L), Array(1, 1, 8, 8, 8))
+    val e = intercept[org.apache.spark.SparkException] {
+      ZarrStore.write(SyntheticStack.generate(spark, vol), dir)
+    }
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(c => String.valueOf(c.getMessage)).mkString("\n")
+    assert(msgs.contains("nm/0/.zarray"), msgs)
+    assert(!new java.io.File(s"$dir/nm/0/0").exists(), "a chunk landed without metadata")
+  }
+
+  test("the writer encodes at the clevel and dtype stride the .zarray declares") {
+    import graft.core.{PixelDtype, ZarrChunk}
+    val dir = Files.createTempDirectory("zarr-dsv2-codec").toString
+    val vol = Volume("cd", 0, Array(1L, 1L, 32L, 32L, 32L), Array(1, 1, 32, 32, 32), PixelDtype.F32)
+    ZarrIO.writeMetadata(dir, vol, nLevels = 1, clevel = 9)
+    assert(ZarrIO.readZarray(dir, "cd", 0).clevel == 9)
+    val rnd = new scala.util.Random(7)
+    val data = graft.core.PixelCodec.f32ToBytes(
+      Array.tabulate(32 * 32 * 32)(i => (i % 61) * 0.25f + rnd.nextInt(8)))
+    import spark.implicits._
+    ZarrStore.write(Seq(ZarrChunk("cd", 0, 0, 0, 0, 0, 0, Array(1, 1, 32, 32, 32), data)).toDS(), dir)
+    val onDisk = Files.readAllBytes(java.nio.file.Paths.get(dir, "cd", "0", "0", "0", "0", "0", "0"))
+    assert(onDisk.sameElements(graft.core.Blosc.compress(data, typesize = 4, clevel = 9)))
+    assert(!onDisk.sameElements(graft.core.Blosc.compress(data, typesize = 4, clevel = 3)))
+    assert(!onDisk.sameElements(graft.core.Blosc.compress(data, typesize = 2, clevel = 9)))
+  }
+
   test("missing chunk files read as fill-value zeros") {
     val dir = Files.createTempDirectory("zarr-dsv2-fill").toString
     val vol = Volume("s", 0, Array(1L, 1L, 8L, 8L, 8L), Array(1, 1, 8, 8, 8))
@@ -323,5 +351,36 @@ class ZarrDataSourceSpec extends AnyFunSuite {
     val rows = back.collect()
     assert(rows.length == 1)
     assert(rows(0).getAs[Array[Byte]]("data").forall(_ == 0))
+  }
+
+  test("a .zarray with a non-Blosc compressor fails at planning, naming its path and codec") {
+    val dir = Files.createTempDirectory("zarr-dsv2-foreign").toString
+    val vol = Volume("fz", 0, Array(1L, 1L, 8L, 8L, 8L), Array(1, 1, 8, 8, 8))
+    ZarrIO.writeMetadata(dir, vol, nLevels = 1)
+    // a numcodecs Zstd compressor carries `level`, not Blosc's `clevel`
+    val zarray = java.nio.file.Paths.get(dir, "fz", "0", ".zarray")
+    val json = new com.fasterxml.jackson.databind.ObjectMapper().readTree(Files.readString(zarray))
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    json.putObject("compressor").put("id", "zstd").put("level", 1)
+    Files.writeString(zarray, json.toString)
+    val e = intercept[IllegalArgumentException] {
+      spark.read.format("zarr").option("path", dir).option("stack", "fz").load().collect()
+    }
+    assert(e.getMessage.contains("fz/0/.zarray") && e.getMessage.contains("\"zstd\""), e.getMessage)
+  }
+
+  test("an IO error on a chunk propagates as is, not as a corrupt chunk") {
+    val dir = Files.createTempDirectory("zarr-dsv2-ioerr").toString
+    val vol = Volume("io", 0, Array(1L, 1L, 8L, 8L, 8L), Array(1, 1, 8, 8, 8))
+    ZarrIO.writeMetadata(dir, vol, nLevels = 1)
+    // a directory where the chunk file belongs: it exists, but open fails
+    Files.createDirectories(java.nio.file.Paths.get(dir, "io", "0", "0", "0", "0", "0", "0"))
+    val e = intercept[org.apache.spark.SparkException] {
+      spark.read.format("zarr").option("path", dir).option("stack", "io").load().collect()
+    }
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(_.isInstanceOf[java.io.IOException]), chain.mkString("\n"))
+    assert(!chain.exists(c => String.valueOf(c.getMessage).contains("corrupt zarr chunk")),
+      chain.mkString("\n"))
   }
 }

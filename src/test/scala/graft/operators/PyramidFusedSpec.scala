@@ -1,17 +1,24 @@
 package graft.operators
 
+import java.nio.file.Files
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.Spark
 import graft.core.{Volume, ZarrChunk}
+import graft.io.zarr.ZarrStore
+import graft.jobs.ZeissJob
 import graft.sources.SyntheticStack
+import graft.sources.czi.SyntheticCzi
 
-/** The fused all-levels pyramid must be BYTE-identical to the
-  * sequential assemble-then-downsample chain it replaces — including
-  * ceil-edge chunks, where a level's edge pieces go odd-sized. The
-  * alignment precondition (chunk % f^(nLevels-1) == 0) is exactly what
-  * makes the chunk-local recursion legal; the unaligned fallback must
-  * route through the sequential path unchanged. */
+/** [[Pyramid.build]], the fused all-levels pyramid, must be
+  * BYTE-identical to the sequential assemble-then-downsample chain
+  * ([[Pyramid.levels]]) — including ceil-edge chunks, where a level's
+  * edge pieces go odd-sized. The alignment precondition
+  * (chunk % f^(nLevels-1) == 0) is exactly what makes the chunk-local
+  * recursion legal; the unaligned fallback must route through the
+  * sequential path unchanged. The job that uses it must leave nothing
+  * cached on either path. */
 class PyramidFusedSpec extends AnyFunSuite {
 
   private lazy val spark = Spark.session(master = "local[4]", shufflePartitions = 4,
@@ -24,7 +31,7 @@ class PyramidFusedSpec extends AnyFunSuite {
   private def assertEqualLevels(vol: Volume, nLevels: Int): Unit = {
     val seq = Pyramid.levels(spark, SyntheticStack.generate(spark, vol), vol, nLevels)
     val want = keyed(seq.flatMap(_._2.collect()).toArray)
-    val (vols, all) = Pyramid.levelsFusedAll(
+    val (vols, all) = Pyramid.build(
       spark, SyntheticStack.generate(spark, vol), vol, nLevels)
     assert(vols.map(_.shape.toSeq) == seq.map(_._1.shape.toSeq))
     val got = keyed(all.collect())
@@ -50,7 +57,7 @@ class PyramidFusedSpec extends AnyFunSuite {
     // mis-place voxels along at least two axes (ADVICE r15, z1)
     val vol = Volume("fnc", 0, Array(1L, 1L, 32L, 64L, 16L), Array(1, 1, 16, 32, 8))
     assertEqualLevels(vol, 3)
-    val (_, all) = Pyramid.levelsFusedAll(
+    val (_, all) = Pyramid.build(
       spark, SyntheticStack.generate(spark, vol), vol, 3)
     // level 1 = floor-mean over each 2x2x2 window of the synthetic
     // voxel function (the z1 oracle's semantics); checking the GLOBAL
@@ -70,6 +77,52 @@ class PyramidFusedSpec extends AnyFunSuite {
   test("unaligned chunk (12^3, nLevels 4) falls back to the sequential path") {
     // 12 % 2^3 != 0: the fused recursion would be wrong here, so the
     // dispatcher must route through Pyramid.levels — equality is the proof
-    assertEqualLevels(Volume("fu", 0, Array(1L, 1L, 24L, 24L, 24L), Array(1, 1, 12, 12, 12)), 4)
+    val vol = Volume("fu", 0, Array(1L, 1L, 24L, 24L, 24L), Array(1, 1, 12, 12, 12))
+    assertEqualLevels(vol, 4)
+    // the fallback caches nothing; instead each level's exchange runs once
+    // and the levels above reuse it within the one unioned plan
+    val (_, all) = Pyramid.build(spark, SyntheticStack.generate(spark, vol), vol, 4)
+    all.collect()
+    val plan = all.queryExecution.executedPlan.toString
+    assert("ReusedExchange".r.findAllIn(plan).size == 2, plan)
+  }
+
+  /** Converts a synthetic CZI stack of `zyx` voxels through
+    * `ZeissJob.convertStack`, asserts that no RDD the conversion persisted
+    * is still cached afterwards, and returns the output root and volume. */
+  private def convertUncached(stack: String, zyx: (Int, Int, Int), chunk: Array[Int],
+                              nLevels: Int): (String, Volume) = {
+    val root = Files.createTempDirectory("pyr-job").toString
+    SyntheticCzi.write(s"$root/$stack.czi",
+      Array.tabulate(zyx._1, zyx._2, zyx._3)((z, y, x) => SyntheticStack.value(z, y, x)))
+    val settings = ZeissJob.Settings(inputSource = root, outputDirectory = s"$root/out",
+      chunkSize = chunk, downsampleLevels = nLevels)
+    def cached = spark.sparkContext.getPersistentRDDs.keySet
+    val before = cached
+    val vol = ZeissJob.convertStack(spark, s"$root/$stack.czi", s"$root/out", settings,
+      Seq(1.0, 1.0, 1.0))
+    assert((cached -- before).isEmpty, s"still cached after the conversion: ${cached -- before}")
+    (s"$root/out", vol)
+  }
+
+  /** Every level of `stack` read back from `out` equals `Pyramid.levels`
+    * over the generator, chunk for chunk; `ZarrStore.read` also requires
+    * each chunk's file to exist. */
+  private def assertWrittenLevels(out: String, stack: String, vol: Volume, nLevels: Int): Unit = {
+    val l0 = SyntheticStack.generate(spark, vol)
+    val want = keyed(l0.collect() ++ Pyramid.levels(spark, l0, vol, nLevels).flatMap(_._2.collect()))
+    val got = keyed((0 until nLevels).flatMap(l => ZarrStore.read(spark, out, stack, l)).toArray)
+    assert(got.keySet == want.keySet, "chunk grid differs")
+    got.foreach { case (k, v) => assert(v == want(k), s"chunk $k differs from Pyramid.levels") }
+  }
+
+  test("convertStack on an aligned config leaves nothing cached, levels exact") {
+    val (out, vol) = convertUncached("ca", (32, 32, 32), Array(16, 16, 16), 3)
+    assertWrittenLevels(out, "ca", vol, 3)
+  }
+
+  test("convertStack on an unaligned config (12^3 chunks, 4 levels): nothing cached, levels exact") {
+    val (out, vol) = convertUncached("cu", (20, 24, 28), Array(12, 12, 12), 4)
+    assertWrittenLevels(out, "cu", vol, 4)
   }
 }

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.Spark
 import graft.core.PixelCodec
-import graft.io.zarr.ZarrIO
+import graft.io.zarr.{ZarrIO, ZarrStore}
 import graft.jobs.ZeissJob
 import graft.sources.SyntheticStack
 
@@ -400,7 +400,7 @@ class CziSpec extends AnyFunSuite {
     assert(attrs.contains("\"ch0\"") && attrs.contains("\"ch1\""), attrs)
 
     // level 1: halved per channel, values = per-channel 2x2x2 means
-    val l1 = ZarrIO.readChunks(spark, s"$root/out", "mc", 1).collect()
+    val l1 = ZarrStore.read(spark, s"$root/out", "mc", 1)
     assert(l1.map(_.c).distinct.sorted.toSeq == Seq(0, 1))
     l1.foreach { ck =>
       val px = ck.pixels
@@ -429,7 +429,7 @@ class CziSpec extends AnyFunSuite {
     assert(vol.shape.toSeq == Seq(2, 2, 16, 16, 16))
 
     // level 1: halved per (t, c) frame, values = per-frame 2x2x2 means
-    val l1 = ZarrIO.readChunks(spark, s"$root/out", "mt", 1).collect()
+    val l1 = ZarrStore.read(spark, s"$root/out", "mt", 1)
     assert(l1.map(ck => (ck.t, ck.c)).distinct.sorted.toSeq ==
       Seq((0, 0), (0, 1), (1, 0), (1, 1)))
     l1.foreach { ck =>
@@ -475,7 +475,7 @@ class CziSpec extends AnyFunSuite {
     assert(vr == Seq(2.0, 0.25, 0.5))
 
     // level 0 round-trips voxel-exact through Blosc/Zarr
-    val l0 = ZarrIO.readChunks(spark, s"$root/out", "stack1", 0).collect()
+    val l0 = ZarrStore.read(spark, s"$root/out", "stack1", 0)
     assert(l0.map(_.numVoxels).sum == 16 * 32 * 32)
     l0.foreach { ck =>
       val px = ck.pixels
@@ -488,7 +488,7 @@ class CziSpec extends AnyFunSuite {
     // level 1 exists with halved shape
     val shape1 = ZarrIO.readZarray(s"$root/out", "stack1", 1).shape
     assert(shape1.toSeq == Seq(1L, 1L, 8L, 16L, 16L))
-    val l1 = ZarrIO.readChunks(spark, s"$root/out", "stack1", 1).collect()
+    val l1 = ZarrStore.read(spark, s"$root/out", "stack1", 1)
     assert(l1.map(_.numVoxels).sum == 8 * 16 * 16)
     // spot-check one level-1 voxel against the analytic 2x2x2 mean
     val c0 = l1.find(c => c.z == 0 && c.y == 0 && c.x == 0).get
@@ -496,6 +496,23 @@ class CziSpec extends AnyFunSuite {
     for (dz <- 0 until 2; dy <- 0 until 2; dx <- 0 until 2)
       sum += SyntheticStack.value(dz, dy, dx)
     assert(c0.pixels(0) == (sum / 8).toInt)
+  }
+
+  test("derivatives copy writes no Hadoop .crc sidecars, even on an uncached filesystem") {
+    val root = Files.createTempDirectory("zeiss-deriv")
+    Files.createDirectories(root.resolve("in/derivatives/sub"))
+    Files.writeString(root.resolve("in/derivatives/meta.txt"), "hello")
+    Files.writeString(root.resolve("in/derivatives/sub/more.txt"), "more")
+    // a fresh LocalFileSystem per lookup: the copy cannot inherit a cached
+    // instance whose checksum writing some other code already disabled
+    val conf = new org.apache.hadoop.conf.Configuration(spark.sparkContext.hadoopConfiguration)
+    conf.setBoolean("fs.file.impl.disable.cache", true)
+    assert(ZeissJob.uploadDerivatives(s"$root/in", s"$root/out", conf))
+    val s = Files.walk(root.resolve("out/derivatives"))
+    val files = try s.toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(Files.isRegularFile(_)).map(p => root.resolve("out/derivatives").relativize(p).toString)
+      .sorted.toSeq finally s.close()
+    assert(files == Seq("meta.txt", "sub/more.txt"), files)
   }
 
   test("multi-stack conversion overlaps stacks and beats the sequential sum") {
@@ -527,12 +544,19 @@ class CziSpec extends AnyFunSuite {
     if (Runtime.getRuntime.availableProcessors >= 8)
       assert(parS < seqS, f"parallel ($parS%.2f s) not faster than sequential ($seqS%.2f s)")
 
-    // both outputs identical and voxel-exact for every stack
+    // both outputs complete and voxel-exact for every stack: every level-0
+    // chunk file exists (ZarrStore.read) and holds the generator's values,
+    // so stacks that clobbered or skipped each other's chunks fail here
     for (st <- Seq("st1", "st2", "st3", "st4"); out <- Seq("seq", "par")) {
-      val l0 = ZarrIO.readChunks(spark, s"$root/$out", st, 0).collect()
+      val l0 = ZarrStore.read(spark, s"$root/$out", st, 0)
       assert(l0.map(_.numVoxels).sum == 16 * 32 * 32, s"$out/$st")
-      val c = l0.find(c => c.z == 0 && c.y == 0 && c.x == 0).get
-      assert(c.pixels(0) == SyntheticStack.value(0, 0, 0))
+      l0.foreach { ck =>
+        val px = ck.pixels
+        for (z <- 0 until 8; y <- 0 until 16; x <- 0 until 16)
+          assert(px(z * 256 + y * 16 + x) ==
+            SyntheticStack.value(ck.z * 8 + z, ck.y * 16 + y, ck.x * 16 + x),
+            s"$out/$st chunk(${ck.z},${ck.y},${ck.x}) voxel($z,$y,$x)")
+      }
     }
   }
 
@@ -553,12 +577,11 @@ class CziSpec extends AnyFunSuite {
     }
     // pyramid + zarr with |u1 dtype
     val l0 = CziSource.scan(spark, s"$root/u8.czi", vol, idx)
-    val lvls = graft.operators.Pyramid.levels(spark, l0, vol, nLevels = 2)
     ZarrIO.writeMetadata(s"$root/out", vol, nLevels = 2)
-    ZarrIO.writeChunks(l0, s"$root/out", typesize = 1)
-    lvls.foreach { case (_, ds) => ZarrIO.writeChunks(ds, s"$root/out", typesize = 1) }
+    ZarrStore.write(l0, s"$root/out")
+    ZarrStore.write(graft.operators.Pyramid.build(spark, l0, vol, nLevels = 2)._2, s"$root/out")
     assert(ZarrIO.readZarray(s"$root/out", "u8", 0).dtype == PixelDtype.U8)
-    val l1 = ZarrIO.readChunks(spark, s"$root/out", "u8", 1).collect()
+    val l1 = ZarrStore.read(spark, s"$root/out", "u8", 1)
     assert(l1.map(_.data.length).sum == 8 * 12 * 12)
     // corner voxel = floor mean of the 2x2x2 corner
     val c0 = l1.find(c => c.z == 0 && c.y == 0 && c.x == 0).get
@@ -591,7 +614,7 @@ class CziSpec extends AnyFunSuite {
       inputSource = dir, outputDirectory = out,
       chunkSize = Array(4, 8, 8), downsampleLevels = 2)
     ZeissJob.convertStack(spark, path, out, settings, Seq(1.0, 1.0, 1.0))
-    val l1 = ZarrIO.readChunks(spark, out, "f32", 1).collect()
+    val l1 = ZarrStore.read(spark, out, "f32", 1)
     assert(l1.nonEmpty)
     l1.foreach { ck =>
       val px = graft.core.PixelCodec.f32ToFloats(ck.data)
