@@ -18,6 +18,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.{Blosc, ChunkGrid}
+import graft.io.{GridRange, GridScan, GridScanBuilder}
 
 /** Zarr v2 DataSource V2: `spark.read.format("zarr")` over a chunk store
   * and `df.write.format("zarr")` into one — the engine's array storage as
@@ -27,12 +28,15 @@ import graft.core.{Blosc, ChunkGrid}
   *
   * Options: `path` (store root), `stack`, `level`.
   *
-  * Read: one InputPartition per chunk-grid slab — planned from `.zarray`
+  * Read: partitions are ranges of the chunk grid — planned from `.zarray`
   * arithmetic, never by listing (at 100 TB the store has billions of
-  * chunk files; listing is the scalability bug the plan avoids). Each
-  * reader opens only its own chunk files; missing files yield
-  * fill-value (zeros) chunks, matching Zarr semantics. A chunk file that
-  * does not decode to exactly its clamped shape fails the task with
+  * chunk files; listing is the scalability bug the plan avoids). The
+  * pushdown (coordinate and column pruning, COUNT/MIN/MAX with or
+  * without GROUP BY) is the one shared with the CZI connector,
+  * `graft/io/GridScan.scala`; every axis is prunable. Each reader opens
+  * only its own chunk files; missing files yield fill-value (zeros)
+  * chunks, matching Zarr semantics. A chunk file that does not decode to
+  * exactly its clamped shape fails the task with
   * `corrupt zarr chunk at <path>`.
   *
   * Write: the store's only chunk sink. Each task encodes its rows with
@@ -87,239 +91,33 @@ class ZarrTable(props: Map[String, String]) extends Table with SupportsRead with
     new ZarrWriteBuilder(root, props.get("stack"), props.get("level").map(_.toInt))
 }
 
-final case class ZarrInputPartition(firstChunk: Long, lastChunk: Long) extends InputPartition
-
-/** Pushes chunk-coordinate predicates into the grid arithmetic and prunes
-  * unread columns.
-  *
-  * At 100 TB a store has ~10^8 chunk files; a query over one z-slab must
-  * plan only that slab's chunks, not enumerate-then-filter the full grid.
-  * Because chunk placement is pure arithmetic, an accepted coordinate
-  * range shrinks `planInputPartitions` itself — the pruning happens before
-  * any task launches, the Zarr analogue of parquet partition pruning.
-  * Column pruning matters just as much: a scan that doesn't need `data`
-  * (counts, coordinate joins, grid audits) never opens a chunk file.
+/** The shared grid pushdown ([[graft.io.GridScanBuilder]]) with every axis
+  * prunable. At 100 TB a store has ~10^8 chunk files; a query over one
+  * z-slab plans only that slab's chunks, not enumerate-then-filter the
+  * full grid — the Zarr analogue of parquet partition pruning.
   */
 class ZarrScanBuilder(root: String, stack: String, level: Int)
-    extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns
-    with SupportsPushDownAggregates {
-  import org.apache.spark.sql.sources._
-  import org.apache.spark.sql.connector.expressions.NamedReference
-  import org.apache.spark.sql.connector.expressions.aggregate._
-
-  private val axes = Seq("t", "c", "z", "y", "x")
-  // per-axis inclusive coordinate bounds, refined by each accepted filter
-  private val lo = Array.fill(5)(0L)
-  private val hi = Array.fill(5)(Long.MaxValue)
-  private var pushed = Array.empty[Filter]
-  private var required: StructType = ZarrDataSource.chunkSchema
-  // complete aggregate pushdown: grouping axes + ops like ("count","") /
-  // ("min","z"); groupAxes empty = the ungrouped single-row case
-  private var aggOps: Option[(Seq[String], Seq[(String, String)])] = None
-
-  private def refine(ax: Int, l: Long, h: Long): Unit = {
-    lo(ax) = math.max(lo(ax), l)
-    hi(ax) = math.min(hi(ax), h)
-  }
-
-  private def asLong(v: Any): Option[Long] = v match {
-    case i: Int => Some(i.toLong)
-    case l: Long => Some(l)
-    case s: Short => Some(s.toLong)
-    case b: Byte => Some(b.toLong)
-    case _ => None
-  }
-
-  /** Exactly-representable coordinate ranges are fully absorbed (no
-    * residual re-evaluation); anything else stays with Spark. */
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val residual = filters.filterNot { f =>
-      val accepted = f match {
-        case EqualTo(a, v) if axes.contains(a) =>
-          asLong(v).exists { x => refine(axes.indexOf(a), x, x); true }
-        case GreaterThan(a, v) if axes.contains(a) =>
-          asLong(v).exists { x => refine(axes.indexOf(a), x + 1, Long.MaxValue); true }
-        case GreaterThanOrEqual(a, v) if axes.contains(a) =>
-          asLong(v).exists { x => refine(axes.indexOf(a), x, Long.MaxValue); true }
-        case LessThan(a, v) if axes.contains(a) =>
-          asLong(v).exists { x => refine(axes.indexOf(a), Long.MinValue, x - 1); true }
-        case LessThanOrEqual(a, v) if axes.contains(a) =>
-          asLong(v).exists { x => refine(axes.indexOf(a), Long.MinValue, x); true }
-        case In(a, vs) if axes.contains(a) && vs.nonEmpty && vs.forall(asLong(_).isDefined) =>
-          // prune to the value envelope but keep the filter residual —
-          // the sub-grid is a superset of an In's point set
-          val xs = vs.map(asLong(_).get)
-          refine(axes.indexOf(a), xs.min, xs.max)
-          false
-        case _ => false
-      }
-      if (accepted) pushed :+= f
-      accepted
-    }
-    residual
-  }
-
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def pruneColumns(requiredSchema: StructType): Unit = {
-    // preserve source column order; an empty projection (count(*)) keeps
-    // nothing and the reader emits empty rows
-    val keep = requiredSchema.fieldNames.toSet
-    required = StructType(ZarrDataSource.chunkSchema.filter(f => keep.contains(f.name)))
-  }
-
-  /** COUNT(*) / MIN / MAX over chunk coordinates are grid arithmetic —
-    * answered from the driver-planned bounds with no IO at all, the
-    * "billions of chunk files, zero list calls" property taken to its
-    * endpoint. GROUP BY coordinate axes pushes down too: each group is a
-    * coordinate combination of the grouped axes, its count the product of
-    * the other axes' extents — still pure arithmetic, emitted without
-    * opening a single chunk file (group enumeration is range-partitioned,
-    * so even a billion-group axis stays distributed). Only exact cases
-    * are accepted (every aggregate and every grouping column
-    * translatable; residual-free bounds — an In's sub-grid superset is
-    * pruning-only and never reaches here as agg pushdown runs on the
-    * post-filter plan). */
-  private def translate(agg: Aggregation): Option[(Seq[String], Seq[(String, String)])] = {
-    def ax(e: org.apache.spark.sql.connector.expressions.Expression): Option[String] = e match {
-      case f: NamedReference if f.fieldNames.length == 1 && axes.contains(f.fieldNames()(0)) =>
-        Some(f.fieldNames()(0))
-      case _ => None
-    }
-    val groups = agg.groupByExpressions.toSeq.map(ax)
-    val ops = agg.aggregateExpressions.toSeq.map {
-      case _: CountStar => Some(("count", ""))
-      case m: Min => ax(m.column).map(("min", _))
-      case m: Max => ax(m.column).map(("max", _))
-      case _ => None
-    }
-    if (ops.forall(_.isDefined) && groups.forall(_.isDefined) &&
-        groups.flatten.distinct.size == groups.size)
-      Some((groups.flatten, ops.map(_.get)))
-    else None
-  }
-
-  override def supportCompletePushDown(agg: Aggregation): Boolean =
-    translate(agg).isDefined
-
-  override def pushAggregation(agg: Aggregation): Boolean =
-    translate(agg) match {
-      case Some(ops) => aggOps = Some(ops); true
-      case None => false
-    }
-
+    extends GridScanBuilder(GridScan.axes.toSet) {
   override def build(): Scan = new ZarrScan(root, stack, level, lo, hi, required, aggOps)
 }
 
 class ZarrScan(root: String, stack: String, level: Int,
                lo: Array[Long], hi: Array[Long], required: StructType,
-               aggOps: Option[(Seq[String], Seq[(String, String)])] = None)
-    extends Scan with Batch {
+               aggOps: Option[GridScan.AggOps] = None)
+    extends GridScan("ZarrScan", s"$root/$stack/$level", lo, hi, required, aggOps) {
   // driver-side: only the tiny .zarray descriptor is read; the chunk grid
   // stays arithmetic
   private lazy val meta = ZarrIO.readZarray(root, stack, level)
-  private lazy val (shape, chunk, compressed) = (meta.shape, meta.chunk, meta.compressed)
-  private lazy val grid = ChunkGrid.gridShape(shape, chunk)
-  // the scanned sub-grid: pushed bounds clamped to the real grid
-  private lazy val base = Array.tabulate(5)(d => math.max(0L, lo(d)))
-  private lazy val ext = Array.tabulate(5)(d =>
-    math.max(0L, math.min(grid(d) - 1, hi(d)) - base(d) + 1))
+  override protected lazy val grid: Array[Long] = ChunkGrid.gridShape(meta.shape, meta.chunk)
 
-  override def readSchema(): StructType = aggOps match {
-    case Some((groups, ops)) => StructType(
-      groups.map(g => StructField(g, IntegerType, nullable = false)) ++
-        ops.zipWithIndex.map {
-          case (("count", _), i) => StructField(s"agg$i", LongType, nullable = false)
-          case ((op, ax), i) => StructField(s"agg$i", IntegerType, nullable = true)
-        })
-    case None => required
-  }
-  override def toBatch: Batch = this
-  override def description(): String = {
-    val bounds = (0 until 5).collect {
-      case d if lo(d) > 0L || hi(d) != Long.MaxValue =>
-        s"${Seq("t", "c", "z", "y", "x")(d)}=[${lo(d)}..${if (hi(d) == Long.MaxValue) "*" else hi(d)}]"
-    }
-    val agg = aggOps.map { case (groups, ops) =>
-      val g = if (groups.isEmpty) "" else groups.mkString(" groupBy=", ",", "")
-      " agg=" + ops.map {
-        case ("count", _) => "count(*)"
-        case (op, ax) => s"$op($ax)"
-      }.mkString(",") + g
-    }.getOrElse("")
-    s"ZarrScan($root/$stack/$level${if (bounds.isEmpty) "" else bounds.mkString(" ", ",", "")} cols=${required.fieldNames.mkString(",")}$agg)"
-  }
+  // one row per chunk of the pruned sub-grid, range-partitioned
+  override protected def planDataPartitions(): Array[InputPartition] =
+    GridScan.ranged(ext.product)
 
-  private def ranged(total: Long): Array[InputPartition] = {
-    if (total == 0L) return Array.empty
-    val targetPartitions = math.min(total, 256L)
-    val per = ChunkGrid.ceilDiv(total, targetPartitions)
-    (0L until total by per)
-      .map(s => ZarrInputPartition(s, math.min(s + per, total) - 1))
-      .toArray
-  }
-
-  override def planInputPartitions(): Array[InputPartition] = aggOps match {
-    // ungrouped pushed aggregate: one arithmetic row, one no-IO partition
-    case Some((groups, _)) if groups.isEmpty => Array(ZarrInputPartition(0L, 0L))
-    // grouped: range-partition the group space (arithmetic rows, no IO);
-    // an empty sub-grid has no groups at all
-    case Some((groups, _)) =>
-      val axesN = Seq("t", "c", "z", "y", "x")
-      if (ext.exists(_ == 0L)) Array.empty
-      else ranged(groups.map(g => ext(axesN.indexOf(g))).product)
-    case None => ranged(ext.product)
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory = aggOps match {
-    case Some((groups, ops)) => ZarrAggReaderFactory(groups, ops, base, ext)
-    case None => ZarrReaderFactory(root, stack, level, shape, chunk, compressed,
+  override protected def dataReaderFactory(): PartitionReaderFactory =
+    ZarrReaderFactory(root, stack, level, meta.shape, meta.chunk, meta.compressed,
       meta.dtype.itemSize, base, ext, required.fieldNames,
       graft.core.HadoopConf.snapshot())
-  }
-}
-
-/** Emits pre-aggregated rows for a pushed COUNT/MIN/MAX: the chunk count
-  * is the (per-group) sub-grid volume, coordinate extrema are its corner
-  * coordinates. Grouped aggregates enumerate the grouped axes' coordinate
-  * combinations for this partition's [first..last] slice of the group
-  * space. No filesystem access at all. */
-final case class ZarrAggReaderFactory(groups: Seq[String], ops: Seq[(String, String)],
-                                      base: Array[Long], ext: Array[Long])
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new PartitionReader[InternalRow] {
-      private val axes = Seq("t", "c", "z", "y", "x")
-      private val gDims = groups.map(axes.indexOf).toArray
-      private val gExt = gDims.map(ext(_))
-      // per-group chunk count: product of the NON-grouped extents
-      private val perGroup = (0 until 5)
-        .filterNot(gDims.contains).map(ext(_)).product
-      private val p = partition.asInstanceOf[ZarrInputPartition]
-      private var cur = if (groups.isEmpty) -1L else p.firstChunk - 1
-      private val lastG = if (groups.isEmpty) 0L else p.lastChunk
-      override def next(): Boolean = { cur += 1; cur <= lastG }
-      override def get(): InternalRow = {
-        // row-major decompose of the group index over the grouped axes
-        val combo = new Array[Long](gDims.length)
-        var rem = cur
-        var d = gDims.length - 1
-        while (d >= 0) { combo(d) = base(gDims(d)) + rem % gExt(d); rem /= gExt(d); d -= 1 }
-        val n = if (groups.isEmpty) ext.product else perGroup
-        val aggVals = ops.map {
-          case ("count", _) => n
-          case (op, ax) if n == 0L => null // empty sub-grid: min/max of no rows
-          case (op, ax) =>
-            val dim = axes.indexOf(ax)
-            val gi = gDims.indexOf(dim)
-            if (gi >= 0) combo(gi).toInt // grouped axis: the group's value
-            else if (op == "min") base(dim).toInt
-            else (base(dim) + ext(dim) - 1).toInt
-        }
-        InternalRow.fromSeq(combo.map(_.toInt: Any).toIndexedSeq ++ aggVals)
-      }
-      override def close(): Unit = ()
-    }
 }
 
 final case class ZarrReaderFactory(root: String, stack: String, level: Int,
@@ -329,9 +127,9 @@ final case class ZarrReaderFactory(root: String, stack: String, level: Int,
                                    cols: Array[String], hconf: Array[(String, String)])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[ZarrInputPartition]
+    val p = partition.asInstanceOf[GridRange]
     new ZarrPartitionReader(root, stack, level, shape, chunk, compressed, itemSize,
-      base, ext, cols, p.firstChunk, p.lastChunk, hconf)
+      base, ext, cols, p.first, p.last, hconf)
   }
 }
 
@@ -359,26 +157,32 @@ class ZarrPartitionReader(root: String, stack: String, level: Int,
     lazy val raw = {
       val p = new Path(s"$root/$stack/$level/${coords.mkString("/")}")
       val want = cs.product * itemSize
-      if (!fs.exists(p)) new Array[Byte](want) // fill_value=0 chunk
-      else {
-        // IO errors propagate as they are; only the bytes' content is judged
-        val in = fs.open(p)
-        val buf = try {
-          val b = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-          in.readFully(0, b)
-          b
-        } finally in.close()
-        try {
-          val out = if (compressed) Blosc.decompress(buf) else buf
-          require(out.length == want, s"${out.length} bytes, expected $want")
-          out
-        } catch {
-          // a corrupt chunk in a 100 TB store must surface WITH ITS PATH —
-          // a bare frame/length error from deep inside the codec is
-          // undebuggable when a million tasks each read thousands of files
-          case e: Exception => throw new IllegalStateException(
-            s"corrupt zarr chunk at $p: ${e.getMessage}", e)
-        }
+      // one metadata call per chunk (each is a HEAD on an object store):
+      // only a missing file is a fill_value=0 chunk
+      val len =
+        try Some(fs.getFileStatus(p).getLen)
+        catch { case _: java.io.FileNotFoundException => None }
+      len match {
+        case None => new Array[Byte](want)
+        case Some(n) =>
+          // IO errors propagate as they are; only the bytes' content is judged
+          val in = fs.open(p)
+          val buf = try {
+            val b = new Array[Byte](n.toInt)
+            in.readFully(0, b)
+            b
+          } finally in.close()
+          try {
+            val out = if (compressed) Blosc.decompress(buf) else buf
+            require(out.length == want, s"${out.length} bytes, expected $want")
+            out
+          } catch {
+            // a corrupt chunk in a 100 TB store must surface WITH ITS PATH —
+            // a bare frame/length error from deep inside the codec is
+            // undebuggable when a million tasks each read thousands of files
+            case e: Exception => throw new IllegalStateException(
+              s"corrupt zarr chunk at $p: ${e.getMessage}", e)
+          }
       }
     }
     val values: Array[Any] = cols.map {

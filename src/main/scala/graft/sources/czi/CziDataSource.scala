@@ -11,12 +11,13 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual}
+import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.ChunkGrid
+import graft.io.{GridScan, GridScanBuilder}
 
 /** CZI (ZISRAW) DataSource V2: `spark.read.format("czi")` — the scan that
   * [[CziSource.scan]] exposes as an API, as a first-class Spark source
@@ -28,19 +29,19 @@ import graft.core.ChunkGrid
   * data`), so a CZI→Zarr conversion is literally
   * `spark.read.format("czi").load()...write.format("zarr")`.
   *
-  * Scan quality matches the zarr connector's:
+  * The pushdown is the zarr connector's, from one shared file
+  * (`graft/io/GridScan.scala`):
   *   - '''partition pruning''' — the driver parses only the subblock
-  *     directory (KBs); one InputPartition per (channel, z-slab), and
-  *     coordinate filters on `c`/`z` (any integral literal type) shrink
-  *     the planned set before a task launches;
+  *     directory (KBs); one InputPartition per (timepoint, channel,
+  *     z-slab), and coordinate filters on `t`/`c`/`z` (any integral
+  *     literal type; an `In` by its envelope) shrink the planned set
+  *     before a task launches;
   *   - '''column pruning''' — a projection without `data` plans the same
   *     partitions but its readers emit rows from chunk-grid arithmetic
   *     alone: no subblock is read, the file is never opened;
   *   - '''aggregate pushdown''' — COUNT(*)/MIN/MAX over the coordinate
   *     columns, ungrouped or GROUP BY coordinate axes, are answered at
-  *     planning time from the pruned grid bounds with no-IO tasks
-  *     (grouped counts are extent products, parity with the zarr
-  *     connector).
+  *     planning time from the pruned grid bounds with no-IO tasks.
   */
 class CziDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "czi"
@@ -74,249 +75,41 @@ class CziTable(props: Map[String, String]) extends Table with SupportsRead {
 
 final case class CziInputPartition(tIdx: Int, cIdx: Int, slab: Int) extends InputPartition
 
-/** Inclusive row range of the pushed-aggregate group space (no IO — the
-  * rows are pure chunk-grid arithmetic, so a "partition" is just an index
-  * range, mirroring the zarr connector's `ZarrInputPartition`). */
-final case class CziAggPartition(firstRow: Long, lastRow: Long) extends InputPartition
-
+/** The shared grid pushdown ([[graft.io.GridScanBuilder]]) with t, c and z
+  * prunable: rows carry t = timepoint, c = channel and z = slab index —
+  * exactly the partition key — so a t/c/z range is absorbed at partition
+  * granularity. A y/x filter stays a residual (a task reads its whole
+  * slab anyway). */
 class CziScanBuilder(path: String, stack: String, chunkZyx: Array[Int])
-    extends ScanBuilder with SupportsPushDownFilters
-    with SupportsPushDownRequiredColumns with SupportsPushDownAggregates {
-  import org.apache.spark.sql.connector.expressions.NamedReference
-  import org.apache.spark.sql.connector.expressions.aggregate._
-
-  // inclusive bounds on the chunk-grid t, c and z coordinates, refined by
-  // accepted filters — frames/slabs outside them are never planned
-  private var (tLo, tHi) = (0L, Long.MaxValue)
-  private var (cLo, cHi) = (0L, Long.MaxValue)
-  private var (zLo, zHi) = (0L, Long.MaxValue)
-  private var pushed = Array.empty[Filter]
-  private var required: StructType = graft.io.zarr.ZarrDataSource.chunkSchema
-  // complete aggregate pushdown: grouping axes + ops like ("count","") /
-  // ("min","z"); groupAxes empty = the ungrouped single-row case
-  private var aggOps: Option[(Seq[String], Seq[(String, String)])] = None
-
-  // long/short/byte literals and casts must prune exactly like int
-  // literals — a silent fall-through to "plan everything" is the fragile
-  // contract the round-3 review flagged
-  private def asLong(v: Any): Option[Long] = v match {
-    case i: Int => Some(i.toLong)
-    case l: Long => Some(l)
-    case s: Short => Some(s.toLong)
-    case b: Byte => Some(b.toLong)
-    case _ => None
-  }
-
-  private val partAxes = Set("t", "c", "z")
-
-  /** Rows carry t = timepoint, c = channel and z = slab index — exactly
-    * the partition key — so an accepted t/c/z range is fully absorbed at
-    * partition granularity (no residual re-evaluation needed). */
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val residual = filters.filterNot { f =>
-      val accepted = f match {
-        case EqualTo(a, v) if partAxes(a) =>
-          asLong(v).exists { x => refine(a, x, x); true }
-        case GreaterThan(a, v) if partAxes(a) =>
-          asLong(v).exists { x => refine(a, x + 1, Long.MaxValue); true }
-        case GreaterThanOrEqual(a, v) if partAxes(a) =>
-          asLong(v).exists { x => refine(a, x, Long.MaxValue); true }
-        case LessThan(a, v) if partAxes(a) =>
-          asLong(v).exists { x => refine(a, Long.MinValue, x - 1); true }
-        case LessThanOrEqual(a, v) if partAxes(a) =>
-          asLong(v).exists { x => refine(a, Long.MinValue, x); true }
-        case _ => false
-      }
-      if (accepted) pushed :+= f
-      accepted
-    }
-    residual
-  }
-  private def refine(axis: String, l: Long, h: Long): Unit = axis match {
-    case "t" => tLo = math.max(tLo, l); tHi = math.min(tHi, h)
-    case "c" => cLo = math.max(cLo, l); cHi = math.min(cHi, h)
-    case _   => zLo = math.max(zLo, l); zHi = math.min(zHi, h)
-  }
-
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def pruneColumns(requiredSchema: StructType): Unit = {
-    // preserve source column order; an empty projection (count(*)) keeps
-    // nothing and the reader emits empty rows
-    val keep = requiredSchema.fieldNames.toSet
-    required = StructType(
-      graft.io.zarr.ZarrDataSource.chunkSchema.filter(f => keep.contains(f.name)))
-  }
-
-  /** COUNT(*) / MIN / MAX over chunk coordinates are grid arithmetic on
-    * the pruned (t, c, z) bounds and the fixed XY tile grid — answered
-    * with no subblock ever read. GROUP BY coordinate axes pushes down
-    * too (parity with the zarr connector): each group is a coordinate
-    * combination, its count the product of the remaining extents. Spark
-    * only offers an aggregate for pushdown when every filter was
-    * absorbed, so the bounds are exact. */
-  private def translate(agg: Aggregation): Option[(Seq[String], Seq[(String, String)])] = {
-    val axes = Seq("t", "c", "z", "y", "x")
-    def ax(e: org.apache.spark.sql.connector.expressions.Expression): Option[String] = e match {
-      case f: NamedReference if f.fieldNames.length == 1 && axes.contains(f.fieldNames()(0)) =>
-        Some(f.fieldNames()(0))
-      case _ => None
-    }
-    val groups = agg.groupByExpressions.toSeq.map(ax)
-    val ops = agg.aggregateExpressions.toSeq.map {
-      case _: CountStar => Some(("count", ""))
-      case m: Min => ax(m.column).map(("min", _))
-      case m: Max => ax(m.column).map(("max", _))
-      case _ => None
-    }
-    if (ops.forall(_.isDefined) && groups.forall(_.isDefined) &&
-        groups.flatten.distinct.size == groups.size)
-      Some((groups.flatten, ops.map(_.get)))
-    else None
-  }
-
-  override def supportCompletePushDown(agg: Aggregation): Boolean =
-    translate(agg).isDefined
-
-  override def pushAggregation(agg: Aggregation): Boolean =
-    translate(agg) match {
-      case Some(ops) => aggOps = Some(ops); true
-      case None => false
-    }
-
-  override def build(): Scan =
-    new CziScan(path, stack, chunkZyx, tLo, tHi, cLo, cHi, zLo, zHi, required, aggOps)
+    extends GridScanBuilder(Set("t", "c", "z")) {
+  override def build(): Scan = new CziScan(path, stack, chunkZyx, lo, hi, required, aggOps)
 }
 
 class CziScan(path: String, stack: String, chunkZyx: Array[Int],
-              tLo: Long, tHi: Long, cLo: Long, cHi: Long, zLo: Long, zHi: Long,
-              required: StructType, aggOps: Option[(Seq[String], Seq[(String, String)])])
-    extends Scan with Batch {
+              lo: Array[Long], hi: Array[Long],
+              required: StructType, aggOps: Option[GridScan.AggOps])
+    extends GridScan("CziScan", path, lo, hi, required, aggOps) {
 
   // driver-side directory parse happens once at planning time
   private lazy val (vol, idx) = CziSource.volume(path, stack, chunkZyx)
-  private lazy val zSlabs = ChunkGrid.ceilDiv(vol.shape(2), vol.chunk(2))
-  private lazy val gridY = ChunkGrid.ceilDiv(vol.shape(3), vol.chunk(3))
-  private lazy val gridX = ChunkGrid.ceilDiv(vol.shape(4), vol.chunk(4))
-  // pruned inclusive selection on the partition axes
-  private lazy val tSel = (math.max(0L, tLo), math.min(vol.shape(0) - 1, tHi))
-  private lazy val cSel = (math.max(0L, cLo), math.min(vol.shape(1) - 1, cHi))
-  private lazy val zSel = (math.max(0L, zLo), math.min(zSlabs - 1, zHi))
+  // (t, c, z-slab, y-tile, x-tile); y/x are never bounded, so the
+  // sub-grid is the clamped (t, c, slab) selection over the full tile grid
+  override protected lazy val grid: Array[Long] = ChunkGrid.gridShape(vol.shape, vol.chunk)
 
-  override def readSchema(): StructType = aggOps match {
-    case Some((groups, ops)) => StructType(
-      groups.map(g => StructField(g, IntegerType, nullable = false)) ++
-        ops.zipWithIndex.map {
-          case (("count", _), i) => StructField(s"agg$i", LongType, nullable = false)
-          case ((_, _), i) => StructField(s"agg$i", IntegerType, nullable = true)
-        })
-    case None => required
-  }
-  override def toBatch: Batch = this
-  override def description(): String = {
-    val bounds = Seq(("t", tLo, tHi), ("c", cLo, cHi), ("z", zLo, zHi)).collect {
-      case (a, l, h) if l > 0L || h != Long.MaxValue =>
-        s"$a=[$l..${if (h == Long.MaxValue) "*" else h}]"
-    }
-    val agg = aggOps.map { case (groups, ops) =>
-      val g = if (groups.isEmpty) "" else groups.mkString(" groupBy=", ",", "")
-      " agg=" + ops.map {
-        case ("count", _) => "count(*)"
-        case (op, ax) => s"$op($ax)"
-      }.mkString(",") + g
-    }.getOrElse("")
-    s"CziScan($path${if (bounds.isEmpty) "" else bounds.mkString(" ", ",", "")} cols=${required.fieldNames.mkString(",")}$agg)"
-  }
-
-  override def planInputPartitions(): Array[InputPartition] = aggOps match {
-    // ungrouped pushed aggregate: one arithmetic row, one no-IO partition
-    case Some((groups, _)) if groups.isEmpty => Array(CziAggPartition(0L, 0L))
-    // grouped: range-partition the group space (zarr `ranged` parity —
-    // a GROUP BY y,x over a large tile grid must not serialize into one
-    // task just because the rows are synthesized)
-    case Some((groups, _)) =>
-      val axes = Seq("t", "c", "z", "y", "x")
-      val extA = Array(
-        math.max(0L, tSel._2 - tSel._1 + 1), math.max(0L, cSel._2 - cSel._1 + 1),
-        math.max(0L, zSel._2 - zSel._1 + 1), gridY, gridX)
-      if (extA.exists(_ == 0L)) Array.empty // empty selection: no groups
-      else {
-        val total = groups.map(g => extA(axes.indexOf(g))).product
-        val per = ChunkGrid.ceilDiv(total, math.min(total, 256L))
-        (0L until total by per)
-          .map(s => CziAggPartition(s, math.min(s + per, total) - 1): InputPartition)
-          .toArray
-      }
-    case None => planChunkPartitions()
-  }
-
-  private def planChunkPartitions(): Array[InputPartition] = {
+  // one partition per (timepoint, channel, slab)
+  override protected def planDataPartitions(): Array[InputPartition] = {
     val parts = for {
-      t <- tSel._1 to tSel._2
-      c <- cSel._1 to cSel._2
-      slab <- zSel._1 to zSel._2
+      t <- base(0) until base(0) + ext(0)
+      c <- base(1) until base(1) + ext(1)
+      slab <- base(2) until base(2) + ext(2)
     } yield CziInputPartition(t.toInt, c.toInt, slab.toInt): InputPartition
     parts.toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = aggOps match {
-    case Some((groups, ops)) =>
-      CziAggReaderFactory(groups, ops, tSel, cSel, zSel, gridY, gridX)
-    case None =>
-      CziReaderFactory(path, vol.stack, vol.shape, vol.chunk,
-        idx.origin, idx.entries.toArray, vol.dtype.itemSize, required.fieldNames,
-        graft.core.HadoopConf.snapshot())
-  }
-}
-
-/** Emits pre-aggregated rows for a pushed COUNT/MIN/MAX: the chunk count
-  * is the (per-group) pruned grid volume, coordinate extrema its corners
-  * (or the group's own value for a grouped axis). Grouped aggregates
-  * enumerate the grouped axes' coordinate combinations. No filesystem
-  * access at all. */
-final case class CziAggReaderFactory(groups: Seq[String], ops: Seq[(String, String)],
-                                     tSel: (Long, Long), cSel: (Long, Long),
-                                     zSel: (Long, Long),
-                                     gridY: Long, gridX: Long)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new PartitionReader[InternalRow] {
-      private val axes = Seq("t", "c", "z", "y", "x")
-      private val loA = Array(tSel._1, cSel._1, zSel._1, 0L, 0L)
-      private val extA = Array(
-        math.max(0L, tSel._2 - tSel._1 + 1), math.max(0L, cSel._2 - cSel._1 + 1),
-        math.max(0L, zSel._2 - zSel._1 + 1), gridY, gridX)
-      private val gDims = groups.map(axes.indexOf).toArray
-      private val nSel = extA.product
-      private val perGroup = (0 until 5)
-        .filterNot(gDims.contains).map(extA(_)).product
-      // the planner already sized the group space (and emitted zero
-      // partitions for an empty grouped selection): this reader walks its
-      // assigned inclusive row range only
-      private val range = partition.asInstanceOf[CziAggPartition]
-      private var cur = range.firstRow - 1L
-      override def next(): Boolean = { cur += 1; cur <= range.lastRow }
-      override def get(): InternalRow = {
-        // row-major decompose of the group index over the grouped axes
-        val combo = new Array[Long](gDims.length)
-        var rem = cur
-        var d = gDims.length - 1
-        while (d >= 0) { combo(d) = loA(gDims(d)) + rem % extA(gDims(d)); rem /= extA(gDims(d)); d -= 1 }
-        val n = if (groups.isEmpty) nSel else perGroup
-        val aggVals = ops.map {
-          case ("count", _) => n
-          case (_, _) if n == 0L => null // empty selection: min/max of no rows
-          case (op, ax) =>
-            val dim = axes.indexOf(ax)
-            val gi = gDims.indexOf(dim)
-            if (gi >= 0) combo(gi).toInt // grouped axis: the group's value
-            else if (op == "min") loA(dim).toInt
-            else (loA(dim) + extA(dim) - 1).toInt
-        }
-        InternalRow.fromSeq(combo.map(_.toInt: Any).toIndexedSeq ++ aggVals)
-      }
-      override def close(): Unit = ()
-    }
+  override protected def dataReaderFactory(): PartitionReaderFactory =
+    CziReaderFactory(path, vol.stack, vol.shape, vol.chunk,
+      idx.origin, idx.entries.toArray, vol.dtype.itemSize, required.fieldNames,
+      graft.core.HadoopConf.snapshot())
 }
 
 final case class CziReaderFactory(path: String, stack: String,
@@ -370,18 +163,13 @@ class CziPartitionReader(f: CziReaderFactory, tIdx: Int, cIdx: Int, slab: Int)
     } else {
       // no pixel bytes requested: coordinates and clamped shapes are pure
       // arithmetic — zero IO
-      val gridY = ChunkGrid.ceilDiv(f.shape(3), f.chunk(3)).toInt
-      val gridX = ChunkGrid.ceilDiv(f.shape(4), f.chunk(4)).toInt
-      val zN = math.min(f.chunk(2).toLong, f.shape(2) - slab.toLong * f.chunk(2)).toInt
+      val grid = ChunkGrid.gridShape(f.shape, f.chunk)
       (for {
-        ty <- 0 until gridY
-        tx <- 0 until gridX
-      } yield {
-        val yN = math.min(f.chunk(3).toLong, f.shape(3) - ty.toLong * f.chunk(3)).toInt
-        val xN = math.min(f.chunk(4).toLong, f.shape(4) - tx.toLong * f.chunk(4)).toInt
-        row(ty, tx, Array(1, 1, zN, yN, xN),
-          sys.error("data column pruned — never evaluated"))
-      }).iterator
+        ty <- 0 until grid(3).toInt
+        tx <- 0 until grid(4).toInt
+      } yield row(ty, tx,
+        ChunkGrid.clampedChunkShape(Array[Long](tIdx, cIdx, slab, ty, tx), f.shape, f.chunk),
+        sys.error("data column pruned — never evaluated"))).iterator
     }
 
   private var cur: InternalRow = _

@@ -20,8 +20,9 @@ import CziFormat.CziIndex
   * of each chunk. Memory is bounded by one chunk per group; the shuffle
   * moves each voxel exactly once.
   *
-  * Trade-off: one full-data shuffle that the slab variant avoids — pick
-  * per stack geometry (the job could switch on `shape(3) * shape(4)`).
+  * Trade-off: one full-data shuffle that the slab variant avoids.
+  * [[graft.jobs.ZeissJob.convertStack]] picks per stack geometry: this
+  * scan when one z-slab (chunkDepth x Y x X voxels) would exceed 1 GiB.
   */
 object CziSourceShuffled {
 

@@ -1,6 +1,12 @@
 package graft.io.zarr
 
+import java.net.URI
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{FSDataInputStream, Path, RawLocalFileSystem}
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
@@ -8,6 +14,22 @@ import org.apache.spark.sql.functions._
 import graft.Spark
 import graft.core.Volume
 import graft.sources.SyntheticStack
+
+/** A local-disk `countfs://` filesystem that records the paths passed to
+  * `exists` and `open`, so a test can count a reader's metadata calls. */
+class CountingFs extends RawLocalFileSystem {
+  override def getUri: URI = URI.create("countfs:///")
+  override def exists(f: Path): Boolean = { CountingFs.exists.add(f.toUri.getPath); super.exists(f) }
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    CountingFs.opened.add(f.toUri.getPath)
+    super.open(f, bufferSize)
+  }
+}
+
+object CountingFs {
+  val exists = new ConcurrentLinkedQueue[String]()
+  val opened = new ConcurrentLinkedQueue[String]()
+}
 
 class ZarrDataSourceSpec extends AnyFunSuite {
 
@@ -382,5 +404,28 @@ class ZarrDataSourceSpec extends AnyFunSuite {
     assert(chain.exists(_.isInstanceOf[java.io.IOException]), chain.mkString("\n"))
     assert(!chain.exists(c => String.valueOf(c.getMessage).contains("corrupt zarr chunk")),
       chain.mkString("\n"))
+  }
+
+  test("reading a level asks the filesystem whether a chunk exists for no chunk") {
+    // on an object store each metadata call is a HEAD: the reader must
+    // learn a chunk is missing from getFileStatus alone
+    spark.sparkContext.hadoopConfiguration.set("fs.countfs.impl", classOf[CountingFs].getName)
+    val local = Files.createTempDirectory("zarr-dsv2-heads").toString
+    val dir = "countfs://" + local
+    val vol = Volume("hd", 0, Array(1L, 1L, 16L, 16L, 16L), Array(1, 1, 8, 8, 8))
+    ZarrIO.writeMetadata(dir, vol, nLevels = 1)
+    ZarrStore.write(SyntheticStack.generate(spark, vol), dir)
+    // one chunk missing: it must still read as fill-value zeros
+    Files.delete(java.nio.file.Paths.get(local, "hd", "0", "0", "0", "1", "1", "1"))
+    CountingFs.exists.clear(); CountingFs.opened.clear()
+    val rows = spark.read.format("zarr").option("path", dir).option("stack", "hd").load().collect()
+    assert(rows.length == 8)
+    val zero = rows.filter(_.getAs[Array[Byte]]("data").forall(_ == 0))
+    assert(zero.map(r => (r.getAs[Int]("z"), r.getAs[Int]("y"), r.getAs[Int]("x"))).toSeq == Seq((1, 1, 1)))
+    def chunkPaths(q: ConcurrentLinkedQueue[String]) =
+      q.asScala.filter(p => p.startsWith(s"$local/hd/0/") && !p.split('/').last.startsWith("."))
+    assert(chunkPaths(CountingFs.exists).isEmpty, CountingFs.exists.asScala.mkString("\n"))
+    // and the reader did go through this filesystem: 7 chunk files opened
+    assert(chunkPaths(CountingFs.opened).toSet.size == 7, CountingFs.opened.asScala.mkString("\n"))
   }
 }

@@ -171,4 +171,89 @@ class CziDataSourceSpec extends AnyFunSuite {
     val px = graft.core.PixelCodec.toInts(b.getAs[Array[Byte]]("data"))
     assert(px(0) == ((SyntheticStack.value(8, 0, 0) + 1000) & 0xFFFF))
   }
+
+  private def czi(path: String) = spark.read.format("czi").option("path", path)
+    .option("chunk_z", "8").option("chunk_y", "16").option("chunk_x", "16").load()
+
+  private def batchScan(df: org.apache.spark.sql.DataFrame) = {
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    df.queryExecution.executedPlan.collectFirst { case b: BatchScanExec => b }.get
+  }
+
+  /** (c, z, y, x, voxel CRC) per row, sorted: rows compared by value. */
+  private def keyed(rows: Seq[org.apache.spark.sql.Row]): Seq[(Int, Int, Int, Int, Long)] =
+    rows.map { r =>
+      val crc = new java.util.zip.CRC32(); crc.update(r.getAs[Array[Byte]]("data"))
+      (r.getAs[Int]("c"), r.getAs[Int]("z"), r.getAs[Int]("y"), r.getAs[Int]("x"), crc.getValue)
+    }.sorted
+
+  test("an In on c prunes to its envelope and stays a residual") {
+    val dir = Files.createTempDirectory("czi-dsv2-in").toString
+    val path = s"$dir/f4.czi"
+    SyntheticCzi.writeChannels(path, Array.tabulate(4, 16, 32, 32)((c, z, y, x) =>
+      (SyntheticStack.value(z, y, x) + 1000 * c) & 0xFFFF))
+    val all = czi(path)
+    val in = all.filter(col("c").isin(1, 3))
+    // unfiltered: 4 channels x 2 slabs; the envelope c in [1..3] keeps 3
+    assert(batchScan(all).inputPartitions.size == 8)
+    assert(batchScan(in).inputPartitions.size == 6, batchScan(in).inputPartitions)
+    assert(batchScan(in).scan.description().contains("c=[1..3]"), batchScan(in).scan.description())
+    // channel 2 is inside the envelope, so only the residual removes it
+    val want = keyed(all.collect().toSeq.filter(r => Set(1, 3)(r.getAs[Int]("c"))))
+    assert(want.size == 2 * 2 * 2 * 2)
+    assert(keyed(in.collect().toSeq) == want)
+  }
+
+  test("a y or x filter stays a residual, so no aggregate is pushed") {
+    val path = fixture() // grid (t,c,z,y,x) = (1,2,2,2,2)
+    for ((f, maxX) <- Seq((col("y") === 1, 1), (col("x") < 1, 0))) {
+      val scanned = czi(path).filter(f)
+      val desc = batchScan(scanned).scan.description()
+      assert(!desc.contains("y=[") && !desc.contains("x=["), desc)
+      assert(scanned.count() == 8)
+      val agg = scanned.agg(count(lit(1)), min(col("z")), max(col("x")))
+      val plan = agg.queryExecution.executedPlan.toString
+      assert(plan.contains("HashAggregate") && !plan.contains("agg="), plan)
+      val r = agg.collect().head
+      assert((r.getLong(0), r.getInt(1), r.getInt(2)) == (8L, 0, maxX), r)
+    }
+  }
+
+  test("GROUP BY c count/min/max is equal over a CZI file and the Zarr store converted from it") {
+    val path = fixture()
+    val out = Files.createTempDirectory("czi-dsv2-agg-out").toString
+    val vol = graft.core.Volume("f", 0, Array(1L, 2L, 16L, 32L, 32L), Array(1, 1, 8, 16, 16))
+    graft.io.zarr.ZarrIO.writeMetadata(out, vol, nLevels = 1)
+    czi(path).write.format("zarr").option("path", out).mode("append").save()
+    val zarr = spark.read.format("zarr").option("path", out).option("stack", "f").load()
+    def grouped(df: org.apache.spark.sql.DataFrame) = {
+      val g = df.filter(col("z") >= 1).groupBy(col("c"))
+        .agg(count(lit(1)), min(col("z")), max(col("y")), min(col("x")))
+      assert(batchScan(g).scan.description().contains("groupBy=c"), batchScan(g).scan.description())
+      g.collect().map(r => (r.getInt(0), r.getLong(1), r.getInt(2), r.getInt(3), r.getInt(4))).sorted.toSeq
+    }
+    val fromCzi = grouped(czi(path))
+    assert(fromCzi == Seq((0, 4L, 1, 1, 0), (1, 4L, 1, 1, 0)), fromCzi)
+    assert(grouped(zarr) == fromCzi)
+  }
+
+  test("EXPLAIN shows the CziScan and ZarrScan descriptions unchanged") {
+    val path = fixture()
+    def explained(df: org.apache.spark.sql.DataFrame, want: String): Unit = {
+      assert(batchScan(df).scan.description() == want, batchScan(df).scan.description())
+      assert(df.queryExecution.explainString(org.apache.spark.sql.execution.SimpleMode).contains(want))
+    }
+    explained(czi(path).filter(col("c") === 1 && col("z") >= 1).select(col("z"), col("data")),
+      s"CziScan($path c=[1..1],z=[1..*] cols=z,data)")
+    explained(czi(path).filter(col("z") <= 0).groupBy(col("c")).agg(count(lit(1)), max(col("y"))),
+      s"CziScan($path z=[0..0] cols=stack,level,t,c,z,y,x,shape,data agg=count(*),max(y) groupBy=c)")
+    val out = Files.createTempDirectory("czi-dsv2-explain").toString
+    val vol = graft.core.Volume("f", 0, Array(1L, 2L, 16L, 32L, 32L), Array(1, 1, 8, 16, 16))
+    graft.io.zarr.ZarrIO.writeMetadata(out, vol, nLevels = 1)
+    val zarr = spark.read.format("zarr").option("path", out).option("stack", "f").load()
+    explained(zarr.filter(col("y") === 1 && col("x") < 1).select(col("c"), col("shape")),
+      s"ZarrScan($out/f/0 y=[1..1],x=[0..0] cols=c,shape)")
+    explained(zarr.agg(min(col("z"))),
+      s"ZarrScan($out/f/0 cols=stack,level,t,c,z,y,x,shape,data agg=min(z))")
+  }
 }

@@ -79,6 +79,63 @@ class CziSpec extends AnyFunSuite {
     }
   }
 
+  // one test per settings rule: the JSON path names the field, and the
+  // numeric rules hold for direct construction (and so for env vars) too
+  private val base = """"input_source":"/a","output_directory":"/b""""
+  private def rejected(json: String, field: String): Unit = {
+    val e = intercept[IllegalArgumentException](ZeissJob.parseSettings(json))
+    assert(e.getMessage.contains(field), e.getMessage)
+  }
+
+  test("settings: input_source is required") {
+    rejected("""{"output_directory":"/b"}""", "input_source")
+    rejected("""{"input_source":null,"output_directory":"/b"}""", "input_source")
+  }
+
+  test("settings: output_directory is required") {
+    rejected("""{"input_source":"/a"}""", "output_directory")
+  }
+
+  test("settings: chunk_size needs exactly 3 entries") {
+    rejected(s"""{$base,"chunk_size":[64,64,64,64]}""", "chunk_size")
+    rejected(s"""{$base,"chunk_size":[64,64]}""", "chunk_size")
+    intercept[IllegalArgumentException](ZeissJob.Settings("/a", "/b", chunkSize = Array(8, 8)))
+  }
+
+  test("settings: chunk_size entries must be > 0") {
+    rejected(s"""{$base,"chunk_size":[64,0,64]}""", "chunk_size")
+    intercept[IllegalArgumentException](ZeissJob.Settings("/a", "/b", chunkSize = Array(8, -8, 8)))
+  }
+
+  test("settings: scale_factor needs exactly 3 entries") {
+    rejected(s"""{$base,"scale_factor":[2,2,2,2]}""", "scale_factor")
+    rejected(s"""{$base,"scale_factor":[2]}""", "scale_factor")
+  }
+
+  test("settings: scale_factor entries must be >= 1") {
+    rejected(s"""{$base,"scale_factor":[2,0,2]}""", "scale_factor")
+    // 1 is valid: no downsampling along that axis
+    assert(ZeissJob.parseSettings(s"""{$base,"scale_factor":[1,2,2]}""").scaleFactor.toSeq == Seq(1, 2, 2))
+  }
+
+  test("settings: downsample_levels must be >= 1") {
+    rejected(s"""{$base,"downsample_levels":0}""", "downsample_levels")
+    val e = intercept[IllegalArgumentException](ZeissJob.settingsFromEnv(Map(
+      "TRANSFORMATION_JOB_INPUT_SOURCE" -> "/a", "TRANSFORMATION_JOB_OUTPUT_DIRECTORY" -> "/b",
+      "TRANSFORMATION_JOB_DOWNSAMPLE_LEVELS" -> "0")))
+    assert(e.getMessage.contains("downsample_levels"), e.getMessage)
+  }
+
+  test("settings: target_size_mb must be > 0") {
+    rejected(s"""{$base,"target_size_mb":0}""", "target_size_mb")
+    intercept[IllegalArgumentException](ZeissJob.Settings("/a", "/b", targetSizeMb = -1))
+  }
+
+  test("settings: max_concurrent_stacks must be >= 1") {
+    rejected(s"""{$base,"max_concurrent_stacks":0}""", "max_concurrent_stacks")
+    intercept[IllegalArgumentException](ZeissJob.Settings("/a", "/b", maxConcurrentStacks = 0))
+  }
+
   test("CZI index parse: shape, pixel type, entries") {
     val dir = Files.createTempDirectory("czi").toString
     val path = s"$dir/t.czi"
@@ -496,6 +553,36 @@ class CziSpec extends AnyFunSuite {
     for (dz <- 0 until 2; dy <- 0 until 2; dx <- 0 until 2)
       sum += SyntheticStack.value(dz, dy, dx)
     assert(c0.pixels(0) == (sum / 8).toInt)
+  }
+
+  test("ZeissJob without acquisition.json converts with unit voxel scale") {
+    val root = Files.createTempDirectory("zeiss-noacq").toString
+    new java.io.File(s"$root/in/SPIM").mkdirs()
+    SyntheticCzi.write(s"$root/in/SPIM/s.czi", synth(8, 16, 16))
+    val resp = ZeissJob.run(spark, ZeissJob.Settings(s"$root/in", s"$root/out",
+      chunkSize = Array(8, 16, 16), downsampleLevels = 1))
+    assert(resp.statusCode == 200, resp.message)
+    val attrs = new com.fasterxml.jackson.databind.ObjectMapper().readTree(
+      Files.readString(java.nio.file.Paths.get(s"$root/out/s/.zattrs")))
+    val scale = attrs.get("multiscales").get(0).get("datasets").get(0)
+      .get("coordinateTransformations").get(0).get("scale")
+    assert((0 until 5).map(scale.get(_).asDouble) == Seq(1.0, 1.0, 1.0, 1.0, 1.0), scale)
+  }
+
+  test("ZeissJob with a malformed acquisition.json fails naming the file") {
+    val root = Files.createTempDirectory("zeiss-badacq").toString
+    new java.io.File(s"$root/in/SPIM").mkdirs()
+    SyntheticCzi.write(s"$root/in/SPIM/s.czi", synth(8, 16, 16))
+    val settings = ZeissJob.Settings(s"$root/in", s"$root/out",
+      chunkSize = Array(8, 16, 16), downsampleLevels = 1)
+    val acq = java.nio.file.Paths.get(s"$root/in/acquisition.json")
+    // not JSON, then JSON without a scale transform
+    for (body <- Seq("{not json", """{"tiles":[{"coordinate_transformations":[]}]}""")) {
+      Files.writeString(acq, body)
+      val e = intercept[IllegalArgumentException](ZeissJob.run(spark, settings))
+      assert(e.getMessage.contains(s"$root/in/acquisition.json"), e.getMessage)
+    }
+    assert(!new java.io.File(s"$root/out/s").exists(), "a stack was written with a guessed scale")
   }
 
   test("derivatives copy writes no Hadoop .crc sidecars, even on an uncached filesystem") {
