@@ -77,23 +77,31 @@ object Blosc {
 
   /** Inverse of [[shuffle]]. */
   def unshuffle(src: Array[Byte], typesize: Int): Array[Byte] = {
-    val n = src.length
-    if (typesize <= 1 || n < typesize) return src.clone()
+    val out = new Array[Byte](src.length)
+    unshuffleInto(src, 0, src.length, typesize, out, 0)
+    out
+  }
+
+  /** Unshuffle the `n` bytes of `src` at `srcOff` into `dst` at `dstOff`. */
+  private def unshuffleInto(src: Array[Byte], srcOff: Int, n: Int, typesize: Int,
+                            dst: Array[Byte], dstOff: Int): Unit = {
+    if (typesize <= 1 || n < typesize) {
+      System.arraycopy(src, srcOff, dst, dstOff, n)
+      return
+    }
     val nElems = n / typesize
     val tail = n - nElems * typesize
-    val out = new Array[Byte](n)
     var j = 0
     while (j < typesize) {
       var i = 0
-      val base = j * nElems
+      val base = srcOff + j * nElems
       while (i < nElems) {
-        out(i * typesize + j) = src(base + i)
+        dst(dstOff + i * typesize + j) = src(base + i)
         i += 1
       }
       j += 1
     }
-    if (tail > 0) System.arraycopy(src, n - tail, out, n - tail, tail)
-    out
+    if (tail > 0) System.arraycopy(src, srcOff + n - tail, dst, dstOff + n - tail, tail)
   }
 
   /** Compress `raw` into a Blosc frame. */
@@ -170,21 +178,26 @@ object Blosc {
     val nblocks = ((h.nbytes.toLong + blocksize - 1) / blocksize).toInt
     val out = new Array[Byte](h.nbytes)
     val doShuffle = (h.flags & FlagShuffle) != 0
+    // an unshuffled block decodes straight into `out`; a shuffled one
+    // decodes into one scratch block and unshuffles into `out`
+    val scratch = if (doShuffle) new Array[Byte](math.min(blocksize, h.nbytes)) else null
     var k = 0
     while (k < nblocks) {
-      val neblock = math.min(blocksize, h.nbytes - k * blocksize)
+      val off = k * blocksize
+      val neblock = math.min(blocksize, h.nbytes - off)
       val bstart = readLE(frame, 16 + 4 * k)
       val csize = readLE(frame, bstart)
-      val block =
-        if (csize == neblock) java.util.Arrays.copyOfRange(frame, bstart + 4, bstart + 4 + neblock)
-        else {
-          val dst = new Array[Byte](neblock)
-          val n = Zstd.decompressByteArray(dst, 0, neblock, frame, bstart + 4, csize)
-          require(n == neblock, s"zstd decoded $n of expected $neblock bytes")
-          dst
-        }
-      val plain = if (doShuffle) unshuffle(block, h.typesize) else block
-      System.arraycopy(plain, 0, out, k * blocksize, neblock)
+      if (csize == neblock) {
+        // stored raw
+        if (doShuffle) unshuffleInto(frame, bstart + 4, neblock, h.typesize, out, off)
+        else System.arraycopy(frame, bstart + 4, out, off, neblock)
+      } else {
+        val n =
+          if (doShuffle) Zstd.decompressByteArray(scratch, 0, neblock, frame, bstart + 4, csize)
+          else Zstd.decompressByteArray(out, off, neblock, frame, bstart + 4, csize)
+        require(n == neblock, s"zstd decoded $n of expected $neblock bytes")
+        if (doShuffle) unshuffleInto(scratch, 0, neblock, h.typesize, out, off)
+      }
       k += 1
     }
     out

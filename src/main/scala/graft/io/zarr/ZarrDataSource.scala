@@ -39,12 +39,15 @@ import graft.io.{GridRange, GridScan, GridScanBuilder}
   * exactly its clamped shape fails the task with
   * `corrupt zarr chunk at <path>`.
   *
-  * Write: the store's only chunk sink. Each task encodes its rows with
-  * the codec the driver declared in the level's `.zarray` (Blosc/zstd
-  * at its clevel and dtype stride, or raw for `compressor: null`) and
-  * commits each chunk by tmp + atomic rename (lock-free, reference X8);
-  * commit is metadata-free because chunk placement is deterministic by
-  * coordinates. Metadata (`ZarrIO.writeMetadata`) must exist first.
+  * Write: `ZarrDataWriter.put` is the store's only chunk encoder and
+  * committer; this sink calls it per row, and the conversion job's
+  * level-0 pass (`ZeissJob.convertStack`) calls it from each CZI slab
+  * task. It encodes with the codec the driver declared in the level's
+  * `.zarray` (Blosc/zstd at its clevel and dtype stride, or raw for
+  * `compressor: null`) and commits each chunk by tmp + atomic rename
+  * (lock-free, reference X8); commit is metadata-free because chunk
+  * placement is deterministic by coordinates. Metadata
+  * (`ZarrIO.writeMetadata`) must exist first.
   */
 class ZarrDataSource extends TableProvider with DataSourceRegister {
 
@@ -322,11 +325,16 @@ class ZarrDataWriter(root: String, hconf: Array[(String, String)]) extends DataW
       }
     })
 
-  override def write(r: InternalRow): Unit = {
-    val stack = r.getUTF8String(0).toString
-    val level = r.getInt(1)
-    val (t, c, z, y, x) = (r.getInt(2), r.getInt(3), r.getInt(4), r.getInt(5), r.getInt(6))
-    val data = r.getBinary(8)
+  override def write(r: InternalRow): Unit =
+    put(r.getUTF8String(0).toString, r.getInt(1),
+      r.getInt(2), r.getInt(3), r.getInt(4), r.getInt(5), r.getInt(6), r.getBinary(8))
+
+  /** Encode one chunk's raw bytes and commit them at their coordinates:
+    * the store's only chunk encoder and committer. [[write]] calls it per
+    * row; `ZeissJob.convertStack` calls it from the CZI slab task, so
+    * level 0 commits in the task that cut it. */
+  def put(stack: String, level: Int, t: Int, c: Int, z: Int, y: Int, x: Int,
+          data: Array[Byte]): Unit = {
     val codec = codecFor(stack, level)
     val dir = new Path(s"$root/$stack/$level/$t/$c/$z/$y")
     val tmp = new Path(dir, s".tmp-$x-${java.util.UUID.randomUUID}")

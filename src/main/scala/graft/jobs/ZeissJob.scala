@@ -9,23 +9,23 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.storage.StorageLevel
 
 import graft.core.{ChunkGrid, Volume, ZarrChunk}
-import graft.io.zarr.ZarrIO
+import graft.io.zarr.{ZarrDataWriter, ZarrIO}
 import graft.operators.Pyramid
 import graft.sources.czi.CziSource
 
 /** End-to-end CZI -> multiscale OME-Zarr job (reference orchestration O1/O3,
   * `zeiss_job.py:103-226` + `czi_to_zarr.py:457-658`).
   *
-  * One conversion path per stack: the driver writes the OME-NGFF
-  * metadata, the CZI scan's level 0 is written with
-  * `df.write.format("zarr")`, and every higher level comes from one
-  * [[graft.operators.Pyramid.build]] (one map pass, one exchange) written
-  * by a second `format("zarr")` call. The Zarr DataSource V2 writer is the
-  * only code that encodes and commits chunks; its codec is the one the
-  * metadata declares.
+  * One conversion path per stack, one pass over the input: the driver
+  * writes the OME-NGFF metadata, then each CZI slab task cuts its level-0
+  * chunks, commits each one right there and hands it on to the map side
+  * of [[graft.operators.Pyramid.build]] (one map pass, one exchange),
+  * whose levels 1.. are written by one `format("zarr")` call. That write
+  * is the single Spark action of a conversion. `ZarrDataWriter.put` is
+  * the only code that encodes and commits chunks, in the slab task and in
+  * the sink alike; its codec is the one the metadata declares.
   *
   * What disappears relative to the reference: static round-robin node
   * partitioning (P1/P2, `zeiss_job.py:29-60` + SLURM scripts) — the Spark
@@ -147,10 +147,15 @@ object ZeissJob {
   }
 
   /** Convert one CZI stack to a multiscale OME-Zarr
-    * (`czi_stack_zarr_writer`, `czi_to_zarr.py:457-658`). */
+    * (`czi_stack_zarr_writer`, `czi_to_zarr.py:457-658`) in one Spark
+    * action. Level-0 chunks commit in the slab task that cut them (the
+    * reference's per-slab write, `czi_to_zarr.py:596-608`);
+    * `target_size_mb` batches only the pyramid's write. With
+    * `downsample_levels == 1` a no-op action drains the level-0 pass. */
   def convertStack(spark: SparkSession, cziPath: String, outRoot: String,
                    settings: Settings, voxelZyx: Seq[Double],
                    channelName: String = "ch0"): Volume = {
+    import spark.implicits._
     val stackName = new Path(cziPath).getName.stripSuffix(".czi")
     // JPEG-XR containment: swap in the transcode sidecar (or fail with
     // the remediation) before any executor opens the file
@@ -169,26 +174,34 @@ object ZeissJob {
     // alternating pairs: median peak heap occupancy 1479 -> 1684 MB,
     // pass 1.98 -> 2.17 s; heap after GC 753 -> 1277 MB in a traced run).
     val slabBytes = vol.chunk(2).toLong * vol.shape(3) * vol.shape(4) * vol.dtype.itemSize
-    val level0 = (if (slabBytes <= (1L << 30)) CziSource.scan(spark, srcPath, vol, idx)
-                  else graft.sources.czi.CziSourceShuffled.scan(spark, srcPath, vol, idx))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val scan = if (slabBytes <= (1L << 30)) CziSource.scan(spark, srcPath, vol, idx)
+               else graft.sources.czi.CziSourceShuffled.scan(spark, srcPath, vol, idx)
+    // level 0 commits in the task that cut it and flows on to the pyramid's
+    // map side in the same pass: nothing is cached and the scan runs once.
+    // Nothing may sit between scan, tee and the pyramid's flatMap (no
+    // coalesce, no repartition), so the typed steps fuse without
+    // serialising chunks. A retried or recomputed task re-commits
+    // byte-identical files by tmp + rename.
+    val hconf = graft.core.HadoopConf.snapshot(spark.sparkContext.hadoopConfiguration)
+    val level0 = scan.mapPartitions { it =>
+      val w = new ZarrDataWriter(outRoot, hconf)
+      it.map { ck => w.put(ck.stack, ck.level, ck.t, ck.c, ck.z, ck.y, ck.x, ck.data); ck }
+    }
 
     ZarrIO.writeMetadata(outRoot, vol, settings.downsampleLevels, voxelZyx,
       settings.scaleFactor.toSeq, chNames, Some(Seq(0.0, 0.0, 0.0)),
       clevel = settings.compressorLevel)
-    try {
-      writeZarr(level0, outRoot, vol.numChunks, vol, settings.targetSizeMb)
-      if (settings.downsampleLevels > 1) {
-        val (vols, pyramid) = Pyramid.build(spark, level0, vol,
-          settings.downsampleLevels, settings.scaleFactor)
-        writeZarr(pyramid, outRoot, vols.map(_.numChunks).sum, vol, settings.targetSizeMb)
-      }
-    } finally level0.unpersist()
+    if (settings.downsampleLevels > 1) {
+      val (vols, pyramid) = Pyramid.build(spark, level0, vol,
+        settings.downsampleLevels, settings.scaleFactor)
+      writeZarr(pyramid, outRoot, vols.map(_.numChunks).sum, vol, settings.targetSizeMb)
+    } else level0.foreach((_: ZarrChunk) => ())
     vol
   }
 
-  /** One `format("zarr")` write, superblock-batched (reference K2/X4,
-    * `zarr_writer.py:188-213`, `target_size_mb`): coalesce so each task
+  /** The pyramid's `format("zarr")` write, superblock-batched (reference
+    * K2/X4, `zarr_writer.py:188-213`, `target_size_mb`; level 0 is not
+    * batched, it commits in its slab task): coalesce so each task
     * owns ~targetMb of the `nChunks` chunks the write carries — fewer,
     * larger write tasks mean fewer filesystem round-trips on object
     * stores — but never below cluster parallelism, since the reference's

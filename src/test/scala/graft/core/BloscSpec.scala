@@ -85,6 +85,29 @@ class BloscSpec extends AnyFunSuite {
     assert(Blosc.decompress(mem).length == 64)
   }
 
+  test("hand-built two-block frame: zstd block + raw block, shuffled, short tail block") {
+    // 25 bytes 0x00..0x18, typesize 2, blocksize 16: block 0 holds bytes
+    // 0..15, block 1 the 9-byte tail 16..24 (4 elements + 1 loose byte).
+    // Each block is byte-shuffled on its own, as c-blosc does.
+    val raw = Array.tabulate[Byte](25)(_.toByte)
+    val shuffled0 = Array[Byte](0, 2, 4, 6, 8, 10, 12, 14, 1, 3, 5, 7, 9, 11, 13, 15)
+    val shuffled1 = Array[Byte](16, 18, 20, 22, 17, 19, 21, 23, 24)
+    val z0 = com.github.luben.zstd.Zstd.compress(shuffled0, 3)
+    assert(z0.length != shuffled0.length, "block 0 must be a zstd stream, not stored raw")
+    val bstart0 = 16 + 4 * 2
+    val bstart1 = bstart0 + 4 + z0.length
+    val cbytes = bstart1 + 4 + shuffled1.length
+    val frame = java.nio.ByteBuffer.allocate(cbytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    frame.put(2.toByte).put(1.toByte)
+      .put(((4 << 5) | 0x10 | 0x01).toByte) // zstd, one stream per block, byte-shuffle
+      .put(2.toByte)                        // typesize
+      .putInt(raw.length).putInt(16).putInt(cbytes)
+      .putInt(bstart0).putInt(bstart1)
+      .putInt(z0.length).put(z0)
+      .putInt(shuffled1.length).put(shuffled1) // csize == block size: stored raw
+    assert(Blosc.decompress(frame.array()).toSeq == raw.toSeq)
+  }
+
   test("uint16 pixel codec roundtrip with unsigned values") {
     val px = Array(0, 1, 32767, 32768, 65535, 65534)
     assert(PixelCodec.toInts(PixelCodec.toBytes(px)).sameElements(px))

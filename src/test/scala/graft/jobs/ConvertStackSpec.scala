@@ -1,0 +1,161 @@
+package graft.jobs
+
+import java.io.IOException
+import java.net.URI
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicReference
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{FSDataOutputStream, Path, RawLocalFileSystem}
+import org.apache.hadoop.util.Progressable
+import org.apache.spark.SparkException
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.Spark
+import graft.core.{Blosc, ChunkGrid}
+import graft.io.zarr.ZarrIO
+import graft.operators.PyramidFusedSpec.assertWrittenLevels
+import graft.sources.SyntheticStack
+import graft.sources.czi.SyntheticCzi
+
+/** A local-disk `convfs://` filesystem that records every path passed to
+  * `create` and, while armed, throws on the first create whose path
+  * contains the armed fragment (local mode shares one JVM, so a static
+  * flag reaches the executor threads). */
+class ConvertFs extends RawLocalFileSystem {
+  override def getUri: URI = URI.create("convfs:///")
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
+                      blockSize: Long, progress: Progressable): FSDataOutputStream = {
+    val p = f.toUri.getPath
+    ConvertFs.created.add(p)
+    val frag = ConvertFs.failOn.get
+    if (frag != null && p.contains(frag) && ConvertFs.failOn.compareAndSet(frag, null))
+      throw new IOException(s"injected create failure at $p")
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+}
+
+object ConvertFs {
+  val created = new ConcurrentLinkedQueue[String]()
+  val failOn = new AtomicReference[String](null)
+}
+
+/** `ZeissJob.convertStack` is one pass over the CZI: each level-0 chunk
+  * is encoded and committed once, by the slab task that cut it, on the
+  * aligned (fused pyramid), unaligned (per-level fallback) and
+  * single-level paths. A failure mid-scan or mid-pyramid leaves only
+  * complete chunk files visible, and a re-run into the same root
+  * converges to the tree of a clean conversion. */
+class ConvertStackSpec extends AnyFunSuite {
+
+  private lazy val spark = {
+    val s = Spark.session(master = "local[4]", shufflePartitions = 4,
+      appName = "graft-convert-test")
+    s.sparkContext.hadoopConfiguration.set("fs.convfs.impl", classOf[ConvertFs].getName)
+    s
+  }
+
+  /** A synthetic CZI stack `<root>/<stack>.czi` of `zyx` voxels. */
+  private def czi(stack: String, zyx: (Int, Int, Int)): String = {
+    val root = Files.createTempDirectory(s"conv-$stack").toString
+    SyntheticCzi.write(s"$root/$stack.czi",
+      Array.tabulate(zyx._1, zyx._2, zyx._3)((z, y, x) => SyntheticStack.value(z, y, x)))
+    s"$root/$stack.czi"
+  }
+
+  private def convert(cziPath: String, out: String, chunk: Array[Int], nLevels: Int) = {
+    val settings = ZeissJob.Settings(inputSource = Paths.get(cziPath).getParent.toString,
+      outputDirectory = out, chunkSize = chunk, downsampleLevels = nLevels)
+    ZeissJob.convertStack(spark, cziPath, out, settings, Seq(1.0, 1.0, 1.0))
+  }
+
+  /** (relativePath -> bytes) of every file under `dir` except `.tmp-*`. */
+  private def tree(dir: String): Map[String, Seq[Byte]] = {
+    val root = Paths.get(dir)
+    val s = Files.walk(root)
+    try s.iterator().asScala.filter(Files.isRegularFile(_))
+      .filterNot(_.getFileName.toString.startsWith(".tmp-"))
+      .map(p => root.relativize(p).toString -> Files.readAllBytes(p).toSeq).toMap
+    finally s.close()
+  }
+
+  /** Metadata and tmp files are dot-files; chunk files are not. */
+  private def dotFile(rel: String): Boolean = Paths.get(rel).getFileName.toString.startsWith(".")
+
+  private def tmps(dir: String): Seq[String] = {
+    val s = Files.walk(Paths.get(dir))
+    try s.iterator().asScala.map(_.getFileName.toString).filter(_.startsWith(".tmp-")).toSeq
+    finally s.close()
+  }
+
+  /** Waits for tasks of a failed job that were still running. */
+  private def awaitIdle(): Unit = {
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (spark.sparkContext.statusTracker.getExecutorInfos.map(_.numRunningTasks).sum > 0 &&
+           System.nanoTime() < deadline)
+      Thread.sleep(50)
+  }
+
+  for ((name, zyx, chunk, nLevels) <- Seq(
+         ("aligned 32^3 in 16^3 chunks, 3 levels", (32, 32, 32), Array(16, 16, 16), 3),
+         ("unaligned 20x24x28 in 12^3 chunks, 4 levels", (20, 24, 28), Array(12, 12, 12), 4),
+         ("downsample_levels = 1", (32, 32, 32), Array(16, 16, 16), 1)))
+    test(s"$name: every level-0 chunk file is created exactly once, levels exact") {
+      val stack = s"once$nLevels${zyx._1}"
+      val local = Files.createTempDirectory("conv-once").toString
+      val out = s"convfs://$local"
+      val vol = convert(czi(stack, zyx), out, chunk, nLevels)
+
+      // chunk creates are `<stack>/0/t/c/z/y/.tmp-<x>-<uuid>`, renamed to
+      // `.../y/<x>` on commit; the level's `.zarray` is not a chunk
+      val prefix = s"$local/$stack/0/"
+      val l0Creates = ConvertFs.created.asScala.toSeq
+        .filter(p => p.startsWith(prefix) && new Path(p).getName.startsWith(".tmp-"))
+        .map { p =>
+          val f = new Path(p)
+          s"${f.getParent.toUri.getPath}/${f.getName.split('-')(1)}"
+        }
+      val grid = vol.grid
+      val want = (0L until vol.numChunks).map { i =>
+        prefix + ChunkGrid.chunkCoords(i, grid).mkString("/")
+      }
+      assert(l0Creates.sorted == want.sorted,
+        s"level-0 chunk creates ${l0Creates.size}, chunks ${want.size}")
+      assertWrittenLevels(spark, out, stack, vol, nLevels)
+    }
+
+  for ((name, level, chunkPath) <- Seq(
+         ("mid-scan (one level-0 chunk)", 0, "0/0/1/0/.tmp-1-"),
+         ("mid-pyramid (one level-1 chunk)", 1, "0/0/0/0/.tmp-0-")))
+    test(s"a conversion failing $name leaves complete chunks; a re-run converges") {
+      val stack = s"fault$level"
+      val src = czi(stack, (32, 32, 32))
+      val clean = Files.createTempDirectory("conv-clean").toString
+      convert(src, s"convfs://$clean", Array(16, 16, 16), 3)
+      val want = tree(clean)
+      val wantChunks = want.keySet.filterNot(dotFile)
+
+      val local = Files.createTempDirectory("conv-fault").toString
+      val out = s"convfs://$local"
+      ConvertFs.failOn.set(s"$local/$stack/$level/$chunkPath")
+      try intercept[SparkException](convert(src, out, Array(16, 16, 16), 3))
+      finally assert(ConvertFs.failOn.getAndSet(null) == null, "the injected failure never fired")
+      awaitIdle()
+
+      val partial = tree(local).filterNot { case (rel, _) => dotFile(rel) }
+      assert(partial.nonEmpty && partial.size < wantChunks.size,
+        s"${partial.size} of ${wantChunks.size} chunk files visible after the failure")
+      partial.foreach { case (rel, bytes) =>
+        assert(Blosc.decompress(bytes.toArray).nonEmpty, s"$rel does not decode")
+        assert(want.get(rel).contains(bytes), s"visible file $rel differs from the clean conversion")
+      }
+
+      convert(src, out, Array(16, 16, 16), 3)
+      // the sweep lists the same directory through the local filesystem
+      ZarrIO.cleanupTmp(local, spark.sparkContext.hadoopConfiguration)
+      assert(tree(local) == want)
+      assert(tmps(local).isEmpty, "tmp files left after the re-run and sweep")
+    }
+}

@@ -2,6 +2,8 @@ package graft.operators
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.SparkSession
+import org.scalatest.Assertions
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.Spark
@@ -20,13 +22,10 @@ import graft.sources.czi.SyntheticCzi
   * sequential path unchanged. The job that uses it must leave nothing
   * cached on either path. */
 class PyramidFusedSpec extends AnyFunSuite {
+  import PyramidFusedSpec._
 
   private lazy val spark = Spark.session(master = "local[4]", shufflePartitions = 4,
     appName = "graft-fused-pyr-test")
-
-  private def keyed(cks: Array[ZarrChunk]): Map[(Int, Int, Int, Int, Int, Int), (Seq[Int], Seq[Byte])] =
-    cks.map(ck => (ck.level, ck.t, ck.c, ck.z, ck.y, ck.x) ->
-      (ck.shape.toSeq, ck.data.toSeq)).toMap
 
   private def assertEqualLevels(vol: Volume, nLevels: Int): Unit = {
     val seq = Pyramid.levels(spark, SyntheticStack.generate(spark, vol), vol, nLevels)
@@ -105,24 +104,32 @@ class PyramidFusedSpec extends AnyFunSuite {
     (s"$root/out", vol)
   }
 
+  test("convertStack on an aligned config leaves nothing cached, levels exact") {
+    val (out, vol) = convertUncached("ca", (32, 32, 32), Array(16, 16, 16), 3)
+    assertWrittenLevels(spark, out, "ca", vol, 3)
+  }
+
+  test("convertStack on an unaligned config (12^3 chunks, 4 levels): nothing cached, levels exact") {
+    val (out, vol) = convertUncached("cu", (20, 24, 28), Array(12, 12, 12), 4)
+    assertWrittenLevels(spark, out, "cu", vol, 4)
+  }
+}
+
+object PyramidFusedSpec extends Assertions {
+
+  def keyed(cks: Array[ZarrChunk]): Map[(Int, Int, Int, Int, Int, Int), (Seq[Int], Seq[Byte])] =
+    cks.map(ck => (ck.level, ck.t, ck.c, ck.z, ck.y, ck.x) ->
+      (ck.shape.toSeq, ck.data.toSeq)).toMap
+
   /** Every level of `stack` read back from `out` equals `Pyramid.levels`
     * over the generator, chunk for chunk; `ZarrStore.read` also requires
     * each chunk's file to exist. */
-  private def assertWrittenLevels(out: String, stack: String, vol: Volume, nLevels: Int): Unit = {
+  def assertWrittenLevels(spark: SparkSession, out: String, stack: String, vol: Volume,
+                          nLevels: Int): Unit = {
     val l0 = SyntheticStack.generate(spark, vol)
     val want = keyed(l0.collect() ++ Pyramid.levels(spark, l0, vol, nLevels).flatMap(_._2.collect()))
     val got = keyed((0 until nLevels).flatMap(l => ZarrStore.read(spark, out, stack, l)).toArray)
     assert(got.keySet == want.keySet, "chunk grid differs")
     got.foreach { case (k, v) => assert(v == want(k), s"chunk $k differs from Pyramid.levels") }
-  }
-
-  test("convertStack on an aligned config leaves nothing cached, levels exact") {
-    val (out, vol) = convertUncached("ca", (32, 32, 32), Array(16, 16, 16), 3)
-    assertWrittenLevels(out, "ca", vol, 3)
-  }
-
-  test("convertStack on an unaligned config (12^3 chunks, 4 levels): nothing cached, levels exact") {
-    val (out, vol) = convertUncached("cu", (20, 24, 28), Array(12, 12, 12), 4)
-    assertWrittenLevels(out, "cu", vol, 4)
   }
 }
