@@ -100,7 +100,7 @@ object GraphOps {
     * stats-bearing parquet leaf (better for broadcast planning than the
     * stats-less checkpoint leaf — the r11 g4/g8 lesson) and the build
     * is paid once per corpus. */
-  private[graft] def coPurchaseEdges3000(s: SparkSession, dir: String): DataFrame =
+  private def coPurchaseEdges3000(s: SparkSession, dir: String): DataFrame =
     Materialized.rel(s, s"copurch-${Materialized.dirTag(s, dir)}-3000-$capScale") {
       coPurchaseEdges(s, dir, cap = Some(3000L))
     }
@@ -108,20 +108,15 @@ object GraphOps {
   /** The FULL (capless, non-deduped) co-purchase edge artifact g4_bfs
     * iterates over — min-dist is idempotent under duplicate edges, so
     * the pair distinct's exchange (the build's largest shuffle) buys
-    * nothing (see coPurchaseEdges scaladoc). private[graft] so probe
-    * harnesses (ProbeG4) reuse THIS builder under THIS tag instead of
-    * duplicating the plan — a drifted inline copy committing a
-    * divergent artifact under the production tag was the ADVICE r16
-    * hazard. */
-  private[graft] def coPurchFullRawEdges(s: SparkSession, dir: String): DataFrame =
+    * nothing (see coPurchaseEdges scaladoc). */
+  private def coPurchFullRawEdges(s: SparkSession, dir: String): DataFrame =
     Materialized.rel(s, s"copurch-full-raw-${Materialized.dirTag(s, dir)}-$capScale") {
       coPurchaseEdges(s, dir, cap = None, dedupPairs = false)
     }
 
   /** The deduped co-supply (supplier—supplier via shared part) edge
-    * artifact g1_pagerank iterates over. private[graft] for the same
-    * probe-reuse reason as [[coPurchFullRawEdges]]. */
-  private[graft] def coSupplyEdges(s: SparkSession, dir: String): DataFrame =
+    * artifact g1_pagerank iterates over. */
+  private def coSupplyEdges(s: SparkSession, dir: String): DataFrame =
     Materialized.rel(s, s"cosupply-${Materialized.dirTag(s, dir)}-$capScale") {
       val ps = t(s, dir, "lineitem")
         .select(col("l_partkey").as("p"), col("l_suppkey").as("sk"))
@@ -145,16 +140,15 @@ object GraphOps {
     * EVERY node (zero-participation nodes carry 0) — shared by g3,
     * g10, and the `triangles` scale rehearsal so the machinery cannot
     * drift between them. */
-  private[graft] def triangleCounts(e: DataFrame,
-      ckptOriented: Boolean = true): DataFrame = {
+  private[graft] def triangleCounts(e: DataFrame): DataFrame = {
     val deg = e.select(col("p1").as("n")).union(e.select(col("p2").as("n")))
       .groupBy(col("n")).agg(count(lit(1)).as("dg"))
     val lower = struct(col("g1.dg"), col("p1")) < struct(col("g2.dg"), col("p2"))
-    val d0 = e.join(deg.as("g1"), col("p1") === col("g1.n"))
+    val d = e.join(deg.as("g1"), col("p1") === col("g1.n"))
       .join(deg.as("g2"), col("p2") === col("g2.n"))
       .select(when(lower, col("p1")).otherwise(col("p2")).as("src"),
         when(lower, col("p2")).otherwise(col("p1")).as("dst"))
-    val d = if (ckptOriented) d0.localCheckpoint(true) else d0
+      .localCheckpoint(true)
     val tri = d.as("e1").join(d.as("e2"),
         col("e1.src") === col("e2.src") && col("e1.dst") < col("e2.dst"))
       .select(col("e1.src").as("ta"), col("e1.dst").as("tb"), col("e2.dst").as("tc"))
@@ -191,17 +185,16 @@ object GraphOps {
     * like [[coPurchaseEdges]]'s — both edge builders must honor the
     * rehearsal lever or an sf1 extension of g3/g10 would silently hit
     * the k-fold-shrink trap the lever exists to prevent. */
-  private[graft] def coPurchaseEdgesP(s: SparkSession, dir: String, cap: Long,
-      ckpt: Boolean = true): DataFrame = {
+  private[graft] def coPurchaseEdgesP(s: SparkSession, dir: String, cap: Long): DataFrame = {
     val li = t(s, dir, "lineitem")
       .filter(col("l_partkey") < cap * capScale)
       .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
       .distinct()
-    val e = li.as("a").join(li.as("b"),
+    li.as("a").join(li.as("b"),
         col("a.o") === col("b.o") && col("a.p") < col("b.p"))
       .select(col("a.p").as("p1"), col("b.p").as("p2"))
       .distinct()
-    if (ckpt) e.localCheckpoint(true) else e
+      .localCheckpoint(true)
   }
 
   /** 5-round integer PageRank over an arbitrary (d1 < d2) undirected

@@ -1,0 +1,201 @@
+package graft.tools
+
+import scala.collection.mutable
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.scheduler._
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{FileSourceScanLike, QueryExecution, ReusedSubqueryExec,
+  SQLExecution, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ReusedExchangeExec, ShuffleExchangeLike}
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
+import org.apache.spark.sql.graftbridge.ListenerBridge
+import org.apache.spark.sql.util.QueryExecutionListener
+
+import graft.{Spark, SparkEntry}
+
+/** Per-SQL-execution counters from one `SparkListener`, one
+  * `QueryExecutionListener` and the final (adaptive) plan of each execution.
+  * `measure(spark)(body)` returns one [[Census.Execution]] per SQL execution
+  * `body` ran, in the order their first job started; an eager
+  * `localCheckpoint` is its own execution, so each checkpointed round of an
+  * iterative query is reported on its own. Jobs outside any SQL execution
+  * (plain RDD actions, parquet listing) pool in one record with id -1.
+  * `main` runs gate queries through a `noop` write (never `count()`, which
+  * prunes columns): one warm-up pass, then `reps` measured passes, one JSON
+  * line per execution.
+  *
+  * usage: runMain graft.tools.Census <sfDir> <q1,q2,...|ALL> [reps]
+  */
+object Census {
+
+  /** The node kinds counted over an executed plan, in output order. */
+  private val Kinds: Seq[(String, Class[_])] = Seq("ShuffleExchange" -> classOf[ShuffleExchangeLike],
+    "ReusedExchange" -> classOf[ReusedExchangeExec], "BroadcastExchange" -> classOf[BroadcastExchangeLike],
+    "BroadcastHashJoin" -> classOf[BroadcastHashJoinExec],
+    "BroadcastNestedLoopJoin" -> classOf[BroadcastNestedLoopJoinExec],
+    "FileScan" -> classOf[FileSourceScanLike], "BatchScan" -> classOf[BatchScanExec],
+    "WholeStageCodegen" -> classOf[WholeStageCodegenExec])
+
+  /** One SQL execution. `wallMs` is the execution's own duration (0 when
+    * it failed); `peakExecutionMemoryBytes` is the largest single task's
+    * peak; `nodes` counts each node kind over [[nodes]] of `plan`. */
+  final case class Execution(
+      id: Long, funcName: String, wallMs: Double, jobs: Int, stages: Int, tasks: Int,
+      executorCpuMs: Double, gcMs: Long, shuffleReadBytes: Long, shuffleWriteBytes: Long,
+      spillBytes: Long, peakExecutionMemoryBytes: Long,
+      nodes: Map[String, Int], plan: Option[SparkPlan]) {
+
+    def toJson(extra: (String, Any)*): String = Json.writeValueAsString(obj(extra ++ Seq(
+      "execution" -> id, "funcName" -> funcName, "wallMs" -> ms(wallMs), "jobs" -> jobs,
+      "stages" -> stages, "tasks" -> tasks, "executorCpuMs" -> ms(executorCpuMs), "gcMs" -> gcMs,
+      "shuffleReadBytes" -> shuffleReadBytes, "shuffleWriteBytes" -> shuffleWriteBytes,
+      "spillBytes" -> spillBytes, "peakExecutionMemoryBytes" -> peakExecutionMemoryBytes,
+      "nodes" -> obj(Kinds.map { case (k, _) => k -> nodes(k) }))))
+  }
+
+  private val Json = new ObjectMapper()
+
+  /** A JSON object with its fields in the given order. */
+  private def obj(fields: Seq[(String, Any)]): java.util.Map[String, Any] = {
+    val m = new java.util.LinkedHashMap[String, Any]()
+    fields.foreach { case (k, v) => m.put(k, v) }
+    m
+  }
+
+  private def ms(x: Double): Double = math.round(x * 10) / 10.0 // to 0.1 ms
+
+  /** Every node of an executed plan: AQE's current (after execution, final)
+    * plan, the plan inside each query stage, and every subquery. A reused
+    * exchange or subquery is a leaf; what it reuses is walked where it is
+    * built. */
+  def nodes(plan: SparkPlan): Seq[SparkPlan] = {
+    val inner = plan match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case s: QueryStageExec => Seq(s.plan)
+      case _: ReusedExchangeExec | _: ReusedSubqueryExec => Nil
+      case p => p.children ++ p.subqueries
+    }
+    plan +: inner.flatMap(nodes)
+  }
+
+  /** Runs `body` and returns one record per SQL execution it ran. The
+    * listener bus is drained before the listeners join it and after
+    * `body`, so no event of earlier work is counted and every event of
+    * `body` is; both listeners are removed on exit. */
+  def measure(spark: SparkSession)(body: => Any): Seq[Execution] = {
+    ListenerBridge.drain(spark)
+    val rec = new Recorder
+    // the QEL first: the session's ExecutionListenerBus joins the shared
+    // listener queue on the first registration, ahead of `rec`
+    spark.listenerManager.register(rec)
+    spark.sparkContext.addSparkListener(rec)
+    try {
+      body
+      ListenerBridge.drain(spark)
+      rec.executions
+    } finally {
+      spark.sparkContext.removeSparkListener(rec)
+      spark.listenerManager.unregister(rec)
+    }
+  }
+
+  private final class Acc {
+    var funcName = ""
+    var wallMs = 0.0
+    var plan: Option[SparkPlan] = None
+    var jobs, stages, tasks = 0
+    var cpuNs, gcMs, shufR, shufW, spill, peakMem = 0L
+  }
+
+  /** Events arrive on the listener bus thread, results are read on the
+    * caller's, so every member is synchronized. The shared queue hands
+    * each event to its listeners in registration order: the session's
+    * ExecutionListenerBus reports an execution's end (`onSuccess` or
+    * `onFailure`) just before this listener sees the same
+    * `SparkListenerSQLExecutionEnd`, which pairs the report with its
+    * execution id. */
+  private final class Recorder extends SparkListener with QueryExecutionListener {
+    private val accs = mutable.LinkedHashMap.empty[Long, Acc]
+    private val stageExec = mutable.Map.empty[Int, Long]
+    private var reported: Option[(String, QueryExecution, Long)] = None
+
+    private def acc(id: Long) = accs.getOrElseUpdate(id, new Acc)
+
+    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+      synchronized { reported = Some((funcName, qe, durationNs)) }
+
+    override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+      synchronized { reported = Some((funcName, qe, 0L)) }
+
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case end: SparkListenerSQLExecutionEnd => synchronized {
+        val a = acc(end.executionId)
+        reported.foreach { case (f, qe, ns) =>
+          a.funcName = f; a.plan = Some(qe.executedPlan); a.wallMs = ns / 1e6
+        }
+        reported = None
+      }
+      case _ =>
+    }
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      val id = Option(e.properties).flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+        .fold(-1L)(_.toLong)
+      acc(id).jobs += 1
+      e.stageIds.foreach(stageExec(_) = id)
+    }
+
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
+      acc(stageExec.getOrElse(e.stageInfo.stageId, -1L)).stages += 1
+    }
+
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+      val a = acc(stageExec.getOrElse(e.stageId, -1L))
+      a.tasks += 1
+      Option(e.taskMetrics).foreach { m =>
+        a.cpuNs += m.executorCpuTime
+        a.gcMs += m.jvmGCTime
+        a.shufR += m.shuffleReadMetrics.totalBytesRead
+        a.shufW += m.shuffleWriteMetrics.bytesWritten
+        a.spill += m.memoryBytesSpilled + m.diskBytesSpilled
+        a.peakMem = math.max(a.peakMem, m.peakExecutionMemory)
+      }
+    }
+
+    def executions: Seq[Execution] = synchronized {
+      accs.toSeq.map { case (id, a) =>
+        val all = a.plan.toSeq.flatMap(nodes)
+        Execution(id, a.funcName, a.wallMs, a.jobs, a.stages, a.tasks, a.cpuNs / 1e6, a.gcMs,
+          a.shufR, a.shufW, a.spill, a.peakMem,
+          Kinds.map { case (k, c) => k -> all.count(c.isInstance) }.toMap, a.plan)
+      }
+    }
+  }
+
+  def main(args: Array[String]): Unit = {
+    require(args.length >= 2, "usage: graft.tools.Census <sfDir> <q1,q2,...|ALL> [reps]")
+    val sfDir = args(0)
+    val names = if (args(1) == "ALL") SparkEntry.queries.keys.toSeq.sorted else args(1).split(",").toSeq
+    val reps = if (args.length > 2) args(2).toInt else 3
+    val spark = Spark.session(appName = "graft-census")
+    def pass(name: String): Double = {
+      val t0 = System.nanoTime()
+      SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
+      (System.nanoTime() - t0) / 1e6
+    }
+    for (name <- names) {
+      pass(name) // warm-up: JIT, parquet footers, materialized artifacts
+      for (rep <- 1 to reps) {
+        var passMs = 0.0
+        measure(spark) { passMs = pass(name) }.foreach { e =>
+          println(e.toJson("query" -> name, "pass" -> rep, "passMs" -> ms(passMs)))
+        }
+      }
+    }
+    spark.stop()
+  }
+}

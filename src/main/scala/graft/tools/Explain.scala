@@ -1,30 +1,21 @@
 package graft.tools
 
-/** Plan inspector: prints the formatted physical plan (and optionally
-  * times) for named SparkEntry queries — the feedback loop for checking
-  * pushdown, broadcast choices, and shuffle counts.
+/** Plan inspector: prints the formatted physical plan of named
+  * SparkEntry queries as planned, before adaptive execution re-plans it —
+  * the feedback loop for checking pushdown, broadcast choices, and
+  * shuffle counts. Timings, counters and the final plan's node counts of
+  * an executed query come from [[Census]].
   *
-  * usage: runMain graft.tools.Explain <sfDir> <query>[,query...] [--time]
+  * usage: runMain graft.tools.Explain <sfDir> <query>[,query...]
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args(1).split(",").toSeq
-    val time = args.contains("--time")
     val spark = graft.Spark.session(appName = "graft-explain")
     names.foreach { name =>
-      val fn = graft.SparkEntry.queries(name)
       println(s"\n=== $name ===")
-      val df = fn(spark, sfDir)
-      df.explain("formatted")
-      if (time) {
-        val t0 = System.nanoTime()
-        df.count()
-        println(f"[time] $name first: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-        val t1 = System.nanoTime()
-        fn(spark, sfDir).count()
-        println(f"[time] $name second: ${(System.nanoTime() - t1) / 1e9}%.3f s")
-      }
+      graft.SparkEntry.queries(name)(spark, sfDir).explain("formatted")
     }
     spark.stop()
   }

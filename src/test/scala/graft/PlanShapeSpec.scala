@@ -266,6 +266,30 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(v8.linesIterator.count(_.contains("Window [")) == 1, v8)
   }
 
+  test("v8/v9: no whole-stage codegen span fuses the pq_encode projection with the nested-loop join") {
+    // the CodegenFallback transform() cast keeps the encode projection out
+    // of the cross-join's span (SimilarityOps). AQE plans codegen per query
+    // stage at run time, so this reads the final plan of an executed write.
+    import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+    def encodes(p: SparkPlan) = p.expressions.exists(_.exists(_.isInstanceOf[functions.PqEncode]))
+    def bnlj(p: SparkPlan) = p.isInstanceOf[BroadcastNestedLoopJoinExec]
+    def span(p: SparkPlan): Seq[SparkPlan] = p match { // down to each InputAdapter
+      case _: InputAdapter => Nil
+      case p => p +: p.children.flatMap(span)
+    }
+    for (q <- Seq("v8_pq_adc", "v9_pq_rot")) {
+      val plan = tools.Census.measure(spark) {
+        SparkEntry.queries(q)(spark, dir).write.format("noop").mode("overwrite").save()
+      }.filter(_.funcName == "overwrite").flatMap(_.plan).head
+      val nodes = tools.Census.nodes(plan)
+      assert(nodes.exists(encodes) && nodes.exists(bnlj), s"$q: $plan")
+      val spans = nodes.collect { case w: WholeStageCodegenExec => span(w.child) }
+      assert(spans.nonEmpty, s"$q: $plan")
+      assert(!spans.exists(s => s.exists(encodes) && s.exists(bnlj)), s"$q: $plan")
+    }
+  }
+
   test("generator expressions are never duplicated into inferred filters") {
     // InferFiltersFromGenerate copies the explode's child expression into a
     // Filter (IsNotNull && size > 0); with computed higher-order generators

@@ -19,6 +19,7 @@ import graft.io.zarr.ZarrIO
 import graft.operators.PyramidFusedSpec.assertWrittenLevels
 import graft.sources.SyntheticStack
 import graft.sources.czi.SyntheticCzi
+import graft.tools.Census
 
 /** A local-disk `convfs://` filesystem that records every path passed to
   * `create` and, while armed, throws on the first create whose path
@@ -125,6 +126,17 @@ class ConvertStackSpec extends AnyFunSuite {
         s"level-0 chunk creates ${l0Creates.size}, chunks ${want.size}")
       assertWrittenLevels(spark, out, stack, vol, nLevels)
     }
+
+  test("aligned 32^3 in 16^3 chunks, 3 levels: one pass is 2 jobs, 2 stages, one exchange") {
+    // the pyramid write is the only action: one adaptive job for its
+    // exchange's map stage, one for its result stage
+    val src = czi("census", (32, 32, 32))
+    val out = Files.createTempDirectory("conv-census").toString
+    val execs = Census.measure(spark)(convert(src, out, Array(16, 16, 16), 3))
+    assert(execs.map(_.jobs).sum == 2, execs)
+    assert(execs.map(_.stages).sum == 2, execs)
+    assert(execs.map(_.nodes("ShuffleExchange")).sum == 1, execs)
+  }
 
   for ((name, level, chunkPath) <- Seq(
          ("mid-scan (one level-0 chunk)", 0, "0/0/1/0/.tmp-1-"),
