@@ -18,9 +18,11 @@ import graft.core.{ChunkGrid, PixelCodec, Volume, ZarrChunk}
   *     (2x2x2 = 8 of 64^3 per level-1 chunk of 128^3) assemble into
   *     output chunks keyed by (level, chunk coords). The shuffle moves
   *     only downsampled data, ~14.5% of the input bytes for every level
-  *     together, partitioned by chunk key with no skew (uniform grid).
-  *     [[build]] is the entry point; the per-level chain ([[levels]]) is
-  *     its fallback for chunk shapes the fused recursion cannot serve.
+  *     together, partitioned by chunk key with no skew (uniform grid);
+  *     the pieces are [[Regrid]] pieces and [[Regrid.assemble]] is the
+  *     reduce side. [[build]] is the entry point; the per-level chain
+  *     ([[levels]]) is its fallback for chunk shapes the fused recursion
+  *     cannot serve.
   *
   * Dtype preservation (`preserve_dtype=True`, `czi_to_zarr.py:450`):
   * means accumulate in Long and truncate back to uint16 via integer floor
@@ -144,69 +146,16 @@ object Pyramid {
     *
     * Dispatches on alignment: when chunk % factor == 0 on the spatial
     * axes (always true for the reference's 128^3 / x2 config), windows
-    * are chunk-local and the zero-extra-cost fast path runs; otherwise
-    * [[downsampleLevelUnaligned]] handles windows that span chunks.
+    * are chunk-local and the halving is the fused pyramid with 2 levels;
+    * otherwise [[downsampleLevelUnaligned]] handles windows that span
+    * chunks.
     */
   private[operators] def downsampleLevel(spark: SparkSession, in: Dataset[ZarrChunk], vol: Volume,
-                      factorZyx: Array[Int] = Array(2, 2, 2)): (Volume, Dataset[ZarrChunk]) = {
-    import spark.implicits._
-    if (!(2 to 4).forall(i => vol.chunk(i) % factorZyx(i - 2) == 0))
-      return downsampleLevelUnaligned(spark, in, vol, factorZyx)
-
-    val outVol = vol.downsampled(factorZyx)
-    val outShape = outVol.shape
-    val outChunk = outVol.chunk
-    val chunk = vol.chunk
-    val (fz, fy, fx) = (factorZyx(0), factorZyx(1), factorZyx(2))
-
-    val dtype = vol.dtype
-    val itemSize = dtype.itemSize
-
-    // Map side: chunk-local windowed mean. Piece voxel origin at level k+1
-    // is (chunkCoord * chunkSize / factor) — exact ints by the requirement.
-    val pieces = in.map { ck =>
-      val (bytes, ps) = downsampleBytes(ck.data, ck.shape, factorZyx, dtype)
-      val vz = ck.z.toLong * chunk(2) / fz
-      val vy = ck.y.toLong * chunk(3) / fy
-      val vx = ck.x.toLong * chunk(4) / fx
-      (ck.t, ck.c, vz, vy, vx, ps, bytes)
-    }
-
-    // Reduce side: assemble pieces into output chunks keyed by halved
-    // chunk coords. One shuffle of level-(k+1) bytes only.
-    val stack = outVol.stack
-    val level = outVol.level
-    val out = pieces
-      .groupByKey { case (t, c, vz, vy, vx, _, _) =>
-        (t, c, vz / outChunk(2), vy / outChunk(3), vx / outChunk(4))
-      }
-      .mapGroups { (key: (Int, Int, Long, Long, Long), it: Iterator[(Int, Int, Long, Long, Long, Array[Int], Array[Byte])]) =>
-        val (t, c, gz, gy, gx) = key
-        val coords = Array(t.toLong, c.toLong, gz, gy, gx)
-        val cs = ChunkGrid.clampedChunkShape(coords, outShape, outChunk)
-        // byte-level assembly: dtype-agnostic row copies
-        val buf = new Array[Byte](cs.product * itemSize)
-        it.foreach { case (_, _, vz, vy, vx, ps, bytes) =>
-          val offZ = (vz - gz * outChunk(2)).toInt
-          val offY = (vy - gy * outChunk(3)).toInt
-          val offX = (vx - gx * outChunk(4)).toInt
-          var z = 0
-          while (z < ps(2)) {
-            var y = 0
-            while (y < ps(3)) {
-              System.arraycopy(
-                bytes, (z * ps(3) * ps(4) + y * ps(4)) * itemSize,
-                buf, ((offZ + z) * cs(3) * cs(4) + (offY + y) * cs(4) + offX) * itemSize,
-                ps(4) * itemSize)
-              y += 1
-            }
-            z += 1
-          }
-        }
-        ZarrChunk(stack, level, t, c, gz.toInt, gy.toInt, gx.toInt, cs, buf)
-      }
-    (outVol, out)
-  }
+                      factorZyx: Array[Int] = Array(2, 2, 2)): (Volume, Dataset[ZarrChunk]) =
+    if (aligned(vol, factorZyx, 1)) {
+      val (vols, out) = fused(spark, in, vol, 2, factorZyx)
+      (vols.head, out)
+    } else downsampleLevelUnaligned(spark, in, vol, factorZyx)
 
   /** General (unaligned) halving: windows may span chunk boundaries, so
     * each input chunk emits per-output-chunk PARTIAL window sums/counts
@@ -361,77 +310,45 @@ object Pyramid {
     * barrier between each; map output is grid-uniform, no skew. */
   def build(spark: SparkSession, level0: Dataset[ZarrChunk], vol: Volume,
             nLevels: Int, factorZyx: Array[Int] = Array(2, 2, 2)):
-      (Seq[Volume], Dataset[ZarrChunk]) = {
-    import spark.implicits._
-    val nHalvings = nLevels - 1
-    val aligned = (2 to 4).forall { i =>
-      val fPow = math.pow(factorZyx(i - 2).toDouble, nHalvings.toDouble).toLong
+      (Seq[Volume], Dataset[ZarrChunk]) =
+    if (aligned(vol, factorZyx, nLevels - 1)) fused(spark, level0, vol, nLevels, factorZyx)
+    else {
+      val seq = levels(spark, level0, vol, nLevels, factorZyx)
+      (seq.map(_._1), seq.map(_._2).reduce(_ union _))
+    }
+
+  /** chunk % f^halvings == 0 on every spatial axis: windows of every
+    * halving stay inside one input chunk's pieces. */
+  private def aligned(vol: Volume, factorZyx: Array[Int], halvings: Int): Boolean =
+    (2 to 4).forall { i =>
+      val fPow = math.pow(factorZyx(i - 2).toDouble, halvings.toDouble).toLong
       fPow > 0 && vol.chunk(i) % fPow == 0
     }
-    if (!aligned) {
-      val seq = levels(spark, level0, vol, nLevels, factorZyx)
-      return (seq.map(_._1), seq.map(_._2).reduce(_ union _))
-    }
-    val vols = Iterator.iterate(vol)(_.downsampled(factorZyx))
-      .drop(1).take(nHalvings).toSeq
-    val outChunks = vols.map(_.chunk).toArray
-    val outShapes = vols.map(_.shape).toArray
-    val stacks = vols.map(_.stack).toArray
-    val lvlIds = vols.map(_.level).toArray
+
+  /** The fused body of [[build]] for aligned configs: recursive
+    * chunk-local halvings on the map side, one [[Regrid.assemble]]
+    * whose output index is the level (relative to `vol`). */
+  private def fused(spark: SparkSession, level0: Dataset[ZarrChunk], vol: Volume,
+                    nLevels: Int, factorZyx: Array[Int]): (Seq[Volume], Dataset[ZarrChunk]) = {
+    import spark.implicits._
+    val outs = Iterator.iterate(vol)(_.downsampled(factorZyx)).take(nLevels).toSeq
     val chunk = vol.chunk
     val dtype = vol.dtype
-    val itemSize = dtype.itemSize
-    val (fz, fy, fx) = (factorZyx(0), factorZyx(1), factorZyx(2))
 
     // map: recursive chunk-local halvings; piece k's voxel origin is the
-    // chunk origin divided by f^k (exact by the alignment requirement)
+    // chunk origin divided by f^k (exact by the alignment requirement),
+    // so each piece lies inside one level-k chunk and is cut uncopied
     val pieces = level0.flatMap { ck =>
       var data = ck.data
       var shape = ck.shape
-      var (dz, dy, dx) = (fz.toLong, fy.toLong, fx.toLong)
-      (1 to nHalvings).map { lvl =>
+      val at = Array(ck.z.toLong * chunk(2), ck.y.toLong * chunk(3), ck.x.toLong * chunk(4))
+      (1 until nLevels).iterator.flatMap { lvl =>
         val (b, ps) = downsampleBytes(data, shape, factorZyx, dtype)
         data = b; shape = ps
-        val vz = ck.z.toLong * chunk(2) / dz
-        val vy = ck.y.toLong * chunk(3) / dy
-        val vx = ck.x.toLong * chunk(4) / dx
-        dz *= fz; dy *= fy; dx *= fx
-        (lvl, ck.t, ck.c, vz, vy, vx, ps, b)
+        (0 until 3).foreach(a => at(a) /= factorZyx(a))
+        Regrid.cut(lvl, ck.t, ck.c, 0L, b, at.clone(), ps.drop(2), chunk.drop(2), dtype.itemSize)
       }
     }
-
-    // single exchange: assemble every level's chunks in one aggregate
-    val out = pieces
-      .groupByKey { case (lvl, t, c, vz, vy, vx, _, _) =>
-        val oc = outChunks(lvl - 1)
-        (lvl, t, c, vz / oc(2), vy / oc(3), vx / oc(4))
-      }
-      .mapGroups { (key: (Int, Int, Int, Long, Long, Long),
-                    it: Iterator[(Int, Int, Int, Long, Long, Long, Array[Int], Array[Byte])]) =>
-        val (lvl, t, c, gz, gy, gx) = key
-        val oc = outChunks(lvl - 1)
-        val coords = Array(t.toLong, c.toLong, gz, gy, gx)
-        val cs = ChunkGrid.clampedChunkShape(coords, outShapes(lvl - 1), oc)
-        val buf = new Array[Byte](cs.product * itemSize)
-        it.foreach { case (_, _, _, vz, vy, vx, ps, bytes) =>
-          val offZ = (vz - gz * oc(2)).toInt
-          val offY = (vy - gy * oc(3)).toInt
-          val offX = (vx - gx * oc(4)).toInt
-          var z = 0
-          while (z < ps(2)) {
-            var y = 0
-            while (y < ps(3)) {
-              System.arraycopy(
-                bytes, (z * ps(3) * ps(4) + y * ps(4)) * itemSize,
-                buf, ((offZ + z) * cs(3) * cs(4) + (offY + y) * cs(4) + offX) * itemSize,
-                ps(4) * itemSize)
-              y += 1
-            }
-            z += 1
-          }
-        }
-        ZarrChunk(stacks(lvl - 1), lvlIds(lvl - 1), t, c, gz.toInt, gy.toInt, gx.toInt, cs, buf)
-      }
-    (vols, out)
+    (outs.tail, Regrid.assemble(pieces, outs))
   }
 }

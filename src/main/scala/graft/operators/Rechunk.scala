@@ -2,21 +2,21 @@ package graft.operators
 
 import org.apache.spark.sql.Dataset
 
-import graft.core.{ChunkGrid, Volume, ZarrChunk}
+import graft.core.{Volume, ZarrChunk}
 
 /** Distributed zarr re-chunking — change a store's chunk shape without
   * ever materializing the array (the "migrate 100 TB to a chunking that
   * matches the new access pattern" operator; the reference's chunk-size
   * optimizer K3 picks shapes, this op applies one to existing data).
   *
-  * Shape: each input chunk is cut ROW-LOCALLY into the pieces that
+  * Shape: [[Regrid.cut]] splits each input chunk into the pieces that
   * overlap target chunks (at most a few per source chunk when shapes are
-  * within ~2x of each other), then ONE hash shuffle keyed by target
-  * coordinates assembles each output chunk from its pieces — every voxel
-  * moves exactly once, memory is bounded by one output chunk per group,
-  * and no slab or plane is ever resident (the same kernel family as
-  * `CziSourceShuffled`). Misaligned seams are the normal case and cost
-  * only piece multiplicity.
+  * within ~2x of each other), then [[Regrid.assemble]]'s ONE exchange
+  * keyed by target coordinates assembles each output chunk from its
+  * pieces — every voxel moves exactly once, memory is bounded by one
+  * output chunk per group, and no slab or plane is ever resident.
+  * Misaligned seams are the normal case and cost only piece
+  * multiplicity.
   *
   * Frame axes (t, c) keep chunk extent 1 (the engine-wide `Volume`
   * convention), so re-chunking is over z/y/x.
@@ -27,75 +27,13 @@ object Rechunk {
     * dataset is laid out per `newVolume(vol, newZyx)`. */
   def apply(ds: Dataset[ZarrChunk], vol: Volume, newZyx: Array[Int]): Dataset[ZarrChunk] = {
     import ds.sparkSession.implicits._
-    val shape = vol.shape
     val oldCk = vol.chunk
     val isz = vol.dtype.itemSize
-    val (ncz, ncy, ncx) = (newZyx(0), newZyx(1), newZyx(2))
-    val stack = vol.stack
-    val level = vol.level
-
     val pieces = ds.flatMap { ck =>
-      val (nzS, nyS, nxS) = (ck.shape(2), ck.shape(3), ck.shape(4))
-      val gz0 = ck.z.toLong * oldCk(2)
-      val gy0 = ck.y.toLong * oldCk(3)
-      val gx0 = ck.x.toLong * oldCk(4)
-      for {
-        tz <- (gz0 / ncz).toInt to ((gz0 + nzS - 1) / ncz).toInt
-        ty <- (gy0 / ncy).toInt to ((gy0 + nyS - 1) / ncy).toInt
-        tx <- (gx0 / ncx).toInt to ((gx0 + nxS - 1) / ncx).toInt
-      } yield {
-        // global intersection of source chunk and target chunk
-        val zLo = math.max(gz0, tz.toLong * ncz).toInt
-        val zHi = math.min(gz0 + nzS, (tz + 1).toLong * ncz).toInt
-        val yLo = math.max(gy0, ty.toLong * ncy).toInt
-        val yHi = math.min(gy0 + nyS, (ty + 1).toLong * ncy).toInt
-        val xLo = math.max(gx0, tx.toLong * ncx).toInt
-        val xHi = math.min(gx0 + nxS, (tx + 1).toLong * ncx).toInt
-        val (pz, py, px) = (zHi - zLo, yHi - yLo, xHi - xLo)
-        val out = new Array[Byte](pz * py * px * isz)
-        var z = zLo
-        while (z < zHi) {
-          var y = yLo
-          while (y < yHi) {
-            System.arraycopy(
-              ck.data,
-              (((z - gz0.toInt) * nyS + (y - gy0.toInt)) * nxS + (xLo - gx0.toInt)) * isz,
-              out, (((z - zLo) * py + (y - yLo)) * px) * isz,
-              px * isz)
-            y += 1
-          }
-          z += 1
-        }
-        (ck.t, ck.c, tz, ty, tx, zLo, yLo, xLo, pz, py, px, out)
-      }
+      val at = Array(ck.z.toLong * oldCk(2), ck.y.toLong * oldCk(3), ck.x.toLong * oldCk(4))
+      Regrid.cut(0, ck.t, ck.c, 0L, ck.data, at, ck.shape.drop(2), newZyx, isz)
     }
-
-    pieces
-      .groupByKey { case (t, c, tz, ty, tx, _, _, _, _, _, _, _) => (t, c, tz, ty, tx) }
-      .mapGroups { (key, it) =>
-        val (t, c, tz, ty, tx) = key
-        val coords = Array(t.toLong, c.toLong, tz.toLong, ty.toLong, tx.toLong)
-        val cs = ChunkGrid.clampedChunkShape(coords, shape,
-          Array(1, 1, ncz, ncy, ncx))
-        val buf = new Array[Byte](cs.product * isz)
-        it.foreach { case (_, _, _, _, _, zLo, yLo, xLo, pz, py, px, bytes) =>
-          val bz = zLo - tz * ncz
-          val by = yLo - ty * ncy
-          val bx = xLo - tx * ncx
-          var z = 0
-          while (z < pz) {
-            var y = 0
-            while (y < py) {
-              System.arraycopy(bytes, ((z * py + y) * px) * isz,
-                buf, (((bz + z) * cs(3) + (by + y)) * cs(4) + bx) * isz,
-                px * isz)
-              y += 1
-            }
-            z += 1
-          }
-        }
-        ZarrChunk(stack, level, t, c, tz, ty, tx, cs, buf)
-      }
+    Regrid.assemble(pieces, Seq(newVolume(vol, newZyx)))
   }
 
   /** The volume descriptor of the re-chunked layout. */

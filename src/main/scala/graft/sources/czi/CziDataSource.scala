@@ -24,7 +24,7 @@ import graft.io.{GridScan, GridScanBuilder}
   * (reference S2/S3, `utils.py:284-395,462-526`).
   *
   * Options: `path` (the .czi file), `stack` (defaults to the file name),
-  * `chunk_z`/`chunk_y`/`chunk_x` (default 128each). Emits the same chunk
+  * `chunk_z`/`chunk_y`/`chunk_x` (default 128 each). Emits the same chunk
   * rows as the zarr connector (`stack, level, t, c, z, y, x, shape,
   * data`), so a CZI→Zarr conversion is literally
   * `spark.read.format("czi").load()...write.format("zarr")`.
@@ -59,10 +59,11 @@ class CziTable(props: Map[String, String]) extends Table with SupportsRead {
     props.getOrElse("path", sys.error("czi: 'path' option required")))
   private val stack =
     props.getOrElse("stack", new Path(path).getName.stripSuffix(".czi"))
-  private val chunkZyx = Array(
-    props.getOrElse("chunk_z", "128").toInt,
-    props.getOrElse("chunk_y", "128").toInt,
-    props.getOrElse("chunk_x", "128").toInt)
+  private val chunkZyx = Array("chunk_z", "chunk_y", "chunk_x").map { k =>
+    val v = props.getOrElse(k, "128")
+    v.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+      s"czi: option '$k' must be a positive integer, got '$v'"))
+  }
 
   override def name(): String = s"czi:$path"
   override def schema(): StructType = graft.io.zarr.ZarrDataSource.chunkSchema

@@ -124,10 +124,10 @@ object CziReader {
       // ENUMERATION axes: each tile also carries its own Y/X start in
       // stage coordinates, so the reference's start-offset scatter
       // (`utils.py:269-276`) stitches them into one padded plane with the
-      // S/M index never entering the placement arithmetic. The same
-      // kernel here (`CziSource.slabChunks`) does the same, so these
-      // spans are accepted and the global extent is the stitched
-      // bounding box (gaps between tiles stay zero-filled; tiles
+      // S/M index never entering the placement arithmetic. Both scans
+      // (`CziSource.slabChunks`, `Regrid.assemble` in directory order) do
+      // the same, so these spans are accepted and the global extent is
+      // the stitched bounding box (gaps between tiles stay zero-filled; tiles
       // overlapping in Y/X resolve last-in-directory-order wins, the
       // reference's sequential-assignment semantics).
       //

@@ -5,6 +5,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 import graft.core.{ChunkGrid, Volume, ZarrChunk}
+import graft.operators.Regrid
 import CziFormat._
 
 /** Distributed CZI -> Dataset[ZarrChunk] scan (reference operators S2+S3:
@@ -13,8 +14,9 @@ import CziFormat._
   *
   * The driver parses only the subblock directory (KBs); pixel data is
   * read inside tasks. One task = one z-slab of chunk depth (the
-  * reference's `axis_jumps`), which it cuts into chunk-grid tiles —
-  * so level-0 chunking needs '''no shuffle at all''': every chunk is
+  * reference's `axis_jumps`), which it scatters and cuts into chunk-grid
+  * tiles with [[graft.operators.Regrid.copyBox]] — so level-0 chunking
+  * needs '''no shuffle at all''': every chunk is
   * produced exactly once by the task owning its slab (mirrors the
   * bounded-memory slab streaming X3, `czi_to_zarr.py:596-608`).
   */
@@ -103,20 +105,9 @@ object CziSource {
       if (lo < hi && e.start("C") - origin(1) == cIdx
           && e.start("T") - origin(0) == tIdx) {
         val data = CziReader.subblockData(in, e)
-        val (ey0, ex0) = (e.start("Y") - origin(3), e.start("X") - origin(4))
-        val (eyN, exN) = (e.size("Y"), e.size("X"))
-        var z = lo
-        while (z < hi) {
-          val srcZ = (z - ez0) * eyN * exN * isz
-          val dstZ = (z - z0) * sy * sx * isz
-          var y = 0
-          while (y < eyN) {
-            System.arraycopy(data, srcZ + y * exN * isz,
-              buf, dstZ + ((ey0 + y) * sx + ex0) * isz, exN * isz)
-            y += 1
-          }
-          z += 1
-        }
+        Regrid.copyBox(data, Array(e.size("Z"), e.size("Y"), e.size("X")), Array(lo - ez0, 0, 0),
+          buf, Array(zN, sy, sx), Array(lo - z0, e.start("Y") - origin(3), e.start("X") - origin(4)),
+          Array(hi - lo, e.size("Y"), e.size("X")), isz)
       }
     }
     // cut the slab into chunk tiles — chunk-local, no shuffle
@@ -127,17 +118,8 @@ object CziSource {
       val yN = math.min(chunk(3).toLong, shape(3) - ty.toLong * chunk(3)).toInt
       val xN = math.min(chunk(4).toLong, shape(4) - tx.toLong * chunk(4)).toInt
       val out = new Array[Byte](zN * yN * xN * isz)
-      var z = 0
-      while (z < zN) {
-        var y = 0
-        while (y < yN) {
-          System.arraycopy(
-            buf, (z * sy * sx + (ty * chunk(3) + y) * sx + tx * chunk(4)) * isz,
-            out, (z * yN * xN + y * xN) * isz, xN * isz)
-          y += 1
-        }
-        z += 1
-      }
+      Regrid.copyBox(buf, Array(zN, sy, sx), Array(0, ty * chunk(3), tx * chunk(4)),
+        out, Array(zN, yN, xN), Array(0, 0, 0), Array(zN, yN, xN), isz)
       (ty, tx, Array(1, 1, zN, yN, xN), out)
     }).iterator
   }

@@ -11,6 +11,8 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.{FSDataOutputStream, Path, RawLocalFileSystem}
 import org.apache.hadoop.util.Progressable
 import org.apache.spark.SparkException
+import org.apache.spark.sql.execution.{DeserializeToObjectExec, SerializeFromObjectExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.Spark
@@ -136,6 +138,13 @@ class ConvertStackSpec extends AnyFunSuite {
     assert(execs.map(_.jobs).sum == 2, execs)
     assert(execs.map(_.stages).sum == 2, execs)
     assert(execs.map(_.nodes("ShuffleExchange")).sum == 1, execs)
+    // the map side is fused: range -> scan -> level-0 tee -> pyramid
+    // pieces deserialise once and serialise only into the exchange
+    val below = execs.flatMap(_.plan).flatMap(Census.nodes)
+      .collect { case e: ShuffleExchangeExec => e.child }.flatMap(Census.nodes)
+    val names = below.map(_.nodeName)
+    assert(below.count(_.isInstanceOf[DeserializeToObjectExec]) == 1, names)
+    assert(!below.exists(_.isInstanceOf[SerializeFromObjectExec]), names)
   }
 
   for ((name, level, chunkPath) <- Seq(

@@ -38,6 +38,16 @@ class CziDataSourceSpec extends AnyFunSuite {
     assert(r.getAs[String]("stack") == "f")
   }
 
+  test("a chunk option that is not a positive integer fails naming the option") {
+    val path = fixture()
+    for ((k, v) <- Seq("chunk_z" -> "0", "chunk_y" -> "-8", "chunk_x" -> "x16")) {
+      val e = intercept[IllegalArgumentException] {
+        spark.read.format("czi").option("path", path).option(k, v).load()
+      }
+      assert(e.getMessage.contains(s"'$k'") && e.getMessage.contains(s"'$v'"), e.getMessage)
+    }
+  }
+
   test("c/z filters prune input PARTITIONS, not just rows") {
     import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
     val path = fixture()

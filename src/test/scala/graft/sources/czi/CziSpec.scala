@@ -405,6 +405,57 @@ class CziSpec extends AnyFunSuite {
     }
   }
 
+  test("overlapping mosaic tiles: last in directory order wins in both scans and format(czi)") {
+    val dir = Files.createTempDirectory("czi-overlap").toString
+    val path = s"$dir/overlap.czi"
+    // four 12x12 tiles at Y/X starts {0, 8} over a 20x20 plane overlap in
+    // 4-wide bands; each carries its own offset, and the directory lists
+    // them out of spatial order, so a scan that copies pieces in any
+    // order but the directory's changes a band voxel
+    val (nz, tile, plane) = (2, 12, 20)
+    val order = Seq(3, 0, 2, 1)
+    val tileVal = (m: Int, z: Int, y: Int, x: Int) =>
+      (SyntheticStack.value(z, y, x) + 1000 * (m + 1)) & 0xFFFF
+    val tiles = for (z <- 0 until nz; m <- order) yield {
+      val (y0, x0) = (m / 2 * 8, m % 2 * 8)
+      SyntheticCzi.Tile(
+        dims = Seq(("X", x0, tile), ("Y", y0, tile), ("Z", z, 1), ("C", 0, 1), ("M", m, 1)),
+        pixels = Array.tabulate(tile * tile)(i => tileVal(m, z, y0 + i / tile, x0 + i % tile)))
+    }
+    SyntheticCzi.writeTiles(path, tiles)
+    val want = new Array[Int](nz * plane * plane)
+    for (z <- 0 until nz; m <- order; y <- m / 2 * 8 until m / 2 * 8 + tile;
+         x <- m % 2 * 8 until m % 2 * 8 + tile)
+      want(z * plane * plane + y * plane + x) = tileVal(m, z, y, x)
+
+    val (vol, idx) = CziSource.volume(path, "overlap", Array(nz, 8, 8))
+    assert(vol.shape.toSeq == Seq(1L, 1L, nz.toLong, plane.toLong, plane.toLong))
+    def byCoord(cks: Array[graft.core.ZarrChunk]) = cks.map(c => (c.z, c.y, c.x) -> c).toMap
+    val slab = byCoord(CziSource.scan(spark, path, vol, idx).collect())
+    assert(slab.size == 9)
+    slab.values.foreach { ck =>
+      val px = ck.pixels
+      val (sy, sx) = (ck.shape(3), ck.shape(4))
+      for (z <- 0 until nz; y <- 0 until sy; x <- 0 until sx)
+        assert(px(z * sy * sx + y * sx + x) ==
+          want(z * plane * plane + (ck.y * 8 + y) * plane + ck.x * 8 + x),
+          s"slab chunk (${ck.y},${ck.x}) voxel ($z,$y,$x)")
+    }
+    import spark.implicits._
+    val connector = spark.read.format("czi").option("path", path)
+      .option("chunk_z", nz.toString).option("chunk_y", "8").option("chunk_x", "8")
+      .load().as[graft.core.ZarrChunk].collect()
+    for ((name, cks) <- Seq("shuffled" -> CziSourceShuffled.scan(spark, path, vol, idx).collect(),
+                            "format(czi)" -> connector)) {
+      val got = byCoord(cks)
+      assert(got.keySet == slab.keySet, name)
+      got.foreach { case (k, ck) =>
+        assert(ck.shape.toSeq == slab(k).shape.toSeq, s"$name chunk $k")
+        assert(ck.data.sameElements(slab(k).data), s"$name chunk $k differs from the slab scan")
+      }
+    }
+  }
+
   test("multi-channel CZI: per-channel voxel-exact chunks, both scan variants") {
     val dir = Files.createTempDirectory("czi-mc").toString
     val path = s"$dir/mc.czi"
