@@ -62,6 +62,8 @@ object ZeissJob {
     require(scaleFactor.forall(_ >= 1),
       s"scale_factor entries must be >= 1, got ${scaleFactor.mkString("[", ",", "]")}")
     require(downsampleLevels >= 1, s"downsample_levels must be >= 1, got $downsampleLevels")
+    require(compressorLevel >= 0 && compressorLevel <= 9,
+      s"compressor_level must be in 0..9 (the Blosc clevel range), got $compressorLevel")
     require(targetSizeMb > 0, s"target_size_mb must be > 0, got $targetSizeMb")
     require(maxConcurrentStacks >= 1, s"max_concurrent_stacks must be >= 1, got $maxConcurrentStacks")
   }
@@ -137,13 +139,20 @@ object ZeissJob {
     }
 
   /** Discover stacks: the .czi files under `input_source/SPIM`, sorted
-    * for deterministic ordering (`zeiss_job.py:42-60`). */
+    * for deterministic ordering (`zeiss_job.py:42-60`). A
+    * `<base>.transcoded.czi` next to `<base>.czi` is that stack's JPEG-XR
+    * transcode sidecar ([[CziSource.resolveInput]]), not a stack. */
   def discoverStacks(inputSource: String, conf: Configuration = graft.core.HadoopConf.get): Seq[String] = {
     val dir = new Path(s"$inputSource/SPIM")
     val fs = dir.getFileSystem(conf)
     if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).filter(_.isFile)
-      .map(_.getPath.toString).filter(_.endsWith(".czi")).sorted.toSeq
+    else {
+      val czis = fs.listStatus(dir).filter(_.isFile)
+        .map(_.getPath.toString).filter(_.endsWith(".czi")).toSet
+      czis.filterNot { p =>
+        p.endsWith(".transcoded.czi") && czis(p.stripSuffix(".transcoded.czi") + ".czi")
+      }.toSeq.sorted
+    }
   }
 
   /** Convert one CZI stack to a multiscale OME-Zarr
@@ -321,6 +330,11 @@ object ZeissJob {
     parseSettings(M.writeValueAsString(root))
   }
 
+  /** The response line `main` prints: `{"status_code":..,"message":..}`. */
+  def responseJson(resp: JobResponse): String =
+    M.writeValueAsString(M.createObjectNode()
+      .put("status_code", resp.statusCode).put("message", resp.message))
+
   def main(args: Array[String]): Unit = {
     // three config sources, in the reference's precedence
     // (zeiss_job.py:234-242): inline JSON (joined — shells/sbt may split
@@ -333,7 +347,7 @@ object ZeissJob {
       else parseSettingsInline(args.mkString(" "))
     val spark = graft.Spark.session(appName = "graft-zeiss-job")
     val resp = run(spark, settings)
-    println(s"""{"status_code":${resp.statusCode},"message":"${resp.message}"}""")
+    println(responseJson(resp))
     spark.stop()
   }
 }

@@ -46,9 +46,10 @@ object ConvertFs {
 }
 
 /** `ZeissJob.convertStack` is one pass over the CZI: each level-0 chunk
-  * is encoded and committed once, by the slab task that cut it, on the
-  * aligned (fused pyramid), unaligned (per-level fallback) and
-  * single-level paths. A failure mid-scan or mid-pyramid leaves only
+  * is encoded and committed once, by the slab task that cut it, whether
+  * the pyramid is one fused round (aligned chunks), several rounds
+  * (chunks not a multiple of f^(levels-1)) or absent (one level). Every
+  * level equals the dense oracle. A failure mid-scan or mid-pyramid leaves only
   * complete chunk files visible, and a re-run into the same root
   * converges to the tree of a clean conversion. */
 class ConvertStackSpec extends AnyFunSuite {
@@ -145,6 +146,32 @@ class ConvertStackSpec extends AnyFunSuite {
     val names = below.map(_.nodeName)
     assert(below.count(_.isInstanceOf[DeserializeToObjectExec]) == 1, names)
     assert(!below.exists(_.isInstanceOf[SerializeFromObjectExec]), names)
+  }
+
+  test("unaligned 20x24x28 in 12^3 chunks, 4 levels: two pyramid rounds, one exchange each") {
+    // 12 % 2^3 != 0: levels 1-2 are one fused round, level 3 a second round
+    // over level 2 that reads the first round's exchange as a reused one.
+    // The per-level chain this replaced ran 4 jobs, 4 stages, 3
+    // ShuffleExchange and 2 ReusedExchange nodes.
+    val src = czi("census-u", (20, 24, 28))
+    val out = Files.createTempDirectory("conv-census-u").toString
+    val execs = Census.measure(spark)(convert(src, out, Array(12, 12, 12), 4))
+    assert(execs.map(_.jobs).sum == 3, execs)
+    assert(execs.map(_.stages).sum == 3, execs)
+    assert(execs.map(_.nodes("ShuffleExchange")).sum == 2, execs)
+    assert(execs.map(_.nodes("ReusedExchange")).sum == 1, execs)
+  }
+
+  test("2048^3 chunks fail at planning, before any Spark job runs") {
+    // 2048^3 u16 is 16 GiB: no JVM array holds it, and its Int byte count
+    // wraps to 0
+    val src = czi("huge", (8, 8, 8))
+    val out = Files.createTempDirectory("conv-huge").toString
+    val execs = Census.measure(spark) {
+      val e = intercept[IllegalArgumentException](convert(src, out, Array(2048, 2048, 2048), 2))
+      assert(e.getMessage.contains("2048x2048x2048") && e.getMessage.contains("2-byte"), e.getMessage)
+    }
+    assert(execs.map(_.jobs).sum == 0, execs)
   }
 
   for ((name, level, chunkPath) <- Seq(

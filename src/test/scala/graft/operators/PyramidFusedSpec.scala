@@ -13,14 +13,12 @@ import graft.jobs.ZeissJob
 import graft.sources.SyntheticStack
 import graft.sources.czi.SyntheticCzi
 
-/** [[Pyramid.build]], the fused all-levels pyramid, must be
-  * BYTE-identical to the sequential assemble-then-downsample chain
-  * ([[Pyramid.levels]]) — including ceil-edge chunks, where a level's
-  * edge pieces go odd-sized. The alignment precondition
-  * (chunk % f^(nLevels-1) == 0) is exactly what makes the chunk-local
-  * recursion legal; the unaligned fallback must route through the
-  * sequential path unchanged. The job that uses it must leave nothing
-  * cached on either path. */
+/** Every level of [[Pyramid.build]] must equal the dense oracle
+  * ([[PyramidUnalignedSpec.brute]], which shares no code with the
+  * pyramid) — including ceil-edge chunks, where a level's edge pieces go
+  * odd-sized, and chunks that are not a multiple of f^(nLevels-1), which
+  * build in rounds of the fused body. The job that uses it must leave
+  * nothing cached on either shape. */
 class PyramidFusedSpec extends AnyFunSuite {
   import PyramidFusedSpec._
 
@@ -28,16 +26,11 @@ class PyramidFusedSpec extends AnyFunSuite {
     appName = "graft-fused-pyr-test")
 
   private def assertEqualLevels(vol: Volume, nLevels: Int): Unit = {
-    val seq = Pyramid.levels(spark, SyntheticStack.generate(spark, vol), vol, nLevels)
-    val want = keyed(seq.flatMap(_._2.collect()).toArray)
     val (vols, all) = Pyramid.build(
       spark, SyntheticStack.generate(spark, vol), vol, nLevels)
-    assert(vols.map(_.shape.toSeq) == seq.map(_._1.shape.toSeq))
-    val got = keyed(all.collect())
-    assert(got.keySet == want.keySet, "chunk grid differs")
-    got.foreach { case (k, v) =>
-      assert(v == want(k), s"chunk $k differs between fused and sequential")
-    }
+    val want = assertOracleLevels(all.collect().toSeq, vol, nLevels, 1 until nLevels)
+    assert(vols.map(_.level) == (1 until nLevels))
+    assert(vols.map(_.shape.drop(2).toSeq) == want.tail.map(_.dims.map(_.toLong).toSeq))
   }
 
   test("aligned 64^3 / 32^3 (z1's config): fused == sequential, byte-exact") {
@@ -74,16 +67,16 @@ class PyramidFusedSpec extends AnyFunSuite {
   }
 
   test("unaligned chunk (12^3, nLevels 4) falls back to the sequential path") {
-    // 12 % 2^3 != 0: the fused recursion would be wrong here, so the
-    // dispatcher must route through Pyramid.levels — equality is the proof
+    // 12 % 2^3 != 0: the fused body may halve 12^3 chunks only twice, so
+    // the build runs in two rounds (levels 1-2, then level 3 from level 2)
     val vol = Volume("fu", 0, Array(1L, 1L, 24L, 24L, 24L), Array(1, 1, 12, 12, 12))
     assertEqualLevels(vol, 4)
-    // the fallback caches nothing; instead each level's exchange runs once
-    // and the levels above reuse it within the one unioned plan
+    // nothing is cached; the second round reads the first round's
+    // exchange, which runs once and is reused within the one unioned plan
     val (_, all) = Pyramid.build(spark, SyntheticStack.generate(spark, vol), vol, 4)
     all.collect()
     val plan = all.queryExecution.executedPlan.toString
-    assert("ReusedExchange".r.findAllIn(plan).size == 2, plan)
+    assert("ReusedExchange".r.findAllIn(plan).size == 1, plan)
   }
 
   /** Converts a synthetic CZI stack of `zyx` voxels through
@@ -116,20 +109,26 @@ class PyramidFusedSpec extends AnyFunSuite {
 }
 
 object PyramidFusedSpec extends Assertions {
+  import PyramidUnalignedSpec.{brute, densify, synthetic}
 
-  def keyed(cks: Array[ZarrChunk]): Map[(Int, Int, Int, Int, Int, Int), (Seq[Int], Seq[Byte])] =
-    cks.map(ck => (ck.level, ck.t, ck.c, ck.z, ck.y, ck.x) ->
-      (ck.shape.toSeq, ck.data.toSeq)).toMap
+  /** Each of `levels` in `cks` equals the dense oracle over the synthetic
+    * stack of `vol` (factor 2); returns the oracle's levels 0..nLevels-1. */
+  def assertOracleLevels(cks: Seq[ZarrChunk], vol: Volume, nLevels: Int,
+                         levels: Range): Seq[PyramidUnalignedSpec.Dense] = {
+    val want = brute(synthetic(vol.shape.drop(2).map(_.toInt)), Array(2, 2, 2), nLevels, float = false)
+    levels.foreach { k =>
+      val got = densify(cks.filter(_.level == k), want(k).dims, vol)
+      assert(got.v.sameElements(want(k).v), s"level $k differs from the dense oracle")
+    }
+    want
+  }
 
-  /** Every level of `stack` read back from `out` equals `Pyramid.levels`
-    * over the generator, chunk for chunk; `ZarrStore.read` also requires
-    * each chunk's file to exist. */
+  /** Every level of `stack` read back from `out` equals the dense oracle
+    * over the generator; `ZarrStore.read` also requires each chunk's file
+    * to exist. */
   def assertWrittenLevels(spark: SparkSession, out: String, stack: String, vol: Volume,
                           nLevels: Int): Unit = {
-    val l0 = SyntheticStack.generate(spark, vol)
-    val want = keyed(l0.collect() ++ Pyramid.levels(spark, l0, vol, nLevels).flatMap(_._2.collect()))
-    val got = keyed((0 until nLevels).flatMap(l => ZarrStore.read(spark, out, stack, l)).toArray)
-    assert(got.keySet == want.keySet, "chunk grid differs")
-    got.foreach { case (k, v) => assert(v == want(k), s"chunk $k differs from Pyramid.levels") }
+    assertOracleLevels((0 until nLevels).flatMap(l => ZarrStore.read(spark, out, stack, l)),
+      vol, nLevels, 0 until nLevels)
   }
 }

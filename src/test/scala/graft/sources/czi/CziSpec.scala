@@ -136,6 +136,26 @@ class CziSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](ZeissJob.Settings("/a", "/b", maxConcurrentStacks = 0))
   }
 
+  test("settings: compressor_level must be >= 0") {
+    rejected(s"""{$base,"compressor_level":-1}""", "compressor_level")
+    intercept[IllegalArgumentException](ZeissJob.Settings("/a", "/b", compressorLevel = -1))
+    assert(ZeissJob.parseSettings(s"""{$base,"compressor_level":0}""").compressorLevel == 0)
+  }
+
+  test("settings: compressor_level must be <= 9") {
+    rejected(s"""{$base,"compressor_level":10}""", "compressor_level")
+    intercept[IllegalArgumentException](ZeissJob.Settings("/a", "/b", compressorLevel = 10))
+    assert(ZeissJob.parseSettings(s"""{$base,"compressor_level":9}""").compressorLevel == 9)
+  }
+
+  test("main's response line is valid JSON when the message holds quotes and backslashes") {
+    val msg = """no CZI stacks under /in/a"b\c/SPIM"""
+    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(
+      ZeissJob.responseJson(ZeissJob.JobResponse(400, msg)))
+    assert(node.get("status_code").asInt == 400)
+    assert(node.get("message").asText == msg)
+  }
+
   test("CZI index parse: shape, pixel type, entries") {
     val dir = Files.createTempDirectory("czi").toString
     val path = s"$dir/t.czi"
@@ -253,15 +273,18 @@ class CziSpec extends AnyFunSuite {
       assert(at(z, y, x) == 0, s"gap ($z,$y,$x)")
   }
 
+  /** `nz` synthetic n x n planes, one subblock each, with `compression`. */
+  private def planes(nz: Int, n: Int, compression: Int): Seq[SyntheticCzi.Tile] =
+    for (z <- 0 until nz) yield SyntheticCzi.Tile(
+      dims = Seq(("X", 0, n), ("Y", 0, n), ("Z", z, 1), ("C", 0, 1)),
+      pixels = Array.tabulate(n * n)(i => SyntheticStack.value(z, i / n, i % n)),
+      compression = compression)
+
   test("JPEG-XR CZI: fails with transcode remediation, or resolves to the sidecar voxel-exact") {
     val dir = Files.createTempDirectory("czi-jxr").toString
     val path = s"$dir/jx.czi"
     val nz = 2; val n = 8
-    def tiles(comp: Int) = for (z <- 0 until nz) yield SyntheticCzi.Tile(
-      dims = Seq(("X", 0, n), ("Y", 0, n), ("Z", z, 1), ("C", 0, 1)),
-      pixels = Array.tabulate(n * n)(i => SyntheticStack.value(z, i / n, i % n)),
-      compression = comp)
-    SyntheticCzi.writeTiles(path, tiles(CziFormat.CompressionJpgXr))
+    SyntheticCzi.writeTiles(path, planes(nz, n, CziFormat.CompressionJpgXr))
 
     // no sidecar: planning-time failure naming the remediation path
     val e = intercept[UnsupportedOperationException] { CziSource.resolveInput(path) }
@@ -278,7 +301,7 @@ class CziSpec extends AnyFunSuite {
 
     // a valid transcode sidecar resolves, and the whole pipeline reads it:
     // the scan sees the zstd pixels voxel-exact through the ORIGINAL path
-    SyntheticCzi.writeTiles(sidecar, tiles(CziFormat.CompressionZstd0))
+    SyntheticCzi.writeTiles(sidecar, planes(nz, n, CziFormat.CompressionZstd0))
     val resolved = CziSource.resolveInput(path)
     assert(resolved == sidecar)
     val (vol, idx) = CziSource.volume(resolved, "jx", Array(nz, n, n))
@@ -292,6 +315,26 @@ class CziSpec extends AnyFunSuite {
       .option("chunk_z", nz.toString).option("chunk_y", n.toString)
       .option("chunk_x", n.toString).load()
     assert(df.count() == 1L)
+  }
+
+  test("ZeissJob on a JPEG-XR stack and its transcode sidecar writes one stack, voxel-exact") {
+    val root = Files.createTempDirectory("zeiss-jxr").toString
+    new java.io.File(s"$root/in/SPIM").mkdirs()
+    val nz = 2; val n = 8
+    SyntheticCzi.writeTiles(s"$root/in/SPIM/jx.czi", planes(nz, n, CziFormat.CompressionJpgXr))
+    SyntheticCzi.writeTiles(s"$root/in/SPIM/jx.transcoded.czi", planes(nz, n, CziFormat.CompressionZstd0))
+    assert(ZeissJob.discoverStacks(s"$root/in").map(new java.io.File(_).getName) == Seq("jx.czi"))
+    val resp = ZeissJob.run(spark, ZeissJob.Settings(s"$root/in", s"$root/out",
+      chunkSize = Array(nz, n, n), downsampleLevels = 1))
+    assert(resp.statusCode == 200, resp.message)
+    assert(resp.message.startsWith("converted 1 stacks"), resp.message)
+    val stacks = new java.io.File(s"$root/out").listFiles().filter(_.isDirectory).map(_.getName)
+    assert(stacks.toSeq == Seq("jx"), stacks.mkString(", "))
+    val l0 = ZarrStore.read(spark, s"$root/out", "jx", 0)
+    assert(l0.length == 1)
+    val px = l0(0).pixels
+    for (z <- 0 until nz; y <- 0 until n; x <- 0 until n)
+      assert(px(z * n * n + y * n + x) == SyntheticStack.value(z, y, x), s"($z,$y,$x)")
   }
 
   test("subblocks spanning several timepoints are rejected, singleton T squeezes") {
