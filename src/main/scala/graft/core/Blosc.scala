@@ -1,6 +1,6 @@
 package graft.core
 
-import com.github.luben.zstd.Zstd
+import com.github.luben.zstd.{Zstd, ZstdCompressCtx}
 
 /** Blosc v1 frame codec (zstd + byte-shuffle), pure JVM.
   *
@@ -30,7 +30,11 @@ import com.github.luben.zstd.Zstd
   *
   * We always emit a single block (blocksize = nbytes) holding one zstd
   * stream, and say so with flag 0x10; the decoder accepts any block
-  * count/size. Shuffle is applied per block, matching c-blosc.
+  * count/size. Shuffle is applied per block, matching c-blosc. Our zstd
+  * streams carry their content checksum (4 bytes), which libzstd and so
+  * c-blosc, numcodecs and [[decompress]] verify: a flipped payload bit
+  * fails the decode instead of yielding wrong voxels. Streams without it
+  * decode as before.
   */
 object Blosc {
   private val Version: Byte = 2
@@ -116,7 +120,8 @@ object Blosc {
       return out
     }
     val shuffled = if (doShuffle) shuffle(raw, typesize) else raw
-    val z = Zstd.compress(shuffled, clevel)
+    val ctx = new ZstdCompressCtx()
+    val z = try ctx.setLevel(clevel).setChecksum(true).compress(shuffled) finally ctx.close()
     val compressedLen = z.length
     // header(16) + bstarts(4) + blockLen(4) + stream
     if (16 + 4 + 4 + compressedLen >= 16 + nbytes) {

@@ -62,8 +62,8 @@ object ChunkGrid {
     * superblock planner `expand_chunks` (`zarr_writer.py:51-120`), iso
     * mode: multiply every axis by the largest integer k with
     * k^rank * chunkBytes <= targetBytes, clamped to the array shape.
-    * Returns the superblock shape in voxels. Used only for task-granularity
-    * arithmetic (reference X4) — Spark schedules the tasks themselves.
+    * Returns the superblock shape in voxels. The conversion job does not
+    * use it: adaptive execution sizes its tasks.
     */
   def expandChunksIso(chunk: Array[Int], shape: Array[Long], targetBytes: Long, itemSize: Int): Array[Long] = {
     val base = chunk.map(_.toLong)
@@ -92,12 +92,5 @@ object ChunkGrid {
       axis = (axis + 1) % chunk.length
     }
     cur
-  }
-
-  /** Superblock arithmetic as task granularity (reference X4): how many
-    * chunks one write task should own so it handles ~targetBytes. */
-  def chunksPerTask(chunk: Array[Int], targetBytes: Long, itemSize: Int): Int = {
-    val chunkBytes = chunk.map(_.toLong).product * itemSize
-    math.max(1L, targetBytes / math.max(1L, chunkBytes)).min(Int.MaxValue).toInt
   }
 }

@@ -36,17 +36,20 @@ import graft.io.{GridRange, GridScan, GridScanBuilder}
   * `graft/io/GridScan.scala`; every axis is prunable. Each reader opens
   * only its own chunk files; missing files yield fill-value (zeros)
   * chunks, matching Zarr semantics. A chunk file that does not decode to
-  * exactly its clamped shape fails the task with
+  * exactly its clamped shape (checked on the file length and the frame
+  * header before either sizes an allocation) fails the task with
   * `corrupt zarr chunk at <path>`.
   *
   * Write: `ZarrDataWriter.put` is the store's only chunk encoder and
-  * committer; this sink calls it per row, and the conversion job's
-  * level-0 pass (`ZeissJob.convertStack`) calls it from each CZI slab
-  * task. It encodes with the codec the driver declared in the level's
+  * committer; this sink calls it per row, and the conversion job
+  * (`ZeissJob.convertAll`) calls it from the task that made each chunk:
+  * the CZI slab task for level 0, the pyramid's reduce task for levels
+  * 1... It encodes with the codec the driver declared in the level's
   * `.zarray` (Blosc/zstd at its clevel and dtype stride, or raw for
   * `compressor: null`) and commits each chunk by tmp + atomic rename
   * (lock-free, reference X8); commit is metadata-free because chunk
-  * placement is deterministic by coordinates. Metadata
+  * placement is deterministic by coordinates. A rename that returns
+  * false with no chunk at the destination fails the write. Metadata
   * (`ZarrIO.writeMetadata`) must exist first.
   */
 class ZarrDataSource extends TableProvider with DataSourceRegister {
@@ -168,24 +171,34 @@ class ZarrPartitionReader(root: String, stack: String, level: Int,
       len match {
         case None => new Array[Byte](want)
         case Some(n) =>
-          // IO errors propagate as they are; only the bytes' content is judged
+          // a corrupt chunk in a 100 TB store must surface WITH ITS PATH —
+          // a bare frame/length error from deep inside the codec is
+          // undebuggable when a million tasks each read thousands of files
+          def corrupt(msg: String, cause: Exception = null) =
+            new IllegalStateException(s"corrupt zarr chunk at $p: $msg", cause)
+          // IO errors propagate as they are; only the bytes' content is judged.
+          // Neither the file length nor a header sizes an allocation unchecked:
+          // no Blosc v1 frame exceeds nbytes + 16, and an oversized array
+          // request is an OutOfMemoryError that kills the executor
+          val max = if (compressed) want + 16L else want.toLong
           val in = fs.open(p)
           val buf = try {
+            if (n > max) throw corrupt(s"$n bytes, at most $max expected")
             val b = new Array[Byte](n.toInt)
             in.readFully(0, b)
             b
           } finally in.close()
           try {
-            val out = if (compressed) Blosc.decompress(buf) else buf
+            val out =
+              if (!compressed) buf
+              else {
+                val nbytes = Blosc.header(buf).nbytes
+                require(nbytes == want, s"header nbytes=$nbytes, expected $want")
+                Blosc.decompress(buf)
+              }
             require(out.length == want, s"${out.length} bytes, expected $want")
             out
-          } catch {
-            // a corrupt chunk in a 100 TB store must surface WITH ITS PATH —
-            // a bare frame/length error from deep inside the codec is
-            // undebuggable when a million tasks each read thousands of files
-            case e: Exception => throw new IllegalStateException(
-              s"corrupt zarr chunk at $p: ${e.getMessage}", e)
-          }
+          } catch { case e: Exception => throw corrupt(e.getMessage, e) }
       }
     }
     val values: Array[Any] = cols.map {
@@ -331,8 +344,7 @@ class ZarrDataWriter(root: String, hconf: Array[(String, String)]) extends DataW
 
   /** Encode one chunk's raw bytes and commit them at their coordinates:
     * the store's only chunk encoder and committer. [[write]] calls it per
-    * row; `ZeissJob.convertStack` calls it from the CZI slab task, so
-    * level 0 commits in the task that cut it. */
+    * row; `ZeissJob` calls it from the task that made each chunk. */
   def put(stack: String, level: Int, t: Int, c: Int, z: Int, y: Int, x: Int,
           data: Array[Byte]): Unit = {
     val codec = codecFor(stack, level)
@@ -342,7 +354,14 @@ class ZarrDataWriter(root: String, hconf: Array[(String, String)]) extends DataW
       if (codec.compressed) Blosc.compress(data, codec.dtype.itemSize, codec.clevel) else data
     val out = fs.create(tmp, true)
     try out.write(payload) finally out.close()
-    if (!fs.rename(tmp, new Path(dir, x.toString))) fs.delete(tmp, false)
+    val dst = new Path(dir, x.toString)
+    // false is a lost race: a twin committer's dst stands, or a concurrent
+    // `ZarrIO.cleanupTmp` took our tmp and no chunk was written
+    if (!fs.rename(tmp, dst)) {
+      fs.delete(tmp, false)
+      if (!fs.exists(dst))
+        throw new java.io.IOException(s"zarr chunk commit lost: rename of $tmp to $dst failed and $dst does not exist")
+    }
   }
 
   override def commit(): WriterCommitMessage = new WriterCommitMessage {}

@@ -16,9 +16,10 @@ import graft.core.{ChunkGrid, Volume}
   * `.zarray`) on the driver through the Hadoop FileSystem API, so
   * `file://`, `hdfs://` and `s3a://` all work unchanged, and sweeps
   * crashed writers' tmp files. Chunk data moves only through the
-  * DataSource V2 pair [[ZarrDataSource]] (`df.write.format("zarr")`,
-  * `spark.read.format("zarr")`), whose writer takes its codec from the
-  * `.zarray` written here.
+  * DataSource V2 pair [[ZarrDataSource]]: its `ZarrDataWriter.put`
+  * (called per row by `df.write.format("zarr")` and from the conversion
+  * job's tasks) takes its codec from the `.zarray` written here, and
+  * `spark.read.format("zarr")` reads the chunks back.
   */
 object ZarrIO {
 
@@ -33,11 +34,7 @@ object ZarrIO {
   }
 
   /** Driver-side, idempotent: the store-root `.zgroup` shared by every
-    * stack. Concurrent per-stack conversions must NOT each create/truncate
-    * this path (benign locally only because the bytes are identical, and
-    * fragile on object stores) — [[graft.jobs.ZeissJob.convertAll]] writes
-    * it once before fanning out; [[writeMetadata]] only fills it in when
-    * absent. */
+    * stack. [[writeMetadata]] writes it when it is absent. */
   def writeStoreRoot(root: String): Unit = {
     val (f, rootPath) = fs(root)
     val out = f.create(new Path(rootPath, ".zgroup"), true)
@@ -93,8 +90,9 @@ object ZarrIO {
     * CONCURRENCY HAZARD: the sweep cannot distinguish an orphan from a
     * tmp a LIVE writer created moments ago — deleting one between its
     * write and rename fails that single write attempt (the attempt's
-    * rename finds no source; a task retry re-converges, so the store is
-    * never corrupted, but the job sees a spurious failure). Never run
+    * rename finds no source and `ZarrDataWriter.put` throws; a task retry
+    * re-converges, so the store is never corrupted, but the job sees a
+    * spurious failure). Never run
     * the sweep concurrently with a write job against the same root; when
     * the caller can't rule that out, pass `minAgeMs` (e.g. 10 minutes)
     * so only tmps older than any plausible in-flight write are swept.

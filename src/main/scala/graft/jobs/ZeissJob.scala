@@ -10,7 +10,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Dataset, SparkSession}
 
-import graft.core.{ChunkGrid, Volume, ZarrChunk}
+import graft.core.{Volume, ZarrChunk}
 import graft.io.zarr.{ZarrDataWriter, ZarrIO}
 import graft.operators.Pyramid
 import graft.sources.czi.CziSource
@@ -18,20 +18,22 @@ import graft.sources.czi.CziSource
 /** End-to-end CZI -> multiscale OME-Zarr job (reference orchestration O1/O3,
   * `zeiss_job.py:103-226` + `czi_to_zarr.py:457-658`).
   *
-  * One conversion path per stack, one pass over the input: the driver
-  * writes the OME-NGFF metadata, then each CZI slab task cuts its level-0
-  * chunks, commits each one right there and hands it on to the map side
-  * of [[graft.operators.Pyramid.build]] (one map pass, one exchange),
-  * whose levels 1.. are written by one `format("zarr")` call. That write
-  * is the single Spark action of a conversion. `ZarrDataWriter.put` is
-  * the only code that encodes and commits chunks, in the slab task and in
-  * the sink alike; its codec is the one the metadata declares.
+  * A whole job is one Spark action. Per stack, the driver writes the
+  * OME-NGFF metadata and builds a lazy plan: each CZI slab task cuts its
+  * level-0 chunks, commits each one right there and hands it on to the
+  * map side of [[graft.operators.Pyramid.build]] (one map pass, one
+  * exchange), whose reduce tasks commit levels 1.. the same way. The
+  * stacks' plans are unioned and drained by one `foreach`.
+  * `ZarrDataWriter.put` is the only code that encodes and commits chunks;
+  * its codec is the one the metadata declares.
   *
   * What disappears relative to the reference: static round-robin node
   * partitioning (P1/P2, `zeiss_job.py:29-60` + SLURM scripts) — the Spark
-  * scheduler owns task placement; the `aws s3 sync` subprocess (K6) —
-  * outputs write straight to any Hadoop-FS URI including `s3a://`; the
-  * GIL-driven thread tuning (X7) — tasks are the parallelism unit.
+  * scheduler owns task placement, of every stack at once; the superblock
+  * write batching (K2/X4) — adaptive execution sizes the pyramid's reduce
+  * tasks; the `aws s3 sync` subprocess (K6) — outputs write straight to
+  * any Hadoop-FS URI including `s3a://`; the GIL-driven thread tuning
+  * (X7) — tasks are the parallelism unit.
   */
 object ZeissJob {
 
@@ -44,13 +46,7 @@ object ZeissJob {
       chunkSize: Array[Int] = Array(128, 128, 128),
       scaleFactor: Array[Int] = Array(2, 2, 2),
       downsampleLevels: Int = 4,
-      compressorLevel: Int = 3,
-      targetSizeMb: Long = 19200, // reference models.py:77-81 job default
-      // engine knob (no reference analogue — the reference converts stacks
-      // strictly sequentially): how many stack conversions the driver
-      // submits concurrently. Overlapping jobs keeps executors busy
-      // through each stack's task tail.
-      maxConcurrentStacks: Int = 4) {
+      compressorLevel: Int = 3) {
     // settings come from outside the program (JSON, env vars): reject a
     // bad value here, naming its JSON field, not later as `/ by zero`
     require(chunkSize.length == 3,
@@ -64,8 +60,6 @@ object ZeissJob {
     require(downsampleLevels >= 1, s"downsample_levels must be >= 1, got $downsampleLevels")
     require(compressorLevel >= 0 && compressorLevel <= 9,
       s"compressor_level must be in 0..9 (the Blosc clevel range), got $compressorLevel")
-    require(targetSizeMb > 0, s"target_size_mb must be > 0, got $targetSizeMb")
-    require(maxConcurrentStacks >= 1, s"max_concurrent_stacks must be >= 1, got $maxConcurrentStacks")
   }
 
   final case class JobResponse(statusCode: Int, message: String)
@@ -95,6 +89,8 @@ object ZeissJob {
     * unquoted field names (shell/sbt-tokenizer survivors). */
   def parseSettingsInline(json: String): Settings = parseWith(MInline, json)
 
+  // fields this job does not read are ignored, so a reference settings
+  // file that carries the superblock size (K2/X4) still parses
   private def parseWith(mapper: ObjectMapper, json: String): Settings = {
     val n = mapper.readTree(json)
     def path(field: String): String = {
@@ -112,10 +108,7 @@ object ZeissJob {
       chunkSize = ints(n.get("chunk_size"), Array(128, 128, 128)),
       scaleFactor = ints(n.get("scale_factor"), Array(2, 2, 2)),
       downsampleLevels = if (n.has("downsample_levels")) n.get("downsample_levels").asInt else 4,
-      compressorLevel = if (n.has("compressor_level")) n.get("compressor_level").asInt else 3,
-      targetSizeMb = if (n.has("target_size_mb")) n.get("target_size_mb").asLong else 19200L,
-      maxConcurrentStacks =
-        if (n.has("max_concurrent_stacks")) n.get("max_concurrent_stacks").asInt else 4)
+      compressorLevel = if (n.has("compressor_level")) n.get("compressor_level").asInt else 3)
   }
 
   /** Voxel resolution from acquisition.json: first tile's scale transform,
@@ -156,15 +149,20 @@ object ZeissJob {
   }
 
   /** Convert one CZI stack to a multiscale OME-Zarr
-    * (`czi_stack_zarr_writer`, `czi_to_zarr.py:457-658`) in one Spark
-    * action. Level-0 chunks commit in the slab task that cut them (the
-    * reference's per-slab write, `czi_to_zarr.py:596-608`);
-    * `target_size_mb` batches only the pyramid's write. With
-    * `downsample_levels == 1` a no-op action drains the level-0 pass. */
+    * (`czi_stack_zarr_writer`, `czi_to_zarr.py:457-658`): [[convertAll]]
+    * of one stack. */
   def convertStack(spark: SparkSession, cziPath: String, outRoot: String,
                    settings: Settings, voxelZyx: Seq[Double],
-                   channelName: String = "ch0"): Volume = {
-    import spark.implicits._
+                   channelName: String = "ch0"): Volume =
+    convertAll(spark, Seq(cziPath), outRoot, settings, voxelZyx, channelName).head
+
+  /** Write one stack's metadata and plan its conversion. Level-0 chunks
+    * commit in the slab task that cut them (the reference's per-slab
+    * write, `czi_to_zarr.py:596-608`), levels 1.. in the pyramid's reduce
+    * tasks; nothing runs until the returned Dataset is drained. */
+  private def planStack(spark: SparkSession, cziPath: String, outRoot: String,
+                        settings: Settings, voxelZyx: Seq[Double],
+                        channelName: String): (Volume, Dataset[ZarrChunk]) = {
     val stackName = new Path(cziPath).getName.stripSuffix(".czi")
     // JPEG-XR containment: swap in the transcode sidecar (or fail with
     // the remediation) before any executor opens the file
@@ -191,39 +189,25 @@ object ZeissJob {
     // coalesce, no repartition), so the typed steps fuse without
     // serialising chunks. A retried or recomputed task re-commits
     // byte-identical files by tmp + rename.
-    val hconf = graft.core.HadoopConf.snapshot(spark.sparkContext.hadoopConfiguration)
-    val level0 = scan.mapPartitions { it =>
-      val w = new ZarrDataWriter(outRoot, hconf)
-      it.map { ck => w.put(ck.stack, ck.level, ck.t, ck.c, ck.z, ck.y, ck.x, ck.data); ck }
-    }
-
+    val level0 = committed(scan, outRoot)
     ZarrIO.writeMetadata(outRoot, vol, settings.downsampleLevels, voxelZyx,
       settings.scaleFactor.toSeq, chNames, Some(Seq(0.0, 0.0, 0.0)),
       clevel = settings.compressorLevel)
-    if (settings.downsampleLevels > 1) {
-      val (vols, pyramid) = Pyramid.build(spark, level0, vol,
-        settings.downsampleLevels, settings.scaleFactor)
-      writeZarr(pyramid, outRoot, vols.map(_.numChunks).sum, vol, settings.targetSizeMb)
-    } else level0.foreach((_: ZarrChunk) => ())
-    vol
+    val plan =
+      if (settings.downsampleLevels == 1) level0
+      else committed(Pyramid.build(spark, level0, vol,
+        settings.downsampleLevels, settings.scaleFactor)._2, outRoot)
+    (vol, plan)
   }
 
-  /** The pyramid's `format("zarr")` write, superblock-batched (reference
-    * K2/X4, `zarr_writer.py:188-213`, `target_size_mb`; level 0 is not
-    * batched, it commits in its slab task): coalesce so each task
-    * owns ~targetMb of the `nChunks` chunks the write carries — fewer,
-    * larger write tasks mean fewer filesystem round-trips on object
-    * stores — but never below cluster parallelism, since the reference's
-    * 19.2 GB default targets TB-scale stacks. */
-  private def writeZarr(ds: Dataset[ZarrChunk], outRoot: String, nChunks: Long,
-                        vol: Volume, targetMb: Long): Unit = {
-    val perTask = ChunkGrid.chunksPerTask(vol.chunk, targetMb * 1024 * 1024, vol.dtype.itemSize)
-    val floor = ds.sparkSession.sparkContext.defaultParallelism.toLong
-    val parts = math.max(1L, math.min(nChunks, math.max(ChunkGrid.ceilDiv(nChunks, perTask), floor)))
-      .min(Int.MaxValue).toInt
-    // coalesce never raises a partition count, so no count probe is needed
-    // (on the pyramid, `.rdd` would run its exchange a second time)
-    ds.coalesce(parts).toDF().write.format("zarr").option("path", outRoot).mode("append").save()
+  /** `ds` with each chunk committed by the task that produces it. */
+  private def committed(ds: Dataset[ZarrChunk], outRoot: String): Dataset[ZarrChunk] = {
+    import ds.sparkSession.implicits._
+    val hconf = graft.core.HadoopConf.snapshot(ds.sparkSession.sparkContext.hadoopConfiguration)
+    ds.mapPartitions { it =>
+      val w = new ZarrDataWriter(outRoot, hconf)
+      it.map { ck => w.put(ck.stack, ck.level, ck.t, ck.c, ck.z, ck.y, ck.x, ck.data); ck }
+    }
   }
 
   /** Copy the input's `derivatives/` folder to the output location —
@@ -243,7 +227,7 @@ object ZeissJob {
       false /* deleteSource */, true /* overwrite */, conf)
   }
 
-  /** Run the whole job: discover -> convert each stack -> respond
+  /** Run the whole job: discover -> convert every stack -> respond
     * (`run_job`, `zeiss_job.py:207-226`). */
   def run(spark: SparkSession, settings: Settings): JobResponse = {
     val t0 = System.nanoTime()
@@ -264,44 +248,20 @@ object ZeissJob {
     JobResponse(200, f"converted ${stacks.size} stacks in $secs%.1f s")
   }
 
-  /** Convert stacks with up to `maxConcurrentStacks` conversions in
-    * flight: a directory of many small stacks would otherwise leave most
-    * executors idle during each stack's task tail. Each conversion runs
-    * in its own scheduler pool (effective under FAIR scheduling, harmless
-    * under FIFO) so one huge stack cannot starve the others. Failures
-    * propagate after all in-flight conversions settle. */
+  /** Convert stacks in one Spark action: the driver writes every stack's
+    * metadata and plan, then one `foreach` drains their union, so the
+    * scheduler overlaps all stacks' tasks. The first task that fails after
+    * Spark's retries fails the whole job; a re-run converges, since every
+    * chunk commits by tmp + rename to a path fixed by its coordinates. */
   def convertAll(spark: SparkSession, stacks: Seq[String], out: String,
-                 settings: Settings, voxelZyx: Seq[Double]): Seq[Volume] = {
-    val par = math.max(1, math.min(settings.maxConcurrentStacks, stacks.size))
-    // shared store-root metadata lands exactly once, on the driver, BEFORE
-    // any concurrent conversion can race a create/truncate of the same path
-    ZarrIO.writeStoreRoot(out)
-    if (par == 1) stacks.map(czi => convertStack(spark, czi, out, settings, voxelZyx))
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(par)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      try {
-        val futs = stacks.map { czi =>
-          scala.concurrent.Future {
-            spark.sparkContext.setLocalProperty("spark.scheduler.pool",
-              new Path(czi).getName.stripSuffix(".czi"))
-            try convertStack(spark, czi, out, settings, voxelZyx)
-            finally spark.sparkContext.setLocalProperty("spark.scheduler.pool", null)
-          }
-        }
-        // settle EVERY conversion before surfacing the first failure: a
-        // fail-fast Await would return while sibling conversions keep
-        // writing into the output from live pool threads
-        val settled = scala.concurrent.Await.result(
-          scala.concurrent.Future.traverse(futs)(f =>
-            f.map(Right(_): Either[Throwable, Volume])
-              .recover { case t => Left(t) }),
-          scala.concurrent.duration.Duration.Inf)
-        settled.collectFirst { case Left(t) => t }.foreach(throw _)
-        settled.collect { case Right(v) => v }
-      } finally pool.shutdown()
-    }
+                 settings: Settings, voxelZyx: Seq[Double],
+                 channelName: String = "ch0"): Seq[Volume] = {
+    val plans = stacks.map(planStack(spark, _, out, settings, voxelZyx, channelName))
+    // a chunk is committed before it reaches the union; dropping it there
+    // spares serialising its bytes into the union's rows
+    plans.map(_._2.filter((_: ZarrChunk) => false)).reduceOption(_ union _)
+      .foreach(_.foreach((_: ZarrChunk) => ()))
+    plans.map(_._1)
   }
 
   /** Settings from environment variables — the reference CLI's THIRD
@@ -315,8 +275,7 @@ object ZeissJob {
   def settingsFromEnv(env: Map[String, String] = sys.env): Settings = {
     val stringFields = Set("input_source", "output_directory", "s3_location")
     val fields = Seq("input_source", "output_directory", "s3_location",
-      "chunk_size", "scale_factor", "downsample_levels", "compressor_level",
-      "target_size_mb", "max_concurrent_stacks")
+      "chunk_size", "scale_factor", "downsample_levels", "compressor_level")
     val root = M.createObjectNode()
     fields.foreach { f =>
       env.get("TRANSFORMATION_JOB_" + f.toUpperCase).foreach { v =>

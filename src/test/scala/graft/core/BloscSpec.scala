@@ -108,6 +108,30 @@ class BloscSpec extends AnyFunSuite {
     assert(Blosc.decompress(frame.array()).toSeq == raw.toSeq)
   }
 
+  test("a compressed frame's zstd stream carries its checksum; one flipped bit fails the decode") {
+    val raw = PixelCodec.toBytes(Array.tabulate(32 * 32 * 32)(i => (i * 7 + i / 1000) % 4096))
+    val frame = Blosc.compress(raw, typesize = 2, clevel = 3)
+    assert((frame(2) & 0x02) == 0, "must be a zstd frame, not stored raw")
+    // the stream starts at 24; byte 4 of a zstd frame is its descriptor,
+    // whose bit 2 is the content-checksum flag
+    assert((frame(24 + 4) & 0x04) != 0, "zstd content checksum flag")
+    val flipped = frame.clone()
+    flipped(frame.length / 2) = (flipped(frame.length / 2) ^ 0x10).toByte
+    intercept[RuntimeException](Blosc.decompress(flipped))
+  }
+
+  test("a zstd stream without a checksum still decodes") {
+    val raw = PixelCodec.toBytes(Array.tabulate(4096)(i => i / 16))
+    val z = com.github.luben.zstd.Zstd.compress(Blosc.shuffle(raw, 2), 3)
+    assert((z(4) & 0x04) == 0, "the hand-built stream must carry no checksum")
+    val cbytes = 16 + 4 + 4 + z.length
+    val frame = java.nio.ByteBuffer.allocate(cbytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      .put(2.toByte).put(1.toByte).put(((4 << 5) | 0x10 | 0x01).toByte).put(2.toByte)
+      .putInt(raw.length).putInt(raw.length).putInt(cbytes)
+      .putInt(20).putInt(z.length).put(z)
+    assert(Blosc.decompress(frame.array()).sameElements(raw))
+  }
+
   test("uint16 pixel codec roundtrip with unsigned values") {
     val px = Array(0, 1, 32767, 32768, 65535, 65534)
     assert(PixelCodec.toInts(PixelCodec.toBytes(px)).sameElements(px))

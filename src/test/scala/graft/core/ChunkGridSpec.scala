@@ -72,11 +72,4 @@ class ChunkGridSpec extends AnyFunSuite {
       targetBytes = 1L << 30, itemSize = 2)
     assert(out2(0) == 16L && out2(1) > 16L)
   }
-
-  test("chunksPerTask superblock arithmetic (reference X4)") {
-    // 128^3 uint16 = 4 MiB; 19,200 MB job default -> 4800 chunks per task
-    assert(ChunkGrid.chunksPerTask(Array(1, 1, 128, 128, 128),
-      19200L * 1024 * 1024, 2) == 4800)
-    assert(ChunkGrid.chunksPerTask(Array(1, 1, 128, 128, 128), 1L, 2) == 1)
-  }
 }

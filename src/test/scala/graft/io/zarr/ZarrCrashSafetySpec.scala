@@ -1,8 +1,12 @@
 package graft.io.zarr
 
+import java.io.IOException
+import java.net.URI
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicBoolean
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
 import org.apache.spark.SparkException
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,6 +19,14 @@ import graft.sources.SyntheticStack
   * the poison fire on exactly one attempt. */
 object ZarrCrashInjector {
   val armed = new AtomicBoolean(false)
+}
+
+/** A local-disk `lostfs://` filesystem whose `rename` loses its source,
+  * as when `ZarrIO.cleanupTmp` sweeps a live writer's tmp: the tmp is
+  * gone, no destination appears, and `rename` returns false. */
+class LostRenameFs extends RawLocalFileSystem {
+  override def getUri: URI = URI.create("lostfs:///")
+  override def rename(src: Path, dst: Path): Boolean = { delete(src, false); false }
 }
 
 /** K1's exactly-once claim under FAILURE, not just the happy path
@@ -132,5 +144,15 @@ class ZarrCrashSafetySpec extends AnyFunSuite {
     ZarrStore.write(l0, dir)
     assert(visible(dir) == visible(clean))
     assert(tmps(dir).isEmpty, "losing committer left its tmp behind")
+  }
+
+  test("a rename that loses its tmp fails the commit instead of dropping the chunk") {
+    val dir = store("zarr-lost")
+    val hconf = graft.core.HadoopConf.snapshot(new Configuration()) :+
+      ("fs.lostfs.impl" -> classOf[LostRenameFs].getName)
+    val w = new ZarrDataWriter(s"lostfs://$dir", hconf)
+    val e = intercept[IOException](w.put("ct", 0, 0, 0, 0, 0, 0, new Array[Byte](8 * 8 * 8 * 2)))
+    assert(e.getMessage.contains(s"$dir/ct/0/0/0/0/0/0 does not exist"), e.getMessage)
+    assert(visible(dir).isEmpty && tmps(dir).isEmpty)
   }
 }

@@ -428,4 +428,47 @@ class ZarrDataSourceSpec extends AnyFunSuite {
     // and the reader did go through this filesystem: 7 chunk files opened
     assert(chunkPaths(CountingFs.opened).toSet.size == 7, CountingFs.opened.asScala.mkString("\n"))
   }
+
+  test("a chunk whose length or header exceeds its clamped size fails before allocating for it") {
+    val dir = Files.createTempDirectory("zarr-dsv2-hdr").toString
+    val vol = Volume("hz", 0, Array(1L, 1L, 8L, 8L, 8L), Array(1, 1, 8, 8, 8))
+    ZarrIO.writeMetadata(dir, vol, nLevels = 1)
+    val chunk = java.nio.file.Paths.get(dir, "hz", "0", "0", "0", "0", "0", "0")
+    Files.createDirectories(chunk.getParent)
+    // a memcpy frame whose header claims nbytes = Int.MaxValue: sized by
+    // that header, the output array is an OutOfMemoryError, fatal to an
+    // executor. The reader runs here on the test thread, not in a task.
+    val huge = java.nio.ByteBuffer.allocate(32).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      .put(2.toByte).put(1.toByte).put(((4 << 5) | 0x02).toByte).put(2.toByte)
+      .putInt(Int.MaxValue).putInt(Int.MaxValue).putInt(32).array()
+    // 1024 voxel bytes: no Blosc frame of them is longer than 1040
+    for ((bytes, why) <- Seq(huge -> "header nbytes=2147483647, expected 1024",
+                             new Array[Byte](1041) -> "1041 bytes, at most 1040 expected")) {
+      Files.write(chunk, bytes)
+      val reader = new ZarrPartitionReader(dir, "hz", 0, vol.shape, vol.chunk, compressed = true,
+        itemSize = 2, base = Array.fill(5)(0L), ext = Array.fill(5)(1L), cols = Array("data"),
+        first = 0L, last = 0L, hconf = graft.core.HadoopConf.snapshot(new org.apache.hadoop.conf.Configuration()))
+      val e = intercept[IllegalStateException](reader.next())
+      assert(e.getMessage.startsWith(s"corrupt zarr chunk at $dir/hz/0/0/0/0/0/0: ") &&
+        e.getMessage.contains(why), e.getMessage)
+    }
+  }
+
+  test("a flipped payload byte fails the read through the zstd checksum") {
+    val dir = Files.createTempDirectory("zarr-dsv2-flip").toString
+    val vol = Volume("fl", 0, Array(1L, 1L, 16L, 16L, 16L), Array(1, 1, 16, 16, 16))
+    ZarrIO.writeMetadata(dir, vol, nLevels = 1)
+    ZarrStore.write(SyntheticStack.generate(spark, vol), dir)
+    val chunk = java.nio.file.Paths.get(dir, "fl", "0", "0", "0", "0", "0", "0")
+    val frame = Files.readAllBytes(chunk)
+    assert((frame(2) & 0x02) == 0, "the chunk must be a zstd frame, not stored raw")
+    frame(frame.length / 2) = (frame(frame.length / 2) ^ 0x01).toByte
+    Files.write(chunk, frame)
+    val e = intercept[org.apache.spark.SparkException] {
+      spark.read.format("zarr").option("path", dir).option("stack", "fl").load().collect()
+    }
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(c => String.valueOf(c.getMessage)).mkString("\n")
+    assert(msgs.contains(s"corrupt zarr chunk at $dir/fl/0/0/0/0/0/0"), msgs)
+  }
 }

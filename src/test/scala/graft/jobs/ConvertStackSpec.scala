@@ -16,7 +16,7 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.Spark
-import graft.core.{Blosc, ChunkGrid}
+import graft.core.{Blosc, ChunkGrid, Volume}
 import graft.io.zarr.ZarrIO
 import graft.operators.PyramidFusedSpec.assertWrittenLevels
 import graft.sources.SyntheticStack
@@ -49,8 +49,9 @@ object ConvertFs {
   * is encoded and committed once, by the slab task that cut it, whether
   * the pyramid is one fused round (aligned chunks), several rounds
   * (chunks not a multiple of f^(levels-1)) or absent (one level). Every
-  * level equals the dense oracle. A failure mid-scan or mid-pyramid leaves only
-  * complete chunk files visible, and a re-run into the same root
+  * level equals the dense oracle. A whole `ZeissJob.run` over several
+  * stacks is one Spark action. A failure mid-scan or mid-pyramid leaves
+  * only complete chunk files visible, and a re-run into the same root
   * converges to the tree of a clean conversion. */
 class ConvertStackSpec extends AnyFunSuite {
 
@@ -67,6 +68,24 @@ class ConvertStackSpec extends AnyFunSuite {
     SyntheticCzi.write(s"$root/$stack.czi",
       Array.tabulate(zyx._1, zyx._2, zyx._3)((z, y, x) => SyntheticStack.value(z, y, x)))
     s"$root/$stack.czi"
+  }
+
+  /** `<root>/in/SPIM/<stack>.czi` of 32^3 voxels for each of `stacks`;
+    * returns `root`. */
+  private def spim(stacks: Seq[String]): String = {
+    val root = Files.createTempDirectory("conv-spim").toString
+    Files.createDirectories(Paths.get(root, "in", "SPIM"))
+    stacks.foreach { st =>
+      SyntheticCzi.write(s"$root/in/SPIM/$st.czi",
+        Array.tabulate(32, 32, 32)((z, y, x) => SyntheticStack.value(z, y, x)))
+    }
+    root
+  }
+
+  private def runJob(root: String, out: String, nLevels: Int): Unit = {
+    val resp = ZeissJob.run(spark, ZeissJob.Settings(inputSource = s"$root/in",
+      outputDirectory = out, chunkSize = Array(16, 16, 16), downsampleLevels = nLevels))
+    assert(resp.statusCode == 200, resp.message)
   }
 
   private def convert(cziPath: String, out: String, chunk: Array[Int], nLevels: Int) = {
@@ -160,6 +179,44 @@ class ConvertStackSpec extends AnyFunSuite {
     assert(execs.map(_.stages).sum == 3, execs)
     assert(execs.map(_.nodes("ShuffleExchange")).sum == 2, execs)
     assert(execs.map(_.nodes("ReusedExchange")).sum == 1, execs)
+  }
+
+  for ((nLevels, jobs, exchanges) <- Seq((3, 4, 3), (1, 1, 0)))
+    test(s"ZeissJob.run over 3 stacks, $nLevels level(s), is one action: " +
+         s"$jobs job(s) and stage(s), $exchanges exchange(s), levels exact") {
+      // each stack's pyramid exchange is one adaptive map-stage job; one
+      // result stage drains the union of the three plans
+      val stacks = Seq("ra", "rb", "rc").map(_ + nLevels)
+      val root = spim(stacks)
+      val execs = Census.measure(spark)(runJob(root, s"$root/out", nLevels))
+      assert(execs.size == 1 && execs.head.funcName == "foreachPartition", execs)
+      assert(execs.head.jobs == jobs && execs.head.stages == jobs, execs)
+      assert(execs.head.nodes("ShuffleExchange") == exchanges, execs)
+      stacks.foreach { st =>
+        assertWrittenLevels(spark, s"$root/out", st,
+          Volume(st, 0, Array(1L, 1L, 32L, 32L, 32L), Array(1, 1, 16, 16, 16)), nLevels)
+      }
+    }
+
+  test("a multi-stack job failing in one stack's level 1 fails; a re-run converges for every stack") {
+    val stacks = Seq("fa", "fb", "fc")
+    val root = spim(stacks)
+    val clean = Files.createTempDirectory("conv-multi-clean").toString
+    runJob(root, s"convfs://$clean", 3)
+    val want = tree(clean)
+
+    val local = Files.createTempDirectory("conv-multi-fault").toString
+    val out = s"convfs://$local"
+    ConvertFs.failOn.set(s"$local/fb/1/0/0/0/0/.tmp-0-")
+    try intercept[SparkException](runJob(root, out, 3))
+    finally assert(ConvertFs.failOn.getAndSet(null) == null, "the injected failure never fired")
+    awaitIdle()
+    assert(!new java.io.File(s"$local/fb/1/0/0/0/0/0").exists(), "the failed chunk was committed")
+
+    runJob(root, out, 3)
+    ZarrIO.cleanupTmp(local, spark.sparkContext.hadoopConfiguration)
+    assert(tree(local) == want)
+    assert(tmps(local).isEmpty, "tmp files left after the re-run and sweep")
   }
 
   test("2048^3 chunks fail at planning, before any Spark job runs") {

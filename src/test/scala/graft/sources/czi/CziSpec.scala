@@ -29,7 +29,6 @@ class CziSpec extends AnyFunSuite {
       "TRANSFORMATION_JOB_S3_LOCATION" -> "mock://out/prefix",
       "TRANSFORMATION_JOB_CHUNK_SIZE" -> "[64, 64, 64]",
       "TRANSFORMATION_JOB_DOWNSAMPLE_LEVELS" -> "2",
-      "TRANSFORMATION_JOB_TARGET_SIZE_MB" -> "1024",
       "UNRELATED_VAR" -> "ignored")
     val s = ZeissJob.settingsFromEnv(env)
     assert(s.inputSource == "/data/in")
@@ -37,11 +36,9 @@ class CziSpec extends AnyFunSuite {
     assert(s.s3Location.contains("mock://out/prefix"))
     assert(s.chunkSize.toSeq == Seq(64, 64, 64))
     assert(s.downsampleLevels == 2)
-    assert(s.targetSizeMb == 1024L)
     // unset fields keep the JSON path's defaults
     assert(s.scaleFactor.toSeq == Seq(2, 2, 2))
     assert(s.compressorLevel == 3)
-    assert(s.maxConcurrentStacks == 4)
     // missing required fields fail loudly, naming the vars
     val e = intercept[IllegalArgumentException](
       ZeissJob.settingsFromEnv(Map("TRANSFORMATION_JOB_INPUT_SOURCE" -> "/x")))
@@ -64,8 +61,6 @@ class CziSpec extends AnyFunSuite {
       strict.scaleFactor.toSeq == single.scaleFactor.toSeq &&
       strict.downsampleLevels == single.downsampleLevels &&
       strict.compressorLevel == single.compressorLevel &&
-      strict.targetSizeMb == single.targetSizeMb &&
-      strict.maxConcurrentStacks == single.maxConcurrentStacks &&
       strict.s3Location == single.s3Location)
     assert(single.inputSource == "/a" && single.outputDirectory == "/b")
     assert(single.chunkSize.toSeq == Seq(32, 32, 32))
@@ -126,14 +121,17 @@ class CziSpec extends AnyFunSuite {
     assert(e.getMessage.contains("downsample_levels"), e.getMessage)
   }
 
-  test("settings: target_size_mb must be > 0") {
-    rejected(s"""{$base,"target_size_mb":0}""", "target_size_mb")
-    intercept[IllegalArgumentException](ZeissJob.Settings("/a", "/b", targetSizeMb = -1))
-  }
-
-  test("settings: max_concurrent_stacks must be >= 1") {
-    rejected(s"""{$base,"max_concurrent_stacks":0}""", "max_concurrent_stacks")
-    intercept[IllegalArgumentException](ZeissJob.Settings("/a", "/b", maxConcurrentStacks = 0))
+  test("settings: the reference's target_size_mb and max_concurrent_stacks still parse, with no effect") {
+    // FIXTURES §1.3 plus both fields: the job reads neither
+    val s = ZeissJob.parseSettings("""{"input_source":"/a","output_directory":"/b",
+      |"num_of_partitions":4,"partition_to_process":0,"s3_location":null,
+      |"target_size_mb":19200,"max_concurrent_stacks":0}""".stripMargin)
+    assert(s.inputSource == "/a" && s.outputDirectory == "/b" && s.s3Location.isEmpty)
+    assert(s.chunkSize.toSeq == Seq(128, 128, 128) && s.downsampleLevels == 4)
+    val e = ZeissJob.settingsFromEnv(Map(
+      "TRANSFORMATION_JOB_INPUT_SOURCE" -> "/a", "TRANSFORMATION_JOB_OUTPUT_DIRECTORY" -> "/b",
+      "TRANSFORMATION_JOB_TARGET_SIZE_MB" -> "0"))
+    assert(e.inputSource == "/a" && e.outputDirectory == "/b")
   }
 
   test("settings: compressor_level must be >= 0") {
@@ -704,19 +702,19 @@ class CziSpec extends AnyFunSuite {
     val stacks = ZeissJob.discoverStacks(s"$root/in")
     assert(stacks.size == 4)
     val voxel = Seq(1.0, 1.0, 1.0)
-    def settings(out: String, par: Int) = ZeissJob.Settings(
+    def settings(out: String) = ZeissJob.Settings(
       inputSource = s"$root/in", outputDirectory = out,
-      chunkSize = Array(8, 16, 16), downsampleLevels = 2,
-      maxConcurrentStacks = par)
+      chunkSize = Array(8, 16, 16), downsampleLevels = 2)
 
     // parallel FIRST: JIT/code-cache warm-up then favors the sequential
-    // run, so a parallel win is not a warm-up artifact
+    // run, so a parallel win is not a warm-up artifact. Parallel is one
+    // action over every stack, sequential one action per stack.
     val t2 = System.nanoTime()
-    ZeissJob.convertAll(spark, stacks, s"$root/par", settings(s"$root/par", 4), voxel)
+    ZeissJob.convertAll(spark, stacks, s"$root/par", settings(s"$root/par"), voxel)
     val parS = (System.nanoTime() - t2) / 1e9
 
     val t1 = System.nanoTime()
-    ZeissJob.convertAll(spark, stacks, s"$root/seq", settings(s"$root/seq", 1), voxel)
+    stacks.foreach(st => ZeissJob.convertStack(spark, st, s"$root/seq", settings(s"$root/seq"), voxel))
     val seqS = (System.nanoTime() - t1) / 1e9
 
     info(f"parallel $parS%.2f s, sequential $seqS%.2f s")
