@@ -34,7 +34,8 @@ import com.github.luben.zstd.{Zstd, ZstdCompressCtx}
   * streams carry their content checksum (4 bytes), which libzstd and so
   * c-blosc, numcodecs and [[decompress]] verify: a flipped payload bit
   * fails the decode instead of yielding wrong voxels. Streams without it
-  * decode as before.
+  * decode as before. A memcpy frame (a chunk that does not compress) has
+  * no checksum, so a flip there still decodes silently.
   */
 object Blosc {
   private val Version: Byte = 2

@@ -33,14 +33,6 @@ object ZarrIO {
     (f, p)
   }
 
-  /** Driver-side, idempotent: the store-root `.zgroup` shared by every
-    * stack. [[writeMetadata]] writes it when it is absent. */
-  def writeStoreRoot(root: String): Unit = {
-    val (f, rootPath) = fs(root)
-    val out = f.create(new Path(rootPath, ".zgroup"), true)
-    try out.write(ZarrMeta.zgroup.getBytes("UTF-8")) finally out.close()
-  }
-
   /** Driver-side: group + array metadata for one stack/level. */
   def writeMetadata(root: String, vol: Volume, nLevels: Int,
                     voxelZyx: Seq[Double] = Seq(1.0, 1.0, 1.0),
@@ -53,7 +45,9 @@ object ZarrIO {
       val out = f.create(p, true)
       try out.write(content.getBytes("UTF-8")) finally out.close()
     }
-    if (!f.exists(new Path(rootPath, ".zgroup"))) writeStoreRoot(root)
+    // the store-root `.zgroup` is shared by every stack: written once
+    val rootGroup = new Path(rootPath, ".zgroup")
+    if (!f.exists(rootGroup)) put(rootGroup, ZarrMeta.zgroup)
     val stackPath = new Path(rootPath, vol.stack)
     put(new Path(stackPath, ".zgroup"), ZarrMeta.zgroup)
     val attrs = ZarrMeta.stackAttrs(vol.stack, vol.shape.toSeq, nLevels, voxelZyx,

@@ -152,17 +152,15 @@ object ZeissJob {
     * (`czi_stack_zarr_writer`, `czi_to_zarr.py:457-658`): [[convertAll]]
     * of one stack. */
   def convertStack(spark: SparkSession, cziPath: String, outRoot: String,
-                   settings: Settings, voxelZyx: Seq[Double],
-                   channelName: String = "ch0"): Volume =
-    convertAll(spark, Seq(cziPath), outRoot, settings, voxelZyx, channelName).head
+                   settings: Settings, voxelZyx: Seq[Double]): Volume =
+    convertAll(spark, Seq(cziPath), outRoot, settings, voxelZyx).head
 
   /** Write one stack's metadata and plan its conversion. Level-0 chunks
     * commit in the slab task that cut them (the reference's per-slab
     * write, `czi_to_zarr.py:596-608`), levels 1.. in the pyramid's reduce
     * tasks; nothing runs until the returned Dataset is drained. */
   private def planStack(spark: SparkSession, cziPath: String, outRoot: String,
-                        settings: Settings, voxelZyx: Seq[Double],
-                        channelName: String): (Volume, Dataset[ZarrChunk]) = {
+                        settings: Settings, voxelZyx: Seq[Double]): (Volume, Dataset[ZarrChunk]) = {
     val stackName = new Path(cziPath).getName.stripSuffix(".czi")
     // JPEG-XR containment: swap in the transcode sidecar (or fail with
     // the remediation) before any executor opens the file
@@ -171,7 +169,7 @@ object ZeissJob {
     // the reference assumes one channel per file (utils.py:355); we accept
     // c>1 and emit one omero channel entry per channel
     val chNames =
-      if (vol.shape(1) == 1L) Seq(channelName)
+      if (vol.shape(1) == 1L) Seq("ch0")
       else (0 until vol.shape(1).toInt).map(i => s"ch$i")
     // slab scan materializes chunkDepth x Y x X per task — fine for typical
     // planes, not for stitched volumes; switch to the shuffle-assembled
@@ -249,14 +247,18 @@ object ZeissJob {
   }
 
   /** Convert stacks in one Spark action: the driver writes every stack's
-    * metadata and plan, then one `foreach` drains their union, so the
-    * scheduler overlaps all stacks' tasks. The first task that fails after
-    * Spark's retries fails the whole job; a re-run converges, since every
-    * chunk commits by tmp + rename to a path fixed by its coordinates. */
+    * metadata and plan, one stack after another, before any task runs;
+    * then one `foreach` drains their union. Every stack's level-0 map
+    * stage runs at once, but the union has one result stage, which starts
+    * only when all of them are done: no level-1 chunk commits before the
+    * last stack's level-0 scan ends, and every stack's pyramid shuffle
+    * output is on executor disk at the same time. The first task that
+    * fails after Spark's retries fails the whole job; a re-run converges,
+    * since every chunk commits by tmp + rename to a path fixed by its
+    * coordinates. */
   def convertAll(spark: SparkSession, stacks: Seq[String], out: String,
-                 settings: Settings, voxelZyx: Seq[Double],
-                 channelName: String = "ch0"): Seq[Volume] = {
-    val plans = stacks.map(planStack(spark, _, out, settings, voxelZyx, channelName))
+                 settings: Settings, voxelZyx: Seq[Double]): Seq[Volume] = {
+    val plans = stacks.map(planStack(spark, _, out, settings, voxelZyx))
     // a chunk is committed before it reaches the union; dropping it there
     // spares serialising its bytes into the union's rows
     plans.map(_._2.filter((_: ZarrChunk) => false)).reduceOption(_ union _)

@@ -132,6 +132,19 @@ class BloscSpec extends AnyFunSuite {
     assert(Blosc.decompress(frame.array()).sameElements(raw))
   }
 
+  // records an open gap: a memcpy frame stores the chunk raw, with no
+  // checksum, so a flip in an incompressible chunk still decodes silently
+  test("a memcpy frame carries no checksum: a flipped payload byte decodes to wrong bytes") {
+    val rnd = new scala.util.Random(7)
+    val raw = Array.fill(4096)(rnd.nextInt(256).toByte)
+    val frame = Blosc.compress(raw, typesize = 2, clevel = 3)
+    assert((frame(2) & 0x02) != 0, "noise must fall back to a memcpy frame")
+    val flipped = frame.clone()
+    flipped(16 + 100) = (flipped(16 + 100) ^ 0x10).toByte
+    val decoded = Blosc.decompress(flipped)
+    assert(!decoded.sameElements(raw) && decoded.length == raw.length)
+  }
+
   test("uint16 pixel codec roundtrip with unsigned values") {
     val px = Array(0, 1, 32767, 32768, 65535, 65534)
     assert(PixelCodec.toInts(PixelCodec.toBytes(px)).sameElements(px))
