@@ -60,12 +60,18 @@ object Blosc {
 
   /** Byte-shuffle (transpose element bytes). A trailing remainder of
     * length `n % typesize` is copied through unshuffled, as in c-blosc. */
-  def shuffle(src: Array[Byte], typesize: Int): Array[Byte] = {
+  def shuffle(src: Array[Byte], typesize: Int): Array[Byte] =
+    shuffleInto(src, typesize, new Array[Byte](src.length))
+
+  /** [[shuffle]] into the first `src.length` bytes of `out`. */
+  private def shuffleInto(src: Array[Byte], typesize: Int, out: Array[Byte]): Array[Byte] = {
     val n = src.length
-    if (typesize <= 1 || n < typesize) return src.clone()
+    if (typesize <= 1 || n < typesize) {
+      System.arraycopy(src, 0, out, 0, n)
+      return out
+    }
     val nElems = n / typesize
     val tail = n - nElems * typesize
-    val out = new Array[Byte](n)
     var j = 0
     while (j < typesize) {
       var i = 0
@@ -120,11 +126,17 @@ object Blosc {
       writeLE(out, 4, 0); writeLE(out, 8, 0); writeLE(out, 12, 16)
       return out
     }
-    val shuffled = if (doShuffle) shuffle(raw, typesize) else raw
+    val sc = scratch.get
+    val shuffled = if (doShuffle) shuffleInto(raw, typesize, sc.take(0, nbytes)) else raw
+    // header(16) + bstarts(4) + blockLen(4) + stream: the stream is encoded
+    // in place after the header, and the frame is that prefix
+    val bound = 24L + Zstd.compressBound(nbytes)
+    require(bound <= Int.MaxValue - 8, s"a $nbytes-byte chunk may not fit one blosc frame")
+    val dst = sc.take(1, bound.toInt)
     val ctx = new ZstdCompressCtx()
-    val z = try ctx.setLevel(clevel).setChecksum(true).compress(shuffled) finally ctx.close()
-    val compressedLen = z.length
-    // header(16) + bstarts(4) + blockLen(4) + stream
+    val compressedLen =
+      try ctx.setLevel(clevel).setChecksum(true).compressByteArray(dst, 24, dst.length - 24, shuffled, 0, nbytes)
+      finally ctx.close()
     if (16 + 4 + 4 + compressedLen >= 16 + nbytes) {
       // compression not worth it: memcpy frame (raw, unshuffled payload)
       val out = new Array[Byte](16 + nbytes)
@@ -136,17 +148,34 @@ object Blosc {
       out
     } else {
       val total = 16 + 4 + 4 + compressedLen
-      val out = new Array[Byte](total)
-      out(0) = Version; out(1) = VersionLz
-      out(2) = ((ZstdFormatId << 5) | FlagNoSplit | (if (doShuffle) FlagShuffle else 0)).toByte
-      out(3) = typesize.toByte
-      writeLE(out, 4, nbytes); writeLE(out, 8, nbytes); writeLE(out, 12, total)
-      writeLE(out, 16, 20)            // bstarts[0]: block starts right after
-      writeLE(out, 20, compressedLen) // per-block compressed length
-      System.arraycopy(z, 0, out, 24, compressedLen)
-      out
+      dst(0) = Version; dst(1) = VersionLz
+      dst(2) = ((ZstdFormatId << 5) | FlagNoSplit | (if (doShuffle) FlagShuffle else 0)).toByte
+      dst(3) = typesize.toByte
+      writeLE(dst, 4, nbytes); writeLE(dst, 8, nbytes); writeLE(dst, 12, total)
+      writeLE(dst, 16, 20)            // bstarts[0]: block starts right after
+      writeLE(dst, 20, compressedLen) // per-block compressed length
+      java.util.Arrays.copyOf(dst, total)
     }
   }
+
+  // The shuffled input and the encode buffer are chunk-sized: 4 MiB for a
+  // 128^3 u16 chunk, past half a G1 region, so fresh ones are two humongous
+  // allocations per chunk, straight into the old generation. Each thread
+  // keeps its pair (each up to ScratchMax), so a call allocates only the
+  // frame it returns.
+  private val ScratchMax = 64 << 20
+  private final class Scratch {
+    private val bufs = Array(Array.emptyByteArray, Array.emptyByteArray)
+    /** Buffer `i`, holding at least `n` bytes; one over ScratchMax is not kept. */
+    def take(i: Int, n: Int): Array[Byte] =
+      if (bufs(i).length >= n) bufs(i)
+      else {
+        val b = new Array[Byte](n)
+        if (n <= ScratchMax) bufs(i) = b
+        b
+      }
+  }
+  private val scratch = ThreadLocal.withInitial[Scratch](() => new Scratch)
 
   private val FlagBitshuffle = 0x04
 

@@ -34,18 +34,25 @@ import graft.core.{PixelCodec, Volume, ZarrChunk}
   */
 object Pyramid {
 
-  /** Downsample one chunk's pixels by `factorZyx` with windowed mean.
-    * Returns (pixels, shape) of the piece; pure function (unit-tested
-    * against analytic means, FIXTURES.md §1.5). */
-  def downsampleChunk(pixels: Array[Int], shape: Array[Int], factorZyx: Array[Int]): (Array[Int], Array[Int]) = {
+  /** Downsample one chunk of unsigned LE pixels (`itemSize` 1 or 2
+    * bytes) by `factorZyx` with windowed mean, straight from and to its
+    * bytes. Returns (bytes, shape) of the piece; pure function
+    * (unit-tested against analytic means, FIXTURES.md §1.5). It works
+    * on the bytes because an Int copy of a 128^3 u16 chunk is 8 MiB: a
+    * humongous G1 allocation per chunk, whose churn can keep G1 marking
+    * concurrently for the rest of a conversion. */
+  def downsampleUnsigned(data: Array[Byte], shape: Array[Int], factorZyx: Array[Int],
+                         itemSize: Int): (Array[Byte], Array[Int]) = {
     require(shape(0) == 1 && shape(1) == 1,
       "t/c must be singleton (reference assumes 1 channel per stack, utils.py:355)")
+    require(itemSize == 1 || itemSize == 2, s"unsigned pixels are 1 or 2 bytes, got $itemSize")
     val (fz, fy, fx) = (factorZyx(0), factorZyx(1), factorZyx(2))
     val (sz, sy, sx) = (shape(2), shape(3), shape(4))
     val oz = ((sz + fz - 1) / fz)
     val oy = ((sy + fy - 1) / fy)
     val ox = ((sx + fx - 1) / fx)
-    val out = new Array[Int](shape(0) * shape(1) * oz * oy * ox)
+    val out = new Array[Byte](oz * oy * ox * itemSize)
+    var o = 0
     var zo = 0
     while (zo < oz) {
       val z1 = zo * fz
@@ -59,24 +66,30 @@ object Pyramid {
           val x1 = xo * fx
           val x2 = math.min(x1 + fx, sx)
           var sum = 0L
-          var n = 0
           var z = z1
           while (z < z2) {
-            val zBase = z * sy * sx
             var y = y1
             while (y < y2) {
-              val yBase = zBase + y * sx
-              var x = x1
-              while (x < x2) {
-                sum += pixels(yBase + x)
-                n += 1
-                x += 1
+              // one window row: bytes [x1, x2) of row (z, y)
+              val row = (z * sy + y) * sx
+              var i = (row + x1) * itemSize
+              val end = (row + x2) * itemSize
+              if (itemSize == 2) while (i < end) {
+                sum += (data(i) & 0xFF) | ((data(i + 1) & 0xFF) << 8)
+                i += 2
+              }
+              else while (i < end) {
+                sum += data(i) & 0xFF
+                i += 1
               }
               y += 1
             }
             z += 1
           }
-          out(zo * oy * ox + yo * ox + xo) = (sum / n).toInt
+          val v = (sum / ((z2 - z1) * (y2 - y1) * (x2 - x1))).toInt
+          out(o) = v.toByte
+          if (itemSize == 2) out(o + 1) = (v >>> 8).toByte
+          o += itemSize
           xo += 1
         }
         yo += 1
@@ -136,9 +149,7 @@ object Pyramid {
       case F32 =>
         val (px, ps) = downsampleChunkF32(PixelCodec.f32ToFloats(data), shape, factorZyx)
         (PixelCodec.f32ToBytes(px), ps)
-      case d =>
-        val (px, ps) = downsampleChunk(PixelCodec.toInts(data, d), shape, factorZyx)
-        (PixelCodec.fromInts(px, d), ps)
+      case d => downsampleUnsigned(data, shape, factorZyx, d.itemSize)
     }
   }
 

@@ -15,9 +15,15 @@ class PyramidKernelSpec extends AnyFunSuite {
     (px, Array(1, 1, sz, sy, sx))
   }
 
+  /** The u16 kernel on `px`, decoded back to Ints. */
+  private def down(px: Array[Int], shape: Array[Int], f: Array[Int]): (Array[Int], Array[Int]) = {
+    val (out, os) = Pyramid.downsampleUnsigned(PixelCodec.toBytes(px), shape, f, 2)
+    (PixelCodec.toInts(out), os)
+  }
+
   test("constant field stays constant") {
     val (px, shape) = mk(4, 4, 4)((_, _, _) => 777)
-    val (out, os) = Pyramid.downsampleChunk(px, shape, Array(2, 2, 2))
+    val (out, os) = down(px, shape, Array(2, 2, 2))
     assert(os.toSeq == Seq(1, 1, 2, 2, 2))
     assert(out.forall(_ == 777))
   }
@@ -25,7 +31,7 @@ class PyramidKernelSpec extends AnyFunSuite {
   test("2x2x2 mean of a linear ramp") {
     // v(z,y,x) = 8z + 4y + 2x ; window mean = 8zb+4yb+2xb + (8+4+2)/2 = ... exact
     val (px, shape) = mk(4, 4, 4)((z, y, x) => 8 * z + 4 * y + 2 * x)
-    val (out, os) = Pyramid.downsampleChunk(px, shape, Array(2, 2, 2))
+    val (out, os) = down(px, shape, Array(2, 2, 2))
     for (z <- 0 until 2; y <- 0 until 2; x <- 0 until 2) {
       val got = out(z * 4 + y * 2 + x)
       // mean is separable over the linear ramp: 16z+4 + 8y+2 + 4x+1
@@ -36,7 +42,7 @@ class PyramidKernelSpec extends AnyFunSuite {
 
   test("odd shape: ceil windows with actual population divisor (5x5x5)") {
     val (px, shape) = mk(5, 5, 5)((z, y, x) => z * 25 + y * 5 + x)
-    val (out, os) = Pyramid.downsampleChunk(px, shape, Array(2, 2, 2))
+    val (out, os) = down(px, shape, Array(2, 2, 2))
     assert(os.toSeq == Seq(1, 1, 3, 3, 3))
     // corner window (2,2,2) covers only voxel (4,4,4) -> value 124
     assert(out(2 * 9 + 2 * 3 + 2) == 124)
@@ -48,13 +54,13 @@ class PyramidKernelSpec extends AnyFunSuite {
 
   test("dtype preservation truncates like numpy astype(uint16) for pow-2 windows") {
     val (px, shape) = mk(2, 2, 2)((z, y, x) => if (z + y + x == 0) 0 else 1)
-    val (out, _) = Pyramid.downsampleChunk(px, shape, Array(2, 2, 2))
+    val (out, _) = down(px, shape, Array(2, 2, 2))
     assert(out(0) == 0, "mean 7/8 = 0.875 truncates to 0")
   }
 
   test("uint16 values above Short.MaxValue survive (sign-safety)") {
     val (px, shape) = mk(2, 2, 2)((_, _, _) => 65535)
-    val (out, _) = Pyramid.downsampleChunk(px, shape, Array(2, 2, 2))
+    val (out, _) = down(px, shape, Array(2, 2, 2))
     assert(out(0) == 65535)
     // and through the byte codec
     val bytes = PixelCodec.toBytes(out)
@@ -85,7 +91,7 @@ class PyramidKernelSpec extends AnyFunSuite {
 
   test("asymmetric factor (1,2,2) halves only y/x") {
     val (px, shape) = mk(2, 4, 4)((z, y, x) => z * 100 + y * 4 + x)
-    val (out, os) = Pyramid.downsampleChunk(px, shape, Array(1, 2, 2))
+    val (out, os) = down(px, shape, Array(1, 2, 2))
     assert(os.toSeq == Seq(1, 1, 2, 2, 2))
     // window (z=1, yb=0, xb=0): voxels y,x in {0,1}: 100+0,100+1,100+4,100+5 -> mean 102
     assert(out(1 * 4 + 0) == 102)
