@@ -135,28 +135,18 @@ object Bench {
     // a filtered dev run leaves the committed headline untouched, so it
     // must not claim it as this run's artifact
     val headlineName = if (filtered) detailName else "bench_headline.json"
-    // OPT-IN inline per-query map (VERDICT r19 #2): the driver's PERF
-    // extractor reads only the stdout contract line, so per-query
-    // round-over-round comparison is blind unless the map rides inline —
-    // but the capture tail buffer is 2000 chars and a 195-entry map is
-    // ~4.5 KB, which is exactly the r06-r08 "parsed": null overflow.
-    // SPARK_GRAFT_BENCH_INLINE_QUERIES=1 inlines the medians map for
-    // harnesses with a bigger buffer; default stays compact so the line
-    // always fits. Both shapes carry the same run's numbers as
-    // bench_headline.json.
-    val inlineQ =
-      if (sys.env.get("SPARK_GRAFT_BENCH_INLINE_QUERIES").contains("1"))
-        f""","queries":$medians""" else ""
-    val contract = f"""{"metric":"total","value":$total%.3f,"unit":"sec","stat":"median-of-best-$runs",$prov,"cpus":$cpus,"n_queries":${results.size},"n_spread_violations":${spreadViolations.size},"spread_violations":$spreadObj$inlineQ,"queries_artifact":"$headlineName","detail_artifact":"$detailName","sf":"$sfDir"}"""
+    val contract = f"""{"metric":"total","value":$total%.3f,"unit":"sec","stat":"median-of-best-$runs",$prov,"cpus":$cpus,"n_queries":${results.size},"n_spread_violations":${spreadViolations.size},"spread_violations":$spreadObj,"queries_artifact":"$headlineName","detail_artifact":"$detailName","sf":"$sfDir"}"""
     // PRIMARY channel: a sentinel file the capture layer can read whole,
     // immune to tail-buffer truncation and log interleaving (four rounds
-    // of "parsed": null came from the stdout channel alone). Filtered dev
-    // runs side-write so they can't clobber the committed full-surface
-    // contract.
+    // of "parsed": null came from the stdout channel alone). Being read
+    // whole, it also carries the per-query medians map that would overflow
+    // the stdout tail. Filtered dev runs side-write so they can't clobber
+    // the committed full-surface contract.
     val contractName =
       if (filtered) "bench_contract_filtered.json" else "bench_contract.json"
+    val sentinel = contract.stripSuffix("}") + s""","queries":$medians}"""
     try java.nio.file.Files.write(java.nio.file.Paths.get(contractName),
-      contract.getBytes("UTF-8"))
+      sentinel.getBytes("UTF-8"))
     catch { case e: Throwable =>
       // the stdout line below is the only remaining channel if this write
       // fails — say so loudly instead of failing both channels silently

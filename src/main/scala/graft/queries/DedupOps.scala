@@ -151,8 +151,9 @@ object DedupOps {
     // prefix branch (no join on doc_id) gets none — so the two subtree
     // classes canonicalized apart and the r19 FINAL plan ran the corpus
     // scan + shingle exchange AND the dfq-attach SMJ + partial
-    // collect_set TWICE (ShuffleQueryStages 0 vs 3 and 10 vs 11, dumped
-    // in plans/r20/d19_prefix_join_final_before.txt). Filtering at the
+    // collect_set TWICE (ShuffleQueryStages 0 vs 3 and 10 vs 11).
+    // PlanShapeSpec's ledger row "r20 d19" pins the fixed shape: one
+    // documents scan, the packed build reused. Filtering at the
     // source puts the identical filter in every branch; exchange reuse
     // then serves all three from one scan + one exchange + one packed
     // build (guide §2.4 — remove shuffles outright). Result-identical:

@@ -5,6 +5,8 @@ import scala.collection.mutable
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning,
+  RoundRobinPartitioning, SinglePartition}
 import org.apache.spark.sql.execution.{FileSourceScanLike, QueryExecution, ReusedSubqueryExec,
   SQLExecution, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -24,9 +26,13 @@ import graft.{Spark, SparkEntry}
   * `localCheckpoint` is its own execution, so each checkpointed round of an
   * iterative query is reported on its own. Jobs outside any SQL execution
   * (plain RDD actions, parquet listing) pool in one record with id -1.
-  * `main` runs gate queries through a `noop` write (never `count()`, which
-  * prunes columns): one warm-up pass, then `reps` measured passes, one JSON
-  * line per execution.
+  * Besides counting node kinds, each record names every shuffle exchange
+  * (origin, partitioning and keys) and every scan (the relation it reads),
+  * so a plan claim such as "one doc_id exchange over the only corpus scan"
+  * is a test over two lists, not a reading of a plan dump. `main` runs gate
+  * queries through a `noop` write (never `count()`, which prunes columns):
+  * one warm-up pass, then `reps` measured passes, one JSON line per
+  * execution.
   *
   * usage: runMain graft.tools.Census <sfDir> <q1,q2,...|ALL> [reps]
   */
@@ -42,19 +48,23 @@ object Census {
 
   /** One SQL execution. `wallMs` is the execution's own duration (0 when
     * it failed); `peakExecutionMemoryBytes` is the largest single task's
-    * peak; `nodes` counts each node kind over [[nodes]] of `plan`. */
+    * peak; `nodes` counts each node kind over [[nodes]] of `plan`;
+    * `exchanges` and `scans` describe its shuffle exchanges and scans in
+    * the same walk ([[exchange]], [[scan]]). */
   final case class Execution(
       id: Long, funcName: String, wallMs: Double, jobs: Int, stages: Int, tasks: Int,
       executorCpuMs: Double, gcMs: Long, shuffleReadBytes: Long, shuffleWriteBytes: Long,
       spillBytes: Long, peakExecutionMemoryBytes: Long,
-      nodes: Map[String, Int], plan: Option[SparkPlan]) {
+      nodes: Map[String, Int], exchanges: Seq[String], scans: Seq[String],
+      plan: Option[SparkPlan]) {
 
     def toJson(extra: (String, Any)*): String = Json.writeValueAsString(obj(extra ++ Seq(
       "execution" -> id, "funcName" -> funcName, "wallMs" -> ms(wallMs), "jobs" -> jobs,
       "stages" -> stages, "tasks" -> tasks, "executorCpuMs" -> ms(executorCpuMs), "gcMs" -> gcMs,
       "shuffleReadBytes" -> shuffleReadBytes, "shuffleWriteBytes" -> shuffleWriteBytes,
       "spillBytes" -> spillBytes, "peakExecutionMemoryBytes" -> peakExecutionMemoryBytes,
-      "nodes" -> obj(Kinds.map { case (k, _) => k -> nodes(k) }))))
+      "nodes" -> obj(Kinds.map { case (k, _) => k -> nodes(k) }),
+      "exchanges" -> java.util.List.of(exchanges: _*), "scans" -> java.util.List.of(scans: _*))))
   }
 
   private val Json = new ObjectMapper()
@@ -80,6 +90,29 @@ object Census {
       case p => p.children ++ p.subqueries
     }
     plan +: inner.flatMap(nodes)
+  }
+
+  /** A shuffle exchange as `"<shuffleOrigin> <kind>(<keys>)"`, keys
+    * without attribute ids, e.g. `REPARTITION_BY_COL hash(doc_id)` or
+    * `ENSURE_REQUIREMENTS range(score)`. */
+  def exchange(e: ShuffleExchangeLike): String = {
+    val (kind, keys) = e.outputPartitioning match {
+      case h: HashPartitioning => ("hash", h.expressions)
+      case r: RangePartitioning => ("range", r.ordering.map(_.child))
+      case _: RoundRobinPartitioning => ("roundrobin", Nil)
+      case SinglePartition => ("single", Nil)
+      case p => (p.getClass.getSimpleName, Nil)
+    }
+    s"${e.shuffleOrigin} $kind(${keys.map(_.toString.replaceAll("#\\d+L?", "")).mkString(", ")})"
+  }
+
+  /** The relation a scan reads: the root directory name(s) of a file
+    * scan (`documents.parquet`), the table name of a V2 scan
+    * (`zarr:<root>`); `None` for any other node. */
+  def scan(p: SparkPlan): Option[String] = p match {
+    case f: FileSourceScanLike => Some(f.relation.location.rootPaths.map(_.getName).distinct.mkString(","))
+    case b: BatchScanExec => Some(b.table.name())
+    case _ => None
   }
 
   /** Runs `body` and returns one record per SQL execution it ran. The
@@ -171,7 +204,8 @@ object Census {
         val all = a.plan.toSeq.flatMap(nodes)
         Execution(id, a.funcName, a.wallMs, a.jobs, a.stages, a.tasks, a.cpuNs / 1e6, a.gcMs,
           a.shufR, a.shufW, a.spill, a.peakMem,
-          Kinds.map { case (k, c) => k -> all.count(c.isInstance) }.toMap, a.plan)
+          Kinds.map { case (k, c) => k -> all.count(c.isInstance) }.toMap,
+          all.collect { case e: ShuffleExchangeLike => exchange(e) }, all.flatMap(scan), a.plan)
       }
     }
   }

@@ -45,31 +45,4 @@ class ChunkGridSpec extends AnyFunSuite {
     assert(ChunkGrid.downsampledShape(Array(1L, 1L, 256L, 256L, 256L), Array(1, 1, 2, 2, 2)).toSeq ==
       Seq(1L, 1L, 128L, 128L, 128L))
   }
-
-  test("jumps mirror generate_jumps (utils.py:398-415)") {
-    assert(ChunkGrid.jumps(300, 128) == Seq(0L, 128L, 256L))
-    assert(ChunkGrid.jumps(128, 128) == Seq(0L))
-  }
-
-  test("expandChunksIso grows toward target like zarr_writer.expand_chunks") {
-    // 128^3 uint16 chunk = 4 MiB; target 32 MiB -> k=2 -> 256^3
-    val out = ChunkGrid.expandChunksIso(Array(128, 128, 128), Array(1024L, 1024L, 1024L),
-      targetBytes = 32L * 1024 * 1024, itemSize = 2)
-    assert(out.toSeq == Seq(256L, 256L, 256L))
-    // clamped by array shape
-    val out2 = ChunkGrid.expandChunksIso(Array(128, 128, 128), Array(128L, 4096L, 4096L),
-      targetBytes = 1L << 40, itemSize = 2)
-    assert(out2(0) == 128L)
-  }
-
-  test("expandChunksCycle doubles axes round-robin under the target") {
-    // 2-byte items, start 16^3 (8 KiB): target 64 KiB -> x2 on every axis
-    val out = ChunkGrid.expandChunksCycle(Array(16, 16, 16), Array(1024L, 1024L, 1024L),
-      targetBytes = 64L * 1024, itemSize = 2)
-    assert(out.toSeq == Seq(32L, 32L, 32L))
-    // clamped to shape: first axis cannot grow past 16
-    val out2 = ChunkGrid.expandChunksCycle(Array(16, 16, 16), Array(16L, 1024L, 1024L),
-      targetBytes = 1L << 30, itemSize = 2)
-    assert(out2(0) == 16L && out2(1) > 16L)
-  }
 }

@@ -1,16 +1,21 @@
 package graft.tools
 
+import java.nio.file.Files
+
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{broadcast, col}
 import org.apache.spark.sql.graftbridge.ListenerBridge
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.Spark
+import graft.core.Volume
+import graft.io.zarr.ZarrIO
 
-/** [[Census.measure]] reports one record per SQL execution, with counters
-  * and final-plan node counts that belong to that execution alone, and
-  * leaves no listener behind. An overwrite-mode write runs as the
-  * `overwrite` command. */
+/** [[Census.measure]] reports one record per SQL execution, with counters,
+  * final-plan node counts, exchanges and scans that belong to that
+  * execution alone, and leaves no listener behind. An overwrite-mode write
+  * runs as the `overwrite` command. */
 class CensusSpec extends AnyFunSuite {
 
   private lazy val spark = Spark.session(master = "local[2]", shufflePartitions = 2,
@@ -68,5 +73,48 @@ class CensusSpec extends AnyFunSuite {
     assert(ListenerBridge.listenerCount(spark) == before)
     intercept[IllegalStateException](Census.measure(spark)(throw new IllegalStateException("body")))
     assert(ListenerBridge.listenerCount(spark) == before)
+  }
+
+  test("a repartition by column is one REPARTITION_BY_COL hash exchange, without attribute ids") {
+    val e = only(Census.measure(spark) {
+      noop(spark.range(0, 1000).withColumn("k", col("id") % 7).repartition(col("k")))
+    })
+    assert(e.exchanges == Seq("REPARTITION_BY_COL hash(k)"), e)
+  }
+
+  test("a groupBy aggregate exchanges on its grouping key to meet its distribution") {
+    val e = only(Census.measure(spark) {
+      noop(spark.range(0, 1000).withColumn("g", col("id") % 5).groupBy("g").count())
+    })
+    assert(e.exchanges == Seq("ENSURE_REQUIREMENTS hash(g)"), e)
+  }
+
+  test("a parquet scan names its table directory, a format(zarr) scan its V2 table") {
+    val dir = Files.createTempDirectory("census-scans").toString
+    spark.range(0, 100).toDF("id").write.parquet(s"$dir/ids.parquet")
+    // read outside the measure: the schema listing is a job of no execution
+    val ids = spark.read.parquet(s"$dir/ids.parquet")
+    val p = only(Census.measure(spark)(noop(ids)))
+    assert(p.scans == Seq("ids.parquet") && p.nodes("FileScan") == 1, p)
+
+    val root = s"$dir/store.zarr"
+    ZarrIO.writeMetadata(root, Volume("cs", 0, Array(1L, 1L, 8L, 8L, 8L), Array(1, 1, 8, 8, 8)),
+      nLevels = 1)
+    val z = only(Census.measure(spark) {
+      noop(spark.read.format("zarr").option("path", root).option("stack", "cs").load())
+    })
+    assert(z.scans == Seq(s"zarr:$root") && z.nodes("BatchScan") == 1, z)
+  }
+
+  test("the JSON line carries the exchanges and scans lists") {
+    val dir = Files.createTempDirectory("census-json").toString
+    spark.range(0, 100).toDF("id").write.parquet(s"$dir/ids.parquet")
+    val ids = spark.read.parquet(s"$dir/ids.parquet")
+    val e = only(Census.measure(spark)(noop(ids.repartition(col("id")))))
+    val json = new ObjectMapper().readTree(e.toJson("query" -> "q"))
+    assert(json.get("exchanges").isArray && json.get("scans").isArray, json)
+    assert(json.get("exchanges").get(0).asText == "REPARTITION_BY_COL hash(id)", json)
+    assert(json.get("scans").get(0).asText == "ids.parquet", json)
+    assert(json.get("nodes").get("ShuffleExchange").asInt == 1, json)
   }
 }

@@ -8,14 +8,16 @@ import graft.sources.SyntheticStack
 import graft.sources.czi.{CziFormat, SyntheticCzi}
 
 /** Scale rehearsal: drive a >= 2048-cube Gray16 stack (~17 GB of voxels)
-  * through the full CZI -> pyramid -> OME-Zarr pipeline with the batched
-  * writer, and report voxels/s plus peak JVM heap — the local stand-in
-  * for a production-size stack that a 512-cube spec can't represent.
+  * through the full CZI -> pyramid -> OME-Zarr pipeline and report voxels/s
+  * plus the peak of each JVM heap pool — the local stand-in for a
+  * production-size stack that a 512-cube spec can't represent.
   *
-  * A 2048-wide plane makes a 128-deep z-slab 2.1 GiB, so `convertStack`
-  * automatically takes the shuffle-assembled scan path
-  * (`CziSourceShuffled`) — this rehearsal therefore exercises exactly the
-  * branch a stitched production volume would.
+  * At the default 128-deep chunk a 2048-wide u16 plane makes a z-slab of
+  * exactly 2^30 bytes, which `ZeissJob.planStack`'s 1 GiB slab switch
+  * still admits, so n = 2048 runs the slab scan (`CziSource.scan`, one
+  * 1 GiB slab buffer per task); n >= 2049 crosses the switch and takes
+  * the shuffle-assembled scan (`CziSourceShuffled`), the branch a
+  * stitched production volume would.
   *
   * The fixture streams to disk one z-slice per subblock (zstd-compressed,
   * fed by an Iterator so never more than one slice is resident) and is
@@ -58,19 +60,22 @@ object ScaleRehearsal {
     org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(out))
     val settings = ZeissJob.Settings(inputSource = root, outputDirectory = out)
 
-    val pools = java.lang.management.ManagementFactory.getMemoryPoolMXBeans
-    pools.forEach(_.resetPeakUsage())
+    val heapPools = {
+      import scala.jdk.CollectionConverters._
+      java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
+        .filter(_.getType == java.lang.management.MemoryType.HEAP).toSeq
+    }
+    heapPools.foreach(_.resetPeakUsage())
     val t1 = System.nanoTime()
     val vol = ZeissJob.convertStack(spark, czi, out, settings, Seq(1.0, 1.0, 1.0))
     val sec = (System.nanoTime() - t1) / 1e9
     val voxels = vol.shape.product
-    var peakHeap = 0L
-    pools.forEach { p =>
-      if (p.getType == java.lang.management.MemoryType.HEAP)
-        peakHeap += p.getPeakUsage.getUsed
-    }
+    // pools peak at different instants, so each is reported on its own,
+    // never summed
+    val peaks = heapPools.map(p => f""""${p.getName}":${p.getPeakUsage.getUsed / 1e9}%.2f""")
     println(f"""[rehearsal] {"n":$n,"voxels":$voxels,"seconds":$sec%.1f,""" +
-      f""""voxels_per_sec":${(voxels / sec).toLong},"peak_heap_gb":${peakHeap / 1e9}%.2f}""")
+      f""""voxels_per_sec":${(voxels / sec).toLong},""" +
+      s""""peak_heap_gb_by_pool":${peaks.mkString("{", ",", "}")}}""")
     spark.stop()
   }
 }
