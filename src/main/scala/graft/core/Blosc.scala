@@ -162,7 +162,8 @@ object Blosc {
   // 128^3 u16 chunk, past half a G1 region, so fresh ones are two humongous
   // allocations per chunk, straight into the old generation. Each thread
   // keeps its pair (each up to ScratchMax), so a call allocates only the
-  // frame it returns.
+  // frame it returns; a decode takes its shuffled block from buffer 0 and
+  // allocates only the array it returns.
   private val ScratchMax = 64 << 20
   private final class Scratch {
     private val bufs = Array(Array.emptyByteArray, Array.emptyByteArray)
@@ -214,8 +215,8 @@ object Blosc {
     val out = new Array[Byte](h.nbytes)
     val doShuffle = (h.flags & FlagShuffle) != 0
     // an unshuffled block decodes straight into `out`; a shuffled one
-    // decodes into one scratch block and unshuffles into `out`
-    val scratch = if (doShuffle) new Array[Byte](math.min(blocksize, h.nbytes)) else null
+    // decodes into this thread's scratch block and unshuffles into `out`
+    val block = if (doShuffle) scratch.get.take(0, math.min(blocksize, h.nbytes)) else null
     var k = 0
     while (k < nblocks) {
       val off = k * blocksize
@@ -228,10 +229,10 @@ object Blosc {
         else System.arraycopy(frame, bstart + 4, out, off, neblock)
       } else {
         val n =
-          if (doShuffle) Zstd.decompressByteArray(scratch, 0, neblock, frame, bstart + 4, csize)
+          if (doShuffle) Zstd.decompressByteArray(block, 0, neblock, frame, bstart + 4, csize)
           else Zstd.decompressByteArray(out, off, neblock, frame, bstart + 4, csize)
         require(n == neblock, s"zstd decoded $n of expected $neblock bytes")
-        if (doShuffle) unshuffleInto(scratch, 0, neblock, h.typesize, out, off)
+        if (doShuffle) unshuffleInto(block, 0, neblock, h.typesize, out, off)
       }
       k += 1
     }

@@ -164,23 +164,18 @@ object ZeissJob {
     val stackName = new Path(cziPath).getName.stripSuffix(".czi")
     // JPEG-XR containment: swap in the transcode sidecar (or fail with
     // the remediation) before any executor opens the file
-    val srcPath = CziSource.resolveInput(cziPath)
-    val (vol, idx) = CziSource.volume(srcPath, stackName, settings.chunkSize)
+    val (srcPath, idx) = CziSource.resolveInput(cziPath)
+    val vol = CziSource.volume(idx, stackName, settings.chunkSize)
     // the reference assumes one channel per file (utils.py:355); we accept
     // c>1 and emit one omero channel entry per channel
     val chNames =
       if (vol.shape(1) == 1L) Seq("ch0")
       else (0 until vol.shape(1).toInt).map(i => s"ch$i")
-    // slab scan materializes chunkDepth x Y x X per task — fine for typical
-    // planes, not for stitched volumes; switch to the shuffle-assembled
-    // scan when a slab would exceed ~1 GiB (reference X3 vs Spark-scale).
     // Not `format("czi")`: reading level 0 through the connector measured
     // worse on a 512^3 u16 stack at local[4] on a 4-core host (6
     // alternating pairs: median peak heap occupancy 1479 -> 1684 MB,
     // pass 1.98 -> 2.17 s; heap after GC 753 -> 1277 MB in a traced run).
-    val slabBytes = vol.chunk(2).toLong * vol.shape(3) * vol.shape(4) * vol.dtype.itemSize
-    val scan = if (slabBytes <= (1L << 30)) CziSource.scan(spark, srcPath, vol, idx)
-               else graft.sources.czi.CziSourceShuffled.scan(spark, srcPath, vol, idx)
+    val scan = CziSource.scan(spark, srcPath, vol, idx)
     // level 0 commits in the task that cut it and flows on to the pyramid's
     // map side in the same pass: nothing is cached and the scan runs once.
     // Nothing may sit between scan, tee and the pyramid's flatMap (no

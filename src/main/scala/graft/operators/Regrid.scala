@@ -5,12 +5,12 @@ import org.apache.spark.sql.Dataset
 import graft.core.{ChunkGrid, Volume, ZarrChunk}
 
 /** The regrid kernel: cutting z/y/x boxes out of row-major byte buffers
-  * and assembling shuffled pieces into chunks. Every chunk cut and chunk
-  * assembly in the engine goes through here — the CZI slab scatter and
-  * tile cut ([[graft.sources.czi.CziSource.slabChunks]]), the
-  * shuffle-assembled CZI scan, [[Rechunk]] and the [[Pyramid]]'s
-  * exchange — so the piece layout and the strided-index arithmetic live
-  * in one place. Buffers are dtype-agnostic bytes, C order (x fastest).
+  * and assembling shuffled pieces into chunks. Every box copy in the
+  * engine goes through here — the CZI scan's subblock-to-tile copy
+  * ([[graft.sources.czi.CziSource.slabChunks]], [[copyBox]] alone), and
+  * the cut and one-exchange assembly of [[Rechunk]] and the [[Pyramid]]
+  * — so the piece layout and the strided-index arithmetic live in one
+  * place. Buffers are dtype-agnostic bytes, C order (x fastest).
   */
 object Regrid {
 

@@ -16,7 +16,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.core.ChunkGrid
+import graft.core.{ChunkGrid, Volume}
 import graft.io.{GridScan, GridScanBuilder}
 
 /** CZI (ZISRAW) DataSource V2: `spark.read.format("czi")` — the scan that
@@ -32,10 +32,11 @@ import graft.io.{GridScan, GridScanBuilder}
   * The pushdown is the zarr connector's, from one shared file
   * (`graft/io/GridScan.scala`):
   *   - '''partition pruning''' — the driver parses only the subblock
-  *     directory (KBs); one InputPartition per (timepoint, channel,
-  *     z-slab), and coordinate filters on `t`/`c`/`z` (any integral
-  *     literal type; an `In` by its envelope) shrink the planned set
-  *     before a task launches;
+  *     directory (KBs), once per table; one InputPartition per
+  *     (timepoint, channel, z-slab, tile run) ([[CziSource.tileRuns]]),
+  *     and coordinate filters on `t`/`c`/`z` (any integral literal type;
+  *     an `In` by its envelope) shrink the planned set before a task
+  *     launches;
   *   - '''column pruning''' — a projection without `data` plans the same
   *     partitions but its readers emit rows from chunk-grid arithmetic
   *     alone: no subblock is read, the file is never opened;
@@ -52,10 +53,16 @@ class CziDataSource extends TableProvider with DataSourceRegister {
     new CziTable(properties.asScala.toMap)
 }
 
-class CziTable(props: Map[String, String]) extends Table with SupportsRead {
+/** `maxTaskBytes` bounds a scan task's tile run ([[CziSource.tileRuns]]);
+  * the source always uses [[CziSource.MaxTaskBytes]]. */
+class CziTable private[czi] (props: Map[String, String], maxTaskBytes: Long)
+    extends Table with SupportsRead {
+  def this(props: Map[String, String]) = this(props, CziSource.MaxTaskBytes)
+
   // resolveInput: JPEG-XR files redirect to their transcode sidecar (or
-  // fail here, at table resolution, with the documented remediation)
-  private val path = CziSource.resolveInput(
+  // fail here, at table resolution, with the documented remediation); its
+  // directory parse is the table's only one
+  private val (path, idx) = CziSource.resolveInput(
     props.getOrElse("path", sys.error("czi: 'path' option required")))
   private val stack =
     props.getOrElse("stack", new Path(path).getName.stripSuffix(".czi"))
@@ -71,67 +78,67 @@ class CziTable(props: Map[String, String]) extends Table with SupportsRead {
     Set(TableCapability.BATCH_READ).asJava
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new CziScanBuilder(path, stack, chunkZyx)
+    new CziScanBuilder(path, CziSource.volume(idx, stack, chunkZyx), idx, maxTaskBytes)
 }
 
-final case class CziInputPartition(tIdx: Int, cIdx: Int, slab: Int) extends InputPartition
+final case class CziInputPartition(tIdx: Int, cIdx: Int, slab: Int, run: Int) extends InputPartition
 
 /** The shared grid pushdown ([[graft.io.GridScanBuilder]]) with t, c and z
   * prunable: rows carry t = timepoint, c = channel and z = slab index —
   * exactly the partition key — so a t/c/z range is absorbed at partition
   * granularity. A y/x filter stays a residual (a task reads its whole
-  * slab anyway). */
-class CziScanBuilder(path: String, stack: String, chunkZyx: Array[Int])
+  * run anyway). */
+class CziScanBuilder private[czi] (path: String, vol: Volume, idx: CziFormat.CziIndex,
+                                   maxTaskBytes: Long)
     extends GridScanBuilder(Set("t", "c", "z")) {
-  override def build(): Scan = new CziScan(path, stack, chunkZyx, lo, hi, required, aggOps)
+  override def build(): Scan = new CziScan(path, vol, idx, maxTaskBytes, lo, hi, required, aggOps)
 }
 
-class CziScan(path: String, stack: String, chunkZyx: Array[Int],
+class CziScan(path: String, vol: Volume, idx: CziFormat.CziIndex, maxTaskBytes: Long,
               lo: Array[Long], hi: Array[Long],
               required: StructType, aggOps: Option[GridScan.AggOps])
     extends GridScan("CziScan", path, lo, hi, required, aggOps) {
 
-  // driver-side directory parse happens once at planning time
-  private lazy val (vol, idx) = CziSource.volume(path, stack, chunkZyx)
   // (t, c, z-slab, y-tile, x-tile); y/x are never bounded, so the
   // sub-grid is the clamped (t, c, slab) selection over the full tile grid
   override protected lazy val grid: Array[Long] = ChunkGrid.gridShape(vol.shape, vol.chunk)
+  private lazy val runs = CziSource.tileRuns(vol, maxTaskBytes)
 
-  // one partition per (timepoint, channel, slab)
+  // one partition per (timepoint, channel, slab, tile run)
   override protected def planDataPartitions(): Array[InputPartition] = {
     val parts = for {
       t <- base(0) until base(0) + ext(0)
       c <- base(1) until base(1) + ext(1)
       slab <- base(2) until base(2) + ext(2)
-    } yield CziInputPartition(t.toInt, c.toInt, slab.toInt): InputPartition
+      run <- 0 until runs.count
+    } yield CziInputPartition(t.toInt, c.toInt, slab.toInt, run): InputPartition
     parts.toArray
   }
 
   override protected def dataReaderFactory(): PartitionReaderFactory =
     CziReaderFactory(path, vol.stack, vol.shape, vol.chunk,
-      idx.origin, idx.entries.toArray, vol.dtype.itemSize, required.fieldNames,
+      idx.origin, idx.entries.toArray, vol.dtype.itemSize, runs, required.fieldNames,
       graft.core.HadoopConf.snapshot())
 }
 
 final case class CziReaderFactory(path: String, stack: String,
     shape: Array[Long], chunk: Array[Int], origin: Array[Int],
-    entries: Array[CziFormat.SubBlockEntry], itemSize: Int,
+    entries: Array[CziFormat.SubBlockEntry], itemSize: Int, runs: CziSource.TileRuns,
     cols: Array[String], hconf: Array[(String, String)])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[CziInputPartition]
-    new CziPartitionReader(this, p.tIdx, p.cIdx, p.slab)
+    new CziPartitionReader(this, p.tIdx, p.cIdx, p.slab, runs(p.run))
   }
 }
 
-/** Reads one (timepoint, channel, slab): scatter the slab's subblocks
-  * into a buffer (reference placement semantics, `utils.py:269-276`),
-  * cut chunk tiles, emit one row per tile — the kernel shared with
-  * [[CziSource.scan]].
+/** Reads one tile run of one (timepoint, channel, slab): a task reads its
+  * whole run through [[CziSource.slabChunks]], the kernel shared with
+  * [[CziSource.scan]], and emits one row per tile.
   * When the projection pruned `data` away, every remaining column is
   * chunk-grid arithmetic: the rows are synthesized without opening the
   * file at all (parity with the zarr connector's pruned scan). */
-class CziPartitionReader(f: CziReaderFactory, tIdx: Int, cIdx: Int, slab: Int)
+class CziPartitionReader(f: CziReaderFactory, tIdx: Int, cIdx: Int, slab: Int, tiles: Range)
     extends PartitionReader[InternalRow] {
 
   private val needData = f.cols.contains("data")
@@ -157,20 +164,20 @@ class CziPartitionReader(f: CziReaderFactory, tIdx: Int, cIdx: Int, slab: Int)
       val in = fs.open(p)
       try {
         CziSource.slabChunks(in, f.entries, f.shape, f.chunk, f.origin,
-            f.itemSize, tIdx, cIdx, slab)
+            f.itemSize, tIdx, cIdx, slab, tiles)
           .map { case (ty, tx, shape5, out) => row(ty, tx, shape5, out) }
           .toVector.iterator // materialize before the stream closes
       } finally in.close()
     } else {
       // no pixel bytes requested: coordinates and clamped shapes are pure
       // arithmetic — zero IO
-      val grid = ChunkGrid.gridShape(f.shape, f.chunk)
-      (for {
-        ty <- 0 until grid(3).toInt
-        tx <- 0 until grid(4).toInt
-      } yield row(ty, tx,
-        ChunkGrid.clampedChunkShape(Array[Long](tIdx, cIdx, slab, ty, tx), f.shape, f.chunk),
-        sys.error("data column pruned — never evaluated"))).iterator
+      val gridX = ChunkGrid.ceilDiv(f.shape(4), f.chunk(4)).toInt
+      tiles.iterator.map { i =>
+        val (ty, tx) = (i / gridX, i % gridX)
+        row(ty, tx,
+          ChunkGrid.clampedChunkShape(Array[Long](tIdx, cIdx, slab, ty, tx), f.shape, f.chunk),
+          sys.error("data column pruned — never evaluated"))
+      }
     }
 
   private var cur: InternalRow = _

@@ -17,7 +17,7 @@ import CziFormat._
   * (`utils.py:284-395` `read_slices_czi` + `utils.py:231-281`
   * `parallel_reader`): the directory is parsed once (driver, small), and
   * each Spark task re-opens the file and reads only the subblocks
-  * intersecting its z-slab — the task-parallel analogue of the
+  * intersecting its tile run — the task-parallel analogue of the
   * reference's thread pool (X7), with the same scatter-at-start-offset
   * placement (`utils.py:269-276`).
   */
@@ -124,8 +124,8 @@ object CziReader {
       // ENUMERATION axes: each tile also carries its own Y/X start in
       // stage coordinates, so the reference's start-offset scatter
       // (`utils.py:269-276`) stitches them into one padded plane with the
-      // S/M index never entering the placement arithmetic. Both scans
-      // (`CziSource.slabChunks`, `Regrid.assemble` in directory order) do
+      // S/M index never entering the placement arithmetic. The scan
+      // (`CziSource.slabChunks`, copying subblocks in directory order) does
       // the same, so these spans are accepted and the global extent is
       // the stitched bounding box (gaps between tiles stay zero-filled; tiles
       // overlapping in Y/X resolve last-in-directory-order wins, the

@@ -34,6 +34,16 @@ class BloscSpec extends AnyFunSuite {
     assert(frame(0) == 2, "blosc format version")
   }
 
+  test("frames of different sizes and typesizes decode exactly back to back on one thread") {
+    // shuffled decodes share one per-thread scratch block: a large frame
+    // leaves stale bytes in it that a smaller one must not pick up
+    for ((n, ts) <- Seq((1 << 20, 2), (4096, 4), (3, 2), (65537, 1), (1 << 20, 8), (1000, 2), (9, 4))) {
+      val raw = Array.tabulate[Byte](n)(i => ((i / 7) * 13 + n + ts).toByte)
+      val frame = Blosc.compress(raw, typesize = ts, clevel = 3)
+      assert(Blosc.decompress(frame).sameElements(raw), s"n=$n typesize=$ts")
+    }
+  }
+
   test("a frame whose length differs from its header's cbytes is rejected") {
     val raw = PixelCodec.toBytes(Array.tabulate(4096)(i => i / 16))
     val frame = Blosc.compress(raw, typesize = 2, clevel = 3)

@@ -8,9 +8,9 @@ import java.util.concurrent.atomic.AtomicReference
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{FSDataOutputStream, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, Path, RawLocalFileSystem}
 import org.apache.hadoop.util.Progressable
-import org.apache.spark.SparkException
+import org.apache.spark.{SparkException, TaskContext}
 import org.apache.spark.sql.execution.{DeserializeToObjectExec, SerializeFromObjectExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
@@ -24,11 +24,16 @@ import graft.sources.czi.SyntheticCzi
 import graft.tools.Census
 
 /** A local-disk `convfs://` filesystem that records every path passed to
-  * `create` and, while armed, throws on the first create whose path
-  * contains the armed fragment (local mode shares one JVM, so a static
-  * flag reaches the executor threads). */
+  * `create` and every path opened outside a task (on the driver) and,
+  * while armed, throws on the first create whose path contains the armed
+  * fragment (local mode shares one JVM, so a static flag reaches the
+  * executor threads). */
 class ConvertFs extends RawLocalFileSystem {
   override def getUri: URI = URI.create("convfs:///")
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    if (TaskContext.get() == null) ConvertFs.driverOpens.add(f.toUri.getPath)
+    super.open(f, bufferSize)
+  }
   override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
                       blockSize: Long, progress: Progressable): FSDataOutputStream = {
     val p = f.toUri.getPath
@@ -42,6 +47,7 @@ class ConvertFs extends RawLocalFileSystem {
 
 object ConvertFs {
   val created = new ConcurrentLinkedQueue[String]()
+  val driverOpens = new ConcurrentLinkedQueue[String]()
   val failOn = new AtomicReference[String](null)
 }
 
@@ -217,6 +223,22 @@ class ConvertStackSpec extends AnyFunSuite {
     ZarrIO.cleanupTmp(local, spark.sparkContext.hadoopConfiguration)
     assert(tree(local) == want)
     assert(tmps(local).isEmpty, "tmp files left after the re-run and sweep")
+  }
+
+  test("planning opens each .czi once on the driver, in ZeissJob.run and format(czi)") {
+    val root = spim(Seq("oa", "ob"))
+    def opens(run: => Unit): Map[String, Int] = {
+      ConvertFs.driverOpens.clear()
+      run
+      ConvertFs.driverOpens.asScala.toSeq.filter(_.endsWith(".czi"))
+        .groupBy(identity).map { case (p, ps) => p -> ps.size }
+    }
+    val spimDir = s"$root/in/SPIM"
+    assert(opens(runJob(s"convfs://$root", s"$root/out", 2)) ==
+      Map(s"$spimDir/oa.czi" -> 1, s"$spimDir/ob.czi" -> 1))
+    assert(opens(spark.read.format("czi").option("path", s"convfs://$spimDir/oa.czi")
+      .option("chunk_z", "16").option("chunk_y", "16").option("chunk_x", "16")
+      .load().collect()) == Map(s"$spimDir/oa.czi" -> 1))
   }
 
   test("2048^3 chunks fail at planning, before any Spark job runs") {

@@ -1,14 +1,33 @@
 package graft.sources.czi
 
 import java.nio.file.Files
+import java.util
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.connector.catalog.Table
+import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.Spark
-import graft.core.PixelCodec
+import graft.core.{PixelCodec, PixelDtype, Volume, ZarrChunk}
 import graft.io.zarr.{ZarrIO, ZarrStore}
 import graft.jobs.ZeissJob
+import graft.operators.Pyramid
+import graft.operators.PyramidFusedSpec.assertOracleLevels
 import graft.sources.SyntheticStack
+import graft.tools.Census
+
+/** `format("czi")` with the tile-run bound taken from the
+  * `max_task_bytes` option, so a test can split small slabs into runs. */
+class SplitCziSource extends CziDataSource {
+  override def getTable(schema: StructType, partitioning: Array[Transform],
+                        properties: util.Map[String, String]): Table = {
+    val props = properties.asScala.toMap
+    new CziTable(props, props("max_task_bytes").toLong)
+  }
+}
 
 class CziSpec extends AnyFunSuite {
 
@@ -17,6 +36,38 @@ class CziSpec extends AnyFunSuite {
 
   private def synth(nz: Int, ny: Int, nx: Int): Array[Array[Array[Int]]] =
     Array.tabulate(nz, ny, nx)((z, y, x) => SyntheticStack.value(z, y, x))
+
+  /** `path` read with each slab split into runs of `perRun` tiles, through
+    * [[CziSource.scan]] and through `format("czi")`; checks that each slab
+    * splits into at least 3 runs, one of them starting inside a tile row. */
+  private def splitScans(path: String, vol: Volume, idx: CziFormat.CziIndex,
+                         perRun: Int): Seq[(String, Array[ZarrChunk])] = {
+    val bound = perRun * vol.chunk.map(_.toLong).product * vol.dtype.itemSize
+    val runs = CziSource.tileRuns(vol, bound)
+    assert(runs.perRun == perRun && runs.count >= 3 &&
+      (0 until runs.count).exists(runs(_).start % vol.grid(4) != 0), runs)
+    import spark.implicits._
+    val Array(_, _, cz, cy, cx) = vol.chunk
+    Seq("split scan" -> CziSource.scan(spark, path, vol, idx, bound).collect(),
+      "split format(czi)" -> spark.read.format(classOf[SplitCziSource].getName)
+        .option("path", path).option("max_task_bytes", bound.toString)
+        .option("chunk_z", cz.toString).option("chunk_y", cy.toString).option("chunk_x", cx.toString)
+        .load().as[ZarrChunk].collect())
+  }
+
+  /** Each of `variants` holds exactly the chunks of `ref`, byte for byte. */
+  private def assertSameChunks(ref: Array[ZarrChunk], variants: Seq[(String, Array[ZarrChunk])]): Unit = {
+    def key(c: ZarrChunk) = (c.t, c.c, c.z, c.y, c.x)
+    val want = ref.map(c => key(c) -> c).toMap
+    for ((name, cks) <- variants) {
+      assert(cks.length == ref.length && cks.map(key).toSet == want.keySet, name)
+      cks.foreach { ck =>
+        val r = want(key(ck))
+        assert(ck.shape.toSeq == r.shape.toSeq, s"$name chunk ${key(ck)}")
+        assert(ck.data.sameElements(r.data), s"$name chunk ${key(ck)} differs from the whole-slab scan")
+      }
+    }
+  }
 
   test("env-var settings source: TRANSFORMATION_JOB_* fields parse like the JSON path") {
     // the reference CLI's third fallback (zeiss_job.py job_entrypoint:
@@ -300,7 +351,7 @@ class CziSpec extends AnyFunSuite {
     // a valid transcode sidecar resolves, and the whole pipeline reads it:
     // the scan sees the zstd pixels voxel-exact through the ORIGINAL path
     SyntheticCzi.writeTiles(sidecar, planes(nz, n, CziFormat.CompressionZstd0))
-    val resolved = CziSource.resolveInput(path)
+    val (resolved, _) = CziSource.resolveInput(path)
     assert(resolved == sidecar)
     val (vol, idx) = CziSource.volume(resolved, "jx", Array(nz, n, n))
     val chunks = CziSource.scan(spark, resolved, vol, idx).collect()
@@ -378,15 +429,7 @@ class CziSpec extends AnyFunSuite {
       }
     }
 
-    val byCoord = slab.map(c => ((c.t, c.c, c.z, c.y, c.x), c)).toMap
-    val shuffled = CziSourceShuffled.scan(spark, path, vol, idx).collect()
-    assert(shuffled.length == slab.length)
-    shuffled.foreach { ck =>
-      val ref = byCoord((ck.t, ck.c, ck.z, ck.y, ck.x))
-      assert(ck.shape.toSeq == ref.shape.toSeq)
-      assert(ck.data.sameElements(ref.data),
-        s"chunk t=${ck.t},c=${ck.c},${ck.z},${ck.y},${ck.x}")
-    }
+    assertSameChunks(slab, splitScans(path, vol, idx, perRun = 1))
   }
 
   test("zstd1 decode: plain header and hi-lo byte-packed payloads") {
@@ -430,20 +473,14 @@ class CziSpec extends AnyFunSuite {
     assert(edge.shape.toSeq == Seq(1, 1, 4, 8, 8))
   }
 
-  test("shuffle-assembled scan produces identical chunks to the slab scan") {
+  test("tile-run scans produce identical chunks to the whole-slab scan") {
     val dir = Files.createTempDirectory("czi").toString
     val path = s"$dir/t.czi"
     SyntheticCzi.write(path, synth(12, 40, 40))
     val (vol, idx) = CziSource.volume(path, "t", Array(8, 32, 32))
-    val slab = CziSource.scan(spark, path, vol, idx).collect()
-      .map(c => ((c.z, c.y, c.x), c)).toMap
-    val shuffled = CziSourceShuffled.scan(spark, path, vol, idx).collect()
-    assert(shuffled.length == slab.size)
-    shuffled.foreach { ck =>
-      val ref = slab((ck.z, ck.y, ck.x))
-      assert(ck.shape.toSeq == ref.shape.toSeq)
-      assert(ck.data.sameElements(ref.data), s"chunk ${ck.z},${ck.y},${ck.x}")
-    }
+    assert(CziSource.tileRuns(vol, CziSource.MaxTaskBytes).count == 1)
+    assertSameChunks(CziSource.scan(spark, path, vol, idx).collect(),
+      splitScans(path, vol, idx, perRun = 1))
   }
 
   test("overlapping mosaic tiles: last in directory order wins in both scans and format(czi)") {
@@ -486,15 +523,9 @@ class CziSpec extends AnyFunSuite {
     val connector = spark.read.format("czi").option("path", path)
       .option("chunk_z", nz.toString).option("chunk_y", "8").option("chunk_x", "8")
       .load().as[graft.core.ZarrChunk].collect()
-    for ((name, cks) <- Seq("shuffled" -> CziSourceShuffled.scan(spark, path, vol, idx).collect(),
-                            "format(czi)" -> connector)) {
-      val got = byCoord(cks)
-      assert(got.keySet == slab.keySet, name)
-      got.foreach { case (k, ck) =>
-        assert(ck.shape.toSeq == slab(k).shape.toSeq, s"$name chunk $k")
-        assert(ck.data.sameElements(slab(k).data), s"$name chunk $k differs from the slab scan")
-      }
-    }
+    // 9 tiles in runs of 2: runs 1 and 3 start inside a tile row
+    assertSameChunks(slab.values.toArray,
+      ("format(czi)" -> connector) +: splitScans(path, vol, idx, perRun = 2))
   }
 
   test("multi-channel CZI: per-channel voxel-exact chunks, both scan variants") {
@@ -522,14 +553,49 @@ class CziSpec extends AnyFunSuite {
       }
     }
 
-    val byCoord = slab.map(c => ((c.c, c.z, c.y, c.x), c)).toMap
-    val shuffled = CziSourceShuffled.scan(spark, path, vol, idx).collect()
-    assert(shuffled.length == slab.length)
-    shuffled.foreach { ck =>
-      val ref = byCoord((ck.c, ck.z, ck.y, ck.x))
-      assert(ck.shape.toSeq == ref.shape.toSeq)
-      assert(ck.data.sameElements(ref.data), s"chunk c=${ck.c},${ck.z},${ck.y},${ck.x}")
+    assertSameChunks(slab, splitScans(path, vol, idx, perRun = 1))
+  }
+
+  test("tile runs: a slab that fits is one run; a larger plane splits into runs of whole chunks") {
+    def runs(zyx: Seq[Long], chunk: Seq[Int], bound: Long = CziSource.MaxTaskBytes) =
+      CziSource.tileRuns(Volume("r", 0, Array(1L, 1L) ++ zyx, Array(1, 1) ++ chunk, PixelDtype.U16), bound)
+    // convert_large's slab: 512^2 x 128 u16 is 64 MiB, 16 tiles
+    assert(runs(Seq(512, 512, 512), Seq(128, 128, 128)) == CziSource.TileRuns(16, 16))
+    // 2049^2 x 128 u16 is just over 1 GiB: 17^2 = 289 tiles of 4 MiB, 256 a run
+    val plane = runs(Seq(256, 2049, 2049), Seq(128, 128, 128))
+    assert(plane == CziSource.TileRuns(289, 256) && plane.count == 2)
+    assert(plane(1) == (256 until 289))
+    // a chunk over the bound (600x1024x1024 u16, 1.2 GiB) is a run by itself
+    val big = runs(Seq(600, 2048, 2048), Seq(600, 1024, 1024))
+    assert(big.perRun == 1 && big.count == 4)
+    // the runs of any bound cover every tile exactly once, in order, and
+    // none holds more than perRun tiles
+    for (zyx <- Seq(Seq(8L, 40L, 40L), Seq(8L, 33L, 65L), Seq(8L, 16L, 16L));
+         bound <- Seq(1L, 512L, 1024L, 2048L, 4096L, 1L << 20)) {
+      val r = runs(zyx, Seq(8, 16, 16), bound)
+      val all = (0 until r.count).map(r(_))
+      assert(all.flatten == (0 until r.tiles), s"$zyx bound $bound: $r")
+      assert(all.forall(t => t.nonEmpty && t.size <= r.perRun), s"$zyx bound $bound: $r")
     }
+  }
+
+  test("a split level 0 feeds Pyramid.build in one pass: 2 jobs, 2 stages, one exchange; levels exact") {
+    val dir = Files.createTempDirectory("czi-split-pyr").toString
+    val path = s"$dir/sp.czi"
+    SyntheticCzi.write(path, synth(32, 32, 32))
+    val (vol, idx) = CziSource.volume(path, "sp", Array(16, 16, 16))
+    // one tile per run: 2 slabs x 4 runs
+    val bound = vol.chunk.map(_.toLong).product * vol.dtype.itemSize
+    assert(CziSource.tileRuns(vol, bound).count == 4)
+    val level0 = CziSource.scan(spark, path, vol, idx, bound)
+    assertOracleLevels(level0.collect().toSeq, vol, 3, 0 until 1)
+    val all = Pyramid.build(spark, level0, vol, 3)._2
+    var levels = Array.empty[ZarrChunk]
+    val execs = Census.measure(spark) { levels = all.collect() }
+    assert(execs.map(_.jobs).sum == 2, execs)
+    assert(execs.map(_.stages).sum == 2, execs)
+    assert(execs.map(_.nodes("ShuffleExchange")).sum == 1, execs)
+    assertOracleLevels(levels.toSeq, vol, 3, 1 until 3)
   }
 
   test("multi-channel CZI end-to-end: per-channel pyramid, zarr, omero channels") {

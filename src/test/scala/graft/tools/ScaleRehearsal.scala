@@ -13,11 +13,12 @@ import graft.sources.czi.{CziFormat, SyntheticCzi}
   * production-size stack that a 512-cube spec can't represent.
   *
   * At the default 128-deep chunk a 2048-wide u16 plane makes a z-slab of
-  * exactly 2^30 bytes, which `ZeissJob.planStack`'s 1 GiB slab switch
-  * still admits, so n = 2048 runs the slab scan (`CziSource.scan`, one
-  * 1 GiB slab buffer per task); n >= 2049 crosses the switch and takes
-  * the shuffle-assembled scan (`CziSourceShuffled`), the branch a
-  * stitched production volume would.
+  * exactly 2^30 bytes, `CziSource.MaxTaskBytes`, so n = 2048 runs one
+  * scan task per slab, holding the slab's 256 chunk tiles; n >= 2049
+  * splits each slab into tile runs of at most 256 chunks (2 runs at
+  * n = 2049), the split a stitched production volume takes. Each
+  * fixture subblock is a whole plane, so it is decoded once per run of
+  * its slab.
   *
   * The fixture streams to disk one z-slice per subblock (zstd-compressed,
   * fed by an Iterator so never more than one slice is resident) and is
