@@ -2,22 +2,24 @@ package graft.core
 
 /** One Zarr chunk of a 5-D TCZYX stack — the engine's core array record.
   *
-  * Mirrors the reference's data model (SURVEY.md §1): dense uint16 pixels,
-  * canonical 5-D TCZYX with t/c singleton (reference assumes one channel
-  * per CZI file, `utils.py:355`), chunk grid indices + actual chunk shape
-  * (edge chunks are clamped, reference `czi_to_zarr.py:153-161`).
+  * Mirrors the reference's data model (SURVEY.md §1): dense pixels of the
+  * source file's dtype ([[PixelDtype]]: u8, u16 or f32), canonical 5-D
+  * TCZYX with t/c singleton (reference assumes one channel per CZI file,
+  * `utils.py:355`), chunk grid indices + actual chunk shape (edge chunks
+  * are clamped, reference `czi_to_zarr.py:153-161`).
   *
-  * `data` holds raw little-endian uint16 pixels in C (row-major, x fastest)
-  * order — exactly the bytes a Zarr v2 `<u2` chunk file contains before
-  * compression. Pixels are decoded to Int (masked `& 0xFFFF`) only inside
-  * operators: JVM Short is signed, so all arithmetic happens on Int/Long
-  * (SURVEY.md §7.5 hard part #2).
+  * `data` holds the pixels' little-endian bytes in C (row-major, x
+  * fastest) order — exactly the bytes a Zarr v2 chunk file of that dtype
+  * contains before compression. The kernels (chunk cut and assembly,
+  * pyramid, codec) work on these bytes for every dtype; unsigned pixels
+  * are read masked into Int/Long, never through the JVM's signed
+  * Byte/Short arithmetic (SURVEY.md §7.5 hard part #2).
   *
   * @param stack logical stack (image) name
   * @param level pyramid level (0 = full resolution)
   * @param t,c,z,y,x chunk-grid indices (not voxel coords)
   * @param shape actual chunk shape [t,c,z,y,x] after edge clamping
-  * @param data  raw LE uint16 bytes, length = shape.product * 2
+  * @param data  LE pixel bytes, length = shape.product * dtype.itemSize
   */
 final case class ZarrChunk(
     stack: String,
@@ -28,7 +30,8 @@ final case class ZarrChunk(
 
   def numVoxels: Int = shape.product
 
-  /** Decode pixels to unsigned values in an Int array (uint16 semantics). */
+  /** Decode u16 pixels to unsigned values in an Int array (tests and
+    * gate queries; the kernels stay on `data`). */
   def pixels: Array[Int] = PixelCodec.toInts(data)
 }
 

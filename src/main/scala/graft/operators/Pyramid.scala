@@ -25,12 +25,14 @@ import graft.core.{PixelCodec, Volume, ZarrChunk}
   *     chunk/factor config in rounds of this one fused body.
   *
   * Dtype preservation (`preserve_dtype=True`, `czi_to_zarr.py:450`):
-  * means accumulate in Long and truncate back to uint16 via integer floor
+  * the kernel ([[downsampleBytes]]) reads and writes each chunk's
+  * little-endian bytes in the chunk's own dtype. For u8/u16, means
+  * accumulate masked pixels in Long and truncate back via integer floor
   * division — exact, and identical to numpy's float64-mean + astype for
   * power-of-two window populations (every population is a product of
-  * values in {1..factor}, so for factor 2 it is always a power of two).
-  * Pixels stay masked Ints end-to-end; JVM signed Short never touches the
-  * math (SURVEY.md §7.5 #2).
+  * values in {1..factor}, so for factor 2 it is always a power of two);
+  * JVM signed Byte/Short never touches the math (SURVEY.md §7.5 #2).
+  * For f32, means accumulate in Double and cast back to Float.
   */
 object Pyramid {
 

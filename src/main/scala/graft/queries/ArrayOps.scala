@@ -418,9 +418,9 @@ object ArrayOps {
     }),
 
     // --- JPEG-XR sidecar remediation under the gate (r14 verdict ask
-    //     #6): a codec-4 CZI — the one subblock codec whose entropy
-    //     decode is proven-blocked offline (docs/JPEGXR_FEASIBILITY.md)
-    //     — ships next to its `<base>.transcoded.czi` sidecar (the
+    //     #6): a codec-4 CZI — the one subblock codec CziReader.decode
+    //     rejects, so planning must redirect or refuse it — ships next
+    //     to its `<base>.transcoded.czi` sidecar (the
     //     czicompress-style lossless re-encode; reference decodes
     //     codec 4 inline via imagecodecs, utils.py:231-281). The query
     //     reads the ORIGINAL path through format("czi"):

@@ -216,10 +216,8 @@ object CziReader {
           graft.core.Blosc.unshuffle(out, 2)
         } else out
       case CompressionJpgXr =>
-        // parses the container + codestream headers, then throws with the
-        // full stream configuration (see JpegXr's class doc for why the
-        // entropy layer is out of scope offline)
-        JpegXr.decode(raw)
+        throw new UnsupportedOperationException("CZI compression 4 (JPEG-XR) is not decoded; " +
+          "transcode the file losslessly to <base>.transcoded.czi (e.g. 'czicompress --command decompress')")
       case other =>
         throw new UnsupportedOperationException(s"CZI compression $other (JPEG?) not supported")
     }

@@ -53,8 +53,8 @@ object CziSource {
       else math.min(tiles.toLong, math.max(1L, maxTaskBytes / chunkBytes)).toInt)
   }
 
-  /** JPEG-XR containment (the T.832 entropy layer is out of scope
-    * offline — see [[JpegXr]]'s class doc): if `path` contains JPEG-XR
+  /** JPEG-XR containment, the planning-time gate for the one CZI codec
+    * that [[CziReader.decode]] rejects: if `path` contains JPEG-XR
     * (compression 4) subblocks, resolve to a losslessly transcoded
     * sidecar `<base>.transcoded.czi` produced by an external tool (e.g.
     * ZEISS's open-source `czicompress`, whose decompress mode rewrites

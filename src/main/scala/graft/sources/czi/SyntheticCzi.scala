@@ -166,9 +166,9 @@ object SyntheticCzi {
         case CziFormat.CompressionNone => raw
         case CziFormat.CompressionZstd0 => Zstd.compress(raw, 3)
         case CziFormat.CompressionZstd1 => Array[Byte](1) ++ Zstd.compress(raw, 3)
-        // containment-path fixture: the payload is opaque (a real encoder
-        // is out of scope, like the decoder) — only valid for tests that
-        // never decode it (transcode-sidecar resolution, loud-failure)
+        // containment-path fixture: the payload is the raw pixels, not a
+        // JPEG-XR stream — only valid for tests that never decode it
+        // (transcode-sidecar resolution, the loud rejection)
         case CziFormat.CompressionJpgXr => raw
         case other => throw new IllegalArgumentException(s"unsupported fixture compression $other")
       }

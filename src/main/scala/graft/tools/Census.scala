@@ -4,7 +4,7 @@ import scala.collection.mutable
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning,
   RoundRobinPartitioning, SinglePartition}
 import org.apache.spark.sql.execution.{FileSourceScanLike, QueryExecution, ReusedSubqueryExec,
@@ -32,9 +32,11 @@ import graft.{Spark, SparkEntry}
   * is a test over two lists, not a reading of a plan dump. `main` runs gate
   * queries through a `noop` write (never `count()`, which prunes columns):
   * one warm-up pass, then `reps` measured passes, one JSON line per
-  * execution.
+  * execution. Each `key=value` argument is a runtime conf override: every
+  * rep then runs a base pass and an override pass in the same JVM
+  * ([[passes]]), so host drift hits both arms alike.
   *
-  * usage: runMain graft.tools.Census <sfDir> <q1,q2,...|ALL> [reps]
+  * usage: runMain graft.tools.Census <sfDir> <q1,q2,...|ALL> [reps] [key=value ...]
   */
 object Census {
 
@@ -210,26 +212,74 @@ object Census {
     }
   }
 
-  def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: graft.tools.Census <sfDir> <q1,q2,...|ALL> [reps]")
-    val sfDir = args(0)
-    val names = if (args(1) == "ALL") SparkEntry.queries.keys.toSeq.sorted else args(1).split(",").toSeq
-    val reps = if (args.length > 2) args(2).toInt else 3
-    val spark = Spark.session(appName = "graft-census")
-    def pass(name: String): Double = {
+  /** Heap pools, whose peaks each pass reports: local-mode executors
+    * share the driver's JVM, so they bound the tasks' buffers too. */
+  private lazy val heapPools = {
+    import scala.jdk.CollectionConverters._
+    java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala.toSeq
+      .filter(_.getType == java.lang.management.MemoryType.HEAP)
+  }
+
+  /** Runs each query once to warm up (JIT, parquet footers, materialized
+    * artifacts), then `reps` measured passes through a `noop` write, and
+    * hands `emit` one JSON line per SQL execution. With `overrides`, each
+    * rep is a base pass (arm `base`: the session's own values, a key it
+    * never set unset) and then an override pass (arm `override`: every
+    * override set); the session conf is as before once this returns.
+    * Each line carries its arm and the pass's peak of every heap pool in
+    * MiB, pool by pool: pools peak at different instants, so their peaks
+    * do not sum. */
+  def passes(spark: SparkSession, queries: Seq[(String, () => DataFrame)], reps: Int,
+             overrides: Seq[(String, String)])(emit: String => Unit): Unit = {
+    val before = spark.conf.getAll
+    def arm(on: Boolean): Unit = overrides.foreach { case (k, v) =>
+      if (on) spark.conf.set(k, v)
+      else before.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
+    def pass(query: () => DataFrame): Double = {
       val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
+      query().write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e6
     }
-    for (name <- names) {
-      pass(name) // warm-up: JIT, parquet footers, materialized artifacts
-      for (rep <- 1 to reps) {
-        var passMs = 0.0
-        measure(spark) { passMs = pass(name) }.foreach { e =>
-          println(e.toJson("query" -> name, "pass" -> rep, "passMs" -> ms(passMs)))
+    val arms = if (overrides.isEmpty) Seq("base" -> false) else Seq("base" -> false, "override" -> true)
+    try {
+      for ((name, query) <- queries) {
+        arm(on = false)
+        pass(query)
+        for (rep <- 1 to reps; (armName, on) <- arms) {
+          arm(on)
+          heapPools.foreach(_.resetPeakUsage())
+          var passMs = 0.0
+          val execs = measure(spark) { passMs = pass(query) }
+          val peakMb = obj(heapPools.map(p => p.getName -> p.getPeakUsage.getUsed / (1024 * 1024)))
+          execs.foreach { e =>
+            emit(e.toJson("query" -> name, "arm" -> armName, "pass" -> rep, "passMs" -> ms(passMs),
+              "peakHeapMb" -> peakMb))
+          }
         }
       }
+    } finally arm(on = false)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val usage = "usage: graft.tools.Census <sfDir> <q1,q2,...|ALL> [reps] [key=value ...]"
+    require(args.length >= 2, usage)
+    val sfDir = args(0)
+    val queries = SparkEntry.queries
+    val names = if (args(1) == "ALL") queries.keys.toSeq.sorted else args(1).split(",").toSeq
+    val (reps, settings) = args.drop(2).toSeq match {
+      case r +: kvs if !r.contains('=') => (r.toInt, kvs)
+      case kvs => (3, kvs)
     }
+    val overrides = settings.map { kv =>
+      val i = kv.indexOf('=')
+      require(i > 0, s"not key=value: '$kv'; $usage")
+      kv.take(i) -> kv.drop(i + 1)
+    }
+    val unknown = names.filterNot(queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
+    val spark = Spark.session(appName = "graft-census")
+    passes(spark, names.map(n => n -> (() => queries(n)(spark, sfDir))), reps, overrides)(println)
     spark.stop()
   }
 }

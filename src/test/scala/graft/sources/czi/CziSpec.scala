@@ -340,6 +340,13 @@ class CziSpec extends AnyFunSuite {
     assert(e.getMessage.contains("jx.transcoded.czi") &&
       e.getMessage.contains("czicompress"), e.getMessage)
 
+    // a scan that bypasses planning fails in the decode, naming JPEG-XR
+    val (jvol, jidx) = CziSource.volume(path, "jx", Array(nz, n, n))
+    val eScan = intercept[Exception] { CziSource.scan(spark, path, jvol, jidx).collect() }
+    val decodeFailure = Iterator.iterate[Throwable](eScan)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case u: UnsupportedOperationException => u }
+    assert(decodeFailure.exists(_.getMessage.contains("JPEG-XR")), eScan)
+
     // a shape-mismatched sidecar is rejected, not silently trusted
     val sidecar = s"$dir/jx.transcoded.czi"
     SyntheticCzi.writeTiles(sidecar, Seq(SyntheticCzi.Tile(

@@ -117,4 +117,26 @@ class CensusSpec extends AnyFunSuite {
     assert(json.get("scans").get(0).asText == "ids.parquet", json)
     assert(json.get("nodes").get("ShuffleExchange").asInt == 1, json)
   }
+
+  test("passes runs a base then an override arm per rep and leaves the session conf as it was") {
+    // one key the session set (Spark.session sets the shuffle partitions),
+    // one it never set (a registered key still at its default)
+    assert(spark.conf.getAll.get("spark.sql.shuffle.partitions").contains("2"))
+    assert(spark.conf.getAll.get("spark.sql.files.maxPartitionBytes").isEmpty)
+    for (key <- Seq("spark.sql.shuffle.partitions", "spark.sql.files.maxPartitionBytes")) {
+      val before = spark.conf.getAll
+      val seen = Seq.newBuilder[Option[String]]
+      val query = () => { seen += spark.conf.getAll.get(key); spark.range(0, 10).toDF("id") }
+      val lines = Seq.newBuilder[String]
+      Census.passes(spark, Seq("tiny" -> query), reps = 1, overrides = Seq(key -> "7"))(lines += _)
+      val json = lines.result().map(new ObjectMapper().readTree(_))
+      assert(json.map(_.get("arm").asText) == Seq("base", "override"), json)
+      assert(json.forall(j => j.get("funcName").asText == "overwrite" && j.get("pass").asInt == 1), json)
+      assert(json.forall(_.get("peakHeapMb").size > 0), json)
+      // warm-up and base pass see the session's own value, the override pass 7
+      assert(seen.result() == Seq(before.get(key), before.get(key), Some("7")), key)
+      val after = spark.conf.getAll
+      assert(after == before, (key, after.toSet diff before.toSet, before.toSet diff after.toSet))
+    }
+  }
 }

@@ -1,8 +1,8 @@
 package graft.tools
 
 /** Dev: generate (or reuse) the k-disjoint-copy scaled corpus WITHOUT
-  * running any rehearsal queries — lets the main-classpath dev tools
-  * (Census, ProbeConf) point at a 10x/100x corpus.
+  * running any rehearsal queries — lets the main-classpath dev tool
+  * (Census) point at a 10x/100x corpus.
   *
   * usage: Test/runMain graft.tools.GenScaledCorpus <sfDir> <outDir> <k>
   */
