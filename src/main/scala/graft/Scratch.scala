@@ -70,16 +70,12 @@ object Scratch {
   private def dirCreate(tag: String): String =
     dirs.computeIfAbsent(tag, t => persistentRoot match {
       case Some(root) if root.contains("://") =>
-        // scheme-qualified root: resolve through the ACTIVE session's
-        // Hadoop conf (where fs.<scheme>.impl registrations and object-
-        // store credentials live — a fresh Configuration would drop the
+        // scheme-qualified root: resolve through the session's Hadoop
+        // conf (where fs.<scheme>.impl registrations and object-store
+        // credentials live — a fresh Configuration would drop the
         // spark.hadoop.* overlays, the MockSchemeFsSpec bug class)
-        val conf = org.apache.spark.sql.SparkSession.getActiveSession
-          .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-          .map(_.sparkContext.hadoopConfiguration)
-          .getOrElse(new org.apache.hadoop.conf.Configuration())
         val p = new org.apache.hadoop.fs.Path(root, s"graft-$t")
-        p.getFileSystem(conf).mkdirs(p)
+        p.getFileSystem(graft.core.HadoopConf.get).mkdirs(p)
         p.toString
       case Some(root) =>
         val p = Paths.get(root, s"graft-$t")

@@ -17,10 +17,13 @@ import org.apache.hadoop.conf.Configuration
   */
 object HadoopConf {
 
-  /** Active session's hadoopConfiguration (with `spark.hadoop.*`
-    * overlays applied), or classpath defaults off-session. */
+  /** The active session's hadoopConfiguration (with `spark.hadoop.*`
+    * overlays applied), else the default session's (a thread that never
+    * saw the session, or cleared it), else classpath defaults when no
+    * session exists. */
   def get: Configuration =
     org.apache.spark.sql.SparkSession.getActiveSession
+      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
       .map(_.sparkContext.hadoopConfiguration)
       .getOrElse(new Configuration())
 

@@ -4,7 +4,6 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
@@ -148,7 +147,6 @@ class ZarrPartitionReader(root: String, stack: String, level: Int,
 
   private lazy val fs =
     new Path(root).getFileSystem(graft.core.HadoopConf.restore(hconf))
-  private val needData = cols.contains("data")
   private var cur = first - 1
   private var row: InternalRow = _
 

@@ -55,6 +55,17 @@ object ArrayOps {
     }.toDF("level", "z", "y", "x", "v")
   }
 
+  /** Sum of the little-endian u16 pixels in `data`, read in place. */
+  private def u16Sum(data: Array[Byte]): Long = {
+    var sum = 0L
+    var i = 0
+    while (i + 1 < data.length) {
+      sum += (data(i) & 0xFF) | ((data(i + 1) & 0xFF) << 8)
+      i += 2
+    }
+    sum
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "z1_pyramid_mean" -> ((s, _) => {
       val l0 = SyntheticStack.generate(s, pyramidVol)
@@ -72,13 +83,7 @@ object ArrayOps {
       l0.toDF().write.format("zarr").option("path", dir).mode("append").save()
       s.read.format("zarr").option("path", dir).option("stack", "rt").load()
         .as[ZarrChunk]
-        .map { ck =>
-          val px = ck.pixels
-          var sum = 0L
-          var i = 0
-          while (i < px.length) { sum += px(i); i += 1 }
-          (ck.z.toLong, ck.y.toLong, ck.x.toLong, sum, px.length.toLong)
-        }
+        .map(ck => (ck.z.toLong, ck.y.toLong, ck.x.toLong, u16Sum(ck.data), ck.data.length / 2L))
         .toDF("cz", "cy", "cx", "sum_v", "n_voxels")
         .orderBy(col("cz"), col("cy"), col("cx"))
     }),
@@ -97,11 +102,7 @@ object ArrayOps {
         .select(col("z"), col("y"), col("x"), col("data"))
         .as[(Int, Int, Int, Array[Byte])]
         .map { case (z, y, x, data) =>
-          val px = graft.core.PixelCodec.toInts(data)
-          var sum = 0L
-          var i = 0
-          while (i < px.length) { sum += px(i); i += 1 }
-          (z.toLong, y.toLong, x.toLong, sum, px.length.toLong)
+          (z.toLong, y.toLong, x.toLong, u16Sum(data), data.length / 2L)
         }
         .toDF("cz", "cy", "cx", "sum_v", "n_voxels")
         .orderBy(col("cz"), col("cy"), col("cx"))
@@ -178,13 +179,8 @@ object ArrayOps {
       graft.sources.czi.SyntheticCzi.writeChannels(path, chans)
       val (vol, idx) = graft.sources.czi.CziSource.volume(path, "mc", Array(8, 16, 16))
       graft.sources.czi.CziSource.scan(s, path, vol, idx)
-        .map { ck =>
-          val px = ck.pixels
-          var sum = 0L
-          var i = 0
-          while (i < px.length) { sum += px(i); i += 1 }
-          (ck.c.toLong, ck.z.toLong, ck.y.toLong, ck.x.toLong, sum, px.length.toLong)
-        }
+        .map(ck => (ck.c.toLong, ck.z.toLong, ck.y.toLong, ck.x.toLong,
+          u16Sum(ck.data), ck.data.length / 2L))
         .toDF("cc", "cz", "cy", "cx", "sum_v", "n_voxels")
         .orderBy(col("cc"), col("cz"), col("cy"), col("cx"))
     }),
@@ -209,11 +205,7 @@ object ArrayOps {
         .select(col("c"), col("z"), col("y"), col("x"), col("data"))
         .as[(Int, Int, Int, Int, Array[Byte])]
         .map { case (c, z, y, x, data) =>
-          val px = graft.core.PixelCodec.toInts(data)
-          var sum = 0L
-          var i = 0
-          while (i < px.length) { sum += px(i); i += 1 }
-          (c.toLong, z.toLong, y.toLong, x.toLong, sum, px.length.toLong)
+          (c.toLong, z.toLong, y.toLong, x.toLong, u16Sum(data), data.length / 2L)
         }
         .toDF("cc", "cz", "cy", "cx", "sum_v", "n_voxels")
         .orderBy(col("cc"), col("cz"), col("cy"), col("cx"))
@@ -239,11 +231,7 @@ object ArrayOps {
         .select(col("z"), col("y"), col("x"), col("data"))
         .as[(Int, Int, Int, Array[Byte])]
         .map { case (z, y, x, data) =>
-          val px = graft.core.PixelCodec.toInts(data)
-          var sum = 0L
-          var i = 0
-          while (i < px.length) { sum += px(i); i += 1 }
-          (z.toLong, y.toLong, x.toLong, sum, px.length.toLong)
+          (z.toLong, y.toLong, x.toLong, u16Sum(data), data.length / 2L)
         }
         .toDF("cz", "cy", "cx", "sum_v", "n_voxels")
         .orderBy(col("cz"), col("cy"), col("cx"))
@@ -308,13 +296,7 @@ object ArrayOps {
       graft.sources.czi.SyntheticCzi.write(path, data)
       val (vol, idx) = graft.sources.czi.CziSource.volume(path, "q", Array(8, 16, 16))
       graft.sources.czi.CziSource.scan(s, path, vol, idx)
-        .map { ck =>
-          val px = ck.pixels
-          var sum = 0L
-          var i = 0
-          while (i < px.length) { sum += px(i); i += 1 }
-          (ck.z.toLong, ck.y.toLong, ck.x.toLong, sum, px.length.toLong)
-        }
+        .map(ck => (ck.z.toLong, ck.y.toLong, ck.x.toLong, u16Sum(ck.data), ck.data.length / 2L))
         .toDF("cz", "cy", "cx", "sum_v", "n_voxels")
         .orderBy(col("cz"), col("cy"), col("cx"))
     }),
@@ -351,11 +333,7 @@ object ArrayOps {
         .select(col("z"), col("y"), col("x"), col("data"))
         .as[(Int, Int, Int, Array[Byte])]
         .map { case (z, y, x, data) =>
-          val px = graft.core.PixelCodec.toInts(data)
-          var sum = 0L
-          var i = 0
-          while (i < px.length) { sum += px(i); i += 1 }
-          (z.toLong, y.toLong, x.toLong, sum, px.length.toLong)
+          (z.toLong, y.toLong, x.toLong, u16Sum(data), data.length / 2L)
         }
         .toDF("cz", "cy", "cx", "sum_v", "n_voxels")
         .orderBy(col("cz"), col("cy"), col("cx"))
@@ -372,13 +350,7 @@ object ArrayOps {
       val vol = Volume("rq", 0, Array(1L, 1L, 24L, 40L, 40L), Array(1, 1, 8, 16, 16))
       val l0 = SyntheticStack.generate(s, vol)
       graft.operators.Rechunk(l0, vol, Array(12, 20, 8))
-        .map { ck =>
-          val px = ck.pixels
-          var sum = 0L
-          var i = 0
-          while (i < px.length) { sum += px(i); i += 1 }
-          (ck.z.toLong, ck.y.toLong, ck.x.toLong, sum, px.length.toLong)
-        }
+        .map(ck => (ck.z.toLong, ck.y.toLong, ck.x.toLong, u16Sum(ck.data), ck.data.length / 2L))
         .toDF("cz", "cy", "cx", "sum_v", "n_voxels")
         .orderBy(col("cz"), col("cy"), col("cx"))
     }),
@@ -449,11 +421,7 @@ object ArrayOps {
         .select(col("z"), col("y"), col("x"), col("data"))
         .as[(Int, Int, Int, Array[Byte])]
         .map { case (z, y, x, data) =>
-          val px = graft.core.PixelCodec.toInts(data)
-          var sum = 0L
-          var i = 0
-          while (i < px.length) { sum += px(i); i += 1 }
-          (z.toLong, y.toLong, x.toLong, sum, px.length.toLong)
+          (z.toLong, y.toLong, x.toLong, u16Sum(data), data.length / 2L)
         }
         .toDF("cz", "cy", "cx", "sum_v", "n_voxels")
         .orderBy(col("cz"), col("cy"), col("cx"))

@@ -73,6 +73,20 @@ class MockSchemeFsSpec extends AnyFunSuite {
       .load().count() == 8)
   }
 
+  test("HadoopConf.get keeps the session's overlays on a thread with no active session") {
+    spark.sparkContext
+    // the active session is an inheritable thread-local, so the probe
+    // thread clears its own copy first; the default session remains
+    var seen: Option[String] = None
+    val t = new Thread(() => {
+      org.apache.spark.sql.SparkSession.clearActiveSession()
+      assert(org.apache.spark.sql.SparkSession.getActiveSession.isEmpty)
+      seen = Option(graft.core.HadoopConf.get.get("fs.mock.impl"))
+    })
+    t.start(); t.join()
+    assert(seen.contains(classOf[MockSchemeFs].getName), seen)
+  }
+
   test("CZI scan reads subblocks through a non-default scheme") {
     spark.sparkContext // force session init: mock:// resolves via ITS conf
     val dir = Files.createTempDirectory("czi-mockfs")
