@@ -133,17 +133,13 @@ final case class ZarrReaderFactory(root: String, stack: String, level: Int,
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[GridRange]
-    new ZarrPartitionReader(root, stack, level, shape, chunk, compressed, itemSize,
-      base, ext, cols, p.first, p.last, hconf)
+    new ZarrPartitionReader(this, p.first, p.last)
   }
 }
 
-class ZarrPartitionReader(root: String, stack: String, level: Int,
-                          shape: Array[Long], chunk: Array[Int], compressed: Boolean,
-                          itemSize: Int, base: Array[Long], ext: Array[Long],
-                          cols: Array[String], first: Long, last: Long,
-                          hconf: Array[(String, String)])
+class ZarrPartitionReader(f: ZarrReaderFactory, first: Long, last: Long)
     extends PartitionReader[InternalRow] {
+  import f._
 
   private lazy val fs =
     new Path(root).getFileSystem(graft.core.HadoopConf.restore(hconf))

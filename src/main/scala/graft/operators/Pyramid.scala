@@ -1,8 +1,11 @@
 package graft.operators
 
+import java.lang.invoke.MethodHandles
+import java.nio.ByteOrder
+
 import org.apache.spark.sql.{Dataset, SparkSession}
 
-import graft.core.{PixelCodec, Volume, ZarrChunk}
+import graft.core.{PixelDtype, Volume, ZarrChunk}
 
 /** Windowed-mean image pyramid (reference operator A1,
   * `czi_to_zarr.py:410-454` / xarray_multiscale windowed_mean).
@@ -25,29 +28,34 @@ import graft.core.{PixelCodec, Volume, ZarrChunk}
   *     chunk/factor config in rounds of this one fused body.
   *
   * Dtype preservation (`preserve_dtype=True`, `czi_to_zarr.py:450`):
-  * the kernel ([[downsampleBytes]]) reads and writes each chunk's
-  * little-endian bytes in the chunk's own dtype. For u8/u16, means
-  * accumulate masked pixels in Long and truncate back via integer floor
-  * division — exact, and identical to numpy's float64-mean + astype for
+  * the one kernel, [[downsampleBytes]], reads and writes each chunk's
+  * little-endian bytes in the chunk's own dtype, u8, u16 or f32, with
+  * one window loop and no widened copy. For u8/u16, means accumulate
+  * masked pixels in Long and truncate back via integer floor division —
+  * exact, and identical to numpy's float64-mean + astype for
   * power-of-two window populations (every population is a product of
   * values in {1..factor}, so for factor 2 it is always a power of two);
   * JVM signed Byte/Short never touches the math (SURVEY.md §7.5 #2).
-  * For f32, means accumulate in Double and cast back to Float.
+  * For f32, each float is read in place and summed in Double in z, y, x
+  * order; the mean is cast to Float and written as its raw bits.
   */
 object Pyramid {
 
-  /** Downsample one chunk of unsigned LE pixels (`itemSize` 1 or 2
-    * bytes) by `factorZyx` with windowed mean, straight from and to its
-    * bytes. Returns (bytes, shape) of the piece; pure function
-    * (unit-tested against analytic means, FIXTURES.md §1.5). It works
-    * on the bytes because an Int copy of a 128^3 u16 chunk is 8 MiB: a
-    * humongous G1 allocation per chunk, whose churn can keep G1 marking
-    * concurrently for the rest of a conversion. */
-  def downsampleUnsigned(data: Array[Byte], shape: Array[Int], factorZyx: Array[Int],
-                         itemSize: Int): (Array[Byte], Array[Int]) = {
+  /** Reads a little-endian float in place: `F32LE.get(bytes, offset)`. */
+  private val F32LE = MethodHandles.byteArrayViewVarHandle(classOf[Array[Float]], ByteOrder.LITTLE_ENDIAN)
+
+  /** Downsample one chunk of little-endian `dtype` pixels by
+    * `factorZyx` with windowed mean, straight from and to its bytes.
+    * Returns (bytes, shape) of the piece; pure function (unit-tested
+    * against analytic means, FIXTURES.md §1.5). It works on the bytes
+    * because a widened copy of a 128^3 chunk is 8 MiB: a humongous G1
+    * allocation per chunk, whose churn can keep G1 marking concurrently
+    * for the rest of a conversion. */
+  def downsampleBytes(data: Array[Byte], shape: Array[Int], factorZyx: Array[Int],
+                      dtype: PixelDtype): (Array[Byte], Array[Int]) = {
     require(shape(0) == 1 && shape(1) == 1,
       "t/c must be singleton (reference assumes 1 channel per stack, utils.py:355)")
-    require(itemSize == 1 || itemSize == 2, s"unsigned pixels are 1 or 2 bytes, got $itemSize")
+    val itemSize = dtype.itemSize
     val (fz, fy, fx) = (factorZyx(0), factorZyx(1), factorZyx(2))
     val (sz, sy, sx) = (shape(2), shape(3), shape(4))
     val oz = ((sz + fz - 1) / fz)
@@ -68,6 +76,7 @@ object Pyramid {
           val x1 = xo * fx
           val x2 = math.min(x1 + fx, sx)
           var sum = 0L
+          var fsum = 0.0
           var z = z1
           while (z < z2) {
             var y = y1
@@ -80,17 +89,26 @@ object Pyramid {
                 sum += (data(i) & 0xFF) | ((data(i + 1) & 0xFF) << 8)
                 i += 2
               }
-              else while (i < end) {
+              else if (itemSize == 1) while (i < end) {
                 sum += data(i) & 0xFF
                 i += 1
+              }
+              else while (i < end) {
+                fsum += (F32LE.get(data, i): Float)
+                i += 4
               }
               y += 1
             }
             z += 1
           }
-          val v = (sum / ((z2 - z1) * (y2 - y1) * (x2 - x1))).toInt
+          val n = (z2 - z1) * (y2 - y1) * (x2 - x1)
+          val v = if (itemSize == 4) java.lang.Float.floatToRawIntBits((fsum / n).toFloat) else (sum / n).toInt
           out(o) = v.toByte
-          if (itemSize == 2) out(o + 1) = (v >>> 8).toByte
+          if (itemSize >= 2) out(o + 1) = (v >>> 8).toByte
+          if (itemSize == 4) {
+            out(o + 2) = (v >>> 16).toByte
+            out(o + 3) = (v >>> 24).toByte
+          }
           o += itemSize
           xo += 1
         }
@@ -99,60 +117,6 @@ object Pyramid {
       zo += 1
     }
     (out, Array(shape(0), shape(1), oz, oy, ox))
-  }
-
-  /** Float32 kernel: double accumulation, cast back to float
-    * (numpy windowed_mean + astype(float32) semantics). */
-  def downsampleChunkF32(pixels: Array[Float], shape: Array[Int], factorZyx: Array[Int]): (Array[Float], Array[Int]) = {
-    require(shape(0) == 1 && shape(1) == 1, "t/c must be singleton")
-    val (fz, fy, fx) = (factorZyx(0), factorZyx(1), factorZyx(2))
-    val (sz, sy, sx) = (shape(2), shape(3), shape(4))
-    val oz = (sz + fz - 1) / fz
-    val oy = (sy + fy - 1) / fy
-    val ox = (sx + fx - 1) / fx
-    val out = new Array[Float](oz * oy * ox)
-    var zo = 0
-    while (zo < oz) {
-      var yo = 0
-      while (yo < oy) {
-        var xo = 0
-        while (xo < ox) {
-          var sum = 0.0
-          var n = 0
-          var z = zo * fz
-          while (z < math.min(zo * fz + fz, sz)) {
-            var y = yo * fy
-            while (y < math.min(yo * fy + fy, sy)) {
-              var x = xo * fx
-              while (x < math.min(xo * fx + fx, sx)) {
-                sum += pixels(z * sy * sx + y * sx + x)
-                n += 1
-                x += 1
-              }
-              y += 1
-            }
-            z += 1
-          }
-          out(zo * oy * ox + yo * ox + xo) = (sum / n).toFloat
-          xo += 1
-        }
-        yo += 1
-      }
-      zo += 1
-    }
-    (out, Array(shape(0), shape(1), oz, oy, ox))
-  }
-
-  /** Dtype-dispatching byte-level kernel. */
-  def downsampleBytes(data: Array[Byte], shape: Array[Int], factorZyx: Array[Int],
-                      dtype: graft.core.PixelDtype): (Array[Byte], Array[Int]) = {
-    import graft.core.PixelDtype._
-    dtype match {
-      case F32 =>
-        val (px, ps) = downsampleChunkF32(PixelCodec.f32ToFloats(data), shape, factorZyx)
-        (PixelCodec.f32ToBytes(px), ps)
-      case d => downsampleUnsigned(data, shape, factorZyx, d.itemSize)
-    }
   }
 
   /** The pyramid: levels 1..n-1 of `level0` as one chunk Dataset, plus
@@ -231,7 +195,7 @@ object Pyramid {
         val (b, ps) = downsampleBytes(data, shape, factorZyx, dtype)
         data = b; shape = ps
         (0 until 3).foreach(a => at(a) /= factorZyx(a))
-        Regrid.cut(lvl, ck.t, ck.c, 0L, b, at.clone(), ps.drop(2), chunk.drop(2), dtype.itemSize)
+        Regrid.cut(lvl, ck.t, ck.c, b, at.clone(), ps.drop(2), chunk.drop(2), dtype.itemSize)
       }
     }
     (outs.tail, Regrid.assemble(pieces, outs))

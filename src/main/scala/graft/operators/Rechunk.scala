@@ -31,7 +31,7 @@ object Rechunk {
     val isz = vol.dtype.itemSize
     val pieces = ds.flatMap { ck =>
       val at = Array(ck.z.toLong * oldCk(2), ck.y.toLong * oldCk(3), ck.x.toLong * oldCk(4))
-      Regrid.cut(0, ck.t, ck.c, 0L, ck.data, at, ck.shape.drop(2), newZyx, isz)
+      Regrid.cut(0, ck.t, ck.c, ck.data, at, ck.shape.drop(2), newZyx, isz)
     }
     Regrid.assemble(pieces, Seq(newVolume(vol, newZyx)))
   }

@@ -10,15 +10,18 @@ import graft.core.{ChunkGrid, Volume, ZarrChunk}
   * ([[graft.sources.czi.CziSource.slabChunks]], [[copyBox]] alone), and
   * the cut and one-exchange assembly of [[Rechunk]] and the [[Pyramid]]
   * — so the piece layout and the strided-index arithmetic live in one
-  * place. Buffers are dtype-agnostic bytes, C order (x fastest).
+  * place. Buffers are dtype-agnostic bytes, C order (x fastest). The
+  * pieces of one chunk never overlap: the pyramid's come from disjoint
+  * input chunks, [[Rechunk]]'s from disjoint source chunks, and mosaic
+  * overlap is settled inside the CZI scan, in directory order.
   */
 object Regrid {
 
   /** One box of voxels bound for one target chunk: `out` indexes
     * [[assemble]]'s `outs`, `t..x` are the chunk's grid coordinates,
     * `oz/oy/ox` the box's offset inside it, `nz/ny/nx` its extent and
-    * `data` its voxels. Where pieces overlap, the highest `seq` wins. */
-  final case class Piece(out: Int, t: Int, c: Int, z: Int, y: Int, x: Int, seq: Long,
+    * `data` its voxels. The pieces of one chunk never overlap. */
+  final case class Piece(out: Int, t: Int, c: Int, z: Int, y: Int, x: Int,
                          oz: Int, oy: Int, ox: Int, nz: Int, ny: Int, nx: Int,
                          data: Array[Byte])
 
@@ -47,7 +50,7 @@ object Regrid {
   /** Splits the box of `dims` voxels at global voxel origin `at` into
     * one piece per chunk of the `chunk` grid (z/y/x) it overlaps. A box
     * inside a single chunk passes `data` through uncopied. */
-  def cut(out: Int, t: Int, c: Int, seq: Long, data: Array[Byte],
+  def cut(out: Int, t: Int, c: Int, data: Array[Byte],
           at: Array[Long], dims: Array[Int], chunk: Array[Int], itemSize: Int): Iterator[Piece] = {
     def span(a: Int) = (at(a) / chunk(a)).toInt to ((at(a) + dims(a) - 1) / chunk(a)).toInt
     for {
@@ -65,7 +68,7 @@ object Regrid {
           copyBox(data, dims, Array.tabulate(3)(a => (lo(a) - at(a)).toInt), b, n, Array(0, 0, 0), n, itemSize)
           b
         }
-      Piece(out, t, c, gz, gy, gx, seq,
+      Piece(out, t, c, gz, gy, gx,
         (lo(0) - gz.toLong * chunk(0)).toInt, (lo(1) - gy.toLong * chunk(1)).toInt,
         (lo(2) - gx.toLong * chunk(2)).toInt, n(0), n(1), n(2), bytes)
     }
@@ -73,8 +76,7 @@ object Regrid {
 
   /** Assembles `pieces` into chunks with one exchange: each target chunk
     * of `outs(out)` is zero-filled at its clamped shape, then its pieces
-    * are copied in ascending `seq` order. The order comes from the
-    * grouping sort itself, so no group is buffered. */
+    * are copied in as they arrive, in any order; no group is buffered. */
   def assemble(pieces: Dataset[Piece], outs: Seq[Volume]): Dataset[ZarrChunk] = {
     import pieces.sparkSession.implicits._
     val vols = outs.toArray
@@ -82,7 +84,7 @@ object Regrid {
       // Long coordinates (ChunkGrid's type): the key's types set its hash,
       // so which reducer and which coalesced task assembles each chunk
       .groupByKey(p => (p.out, p.t, p.c, p.z.toLong, p.y.toLong, p.x.toLong))
-      .flatMapSortedGroups($"seq") { (key, it) =>
+      .flatMapGroups { (key, it) =>
         val (o, t, c, z, y, x) = key
         val v = vols(o)
         val isz = v.dtype.itemSize

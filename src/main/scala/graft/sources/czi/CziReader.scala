@@ -76,16 +76,8 @@ object CziReader {
     try {
       val (id, _, _) = segmentHeader(in, 0L)
       require(id == IdFile, s"not a CZI file (first segment '$id')")
-      val header = le(readFully(in, SegmentHeaderSize, 64))
-      header.position(16 + 16 + 16) // Major, Minor, 2x reserved -> 16; 2 GUIDs -> 32; FilePart int32 at 48
-      // layout: int32 Major, int32 Minor, int32 Res1, int32 Res2,
-      //         GUID Primary (16), GUID File (16), int32 FilePart,
-      //         int64 DirectoryPosition, ...
-      header.position(0)
-      header.getInt; header.getInt; header.getInt; header.getInt
-      header.position(header.position() + 32)
-      header.getInt // FilePart
-      val dirPos = header.getLong
+      // int32 Major, Minor, Res1, Res2 (16), 2 GUIDs (32), int32 FilePart, int64 DirectoryPosition
+      val dirPos = le(readFully(in, SegmentHeaderSize, 64)).getLong(52)
 
       val (dirId, _, dirUsed) = segmentHeader(in, dirPos)
       require(dirId == IdDirectory, s"expected directory at $dirPos, got '$dirId'")

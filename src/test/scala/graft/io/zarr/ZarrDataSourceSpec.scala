@@ -445,9 +445,10 @@ class ZarrDataSourceSpec extends AnyFunSuite {
     for ((bytes, why) <- Seq(huge -> "header nbytes=2147483647, expected 1024",
                              new Array[Byte](1041) -> "1041 bytes, at most 1040 expected")) {
       Files.write(chunk, bytes)
-      val reader = new ZarrPartitionReader(dir, "hz", 0, vol.shape, vol.chunk, compressed = true,
-        itemSize = 2, base = Array.fill(5)(0L), ext = Array.fill(5)(1L), cols = Array("data"),
-        first = 0L, last = 0L, hconf = graft.core.HadoopConf.snapshot(new org.apache.hadoop.conf.Configuration()))
+      val reader = new ZarrPartitionReader(ZarrReaderFactory(dir, "hz", 0, vol.shape, vol.chunk,
+        compressed = true, itemSize = 2, base = Array.fill(5)(0L), ext = Array.fill(5)(1L),
+        cols = Array("data"), hconf = graft.core.HadoopConf.snapshot(new org.apache.hadoop.conf.Configuration())),
+        first = 0L, last = 0L)
       val e = intercept[IllegalStateException](reader.next())
       assert(e.getMessage.startsWith(s"corrupt zarr chunk at $dir/hz/0/0/0/0/0/0: ") &&
         e.getMessage.contains(why), e.getMessage)

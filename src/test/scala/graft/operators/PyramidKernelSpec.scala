@@ -2,7 +2,7 @@ package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.PixelCodec
+import graft.core.{PixelCodec, PixelDtype}
 
 /** Pure-kernel tests of the windowed mean against analytic values
   * (FIXTURES.md §1.5 — golden coverage the reference lacks). */
@@ -15,9 +15,9 @@ class PyramidKernelSpec extends AnyFunSuite {
     (px, Array(1, 1, sz, sy, sx))
   }
 
-  /** The u16 kernel on `px`, decoded back to Ints. */
+  /** The kernel on `px` as u16, decoded back to Ints. */
   private def down(px: Array[Int], shape: Array[Int], f: Array[Int]): (Array[Int], Array[Int]) = {
-    val (out, os) = Pyramid.downsampleUnsigned(PixelCodec.toBytes(px), shape, f, 2)
+    val (out, os) = Pyramid.downsampleBytes(PixelCodec.toBytes(px), shape, f, PixelDtype.U16)
     (PixelCodec.toInts(out), os)
   }
 
@@ -69,13 +69,13 @@ class PyramidKernelSpec extends AnyFunSuite {
 
   test("float32 kernel: double-accumulated mean cast to float") {
     val px = Array.tabulate(8)(i => i * 0.25f) // 2x2x2
-    val (out, os) = Pyramid.downsampleChunkF32(px, Array(1, 1, 2, 2, 2), Array(2, 2, 2))
+    val (out, os) = Pyramid.downsampleBytes(PixelCodec.f32ToBytes(px), Array(1, 1, 2, 2, 2),
+      Array(2, 2, 2), PixelDtype.F32)
     assert(os.toSeq == Seq(1, 1, 1, 1, 1))
-    assert(out(0) == ((0 until 8).map(_ * 0.25).sum / 8).toFloat)
+    assert(PixelCodec.f32ToFloats(out)(0) == ((0 until 8).map(_ * 0.25).sum / 8).toFloat)
   }
 
-  test("byte-level dispatch kernel matches per-dtype kernels") {
-    import graft.core.{PixelCodec, PixelDtype}
+  test("u8, u16 and f32 bytes give each dtype's mean") {
     val ints = Array.tabulate(8)(i => i * 30)
     val (bU8, _) = Pyramid.downsampleBytes(PixelCodec.u8ToBytes(ints), Array(1, 1, 2, 2, 2),
       Array(2, 2, 2), PixelDtype.U8)

@@ -8,29 +8,34 @@ import graft.Spark
 import graft.core.{ChunkGrid, PixelDtype, Volume}
 
 /** [[Regrid.cut]] + [[Regrid.assemble]] against a per-voxel reference:
-  * random boxes written into a dense array in `seq` order (later boxes
-  * overwrite earlier ones) must read back chunk for chunk, for any
-  * chunk shape, odd array edges and item sizes 1, 2 and 4 — with the
-  * pieces spread over several partitions in reverse `seq` order, so
-  * only the assembly's own ordering can make the highest `seq` win. */
+  * random disjoint boxes (a random split of the array, with some boxes
+  * dropped) written into a dense array must read back chunk for chunk,
+  * for any chunk shape, odd array edges and item sizes 1, 2 and 4 —
+  * with the pieces spread over several partitions in shuffled order. */
 class RegridSpec extends AnyFunSuite {
   import RegridSpec.Case
 
   private lazy val spark = Spark.session(master = "local[4]", shufflePartitions = 4,
     appName = "graft-regrid-test")
 
-  private def axis(len: Int): Gen[(Int, Int)] =
-    for (lo <- Gen.choose(0, len - 1); n <- Gen.choose(1, len - lo)) yield (lo, n)
+  /** [0, len) split at up to three random points into (origin, extent)
+    * runs. */
+  private def split(len: Int): Gen[Seq[(Int, Int)]] =
+    for (k <- Gen.choose(0, 3); cuts <- Gen.listOfN(k, Gen.choose(0, len - 1))) yield
+      (cuts.toSet + 0 + len).toSeq.sorted.sliding(2).map { case Seq(lo, hi) => (lo, hi - lo) }.toSeq
 
   private val cases: Gen[Case] = for {
     itemSize <- Gen.oneOf(1, 2, 4)
     shape <- Gen.listOfN(3, Gen.choose(1, 19))
     chunk <- Gen.listOfN(3, Gen.choose(1, 8))
-    n <- Gen.choose(1, 6)
-    boxes <- Gen.listOfN(n,
-      for (z <- axis(shape(0)); y <- axis(shape(1)); x <- axis(shape(2))) yield Seq(z, y, x))
+    zs <- split(shape(0))
+    ys <- split(shape(1))
+    xs <- split(shape(2))
+    all = for (z <- zs; y <- ys; x <- xs) yield (Seq(z._1, y._1, x._1), Seq(z._2, y._2, x._2))
+    n <- Gen.choose(1, all.size)
+    boxes <- Gen.pick(n, all)
     seed <- Gen.long
-  } yield Case(itemSize, shape, chunk, boxes.map(b => (b.map(_._1), b.map(_._2))), seed)
+  } yield Case(itemSize, shape, chunk, boxes.toSeq, seed)
 
   private def check(k: Case): Boolean = {
     import spark.implicits._
@@ -39,7 +44,7 @@ class RegridSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(k.seed)
     val datas = k.boxes.map { case (_, n) => Array.fill(n.product * isz)(rnd.nextInt(256).toByte) }
 
-    // reference: boxes written voxel by voxel in seq order
+    // reference: boxes written voxel by voxel
     val dense = new Array[Byte](sz * sy * sx * isz)
     k.boxes.zip(datas).foreach { case ((at, n), d) =>
       for (z <- 0 until n(0); y <- 0 until n(1); x <- 0 until n(2); b <- 0 until isz)
@@ -50,9 +55,9 @@ class RegridSpec extends AnyFunSuite {
     val dtype = Map(1 -> PixelDtype.U8, 2 -> PixelDtype.U16, 4 -> PixelDtype.F32)(isz)
     val vol = Volume("rg", 3, Array(1L, 1L, sz.toLong, sy.toLong, sx.toLong),
       Array(1, 1) ++ k.chunk, dtype)
-    val pieces = k.boxes.zip(datas).zipWithIndex.flatMap { case (((at, n), d), i) =>
-      Regrid.cut(0, 0, 0, i.toLong, d, at.map(_.toLong).toArray, n.toArray, k.chunk.toArray, isz)
-    }.sortBy(-_.seq)
+    val pieces = rnd.shuffle(k.boxes.zip(datas).flatMap { case ((at, n), d) =>
+      Regrid.cut(0, 0, 0, d, at.map(_.toLong).toArray, n.toArray, k.chunk.toArray, isz)
+    })
     val got = Regrid.assemble(spark.createDataset(spark.sparkContext.parallelize(pieces, 3)), Seq(vol))
       .collect()
 
@@ -68,7 +73,7 @@ class RegridSpec extends AnyFunSuite {
     }
   }
 
-  test("cut + assemble equals the per-voxel reference; the highest seq wins overlaps") {
+  test("cut + assemble of disjoint boxes equals the per-voxel reference") {
     val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(40),
       Prop.forAll(cases)(check))
     assert(res.passed, Pretty.pretty(res))
@@ -76,11 +81,11 @@ class RegridSpec extends AnyFunSuite {
 
   test("a box inside one chunk is passed through uncopied") {
     val data = Array.tabulate[Byte](2 * 3 * 4 * 2)(_.toByte)
-    val ps = Regrid.cut(1, 0, 2, 7L, data, Array(8L, 9L, 12L), Array(2, 3, 4), Array(4, 4, 8), 2).toSeq
+    val ps = Regrid.cut(1, 0, 2, data, Array(8L, 9L, 12L), Array(2, 3, 4), Array(4, 4, 8), 2).toSeq
     assert(ps.size == 1)
     val p = ps.head
     assert(p.data eq data)
-    assert(Seq(p.out, p.t, p.c, p.z, p.y, p.x, p.seq) == Seq(1, 0, 2, 2, 2, 1, 7L))
+    assert(Seq(p.out, p.t, p.c, p.z, p.y, p.x) == Seq(1, 0, 2, 2, 2, 1))
     assert(Seq(p.oz, p.oy, p.ox, p.nz, p.ny, p.nx) == Seq(0, 1, 4, 2, 3, 4))
   }
 }
