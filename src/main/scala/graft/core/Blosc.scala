@@ -36,6 +36,16 @@ import com.github.luben.zstd.{Zstd, ZstdCompressCtx}
   * fails the decode instead of yielding wrong voxels. Streams without it
   * decode as before. A memcpy frame (a chunk that does not compress) has
   * no checksum, so a flip there still decodes silently.
+  *
+  * Fast path, byte-identical to the plain loops (BloscSpec checks both
+  * against a strided reference loop): typesize 2 (u16, the reference's
+  * dtype) shuffles one byte lane per loop with a literal stride and
+  * unshuffles in one pass over the elements; other typesizes take the
+  * strided loop. [[encode]] leaves the frame in this thread's frame
+  * buffer, and `ZarrDataWriter.put` writes it from there, so a committed
+  * chunk costs no frame-sized copy; [[compress]] is [[encode]] plus one
+  * copy. A reader reads a chunk file into the same buffer
+  * ([[frameBuffer]]) and decodes it from (buffer, length).
   */
 object Blosc {
   private val Version: Byte = 2
@@ -72,15 +82,24 @@ object Blosc {
     }
     val nElems = n / typesize
     val tail = n - nElems * typesize
-    var j = 0
-    while (j < typesize) {
+    // typesize 2 gathers each byte lane in its own loop with a literal
+    // stride, which the JIT unrolls; a variable stride it does not
+    if (typesize == 2) {
       var i = 0
-      val base = j * nElems
-      while (i < nElems) {
-        out(base + i) = src(i * typesize + j)
-        i += 1
+      while (i < nElems) { out(i) = src(2 * i); i += 1 }
+      i = 0
+      while (i < nElems) { out(nElems + i) = src(2 * i + 1); i += 1 }
+    } else {
+      var j = 0
+      while (j < typesize) {
+        var i = 0
+        val base = j * nElems
+        while (i < nElems) {
+          out(base + i) = src(i * typesize + j)
+          i += 1
+        }
+        j += 1
       }
-      j += 1
     }
     if (tail > 0) System.arraycopy(src, n - tail, out, n - tail, tail)
     out
@@ -102,68 +121,86 @@ object Blosc {
     }
     val nElems = n / typesize
     val tail = n - nElems * typesize
-    var j = 0
-    while (j < typesize) {
+    // typesize 2 scatters every element in one pass
+    if (typesize == 2) {
       var i = 0
-      val base = srcOff + j * nElems
       while (i < nElems) {
-        dst(dstOff + i * typesize + j) = src(base + i)
+        dst(dstOff + 2 * i) = src(srcOff + i)
+        dst(dstOff + 2 * i + 1) = src(srcOff + nElems + i)
         i += 1
       }
-      j += 1
+    } else {
+      var j = 0
+      while (j < typesize) {
+        var i = 0
+        val base = srcOff + j * nElems
+        while (i < nElems) {
+          dst(dstOff + i * typesize + j) = src(base + i)
+          i += 1
+        }
+        j += 1
+      }
     }
     if (tail > 0) System.arraycopy(src, srcOff + n - tail, dst, dstOff + n - tail, tail)
   }
 
-  /** Compress `raw` into a Blosc frame. */
+  /** Compress `raw` into a Blosc frame: [[encode]] plus a copy of the
+    * frame into an array of its own. */
   def compress(raw: Array[Byte], typesize: Int = 2, clevel: Int = 3, doShuffle: Boolean = true): Array[Byte] = {
+    val (buf, len) = encode(raw, typesize, clevel, doShuffle)
+    java.util.Arrays.copyOf(buf, len)
+  }
+
+  /** Compress `raw` into a Blosc frame in this thread's frame buffer.
+    * Returns (buffer, frame length): the frame is the buffer's first
+    * `length` bytes, valid until this thread's next [[encode]] or
+    * [[frameBuffer]] call. */
+  private[graft] def encode(raw: Array[Byte], typesize: Int, clevel: Int,
+                            doShuffle: Boolean): (Array[Byte], Int) = {
     val nbytes = raw.length
-    if (nbytes == 0) {
-      val out = new Array[Byte](16)
-      out(0) = Version; out(1) = VersionLz
-      out(2) = ((ZstdFormatId << 5) | FlagMemcpy).toByte
-      out(3) = typesize.toByte
-      writeLE(out, 4, 0); writeLE(out, 8, 0); writeLE(out, 12, 16)
-      return out
-    }
     val sc = scratch.get
-    val shuffled = if (doShuffle) shuffleInto(raw, typesize, sc.take(0, nbytes)) else raw
     // header(16) + bstarts(4) + blockLen(4) + stream: the stream is encoded
     // in place after the header, and the frame is that prefix
     val bound = 24L + Zstd.compressBound(nbytes)
     require(bound <= Int.MaxValue - 8, s"a $nbytes-byte chunk may not fit one blosc frame")
     val dst = sc.take(1, bound.toInt)
+    dst(0) = Version; dst(1) = VersionLz
+    dst(3) = typesize.toByte
+    writeLE(dst, 4, nbytes); writeLE(dst, 8, nbytes)
+    val shuffled = if (doShuffle) shuffleInto(raw, typesize, sc.take(0, nbytes)) else raw
+    // a context per call on purpose: one reused per thread keeps its
+    // native buffers for the thread's life and showed no clear gain
+    // (4 threads on 4 cores, JDK 17, 4 MiB shuffled u16 chunks of the
+    // benchmark's fixture, level 3 with checksum, identical frames:
+    // 690-887 MB/s per thread with a context per call, 795-967 reused)
     val ctx = new ZstdCompressCtx()
     val compressedLen =
       try ctx.setLevel(clevel).setChecksum(true).compressByteArray(dst, 24, dst.length - 24, shuffled, 0, nbytes)
       finally ctx.close()
+    // (an empty chunk always lands here)
     if (16 + 4 + 4 + compressedLen >= 16 + nbytes) {
       // compression not worth it: memcpy frame (raw, unshuffled payload)
-      val out = new Array[Byte](16 + nbytes)
-      out(0) = Version; out(1) = VersionLz
-      out(2) = ((ZstdFormatId << 5) | FlagMemcpy).toByte
-      out(3) = typesize.toByte
-      writeLE(out, 4, nbytes); writeLE(out, 8, nbytes); writeLE(out, 12, 16 + nbytes)
-      System.arraycopy(raw, 0, out, 16, nbytes)
-      out
+      dst(2) = ((ZstdFormatId << 5) | FlagMemcpy).toByte
+      writeLE(dst, 12, 16 + nbytes)
+      System.arraycopy(raw, 0, dst, 16, nbytes)
+      (dst, 16 + nbytes)
     } else {
       val total = 16 + 4 + 4 + compressedLen
-      dst(0) = Version; dst(1) = VersionLz
       dst(2) = ((ZstdFormatId << 5) | FlagNoSplit | (if (doShuffle) FlagShuffle else 0)).toByte
-      dst(3) = typesize.toByte
-      writeLE(dst, 4, nbytes); writeLE(dst, 8, nbytes); writeLE(dst, 12, total)
+      writeLE(dst, 12, total)
       writeLE(dst, 16, 20)            // bstarts[0]: block starts right after
       writeLE(dst, 20, compressedLen) // per-block compressed length
-      java.util.Arrays.copyOf(dst, total)
+      (dst, total)
     }
   }
 
-  // The shuffled input and the encode buffer are chunk-sized: 4 MiB for a
-  // 128^3 u16 chunk, past half a G1 region, so fresh ones are two humongous
-  // allocations per chunk, straight into the old generation. Each thread
-  // keeps its pair (each up to ScratchMax), so a call allocates only the
-  // frame it returns; a decode takes its shuffled block from buffer 0 and
-  // allocates only the array it returns.
+  // The shuffled input and the frame are chunk-sized: 4 MiB for a 128^3
+  // u16 chunk, past half a G1 region, so fresh ones are humongous
+  // allocations, straight into the old generation. Each thread keeps a
+  // pair (each up to ScratchMax): buffer 0 holds the shuffled bytes of an
+  // encode or of a decoded block, buffer 1 a frame, either one [[encode]]
+  // made or one a reader read into it ([[frameBuffer]]). So an encode
+  // allocates nothing chunk-sized, and a decode only the array it returns.
   private val ScratchMax = 64 << 20
   private final class Scratch {
     private val bufs = Array(Array.emptyByteArray, Array.emptyByteArray)
@@ -178,10 +215,18 @@ object Blosc {
   }
   private val scratch = ThreadLocal.withInitial[Scratch](() => new Scratch)
 
+  /** This thread's frame buffer, holding at least `n` bytes: read a frame
+    * into it and [[decompress]] it from (buffer, length). The next
+    * [[encode]] on this thread overwrites it. */
+  private[graft] def frameBuffer(n: Int): Array[Byte] = scratch.get.take(1, n)
+
   private val FlagBitshuffle = 0x04
 
-  def header(frame: Array[Byte]): Header = {
-    require(frame.length >= 16, s"blosc frame too short: ${frame.length}")
+  def header(frame: Array[Byte]): Header = header(frame, frame.length)
+
+  /** [[header]] of the frame in the first `length` bytes of `frame`. */
+  private[graft] def header(frame: Array[Byte], length: Int): Header = {
+    require(length >= 16, s"blosc frame too short: $length")
     val h = Header(frame(2) & 0xFF, frame(3) & 0xFF, readLE(frame, 4), readLE(frame, 8), readLE(frame, 12))
     // refuse frames we cannot decode faithfully rather than producing
     // silently-wrong bytes: bit-shuffle is a different filter, and block
@@ -199,13 +244,19 @@ object Blosc {
   }
 
   /** Decompress a Blosc frame (any block count; zstd payloads). */
-  def decompress(frame: Array[Byte]): Array[Byte] = {
-    val h = header(frame)
+  def decompress(frame: Array[Byte]): Array[Byte] = decompress(frame, frame.length)
+
+  /** [[decompress]] of the frame in the first `length` bytes of `frame`.
+    * Every offset and size the frame declares is checked against
+    * `length`: the bytes past it are stale, not part of the frame. */
+  private[graft] def decompress(frame: Array[Byte], length: Int): Array[Byte] = {
+    val h = header(frame, length)
     // a truncated or padded chunk file must fail here, not decode short
-    require(h.cbytes == frame.length,
-      s"blosc frame is ${frame.length} bytes but its header says cbytes=${h.cbytes}")
+    require(h.cbytes == length,
+      s"blosc frame is $length bytes but its header says cbytes=${h.cbytes}")
     if (h.nbytes == 0) return Array.emptyByteArray
     if ((h.flags & FlagMemcpy) != 0) {
+      require(h.nbytes <= length - 16, s"memcpy frame of $length bytes cannot hold nbytes=${h.nbytes}")
       val out = new Array[Byte](h.nbytes)
       System.arraycopy(frame, 16, out, 0, h.nbytes)
       return out
@@ -221,8 +272,12 @@ object Blosc {
     while (k < nblocks) {
       val off = k * blocksize
       val neblock = math.min(blocksize, h.nbytes - off)
+      require(16 + 4 * k <= length - 4, s"blosc frame of $length bytes cannot hold block $k's start")
       val bstart = readLE(frame, 16 + 4 * k)
+      require(bstart >= 0 && bstart <= length - 4, s"block $k starts at $bstart, past the frame's $length bytes")
       val csize = readLE(frame, bstart)
+      require(csize >= 0 && csize <= length - bstart - 4,
+        s"block $k's $csize bytes at $bstart run past the frame's $length bytes")
       if (csize == neblock) {
         // stored raw
         if (doShuffle) unshuffleInto(frame, bstart + 4, neblock, h.typesize, out, off)

@@ -176,19 +176,21 @@ class ZarrPartitionReader(f: ZarrReaderFactory, first: Long, last: Long)
           // request is an OutOfMemoryError that kills the executor
           val max = if (compressed) want + 16L else want.toLong
           val in = fs.open(p)
+          // a raw chunk is read into the array the row keeps; a frame into
+          // this thread's frame buffer, and decoded from there
           val buf = try {
             if (n > max) throw corrupt(s"$n bytes, at most $max expected")
-            val b = new Array[Byte](n.toInt)
-            in.readFully(0, b)
+            val b = if (compressed) Blosc.frameBuffer(n.toInt) else new Array[Byte](n.toInt)
+            in.readFully(0, b, 0, n.toInt)
             b
           } finally in.close()
           try {
             val out =
               if (!compressed) buf
               else {
-                val nbytes = Blosc.header(buf).nbytes
+                val nbytes = Blosc.header(buf, n.toInt).nbytes
                 require(nbytes == want, s"header nbytes=$nbytes, expected $want")
-                Blosc.decompress(buf)
+                Blosc.decompress(buf, n.toInt)
               }
             require(out.length == want, s"${out.length} bytes, expected $want")
             out
@@ -344,10 +346,12 @@ class ZarrDataWriter(root: String, hconf: Array[(String, String)]) extends DataW
     val codec = codecFor(stack, level)
     val dir = new Path(s"$root/$stack/$level/$t/$c/$z/$y")
     val tmp = new Path(dir, s".tmp-$x-${java.util.UUID.randomUUID}")
-    val payload =
-      if (codec.compressed) Blosc.compress(data, codec.dtype.itemSize, codec.clevel) else data
+    // a frame is written straight from this thread's encode buffer
+    val (payload, len) =
+      if (codec.compressed) Blosc.encode(data, codec.dtype.itemSize, codec.clevel, doShuffle = true)
+      else (data, data.length)
     val out = fs.create(tmp, true)
-    try out.write(payload) finally out.close()
+    try out.write(payload, 0, len) finally out.close()
     val dst = new Path(dir, x.toString)
     // false is a lost race: a twin committer's dst stands, or a concurrent
     // `ZarrIO.cleanupTmp` took our tmp and no chunk was written

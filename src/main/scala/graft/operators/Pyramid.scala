@@ -14,7 +14,7 @@ import graft.core.{PixelDtype, Volume, ZarrChunk}
   *
   *  1. '''map side, zero shuffle''' — every input chunk is downsampled
   *     locally: the input chunk shape is an integer multiple of the
-  *     factor (128 % 2 == 0; any other shape is first re-cut to the next
+  *     factor (128 % 2 == 0; any other shape is first re-cut to a
   *     multiple), so no 2x2x2 window ever crosses a chunk boundary.
   *     Edge windows at the array boundary are partial; the divisor is the
   *     actual window population (ceil semantics, `czi_to_zarr.py:185-187`).
@@ -38,11 +38,23 @@ import graft.core.{PixelDtype, Volume, ZarrChunk}
   * JVM signed Byte/Short never touches the math (SURVEY.md §7.5 #2).
   * For f32, each float is read in place and summed in Double in z, y, x
   * order; the mean is cast to Float and written as its raw bits.
+  *
+  * Fast path: a u16 chunk (the reference's dtype) at factor (2, 2, 2)
+  * whose z, y and x are all even (every full chunk of the 128^3 / x2
+  * config) goes to a direct loop, [[halve]], which reads each window's 8
+  * voxels at fixed offsets from 4 rows with no window bounds and writes
+  * sum >>> 3. Its bytes equal the general loop's (PyramidKernelSpec
+  * checks both against a per-voxel oracle; PyramidPinSpec pins them).
+  * u8, f32, odd shapes and other factors take the general loop: the
+  * benchmark converts u16 only, so a fast path for them would be
+  * unmeasured.
   */
 object Pyramid {
 
-  /** Reads a little-endian float in place: `F32LE.get(bytes, offset)`. */
+  /** Little-endian reads in place: `F32LE.get(bytes, offset)` is a float,
+    * `I32LE` an int (two u16 voxels). */
   private val F32LE = MethodHandles.byteArrayViewVarHandle(classOf[Array[Float]], ByteOrder.LITTLE_ENDIAN)
+  private val I32LE = MethodHandles.byteArrayViewVarHandle(classOf[Array[Int]], ByteOrder.LITTLE_ENDIAN)
 
   /** Downsample one chunk of little-endian `dtype` pixels by
     * `factorZyx` with windowed mean, straight from and to its bytes.
@@ -62,6 +74,10 @@ object Pyramid {
     val oy = ((sy + fy - 1) / fy)
     val ox = ((sx + fx - 1) / fx)
     val out = new Array[Byte](oz * oy * ox * itemSize)
+    if (dtype == PixelDtype.U16 && fz == 2 && fy == 2 && fx == 2 && sz % 2 == 0 && sy % 2 == 0 && sx % 2 == 0) {
+      halve(data, sz, sy, sx, out)
+      return (out, Array(shape(0), shape(1), oz, oy, ox))
+    }
     var o = 0
     var zo = 0
     while (zo < oz) {
@@ -119,12 +135,52 @@ object Pyramid {
     (out, Array(shape(0), shape(1), oz, oy, ox))
   }
 
+  /** [[downsampleBytes]] of u16 voxels at factor (2, 2, 2) on even z, y
+    * and x, into `out`: every window is full, so output voxel x reads
+    * voxels 2x and 2x + 1 of the four rows (z, y), (z, y + 1), (z + 1, y)
+    * and (z + 1, y + 1), and writes their sum >>> 3 (= sum / 8). */
+  private def halve(data: Array[Byte], sz: Int, sy: Int, sx: Int, out: Array[Byte]): Unit = {
+    val row = sx * 2
+    val plane = sy * row
+    var o = 0
+    var z = 0
+    while (z < sz) {
+      var y = 0
+      while (y < sy) {
+        val a = z * plane + y * row
+        val b = a + row
+        val c = a + plane
+        val d = c + row
+        var i = 0
+        while (i < row) {
+          val s = u16Pair(data, a + i) + u16Pair(data, b + i) + u16Pair(data, c + i) + u16Pair(data, d + i)
+          out(o) = (s >>> 3).toByte
+          out(o + 1) = (s >>> 11).toByte
+          o += 2
+          i += 4
+        }
+        y += 2
+      }
+      z += 2
+    }
+  }
+
+  /** The sum of the two u16 voxels at byte `i`. */
+  private def u16Pair(b: Array[Byte], i: Int): Int = {
+    val v = (I32LE.get(b, i): Int)
+    (v & 0xFFFF) + (v >>> 16)
+  }
+
   /** The pyramid: levels 1..n-1 of `level0` as one chunk Dataset, plus
     * their volumes, in rounds of one fused body.
     *
-    * A round's input grid G is the chunk shape, rounded up to a multiple
-    * of the factor on each axis where it is not one already (then the
-    * round first re-cuts its input to G with [[Rechunk]], one exchange).
+    * A round's input grid G is the chunk shape when it is a multiple of
+    * the factor on every axis. Otherwise the round first re-cuts its
+    * input to G with [[Rechunk]] (one exchange), and G is the chunk
+    * shape rounded up to a multiple of f^k, for the largest k up to the
+    * levels left whose f^k fits the chunk, so that one re-cut serves as
+    * many levels as it can without growing an axis to twice the chunk
+    * ([[recutGrid]]).
     * The round computes h = min(levels left, depth(G)) levels with one
     * [[fused]] call: ONE map pass emits each level's pieces chunk-locally
     * and ONE shuffle (keyed by (level, out-chunk)) assembles them. The
@@ -139,8 +195,10 @@ object Pyramid {
     * depth(G) being the largest k with G % f^k == 0 on every axis. The reference's 128^3 / x2 config
     * (depth 7) and z1's 32^3 / 4 levels are one round with no re-cut;
     * PyramidFusedSpec and PyramidUnalignedSpec pin every level against a
-    * dense whole-array oracle. Memory per task is one G chunk, at most
-    * chunk + f - 1 per axis.
+    * dense whole-array oracle. Memory per task is one G chunk: the chunk
+    * itself, or after a re-cut less than twice the chunk per axis (40^3
+    * in 5^3 chunks with 4 levels re-cuts once, to 8^3; a 33^3 chunk with
+    * 9 levels left to 64^3, not 512^3).
     *
     * Scale: the exchange carries sum over k of 1/f^3k of the input
     * (~14.5% for f=2) in one stage — at 100 TB that is one 14.5 TB
@@ -153,7 +211,8 @@ object Pyramid {
     val rounds = Seq.unfold((level0, vol, nLevels - 1)) { case (in, v, left) =>
       Option.when(left > 0) {
         val chunk = v.chunk.drop(2)
-        val g = Array.tabulate(3)(a => (chunk(a) + factorZyx(a) - 1) / factorZyx(a) * factorZyx(a))
+        val g = if ((0 until 3).forall(a => chunk(a) % factorZyx(a) == 0)) chunk
+                else recutGrid(chunk, factorZyx, left, v.dtype.itemSize)
         val h = math.min(left, depth(g, factorZyx))
         val src = if (g.sameElements(chunk)) in else Rechunk(in, v, g)
         val (vols, out) = fused(spark, src, v, g, h + 1, factorZyx)
@@ -162,6 +221,27 @@ object Pyramid {
     }
     (rounds.flatMap(_._1),
       rounds.map(_._2).reduceOption(_ union _).getOrElse(spark.emptyDataset[ZarrChunk]))
+  }
+
+  /** The grid a round re-cuts `chunk` to when it is not a multiple of
+    * the factor: every axis rounded up to a multiple of f^k, for the
+    * largest k <= `left` with f^k <= chunk on every axis whose f > 1 and
+    * whose grid fits [[Volume.MaxChunkBytes]] (k = 1 when none does). So
+    * one re-cut serves as many of the levels left as the chunk allows,
+    * and an axis with k >= 2 stays under twice the chunk: the re-cut
+    * changes a task's memory by a bounded factor, and its parallelism too. */
+  private[operators] def recutGrid(chunk: Array[Int], factorZyx: Array[Int], left: Int,
+                                   itemSize: Int): Array[Int] = {
+    def pow(a: Int, k: Int) = BigInt(factorZyx(a)).pow(k)
+    def grid(k: Int): Array[BigInt] = Array.tabulate(3) { a =>
+      val m = pow(a, k)
+      (chunk(a) + m - 1) / m * m
+    }
+    (left to 2 by -1).iterator
+      .filter(k => (0 until 3).forall(a => factorZyx(a) == 1 || pow(a, k) <= chunk(a)))
+      .map(grid)
+      .find(_.product * itemSize <= Volume.MaxChunkBytes)
+      .getOrElse(grid(1)).map(_.toInt)
   }
 
   /** The largest k with g % f^k == 0 on every axis; an axis with f = 1

@@ -12,6 +12,42 @@ class BloscSpec extends AnyFunSuite {
     }
   }
 
+  /** c-blosc's byte-shuffle as a strided loop: byte j of element i moves
+    * to j * nElems + i; the n % typesize tail stays where it is. */
+  private def refShuffle(src: Array[Byte], ts: Int, inverse: Boolean): Array[Byte] = {
+    val out = src.clone()
+    val nElems = src.length / ts
+    for (i <- 0 until nElems; j <- 0 until ts)
+      if (inverse) out(i * ts + j) = src(j * nElems + i) else out(j * nElems + i) = src(i * ts + j)
+    out
+  }
+
+  test("shuffle and unshuffle equal a strided reference loop, typesizes 1-8, tails included") {
+    val rnd = new scala.util.Random(21)
+    for (ts <- 1 to 8;
+         n <- (Seq(0, 1, ts - 1, ts, ts + 1, 3 * ts + ts / 2, 4096, 65536 + 5) ++
+               Seq.fill(4)(rnd.nextInt(20000))).distinct) {
+      val src = Array.fill(n)(rnd.nextInt().toByte)
+      assert(Blosc.shuffle(src, ts).sameElements(refShuffle(src, ts, inverse = false)), s"shuffle n=$n ts=$ts")
+      assert(Blosc.unshuffle(src, ts).sameElements(refShuffle(src, ts, inverse = true)), s"unshuffle n=$n ts=$ts")
+    }
+  }
+
+  test("encode leaves compress's frame in the thread's buffer; a frame decodes from a longer buffer") {
+    val raw = PixelCodec.toBytes(Array.tabulate(64 * 64)(i => (i / 8) % 4096))
+    val noise = Array.fill[Byte](4096)(new scala.util.Random(3).nextInt().toByte)
+    for (r <- Seq(raw, noise, Array.emptyByteArray)) {
+      val frame = Blosc.compress(r, 2, 3)
+      val (buf, len) = Blosc.encode(r, 2, 3, doShuffle = true)
+      assert(len == frame.length && buf.take(len).sameElements(frame))
+      // the bytes past the frame are stale: a decode must not read them
+      val padded = frame ++ Array.fill[Byte](64)(0x7F)
+      assert(Blosc.decompress(padded, frame.length).sameElements(r))
+      if (frame.length > 16)
+        intercept[IllegalArgumentException](Blosc.decompress(padded, frame.length - 1))
+    }
+  }
+
   test("shuffle groups bytes by significance") {
     // uint16 LE [0x0100, 0x0302]: bytes 00 01 02 03 -> shuffled 00 02 01 03
     val src = Array[Byte](0x00, 0x01, 0x02, 0x03)

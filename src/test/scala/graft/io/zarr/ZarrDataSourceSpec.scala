@@ -455,6 +455,36 @@ class ZarrDataSourceSpec extends AnyFunSuite {
     }
   }
 
+  test("a frame is decoded from the thread's frame buffer, never from a longer frame's stale bytes") {
+    val dir = Files.createTempDirectory("zarr-dsv2-stale").toString
+    val vol = Volume("sb", 0, Array(1L, 1L, 16L, 16L, 16L), Array(1, 1, 16, 16, 16))
+    ZarrIO.writeMetadata(dir, vol, nLevels = 1)
+    ZarrStore.write(SyntheticStack.generate(spark, vol), dir)
+    val chunk = java.nio.file.Paths.get(dir, "sb", "0", "0", "0", "0", "0", "0")
+    // readers run on the test thread here, so they share one frame buffer
+    def read(): Array[Byte] = {
+      val reader = new ZarrPartitionReader(ZarrReaderFactory(dir, "sb", 0, vol.shape, vol.chunk,
+        compressed = true, itemSize = 2, base = Array.fill(5)(0L), ext = Array.fill(5)(1L),
+        cols = Array("data"), hconf = graft.core.HadoopConf.snapshot(new org.apache.hadoop.conf.Configuration())),
+        first = 0L, last = 0L)
+      assert(reader.next())
+      reader.get().getBinary(0)
+    }
+    val want = read()
+    val frame = Files.readAllBytes(chunk)
+    assert((frame(2) & 0x02) == 0, "the chunk must be a zstd frame, not stored raw")
+    // one byte short, with cbytes rewritten to match: the stream's last
+    // byte is then only in the buffer, left there by the whole frame
+    val short = frame.take(frame.length - 1)
+    java.nio.ByteBuffer.wrap(short).order(java.nio.ByteOrder.LITTLE_ENDIAN).putInt(12, short.length)
+    Files.write(chunk, short)
+    val e = intercept[IllegalStateException](read())
+    assert(e.getMessage.startsWith(s"corrupt zarr chunk at $dir/sb/0/0/0/0/0/0: ") &&
+      e.getMessage.contains("run past the frame"), e.getMessage)
+    Files.write(chunk, frame)
+    assert(read().sameElements(want))
+  }
+
   test("a flipped payload byte fails the read through the zstd checksum") {
     val dir = Files.createTempDirectory("zarr-dsv2-flip").toString
     val vol = Volume("fl", 0, Array(1L, 1L, 16L, 16L, 16L), Array(1, 1, 16, 16, 16))

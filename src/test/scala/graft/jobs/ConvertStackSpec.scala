@@ -187,6 +187,18 @@ class ConvertStackSpec extends AnyFunSuite {
     assert(execs.map(_.nodes("ReusedExchange")).sum == 1, execs)
   }
 
+  test("unaligned 40^3 in 5^3 chunks, 4 levels: one re-cut serves every level, levels exact") {
+    // 5 % 2 != 0: the first round re-cuts to 8^3, a multiple of 2^3, so
+    // levels 1-3 are one fused round. A re-cut to 6^3 served one level
+    // per round: 3 rounds of a re-cut and a pyramid exchange, 6 in all.
+    val src = czi("census-r", (40, 40, 40))
+    val out = Files.createTempDirectory("conv-census-r").toString
+    var vol: Volume = null
+    val execs = Census.measure(spark) { vol = convert(src, out, Array(5, 5, 5), 4) }
+    assert(execs.map(_.nodes("ShuffleExchange")).sum == 2, execs)
+    assertWrittenLevels(spark, out, "census-r", vol, 4)
+  }
+
   for ((nLevels, jobs, exchanges) <- Seq((3, 4, 3), (1, 1, 0)))
     test(s"ZeissJob.run over 3 stacks, $nLevels level(s), is one action: " +
          s"$jobs job(s) and stage(s), $exchanges exchange(s), levels exact") {

@@ -1,5 +1,9 @@
 package graft.operators
 
+import java.nio.{ByteBuffer, ByteOrder}
+
+import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.util.Pretty
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{PixelCodec, PixelDtype}
@@ -87,6 +91,85 @@ class PyramidKernelSpec extends AnyFunSuite {
     val (bF32, _) = Pyramid.downsampleBytes(PixelCodec.f32ToBytes(fl), Array(1, 1, 2, 2, 2),
       Array(2, 2, 2), PixelDtype.F32)
     assert(PixelCodec.f32ToFloats(bF32)(0) == (fl.map(_.toDouble).sum / 8).toFloat)
+  }
+
+  /** The windowed mean one output voxel at a time, reading each input
+    * voxel through a little-endian ByteBuffer: ceil-sized edge windows,
+    * summed in z, y, x order (f32 in Double, integers in Long), floor
+    * division for integers, the Double mean cast to Float for f32. */
+  private def oracle(in: Array[Byte], dims: Seq[Int], f: Seq[Int], dtype: PixelDtype): Array[Byte] = {
+    val src = ByteBuffer.wrap(in).order(ByteOrder.LITTLE_ENDIAN)
+    val o = dims.indices.map(a => (dims(a) + f(a) - 1) / f(a))
+    val out = ByteBuffer.allocate(o.product * dtype.itemSize).order(ByteOrder.LITTLE_ENDIAN)
+    for (z <- 0 until o(0); y <- 0 until o(1); x <- 0 until o(2)) {
+      var isum = 0L
+      var fsum = 0.0
+      var n = 0
+      for (dz <- z * f(0) until math.min(z * f(0) + f(0), dims(0));
+           dy <- y * f(1) until math.min(y * f(1) + f(1), dims(1));
+           dx <- x * f(2) until math.min(x * f(2) + f(2), dims(2))) {
+        val i = (dz * dims(1) + dy) * dims(2) + dx
+        dtype match {
+          case PixelDtype.U8 => isum += src.get(i) & 0xFF
+          case PixelDtype.U16 => isum += src.getShort(2 * i) & 0xFFFF
+          case PixelDtype.F32 => fsum += src.getFloat(4 * i)
+        }
+        n += 1
+      }
+      dtype match {
+        case PixelDtype.U8 => out.put((isum / n).toByte)
+        case PixelDtype.U16 => out.putShort((isum / n).toShort)
+        case PixelDtype.F32 => out.putFloat((fsum / n).toFloat)
+      }
+    }
+    out.array
+  }
+
+  /** `n` random voxels of `dtype` as little-endian bytes. f32 mixes
+    * +-2^100, which cancel and swallow small values added before them (so
+    * sums depend on their order), with -0.0, subnormals, +-Float.MaxValue,
+    * +Inf and ordinary magnitudes; no NaN or -Inf. */
+  private def voxels(n: Int, dtype: PixelDtype, rnd: scala.util.Random): Array[Byte] = dtype match {
+    case PixelDtype.F32 =>
+      val special = Array(-0.0f, Float.MinPositiveValue, -Float.MinPositiveValue, Float.MaxValue,
+        -Float.MaxValue, Float.PositiveInfinity)
+      PixelCodec.f32ToBytes(Array.fill(n) {
+        val sign = if (rnd.nextBoolean()) 1 else -1
+        rnd.nextInt(8) match {
+          case 0 => special(rnd.nextInt(special.length))
+          case 1 | 2 => sign * math.pow(2, 100).toFloat
+          case _ => (sign * (1 + rnd.nextFloat()) * math.pow(2, rnd.nextInt(41) - 20)).toFloat
+        }
+      })
+    case _ => Array.fill(n * dtype.itemSize)(rnd.nextInt().toByte)
+  }
+
+  private val dtypes = Seq(PixelDtype.U8, PixelDtype.U16, PixelDtype.F32)
+
+  test("every shape 1-9 per axis, factor 2, every dtype: bytes equal the per-voxel oracle") {
+    val rnd = new scala.util.Random(31)
+    for (sz <- 1 to 9; sy <- 1 to 9; sx <- 1 to 9; dtype <- dtypes) {
+      val in = voxels(sz * sy * sx, dtype, rnd)
+      val (out, os) = Pyramid.downsampleBytes(in, Array(1, 1, sz, sy, sx), Array(2, 2, 2), dtype)
+      assert(os.toSeq == Seq(1, 1, (sz + 1) / 2, (sy + 1) / 2, (sx + 1) / 2))
+      assert(out.sameElements(oracle(in, Seq(sz, sy, sx), Seq(2, 2, 2), dtype)), s"$sz x $sy x $sx $dtype")
+    }
+  }
+
+  test("random shapes 1-9, factors in {1, 2, 3} per axis, every dtype: bytes equal the per-voxel oracle") {
+    val cases = for {
+      dims <- Gen.listOfN(3, Gen.choose(1, 9))
+      f <- Gen.listOfN(3, Gen.oneOf(1, 2, 3))
+      dtype <- Gen.oneOf(dtypes)
+      seed <- Gen.long
+    } yield (dims, f, dtype, seed)
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(500),
+      Prop.forAllNoShrink(cases) { case (dims, f, dtype, seed) =>
+        val in = voxels(dims.product, dtype, new scala.util.Random(seed))
+        val (out, _) = Pyramid.downsampleBytes(in, Array(1, 1) ++ dims, f.toArray, dtype)
+        out.sameElements(oracle(in, dims, f, dtype))
+      })
+    assert(res.passed, Pretty.pretty(res))
   }
 
   test("asymmetric factor (1,2,2) halves only y/x") {

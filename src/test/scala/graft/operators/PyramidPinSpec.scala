@@ -62,16 +62,16 @@ class PyramidPinSpec extends AnyFunSuite {
       "f07ba7fddd5141bdfbc134dee8e8208d0016d89918c5e9c584b90a350acb0a82")
   }
 
-  test("f32 with order-sensitive sums, factor (1, 2, 3), 3 levels") {
-    // +-2^100 cancel each other exactly and swallow anything small added
-    // before them, so a window's mean changes with the summing order;
-    // the rest are magnitudes from 2^-30 to 2^30 of both signs, -0.0,
-    // subnormals, +-Float.MaxValue and +Inf (no NaN or -Inf: a NaN's
-    // sign bit depends on the JIT tier, not on the kernel)
-    val rnd = new scala.util.Random(14L)
+  /** `dims` of f32 values whose window sums depend on the summing order.
+    * +-2^100 cancel each other exactly and swallow anything small added
+    * before them, so a window's mean changes with the order; the rest are
+    * magnitudes from 2^-30 to 2^30 of both signs, -0.0, subnormals,
+    * +-Float.MaxValue and +Inf (no NaN or -Inf: a NaN's sign bit depends
+    * on the JIT tier, not on the kernel). */
+  private def orderSensitive(dims: Array[Int], seed: Long): Dense = {
+    val rnd = new scala.util.Random(seed)
     val special = Array(-0.0f, Float.MinPositiveValue, 3 * Float.MinPositiveValue,
       -Float.MinPositiveValue, Float.MaxValue, -Float.MaxValue, Float.PositiveInfinity)
-    val dims = Array(7, 26, 40)
     val v = Array.fill(dims.product) {
       val sign = if (rnd.nextBoolean()) 1 else -1
       rnd.nextInt(16) match {
@@ -80,8 +80,21 @@ class PyramidPinSpec extends AnyFunSuite {
         case _ => (sign * (1 + rnd.nextFloat()) * math.pow(2, rnd.nextInt(61) - 30)).toFloat
       }
     }
-    assert(pin(Dense(dims, v.map(_.toDouble)), Seq(4, 8, 9), Array(1, 2, 3), 3,
+    Dense(dims, v.map(_.toDouble))
+  }
+
+  test("f32 with order-sensitive sums, factor (1, 2, 3), 3 levels") {
+    assert(pin(orderSensitive(Array(7, 26, 40), 14L), Seq(4, 8, 9), Array(1, 2, 3), 3,
       PixelDtype.F32) ==
       "34684cce75bd44e25250d439586712618b83af22b4bd3649a58c4c46a8559e62")
+  }
+
+  test("f32 with order-sensitive sums, factor 2, 3 levels (even and odd chunk shapes)") {
+    // f32 at the reference's factor: full 8x8x12 chunks hold only full
+    // windows, while the array's last chunks (5, 2 and 1 voxels deep) and
+    // the level-2 pieces of 12-wide x (3 voxels) end in partial ones
+    assert(pin(orderSensitive(Array(21, 26, 37), 15L), Seq(8, 8, 12), Array(2, 2, 2), 3,
+      PixelDtype.F32) ==
+      "63672566bfdf713ec3586c5d4a1c98984452ca66a4834d4de897ba29af7b6edb")
   }
 }

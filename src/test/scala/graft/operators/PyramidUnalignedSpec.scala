@@ -58,6 +58,27 @@ class PyramidUnalignedSpec extends AnyFunSuite {
     assert(levels(1).dims.toSeq == Seq(4, 4, 4))
   }
 
+  test("a re-cut grows no axis to twice its chunk, however many levels are left") {
+    // 2^9 = 512 would serve all 9 levels left of a 33^3 chunk in one
+    // round, at 4,600 times its voxels; 2^5 <= 33 < 2^6 gives 64^3
+    assert(Pyramid.recutGrid(Array(33, 33, 33), Array(2, 2, 2), 9, 2).toSeq == Seq(64, 64, 64))
+    assert(Pyramid.recutGrid(Array(5, 5, 5), Array(2, 2, 2), 3, 2).toSeq == Seq(8, 8, 8))
+    // one k for every axis: 3^2 > 4 on y holds x to a multiple of 2^1
+    assert(Pyramid.recutGrid(Array(7, 4, 101), Array(1, 3, 2), 6, 2).toSeq == Seq(7, 6, 102))
+    val rnd = new scala.util.Random(7)
+    for (_ <- 1 to 2000) {
+      val chunk = Array.fill(3)(1 + rnd.nextInt(300))
+      val f = Array.fill(3)(1 + rnd.nextInt(4))
+      val g = Pyramid.recutGrid(chunk, f, 1 + rnd.nextInt(12), 2)
+      for (a <- 0 until 3) {
+        val msg = s"chunk ${chunk.toSeq}, factor ${f.toSeq}: grid ${g.toSeq}"
+        assert(g(a) % f(a) == 0 && g(a) >= chunk(a), msg)
+        // k >= 2 keeps f^k <= chunk; k = 1 rounds up to the next multiple
+        assert(g(a) < chunk(a) + math.max(chunk(a), f(a)), msg)
+      }
+    }
+  }
+
   test("random shapes, chunks, factors, levels and dtypes: every level equals the dense oracle") {
     val cases = for {
       dims <- Gen.listOfN(3, Gen.choose(1, 19))
